@@ -1203,7 +1203,7 @@ object SparkEntry {
     * work"): the 3-arg levenshtein runs the banded DP and abandons once the
     * distance provably exceeds the threshold, returning -1 there — so
     * `>= 0` is exactly the `< 15` predicate, and the returned value equals
-    * the exact distance on every surviving row. Measured (DiagLev, 60-char
+    * the exact distance on every surviving row. Measured (60-char
     * pairs, 1M): 32.9 s → 4.0 s on non-matching pairs (the dominant
     * population of every verify leg), 32.1 → 23.1 s on true near-dups.
     * Only predicate/filtered sites use this; sites that consume unbounded

@@ -1,9 +1,8 @@
 package graft.pipeline
 
 import graft.model.DocSig
-import graft.text.{Hashing, MinHash, SimHash}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import graft.text.{Hashing, MinHash}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Blocking stage: candidate generation by equality on LSH band keys —
@@ -20,13 +19,6 @@ import org.apache.spark.sql.functions._
   * GraftConfig for the miss-probability math).
   */
 object Blocking {
-
-  /** Carries only compact prefilter columns: media hashes are 1-4 longs,
-    * the simhash 1 long; the heavy signature columns (minhash, text) stay in
-    * the signature table and are joined only for gated survivors in phase 2.
-    */
-  final case class BlockRow(block_key: Long, doc_id: String, media: Array[Long],
-                            slots: Int, simhash: Long, hasText: Boolean)
 
   /** Block keys for one 64-bit media hash: one key per combination of
     * `blocksPerKey` blocks of `blockBits` bits (Manku-style tables; see
@@ -80,57 +72,17 @@ object Blocking {
     out.result()
   }
 
-  /** One row per (doc, band key). Narrow flatMap — no shuffle here. */
-  def blockRows(sigs: Dataset[DocSig], cfg: GraftConfig)(
-      implicit spark: SparkSession): Dataset[BlockRow] = {
-    import spark.implicits._
-    val blockBits = cfg.mediaBlockBits
-    val blocksPerKey = cfg.mediaBlocksPerKey
-    val textBands = cfg.textBands
-    sigs.flatMap { s =>
-      val keys = Array.newBuilder[Long]
-      // media block-combination keys, per span and slot (slot mixed into the
-      // key so a dHash row-band never collides with a col-band block)
-      var i = 0
-      while (i < s.media.length) {
-        keys ++= mediaBandKeys(s.media(i), blockBits, blocksPerKey, i % s.slots)
-        i += 1
-      }
-      // text bands over the minhash signature
-      if (s.minhash.nonEmpty) keys ++= MinHash.bandKeys(s.minhash, textBands)
-      val hasText = s.text != null && s.text.nonEmpty
-      keys.result().distinct.iterator.map { k =>
-        BlockRow(k, s.doc_id, s.media, s.slots, s.simhash, hasText)
-      }
-    }
-  }
-
   /** Summed-slot Hamming distance, minimized over media-span pairs —
     * the reference metric (`vptree/vptree.go:60-69`) generalized to
     * multi-span docs. Sentinel 9999 when either side has no media. Native
     * codegen expression (graft.functions.MediaDistExpr) — the hottest
     * predicate in the pipeline runs inside the band join's codegen span.
     */
-  def mediaDistUdf(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column,
-                   slots: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  private def mediaDistUdf(a: Column, b: Column, slots: Column): Column =
     coalesce(graft.functions.GraftFunctions.mediaDist(a, b, slots), lit(9999))
 
   final case class BlockStats(droppedBlocks: Long, droppedRows: Long, saltedBlocks: Long)
 
-  /** Candidate pair generation: salted self-join within blocks + cheap
-    * prefilter + per-pair dedup across bands.
-    *
-    * Skew handling is explicit, never silent:
-    *  - blocks > maxBlockSize are degenerate (near-duplicate farms / empty
-    *    text): dropped with logged counts;
-    *  - blocks > hotBlockSize are salted: the left side keeps one salt,
-    *    the right side is replicated over all `saltFactor` salts, so every
-    *    unordered pair is produced exactly once at the left doc's salt —
-    *    the shuffle key becomes (block_key, salt), splitting hot blocks
-    *    across reducers. AQE skew-join remains on as backstop.
-    *
-    * Returns (a, b, media_dist) with a < b, deduped across bands.
-    */
   /** All band keys of one signature row, tagged by channel: media block
     * tables vs text MinHash bands. The tag drives per-channel candidacy
     * rules downstream (media: any shared key; text: ≥ cfg.minTextBands
@@ -175,7 +127,8 @@ object Blocking {
     * keys, exploded natively — versus a typed flatMap, this keeps the
     * 40-80M-row block relation inside whole-stage codegen instead of paying
     * per-row object/encoder churn. Shared by the self-join pipeline
-    * ([[candidatePairs]]) and cross-corpus linkage ([[Linkage.link]]).
+    * ([[candidatePairs]]), cross-corpus linkage ([[Linkage.link]]) and
+    * the targeted compare ([[Pipeline.compare]]).
     */
   def bandRowsDF(sigs: Dataset[DocSig], cfg: GraftConfig): DataFrame =
     sigs.toDF().select(
@@ -192,10 +145,10 @@ object Blocking {
         col("hasText"), col("bk._1").as("block_key"), col("bk._2").as("is_text"))
 
   /** Band equi-join + cheap prefilter cascade over two band-row relations
-    * ([[bandRowsDF]] schema), shared by the self-join pipeline and
-    * cross-corpus [[Linkage]]: ONE implementation of the media-radius /
+    * ([[bandRowsDF]] schema), shared by [[bandedPairs]] and
+    * [[Pipeline.compare]]: ONE implementation of the media-radius /
     * SimHash gate, so a prefilter tuning cannot silently diverge between
-    * the two (the self-link ≡ pipeline-edge-set equivalence LinkageSpec
+    * callers (the self-link ≡ pipeline-edge-set equivalence LinkageSpec
     * gates depends on it). `idCond` is the pair predicate — `_ < _`
     * canonical dedup for the self-join, `_ =!= _` diagonal drop for the
     * cross join. Output: (a = l.doc_id, b = r.doc_id, media_dist,
@@ -203,8 +156,7 @@ object Blocking {
     */
   private[pipeline] def prefilteredPairs(left: DataFrame, right: DataFrame,
       extraKey: Seq[String],
-      idCond: (org.apache.spark.sql.Column, org.apache.spark.sql.Column) => org.apache.spark.sql.Column,
-      cfg: GraftConfig): DataFrame = {
+      idCond: (Column, Column) => Column, cfg: GraftConfig): DataFrame = {
     val l = left.alias("l")
     val r = right.alias("r")
     val keyCond = (Seq("block_key") ++ extraKey)
@@ -228,6 +180,79 @@ object Blocking {
         col("media_dist"), col("sim_ham"), col("l.is_text").as("is_text"))
   }
 
+  /** The one banded candidate generator behind self-dedup
+    * ([[candidatePairs]]) and cross-corpus linkage ([[Linkage.linkSigs]]):
+    * band-key split → salted equi-join through [[prefilteredPairs]] →
+    * per-channel vote. Each caller's census decides which keys are
+    * degenerate (`degKeys`, dropped) and hot (`hotKeys`, salted); the
+    * census rules differ per caller, everything after them is here.
+    *
+    * Salting: the LEFT side is replicated over all `cfg.saltFactor`
+    * salts, each RIGHT row keeps one salt, so every pair is produced at
+    * exactly one salt and the shuffle key becomes (block_key, salt),
+    * splitting a hot block across reducers. In batch-vs-corpus linkage
+    * the large corpus side is therefore never replicated; the self-join
+    * is symmetric, so the orientation does not change its pair set. AQE
+    * skew-join remains on as backstop.
+    *
+    * Returns (a, b, media_dist, sim_ham), one row per pair.
+    */
+  private[pipeline] def bandedPairs(left: DataFrame, right: DataFrame,
+      degKeys: Seq[Long], hotKeys: Seq[Long],
+      idCond: (Column, Column) => Column, cfg: GraftConfig): DataFrame = {
+    if (degKeys.nonEmpty || hotKeys.nonEmpty)
+      System.err.println(s"[graft] blocking: dropped ${degKeys.length} degenerate keys, " +
+        s"salted ${hotKeys.length} hot keys")
+    val key = col("block_key")
+    // fast path: no hot/degenerate keys (the common case) — no per-row
+    // membership filters at all
+    def live(b: DataFrame) = if (degKeys.isEmpty) b else b.filter(!key.isin(degKeys: _*))
+    def normal(b: DataFrame) = if (hotKeys.isEmpty) live(b) else live(b).filter(!key.isin(hotKeys: _*))
+    def hot(b: DataFrame) = if (hotKeys.isEmpty) b.limit(0) else live(b).filter(key.isin(hotKeys: _*))
+
+    val normalPairs = prefilteredPairs(normal(left), normal(right), Nil, idCond, cfg)
+    val sf = cfg.saltFactor
+    val hotLeft = hot(left).withColumn("salt", explode(sequence(lit(0), lit(sf - 1))))
+    val hotRight = hot(right).withColumn("salt",
+      pmod(xxhash64(col("doc_id")), lit(sf.toLong)).cast("int"))
+    val hotPairs = prefilteredPairs(hotLeft, hotRight, Seq("salt"), idCond, cfg)
+
+    // Per-channel candidacy vote (Broder-style multi-band agreement):
+    // media pairs qualify on ANY shared block key (pigeonhole recall
+    // guarantee), text-only pairs need >= minTextBands shared bands. One
+    // shared 4-row band is a coin-flip event at corpus-background Jaccard
+    // (~0.05 ⇒ p ≈ 6e-6/band, O(N²) expected collisions); two independent
+    // bands squares that (~4e-11) while true near-dups (Jaccard ≥ 0.8,
+    // p ≥ 0.4/band over 32 bands) still collide on ≥2 with prob ≈ 1 —
+    // measured: candidate volume at 850k docs fell from 8.2/doc
+    // (quadratic regime) to O(1)/doc.
+    //
+    // Known recall narrowing (documented, accepted): a pair reachable ONLY
+    // via a shared MEDIA band whose media_dist >= mediaThreshold but
+    // sim_ham < simhashPrefilter (text-scorable, media-dissimilar) used to
+    // reach phase-2 scoring and now needs >= minTextBands shared TEXT bands
+    // too. For true text near-dups (Jaccard >= 0.8) P(>= 2 of 32 bands) ~ 1,
+    // so the labeled-corpus F1 gate (PipelineSpec) holds with the vote on.
+    normalPairs.unionByName(hotPairs)
+      .groupBy(col("a"), col("b"))
+      .agg(min(col("media_dist")).as("media_dist"), min(col("sim_ham")).as("sim_ham"),
+        sum(when(col("is_text"), 1L).otherwise(0L)).as("n_text_bands"))
+      .filter(col("media_dist") < cfg.mediaThreshold ||
+        col("n_text_bands") >= cfg.minTextBands)
+      .drop("n_text_bands")
+  }
+
+  /** Candidate pair generation for self-dedup: census of the band
+    * relation, then [[bandedPairs]] with the `a < b` canonical pair
+    * predicate. Skew handling is explicit, never silent: blocks larger
+    * than `cfg.maxBlockSize` are degenerate (near-duplicate farms / empty
+    * text) and dropped with logged counts; blocks larger than
+    * `cfg.hotBlockSize` are salted.
+    *
+    * Returns (candidates (a, b, media_dist, sim_ham) with a < b, the
+    * census's [[BlockStats]], the cleanup thunk the caller invokes once
+    * the candidates are materialized).
+    */
   def candidatePairs(sigs: Dataset[DocSig], cfg: GraftConfig)(
       implicit spark: SparkSession): (DataFrame, BlockStats, () => Unit) = {
     // Persisted PRE-PARTITIONED BY block_key: the band relation has 3
@@ -256,56 +281,12 @@ object Blocking {
       .filter(col("bsize") > math.min(cfg.hotBlockSize, cfg.maxBlockSize))
       .collect()
     System.err.println(f"[graft]   census: ${(System.nanoTime() - tCensus) / 1e9}%.2f s, ${census.length} hot/deg keys")
-    val degKeys = census.filter(_.getLong(1) > cfg.maxBlockSize)
-    val hotKeys = census.filter(r => r.getLong(1) <= cfg.maxBlockSize)
-    val stats0 = BlockStats(degKeys.length.toLong, degKeys.map(_.getLong(1)).sum,
+    val (degKeys, hotKeys) = census.partition(_.getLong(1) > cfg.maxBlockSize)
+    val stats = BlockStats(degKeys.length.toLong, degKeys.map(_.getLong(1)).sum,
       hotKeys.length.toLong)
-
-    val degSet = degKeys.map(_.getLong(0)).toSet
-    val hotSet = hotKeys.map(_.getLong(0)).toSet
-    val isDeg = udf((k: Long) => degSet.contains(k))
-    val isHot = udf((k: Long) => hotSet.contains(k))
-    // fast path: no hot/degenerate keys (the common case) — skip the
-    // per-row membership filters entirely
-    val live = if (degSet.isEmpty) b else b.filter(!isDeg(col("block_key")))
-    val normal = if (hotSet.isEmpty) live else live.filter(!isHot(col("block_key")))
-    val hot = if (hotSet.isEmpty) live.limit(0) else live.filter(isHot(col("block_key")))
-
-    def pairJoin(left: DataFrame, right: DataFrame, extraKey: Seq[String]): DataFrame =
-      prefilteredPairs(left, right, extraKey, _ < _, cfg)
-
-    val normalPairs = pairJoin(normal, normal, Nil)
-
-    val s = cfg.saltFactor
-    val hotLeft = hot.withColumn("salt",
-      pmod(xxhash64(col("doc_id")), lit(s.toLong)).cast("int"))
-    val hotRight = hot.withColumn("salt", explode(sequence(lit(0), lit(s - 1))))
-    val hotPairs = pairJoin(hotLeft, hotRight, Seq("salt"))
-
-    // Per-channel candidacy vote (Broder-style multi-band agreement):
-    // media pairs qualify on ANY shared block key (pigeonhole recall
-    // guarantee), text-only pairs need >= minTextBands shared bands. One
-    // shared 4-row band is a coin-flip event at corpus-background Jaccard
-    // (~0.05 ⇒ p ≈ 6e-6/band, O(N²) expected collisions); two independent
-    // bands squares that (~4e-11) while true near-dups (Jaccard ≥ 0.8,
-    // p ≥ 0.4/band over 32 bands) still collide on ≥2 with prob ≈ 1 —
-    // measured: candidate volume at 850k docs fell from 8.2/doc
-    // (quadratic regime) to O(1)/doc.
-    //
-    // Known recall narrowing (documented, accepted): a pair reachable ONLY
-    // via a shared MEDIA band whose media_dist >= mediaThreshold but
-    // sim_ham < simhashPrefilter (text-scorable, media-dissimilar) used to
-    // reach phase-2 scoring and now needs >= minTextBands shared TEXT bands
-    // too. For true text near-dups (Jaccard >= 0.8) P(>= 2 of 32 bands) ~ 1,
-    // so the labeled-corpus F1 gate (PipelineSpec) holds with the vote on.
-    val pairs = normalPairs.unionByName(hotPairs)
-      .groupBy(col("a"), col("b"))
-      .agg(min(col("media_dist")).as("media_dist"), min(col("sim_ham")).as("sim_ham"),
-        sum(when(col("is_text"), 1L).otherwise(0L)).as("n_text_bands"))
-      .filter(col("media_dist") < cfg.mediaThreshold ||
-        col("n_text_bands") >= cfg.minTextBands)
-      .drop("n_text_bands")
+    val pairs = bandedPairs(b, b, degKeys.map(_.getLong(0)).toSeq,
+      hotKeys.map(_.getLong(0)).toSeq, _ < _, cfg)
     // caller invokes the cleanup thunk once `pairs` is materialized
-    (pairs, stats0, () => { b.unpersist(); () })
+    (pairs, stats, () => { b.unpersist(); () })
   }
 }

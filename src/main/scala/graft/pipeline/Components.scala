@@ -22,15 +22,6 @@ import org.apache.spark.sql.functions._
   */
 object Components {
 
-  /** edges: (src, dst) string columns, undirected, self-loops tolerated.
-    * Returns (doc_id, cluster_id) for every node that appears in an edge.
-    *
-    * Tiny edge sets (≤ driverCutoff rows after dedup) short-circuit to a
-    * driver-local union-find: identical result, none of the per-iteration
-    * shuffle/checkpoint fixed costs, which otherwise dominate when the
-    * duplicate graph is a few thousand edges. At the 10¹²-doc design point
-    * the distributed star iterations below are the path taken.
-    */
   /** Undirected-edge normal form: (min, max) endpoints, self-loops
     * dropped, deduped — the shared head of every graph operator here.
     */
@@ -45,6 +36,15 @@ object Components {
     e.select(col("src").as("u"), col("dst").as("v"))
       .union(e.select(col("dst").as("u"), col("src").as("v")))
 
+  /** edges: (src, dst) string columns, undirected, self-loops tolerated.
+    * Returns (doc_id, cluster_id) for every node that appears in an edge.
+    *
+    * Tiny edge sets (≤ driverCutoff rows after dedup) short-circuit to a
+    * driver-local union-find: identical result, none of the per-iteration
+    * shuffle/checkpoint fixed costs, which otherwise dominate when the
+    * duplicate graph is a few thousand edges. At the 10¹²-doc design point
+    * the distributed star iterations below are the path taken.
+    */
   def connectedComponents(edges: DataFrame, maxIterations: Int = 50,
                           driverCutoff: Long = 200000)(
       implicit spark: SparkSession): DataFrame = {

@@ -160,6 +160,26 @@ object Incremental {
       .select(existingAssign("doc_id"),
         coalesce(remapped("cluster_id"), existingAssign("cluster_id")).as("cluster_id"))
 
+  /** Failure-path cleanup registry of [[run]] and [[retract]]: `body`
+    * registers a release thunk per relation it persists, and the thunks
+    * run (newest first, errors swallowed) only if `body` throws — on
+    * success, ownership of every persisted relation transfers to the
+    * result's release thunk. Folds and takedowns live inside long-running
+    * drivers: a thrown stage (bad batch, FS hiccup) must not strand
+    * MEMORY_AND_DISK blocks for the life of the session. Every registered
+    * thunk is an idempotent unpersist, so the registry never double-frees
+    * anything live.
+    */
+  private def guarded[A](body: scala.collection.mutable.Buffer[() => Unit] => A): A = {
+    val onFailure = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
+    try body(onFailure)
+    catch {
+      case e: Throwable =>
+        onFailure.reverseIterator.foreach(c => try c() catch { case _: Throwable => () })
+        throw e
+    }
+  }
+
   /** `existingBands`: optionally the old corpus's prebuilt band relation
     * ([[Blocking.bandRowsDF]] schema, checkpointed by the previous run).
     * Without it the fold re-derives old band keys — an O(corpus) UDF pass
@@ -175,7 +195,7 @@ object Incremental {
     import spark.implicits._
 
     // 0. within-batch exact pre-collapse — same digest rule as Pipeline
-    // stage 0 (md5 over the canonical span JSON), same reason: a k-copy
+    // stage 0 (the two-lane xxhash64 span digest), same reason: a k-copy
     // farm inside the batch must cost O(k), not the O(k²) within-block
     // pairs identical content generates. Copies inherit their
     // representative's cluster at expansion. (Exact copies STRADDLING the
@@ -187,22 +207,7 @@ object Incremental {
     val tRun = System.nanoTime()
     def mark(label: String): Unit =
       System.err.println(f"[graft] incremental $label: ${(System.nanoTime() - tRun) / 1e9}%.2f s elapsed")
-    // Run on the FAILURE path only — on success, ownership of every
-    // persisted relation transfers to the result's release thunk. A fold
-    // lives inside a long-running streaming driver: a thrown stage (bad
-    // batch, FS hiccup) must not strand MEMORY_AND_DISK blocks for the
-    // life of the session. Every registered thunk is an idempotent
-    // unpersist, so the registry never double-frees anything live.
-    val onFailure = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
-    def guarded[A](body: => A): A =
-      try body
-      catch {
-        case e: Throwable =>
-          onFailure.reverseIterator.foreach(c =>
-            try c() catch { case _: Throwable => () })
-          throw e
-      }
-    guarded {
+    guarded { onFailure =>
     val (batchDocs, expansion) =
       if (cfg.exactPrecollapse) Pipeline.precollapse(newDocs) else (newDocs, None)
     expansion.foreach(e => onFailure += (() => { e.unpersist(); () }))
@@ -350,19 +355,7 @@ object Incremental {
     implicit val s: SparkSession = spark
     import spark.implicits._
     val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // failure-path cleanup registry — see [[run]]: a thrown takedown in a
-    // long-running driver must not strand persisted relations; thunks are
-    // idempotent unpersists, success transfers ownership to the result
-    val onFailure = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
-    def guarded[A](body: => A): A =
-      try body
-      catch {
-        case e: Throwable =>
-          onFailure.reverseIterator.foreach(c =>
-            try c() catch { case _: Throwable => () })
-          throw e
-      }
-    guarded {
+    guarded { onFailure =>
     val rm = removeIds.select("doc_id").distinct().persist(mem)
     onFailure += (() => { rm.unpersist(); () })
     val touched = existingAssign.join(rm, Seq("doc_id"))

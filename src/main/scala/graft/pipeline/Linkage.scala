@@ -21,10 +21,10 @@ import org.apache.spark.sql.functions._
   * 10^12-doc corpus costs O(batch × bucket), not O(corpus²).
   *
   * Skew: keys whose combined side cardinality exceeds `cfg.hotBlockSize`
-  * are salted — the LEFT side (the batch, in batch-vs-corpus usage) is
-  * replicated over all `cfg.saltFactor` salts while each right-side row
-  * keeps one salt, so every cross pair is produced exactly once and the
-  * large side is never replicated. Keys whose pair volume ln×rn exceeds
+  * are hot and split across reducers by [[Blocking.bandedPairs]], which
+  * replicates only the LEFT side (the batch, in batch-vs-corpus usage),
+  * so every cross pair is produced exactly once and the large side is
+  * never replicated. Keys whose pair volume ln×rn exceeds
   * `cfg.maxBlockSize`² are degenerate and dropped with logged counts —
   * the product rule makes a self-link's drop set identical to the
   * self-dedup pipeline's (bsize² > max² ⇔ bsize > max). The census is an
@@ -41,11 +41,9 @@ import org.apache.spark.sql.functions._
   */
 object Linkage {
 
-  final case class LinkStats(droppedKeys: Long, saltedKeys: Long)
-
   final case class LinkResult(
       matches: DataFrame, // (left_id, right_id, score) — is_dup pairs only
-      stats: LinkStats,
+      stats: Blocking.BlockStats, // droppedRows counts both sides' rows
       release: () => Unit)
 
   def link(spark: SparkSession, left: Dataset[Doc], right: Dataset[Doc],
@@ -89,51 +87,22 @@ object Linkage {
     // degenerate test in DIVISION form (ln > maxPairs div rn ⟺ ln·rn >
     // maxPairs for positive integers): the direct product wraps Long at
     // the design point (ln = 10^9, rn = 10^10 ⇒ 10^19 > 2^63), which would
-    // misclassify an ultra-degenerate key as merely hot and salt-join it
+    // misclassify an ultra-degenerate key as merely hot and join it
     val maxPairs = cfg.maxBlockSize.toLong * cfg.maxBlockSize.toLong
     val census = lB.groupBy("block_key").agg(count(lit(1)).as("ln"))
       .join(rB.groupBy("block_key").agg(count(lit(1)).as("rn")), Seq("block_key"))
       .filter(col("ln") + col("rn") > cfg.hotBlockSize.toLong ||
         expr(s"ln > $maxPairs div rn"))
       .collect()
-    val degKeys = census.filter(r => r.getLong(1) > maxPairs / r.getLong(2))
-    val hotKeys = census.filter(r => r.getLong(1) <= maxPairs / r.getLong(2))
-    if (degKeys.nonEmpty)
-      System.err.println(s"[graft] linkage: dropped ${degKeys.length} degenerate keys")
-    val stats = LinkStats(degKeys.length.toLong, hotKeys.length.toLong)
-
-    val degSet = degKeys.map(_.getLong(0)).toSet
-    val hotSet = hotKeys.map(_.getLong(0)).toSet
-    val isDeg = udf((k: Long) => degSet.contains(k))
-    val isHot = udf((k: Long) => hotSet.contains(k))
-    def live(b: DataFrame) = if (degSet.isEmpty) b else b.filter(!isDeg(col("block_key")))
-    def normal(b: DataFrame) = if (hotSet.isEmpty) live(b) else live(b).filter(!isHot(col("block_key")))
-    def hot(b: DataFrame) = if (hotSet.isEmpty) b.limit(0) else live(b).filter(isHot(col("block_key")))
+    val (degKeys, hotKeys) = census.partition(r => r.getLong(1) > maxPairs / r.getLong(2))
+    val stats = Blocking.BlockStats(degKeys.length.toLong,
+      degKeys.map(r => r.getLong(1) + r.getLong(2)).sum, hotKeys.length.toLong)
 
     // oriented cross join: a = left id, b = right id (no a<b
-    // canonicalization — sides are distinct relations); the prefilter
-    // cascade is the SHARED Blocking.prefilteredPairs, with the diagonal
+    // canonicalization — sides are distinct relations), with the diagonal
     // dropped: equal ids across sides denote the same record by contract
-    def crossJoin(l0: DataFrame, r0: DataFrame, extraKey: Seq[String]): DataFrame =
-      Blocking.prefilteredPairs(l0, r0, extraKey, _ =!= _, cfg)
-
-    // salting orientation: replicate the LEFT (batch) side over the salts,
-    // give each RIGHT (corpus) row one salt — the large side is scanned
-    // once, never replicated, and each cross pair exists at exactly one salt
-    val normalPairs = crossJoin(normal(lB), normal(rB), Nil)
-    val sf = cfg.saltFactor
-    val hotLeft = hot(lB).withColumn("salt", explode(sequence(lit(0), lit(sf - 1))))
-    val hotRight = hot(rB).withColumn("salt",
-      pmod(xxhash64(col("doc_id")), lit(sf.toLong)).cast("int"))
-    val hotPairs = crossJoin(hotLeft, hotRight, Seq("salt"))
-
-    val cand = normalPairs.unionByName(hotPairs)
-      .groupBy(col("a"), col("b"))
-      .agg(min(col("media_dist")).as("media_dist"), min(col("sim_ham")).as("sim_ham"),
-        sum(when(col("is_text"), 1L).otherwise(0L)).as("n_text_bands"))
-      .filter(col("media_dist") < cfg.mediaThreshold ||
-        col("n_text_bands") >= cfg.minTextBands)
-      .drop("n_text_bands")
+    val cand = Blocking.bandedPairs(lB, rB, degKeys.map(_.getLong(0)).toSeq,
+      hotKeys.map(_.getLong(0)).toSeq, _ =!= _, cfg)
 
     // per-side score tables: `a` ids resolve only in lSigs and `b` ids only
     // in rSigs, so the corpus side is never unioned or dedup-shuffled (and a

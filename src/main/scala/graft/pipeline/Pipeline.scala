@@ -155,8 +155,8 @@ object Pipeline {
     * content-digest group, so a k-copy farm costs O(k) — one narrow digest
     * map, one (digest, doc_id) shuffle — instead of the O(k²) within-block
     * pair blowup no blocking scheme can avoid for identical content. The
-    * digest is a columnar 128-bit md5 over the canonical span JSON —
-    * whole-stage codegen, and collision-safe at 10^12 docs (64 bits would
+    * digest is a 128-bit two-lane xxhash64 over a canonical span struct —
+    * whole-stage codegen, and wide enough for 10^12 docs (64 bits would
     * birthday-collide there and silently merge unrelated docs). Cheap
     * detection first: a corpus with no exact duplicates (the common case)
     * pays ONLY the digest scan. Returns (repDocs, mapping) — the mapping is
@@ -291,49 +291,25 @@ object Pipeline {
               resolver: MediaResolver = DefaultMedia): DataFrame = {
     implicit val s: SparkSession = spark
     import spark.implicits._
-    // one signature derivation, reused by blocking AND phase-2 scoring
+    // one signature derivation per side (the target's decodes media),
+    // reused by blocking AND phase-2 scoring
     val sigs = Signatures.derive(candidates, cfg, resolver).map(_.sig)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val blocks = Blocking.blockRows(sigs, cfg)
-
-    // derive the target's signature ONCE (it decodes media) and reuse it for
-    // both its band keys and the phase-2 scoring union
     val targetSigs = Signatures
       .derive(spark.createDataset(Seq(target)), cfg, resolver).map(_.sig)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val targetBlocks = Blocking.blockRows(targetSigs, cfg)
 
-    val l = blocks.toDF().alias("l")
-    val r = broadcast(targetBlocks.toDF().alias("r"))
-    val cand = l.join(r, col("l.block_key") === col("r.block_key") &&
-        col("l.doc_id") =!= col("r.doc_id"))
-      .withColumn("media_dist",
-        Blocking.mediaDistUdf(col("l.media"), col("r.media"), col("l.slots")))
-      .withColumn("sim_ham",
-        when(col("l.hasText") && col("r.hasText"),
-          bit_count(col("l.simhash").bitwiseXOR(col("r.simhash"))))
-          .otherwise(lit(9999)))
-      .filter(col("media_dist") < cfg.mediaThreshold ||
-        col("sim_ham") < cfg.simhashPrefilter)
-      .select(least(col("l.doc_id"), col("r.doc_id")).as("a"),
-        greatest(col("l.doc_id"), col("r.doc_id")).as("b"),
-        col("media_dist"), col("sim_ham"))
+    // a = corpus doc, b = target. `=!=` drops the target's own id when it
+    // is ALSO in `candidates` (reference-style `graft cat.jpg photos/`
+    // with cat.jpg inside photos/), so each id resolves in exactly one
+    // side table and scoring cannot fan a pair out into duplicate rows.
+    // No vote here (see above): the min over bands is the whole reduction.
+    val cand = Blocking.prefilteredPairs(Blocking.bandRowsDF(sigs, cfg),
+        broadcast(Blocking.bandRowsDF(targetSigs, cfg)), Nil, _ =!= _, cfg)
       .groupBy("a", "b")
       .agg(min("media_dist").as("media_dist"), min("sim_ham").as("sim_ham"))
-
-    // the target may ALSO be in `candidates` (reference-style invocation:
-    // `graft cat.jpg photos/` with cat.jpg inside photos/). Its doc_id
-    // would then appear twice in the union, and Pairs.score's per-endpoint
-    // id joins fan every (dup, target) row out into duplicates — an
-    // inflated count, double-printed members, and each destructive action
-    // planned twice (the second delete/move fails). Keep exactly one
-    // signature row per id: the corpus copy of the target id is dropped.
-    val allSigs = sigs.filter(col("doc_id") =!= target.doc_id).union(targetSigs)
-    val scored = Pairs.score(cand, allSigs, cfg)
-    val t = target.doc_id
-    val out = scored.filter(col("is_dup"))
-      .select(when(col("a") === t, col("b")).otherwise(col("a")).as("doc_id"),
-        col("score"))
+    val out = Pairs.scoreSides(cand, sigs, targetSigs, cfg)
+      .filter(col("is_dup")).select(col("a").as("doc_id"), col("score"))
     // materialize the (per-target, small) result so the cached signature
     // blocks can be released before returning — repeated compare() calls in
     // a long-lived session would otherwise leak storage memory

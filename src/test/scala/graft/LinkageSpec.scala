@@ -26,16 +26,17 @@ class LinkageSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
-  private def runOnce() = {
+  private def runWith(cfg: GraftConfig) = {
     val s = spark
     val res = Linkage.link(s, s.createDataset(leftSeq)(org.apache.spark.sql.Encoders.product),
-      s.createDataset(rightSeq)(org.apache.spark.sql.Encoders.product),
-      Corpus.RecommendedConfig)
+      s.createDataset(rightSeq)(org.apache.spark.sql.Encoders.product), cfg)
     val pairs = res.matches.select("left_id", "right_id").collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
     res.release()
-    pairs
+    (pairs, res.stats)
   }
+
+  private def runOnce() = runWith(Corpus.RecommendedConfig)._1
 
   private lazy val predicted = runOnce()
 
@@ -62,6 +63,23 @@ class LinkageSpec extends AnyFunSuite with SparkTestBase {
 
   test("linkage is deterministic across runs") {
     assert(runOnce() == predicted)
+  }
+
+  test("salted linkage (tiny hotBlockSize) returns the same matches as the default") {
+    // 2, not a larger "small" value: a joinable key here holds a base and
+    // its few perturbed copies, so ln + rn rarely exceeds 3
+    val (salted, stats) = runWith(Corpus.RecommendedConfig.copy(hotBlockSize = 2))
+    assert(stats.saltedBlocks > 0, s"no key took the salted path: $stats")
+    assert(salted == predicted,
+      s"salted mismatch: missed=${(predicted -- salted).take(5)} " +
+        s"spurious=${(salted -- predicted).take(5)}")
+  }
+
+  test("degenerate linkage keys (tiny maxBlockSize) are dropped and counted") {
+    val (pairs, stats) = runWith(Corpus.RecommendedConfig.copy(maxBlockSize = 1))
+    assert(stats.droppedBlocks > 0 && stats.droppedRows > 0, s"nothing dropped: $stats")
+    // dropping keys only removes candidacy evidence, never adds a match
+    assert(pairs.subsetOf(predicted), s"spurious=${(pairs -- predicted).take(5)}")
   }
 
   test("self-link equals the self-dedup pipeline's direct edge set") {

@@ -130,6 +130,26 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(expected.subsetOf(found.toSet), s"missing duplicates: ${expected -- found.toSet}")
   }
 
+  test("targeted compare is a superset of the target's direct edges in the full run") {
+    implicit val s = spark
+    import s.implicits._
+    // the compare scaladoc's contract: E2 answers are a superset, never a
+    // contradiction, of a pair run() LINKED. Targets: the two docs with the
+    // most direct is_dup edges, each queried against the full corpus (the
+    // target's own id included)
+    val edges = result.edges.collect().map(r => (r.getString(0), r.getString(1)))
+    val neighbors = edges.flatMap { case (a, b) => Seq(a -> b, b -> a) }
+      .groupBy(_._1).map { case (id, es) => id -> es.map(_._2).toSet }
+    val targets = neighbors.toSeq.sortBy { case (id, ns) => (-ns.size, id) }.take(2)
+    assert(targets.nonEmpty, "degenerate corpus: no duplicate edges")
+    targets.foreach { case (id, direct) =>
+      val target = docsSeq.find(_.doc_id == id).get
+      val found = Pipeline.compare(s, target, s.createDataset(docsSeq), Corpus.RecommendedConfig)
+        .select("doc_id").as[String].collect().toSet
+      assert(direct.subsetOf(found), s"compare($id) misses linked docs ${direct -- found}")
+    }
+  }
+
   test("media-only docs: clustering reduces to the reference radius predicate") {
     implicit val s = spark
     import s.implicits._
