@@ -160,12 +160,12 @@ object Main {
     * when --bucketed is also given.
     */
   private def checkpointIoOf(spark: SparkSession, cli: CliConfig)
-      : (Option[String], Option[graft.pipeline.TableIO]) =
-    if (cli.checkpointDir.isEmpty) (None, None)
+      : Option[graft.pipeline.TableIO] =
+    if (cli.checkpointDir.isEmpty) None
     else if (cli.bucketed)
-      (None, Some(new graft.pipeline.BucketedParquetTableIO(cli.checkpointDir,
-        buckets = spark.sessionState.conf.numShufflePartitions)))
-    else (Some(cli.checkpointDir), None)
+      Some(new graft.pipeline.BucketedParquetTableIO(cli.checkpointDir,
+        buckets = spark.sessionState.conf.numShufflePartitions))
+    else Some(new graft.pipeline.ParquetTableIO(cli.checkpointDir))
 
   private val imageExts = Seq(".png", ".jpg", ".jpeg")
 
@@ -244,9 +244,8 @@ object Main {
     * uncapped cluster relation, never this.
     */
   def duplicateGroups(spark: SparkSession, cli: CliConfig): DataFrame = {
-    val (cpDir, cpIo) = checkpointIoOf(spark, cli)
     val result = Pipeline.run(spark, collectDocs(spark, cli), graftConfig(cli),
-      checkpointDir = cpDir, checkpointIo = cpIo)
+      checkpoint = checkpointIoOf(spark, cli))
     val groups = Report.groups(result.clusters).localCheckpoint(true)
     result.release()
     groups
@@ -358,9 +357,8 @@ object Main {
       }.getOrElse(0)
       if (failures > 0) 3 else 0
     } else {
-      val (cpDir, cpIo) = checkpointIoOf(spark, cli)
       val result = Pipeline.run(spark, collectDocs(spark, cli), graftConfig(cli),
-        checkpointDir = cpDir, checkpointIo = cpIo)
+        checkpoint = checkpointIoOf(spark, cli))
       try {
         val clusters = result.clusters
           .select(col("doc_id").cast("string").as("doc_id"),

@@ -154,7 +154,7 @@ object Bucketing {
   * path contract is [[ParquetTableIO]]'s (same dirs, same manifests, and
   * the files remain readable as plain parquet by older readers — they
   * just lose the co-location), so this drops into [[Pipeline.run]]'s
-  * `checkpointIo` without touching the resume machinery. Catalog entries
+  * `checkpoint` without touching the resume machinery. Catalog entries
   * are per-session metadata only; [[read]] re-registers from the files
   * when a fresh session reads an existing generation.
   */

@@ -1,0 +1,225 @@
+package graft.pipeline
+
+import graft.model.DocSig
+import graft.text.Hashing
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.functions.{col, struct}
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+
+/** The on-disk format of one corpus-state generation — the ONLY code that
+  * knows its stage names and key derivations. [[Pipeline.run]]'s
+  * checkpoint tail, [[Incremental.fromCheckpoint]] and `StreamIngest`'s
+  * folds, retractions and chain reads all go through here.
+  *
+  * A FULL generation holds the [[ParquetTableIO]] stages `signatures`
+  * ([[DocSig]] rows nested under `sig`, manifest key = the generation key
+  * `k`), optionally `bands` ([[Blocking.bandRowsDF]] rows, `hash64(k, 7)`)
+  * and `assignments` (`(doc_id, cluster_id)` for every doc,
+  * `hash64(k, 5)`), written LAST: the (signatures, assignments) key pair
+  * is the commit marker. A DELTA generation holds only its batch's rows as
+  * `signatures_delta` (`k`) + `bands_delta` (`hash64(k, 7)`) +
+  * `tombstones_delta` (`hash64(k, 9)`: ids whose ANCESTOR rows are dead,
+  * empty for folds), the FULL `assignments` table, and a `PARENT` file
+  * naming the previous generation; [[read]] refuses it rather than return
+  * a partial corpus.
+  *
+  * Each writer first scrubs the other layout's leftovers from its dir: a
+  * crashed earlier attempt (e.g. under a different compaction cadence)
+  * could have left stages whose deterministic keys would pair with this
+  * write and make a partial dir read as consistent.
+  */
+object Generation {
+
+  /** Corpus state: signatures, per-doc assignments, the band relation when
+    * the generation carries one, and the generation key (the signature
+    * stage's manifest key — the root later generation keys chain off).
+    */
+  final case class State(sigs: Dataset[DocSig], assign: DataFrame,
+                         bands: Option[DataFrame], key: Long)
+
+  private val SigStage = "signatures"
+  private val BandStage = "bands"
+  private val AssignStage = "assignments"
+  private val SigDelta = "signatures_delta"
+  private val BandDelta = "bands_delta"
+  private val TombDelta = "tombstones_delta"
+  private val ParentFile = "PARENT"
+
+  private def assignKey(key: Long): Long = Hashing.hash64(key, 5L)
+  private def bandsKey(key: Long): Long = Hashing.hash64(key, 7L)
+  private def tombKey(key: Long): Long = Hashing.hash64(key, 9L)
+
+  /** The full generation at `dir`. Consistency is VERIFIED before anything
+    * is read: both manifests must exist and the assignment key must be
+    * `hash64(signature key, 5)`. A dir where a killed run left stages from
+    * different generations (day-N signatures beside day-N−1 assignments)
+    * would otherwise fold silently into wrong clusters: linkage matches
+    * against the newer signatures inner-join the stale assignment table
+    * and simply drop. A bands stage whose key does not pair reads as
+    * `None`.
+    */
+  def read(spark: SparkSession, dir: String): State = {
+    import spark.implicits._
+    val io = new ParquetTableIO(dir)
+    val key = (io.completedKey(SigStage), io.completedKey(AssignStage)) match {
+      case (Some(k), Some(a)) if a == assignKey(k) => k
+      case (sk, ak) => throw new IllegalStateException(
+        s"checkpoint $dir is not a consistent generation: " +
+          s"signatures key=$sk assignments key=$ak — stages come from " +
+          "different runs (or a run died mid-write); re-run the pipeline " +
+          "or fold from an intact generation dir")
+    }
+    val bands =
+      if (io.completedKey(BandStage).contains(bandsKey(key))) Some(io.read(spark, BandStage))
+      else None
+    State(io.read(spark, SigStage).select("sig.*").as[DocSig],
+      io.read(spark, AssignStage).select("doc_id", "cluster_id"), bands, key)
+  }
+
+  /** Write a full generation to `dir` — signatures, then the optional band
+    * relation, then assignments (the commit marker) — after scrubbing any
+    * stale `PARENT` and delta stages. After a fold, `sigs` is the previous
+    * signatures ∪ the fold's `batchSigs` and `assign` is
+    * `Incremental.applyRemap(oldAssign, remapped) ∪ assignments`; after a
+    * retraction, `Incremental.applyRetractSigs` and the result's
+    * assignments. `key` is any value unique per generation, e.g.
+    * `Hashing.hash64(previousKey, batchDigest)`.
+    */
+  def write(spark: SparkSession, dir: String, sigs: Dataset[DocSig],
+            assign: DataFrame, key: Long,
+            bands: Option[DataFrame] = None): Unit = {
+    Files.deleteIfExists(Paths.get(dir, ParentFile))
+    Seq(SigDelta, BandDelta, TombDelta).foreach(st => deleteRecursively(Paths.get(dir, st)))
+    val io = new ParquetTableIO(dir)
+    io.write(SigStage, sigs.toDF().select(struct(col("*")).as("sig")), key)
+    bands.foreach(b => io.write(BandStage, b, bandsKey(key)))
+    io.write(AssignStage, assign.select("doc_id", "cluster_id"), assignKey(key))
+  }
+
+  /** [[Pipeline.run]]'s checkpointed tail: the band relation, then the
+    * expanded assignment as the commit marker, each through
+    * [[Checkpoints.stage]] under the run's resume key — so the completed
+    * run dir is a full generation [[read]] accepts, and a resumed run
+    * skips both. Returns the assignment stage as read back.
+    */
+  private[graft] def checkpointTail(spark: SparkSession, io: TableIO, key: Long)(
+      bands: => DataFrame, assign: => DataFrame): DataFrame = {
+    Checkpoints.stage(spark, io, BandStage, bandsKey(key))(bands)
+    Checkpoints.stage(spark, io, AssignStage, assignKey(key))(assign)
+  }
+
+  /** Write a delta generation to `dir`: the batch's signature and band
+    * rows, the tombstoned ids, the full assignment table, and the `PARENT`
+    * link — after scrubbing stale full `signatures`/`bands` stages. Every
+    * delta writes a tombstone stage (folds write an EMPTY one): the chain
+    * reader REQUIRES it, so a retraction delta that lost its tombstones
+    * reads as corruption, never as a harmless fold that silently
+    * resurrects retracted docs.
+    */
+  private[graft] def writeDelta(dir: String, sigs: Dataset[DocSig],
+      bands: DataFrame, tombstones: DataFrame, assign: DataFrame, key: Long,
+      parent: String): Unit = {
+    Seq(SigStage, BandStage).foreach(st => deleteRecursively(Paths.get(dir, st)))
+    val io = new ParquetTableIO(dir)
+    io.write(SigDelta, sigs.toDF().select(struct(col("*")).as("sig")), key)
+    io.write(BandDelta, bands, bandsKey(key))
+    io.write(TombDelta, tombstones.select("doc_id"), tombKey(key))
+    io.write(AssignStage, assign.select("doc_id", "cluster_id"), assignKey(key))
+    Files.writeString(Paths.get(dir, ParentFile), parent)
+  }
+
+  /** The generation `gen` under `stateDir` links to, when it is a delta. */
+  private[graft] def parentOf(stateDir: String, gen: String): Option[String] = {
+    val p = Paths.get(stateDir, gen, ParentFile)
+    if (Files.exists(p)) Some(Files.readString(p).trim) else None
+  }
+
+  /** Generation chain, current-first, ending at the root full generation.
+    * Tail-recursive: chain length is compaction-bounded in normal
+    * operation, but the walk must not assume it.
+    */
+  private[graft] def chain(stateDir: String, gen: String): List[String] = {
+    @annotation.tailrec
+    def loop(g: String, acc: List[String], seen: Set[String]): List[String] = {
+      if (seen(g)) // corrupted PARENT cycle: fail loudly, never spin
+        throw new IllegalStateException(
+          s"generation chain cycle at $g in $stateDir (PARENT links: ${acc.reverse.mkString(" -> ")})")
+      parentOf(stateDir, g) match {
+        case Some(p) => loop(p, g :: acc, seen + g)
+        case None => (g :: acc).reverse
+      }
+    }
+    loop(gen, Nil, Set.empty)
+  }
+
+  /** Corpus state at the head of `chain` (as [[chain]] returns it); `key`
+    * is the head's signature key. Each delta dir's stage keys are
+    * validated against the same pairing rule [[read]] enforces for full
+    * dirs, so a dir mixing stages from different write attempts is
+    * rejected, not read.
+    *
+    * State is folded ROOT-FIRST: a delta's tombstone ids (written by
+    * retraction deltas) are subtracted from everything accumulated so far
+    * — its ancestors — BEFORE the delta's own rows union in, so a
+    * tombstoned id re-inserted by a LATER fold (the CDC replace path)
+    * survives. Fold deltas carry no tombstones and reduce to a plain
+    * union.
+    */
+  private[graft] def readChain(spark: SparkSession, stateDir: String,
+      chain: List[String]): State = {
+    val sigEnc = org.apache.spark.sql.Encoders.product[DocSig]
+    // (sigsDF, bands, key, headAssign, tombstones) per chain part
+    val parts = chain.zipWithIndex.map { case (g, idx) =>
+      val dir = s"$stateDir/$g"
+      if (parentOf(stateDir, g).isDefined) {
+        val io = new ParquetTableIO(dir)
+        val k = io.completedKey(SigDelta).getOrElse(
+          throw new IllegalStateException(s"delta generation $dir lacks $SigDelta"))
+        if (!io.completedKey(AssignStage).contains(assignKey(k)) ||
+            !io.completedKey(BandDelta).contains(bandsKey(k)))
+          throw new IllegalStateException(
+            s"delta generation $dir is not a consistent write (mixed stage keys)")
+        val tombstones = io.completedKey(TombDelta) match {
+          case Some(tk) if tk == tombKey(k) => io.read(spark, TombDelta)
+          case other => throw new IllegalStateException(
+            s"delta generation $dir lacks a consistent $TombDelta stage (key=$other) — " +
+              "a retraction delta that lost its tombstones must never be read as a fold")
+        }
+        // only the HEAD's assignments are consumed — skip the parquet
+        // open (driver-side listing + footer reads of a corpus-sized
+        // table) for the up-to-compactEvery non-head chain parts
+        val assign =
+          if (idx == 0) Some(io.read(spark, AssignStage).select("doc_id", "cluster_id"))
+          else None
+        (io.read(spark, SigDelta).select("sig.*"),
+          Some(io.read(spark, BandDelta)), k, assign, Some(tombstones))
+      } else {
+        val st = read(spark, dir)
+        (st.sigs.toDF(), st.bands, st.key, Some(st.assign), Option.empty[DataFrame])
+      }
+    }
+    val ordered = parts.reverse // root-first
+    val bandsAvailable = parts.forall(_._2.isDefined)
+    var sigsAcc = ordered.head._1
+    var bandsAcc = if (bandsAvailable) ordered.head._2 else None
+    ordered.tail.foreach { p =>
+      p._5.foreach { t =>
+        sigsAcc = sigsAcc.join(t, Seq("doc_id"), "left_anti")
+        bandsAcc = bandsAcc.map(_.join(t, Seq("doc_id"), "left_anti"))
+      }
+      sigsAcc = sigsAcc.unionByName(p._1)
+      bandsAcc = bandsAcc.map(_.unionByName(p._2.get))
+    }
+    // head's assignments come from the validated per-part reader —
+    // always full in every generation
+    State(sigsAcc.as[DocSig](sigEnc), parts.head._4.get, bandsAcc, parts.head._3)
+  }
+
+  private[graft] def deleteRecursively(p: Path): Unit =
+    if (Files.exists(p)) {
+      val walk = Files.walk(p)
+      val paths = try walk.iterator().asScala.toSeq.reverse finally walk.close()
+      paths.foreach(Files.delete)
+    }
+}

@@ -47,25 +47,28 @@ import org.apache.spark.sql.functions._
   */
 object Incremental {
 
-  /** Fold a batch using the state a previous [[Pipeline.run]] checkpointed
-    * to `checkpointDir` (signature + assignment stages via
-    * [[Pipeline.readState]]) — the production entry point: yesterday's run
-    * persisted its lineage, today's fold reads it instead of recomputing
-    * anything over the old corpus.
+  /** Fold a batch into the full [[Generation]] at `checkpointDir` — a
+    * [[Pipeline.run]] checkpoint or a dir [[Generation.write]] persisted —
+    * the production entry point: yesterday's run persisted its lineage,
+    * today's fold reads it instead of recomputing anything over the old
+    * corpus. Caller-supplied `existingBands` win over the checkpointed
+    * band stage.
     */
   def fromCheckpoint(spark: SparkSession, checkpointDir: String,
                      newDocs: Dataset[Doc], cfg: GraftConfig = GraftConfig(),
                      resolver: MediaResolver = DefaultMedia,
                      existingBands: Option[DataFrame] = None): IncrementalResult = {
-    val (sigs, assign, bands, releaseState) =
-      readFoldState(spark, checkpointDir, existingBands)
-    val inner = run(spark, sigs, assign, newDocs, cfg, resolver, bands)
+    val state = Generation.read(spark, checkpointDir)
+    val (sigs, bands, releaseState) =
+      foldInputs(spark, state.sigs, existingBands.orElse(state.bands))
+    val inner = run(spark, sigs, state.assign, newDocs, cfg, resolver, bands)
     inner.copy(release = () => { inner.release(); releaseState() })
   }
 
-  /** A generation's fold inputs — (signatures, assignments, bands) — with
-    * the fold-duration treatment applied to the parquet-backed relations
-    * (shared by [[fromCheckpoint]] and `StreamIngest.foldBatch`):
+  /** A generation's fold inputs — (signatures, bands) — with the
+    * fold-duration treatment applied to the parquet-backed relations
+    * (shared by [[fromCheckpoint]] and `StreamIngest`'s folds and
+    * retractions):
     *
     * Both are persisted (each is consumed 2-3×: linkage census, cross-join
     * side, score side table) and their parallelism is restored first — a
@@ -75,22 +78,8 @@ object Incremental {
     * first shuffle: measured 21 s vs 6 s for the same join at 102k docs.
     * At production scale the file count makes the repartition a no-op
     * (guarded), and the round-robin shuffle rides the one corpus scan the
-    * fold pays anyway to materialize the cache. Caller-supplied
-    * `existingBands` win over the checkpointed stage and are persisted the
-    * same way. The returned thunk releases everything.
-    */
-  private[graft] def readFoldState(spark: SparkSession, checkpointDir: String,
-      existingBands: Option[DataFrame] = None)
-      : (Dataset[DocSig], DataFrame, Option[DataFrame], () => Unit) = {
-    val (sigs0, assign) = Pipeline.readState(spark, checkpointDir)
-    val (sigs, bands, release) = foldInputs(spark, sigs0,
-      existingBands.orElse(Pipeline.readBands(spark, checkpointDir)))
-    (sigs, assign, bands, release)
-  }
-
-  /** The widen + persist treatment alone, for callers that assemble the
-    * relations themselves (e.g. `StreamIngest` unioning a delta-generation
-    * chain): see [[readFoldState]] for why both steps matter.
+    * fold pays anyway to materialize the cache. The returned thunk
+    * releases everything.
     */
   private[graft] def foldInputs(spark: SparkSession, sigs0: Dataset[DocSig],
       bands0: Option[DataFrame])
@@ -115,43 +104,11 @@ object Incremental {
       // `release`, so generation writers can reuse them without re-deriving
       release: () => Unit)
 
-  /** Persist a folded generation as the stage tables [[fromCheckpoint]] /
-    * [[Pipeline.readState]] read — closing the multi-day loop: day N's
-    * fold writes a NEW generation dir (generations are immutable; the
-    * previous dir stays a valid fold source), day N+1 folds from it
-    * without ever re-running the full pipeline.
-    *
-    *   - `sigs`: previous generation's signatures ∪ the batch's (derive
-    *     the batch side with [[Signatures.derive]], or re-read it from
-    *     this fold's own stages)
-    *   - `assignments`: `applyRemap(oldAssign, result.remapped)
-    *     unionByName result.assignments`
-    *   - `generationKey`: any value unique per generation, e.g.
-    *     `Hashing.hash64(previousKey, batchDigest)` — the manifest pair is
-    *     written with the same key derivation [[Pipeline.run]] uses, so
-    *     [[Pipeline.readState]]'s consistency check accepts it.
-    */
-  def writeState(spark: SparkSession, checkpointDir: String,
-                 sigs: Dataset[DocSig], assignments: DataFrame,
-                 generationKey: Long,
-                 bands: Option[DataFrame] = None): Unit = {
-    val io = new ParquetTableIO(checkpointDir)
-    io.write("signatures",
-      sigs.toDF().select(org.apache.spark.sql.functions.struct(col("*")).as("sig")),
-      generationKey)
-    // optional bands stage (old ∪ batch band rows, [[Blocking.bandRowsDF]]
-    // schema): lets the NEXT fold skip the O(corpus) key re-derivation —
-    // written before assignments, the generation's commit marker
-    bands.foreach(b => io.write("bands", b,
-      graft.text.Hashing.hash64(generationKey, 7L)))
-    io.write("assignments", assignments.select("doc_id", "cluster_id"),
-      graft.text.Hashing.hash64(generationKey, 5L))
-  }
-
   /** The old assignment table with the relabel map applied — a broadcast
     * join (the remap covers only TOUCHED clusters, a batch-sized relation).
     * `applyRemap(oldAssign, inc.remapped) union inc.assignments` is the
-    * next generation's full assignment state, ready to checkpoint.
+    * next generation's full assignment state, ready for
+    * [[Generation.write]].
     */
   def applyRemap(existingAssign: DataFrame, remapped: DataFrame): DataFrame =
     existingAssign.join(
@@ -159,26 +116,6 @@ object Incremental {
         existingAssign("cluster_id") === remapped("old_cluster_id"), "left")
       .select(existingAssign("doc_id"),
         coalesce(remapped("cluster_id"), existingAssign("cluster_id")).as("cluster_id"))
-
-  /** Failure-path cleanup registry of [[run]] and [[retract]]: `body`
-    * registers a release thunk per relation it persists, and the thunks
-    * run (newest first, errors swallowed) only if `body` throws — on
-    * success, ownership of every persisted relation transfers to the
-    * result's release thunk. Folds and takedowns live inside long-running
-    * drivers: a thrown stage (bad batch, FS hiccup) must not strand
-    * MEMORY_AND_DISK blocks for the life of the session. Every registered
-    * thunk is an idempotent unpersist, so the registry never double-frees
-    * anything live.
-    */
-  private def guarded[A](body: scala.collection.mutable.Buffer[() => Unit] => A): A = {
-    val onFailure = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
-    try body(onFailure)
-    catch {
-      case e: Throwable =>
-        onFailure.reverseIterator.foreach(c => try c() catch { case _: Throwable => () })
-        throw e
-    }
-  }
 
   /** `existingBands`: optionally the old corpus's prebuilt band relation
     * ([[Blocking.bandRowsDF]] schema, checkpointed by the previous run).
@@ -207,7 +144,7 @@ object Incremental {
     val tRun = System.nanoTime()
     def mark(label: String): Unit =
       System.err.println(f"[graft] incremental $label: ${(System.nanoTime() - tRun) / 1e9}%.2f s elapsed")
-    guarded { onFailure =>
+    Pipeline.guarded { onFailure =>
     val (batchDocs, expansion) =
       if (cfg.exactPrecollapse) Pipeline.precollapse(newDocs) else (newDocs, None)
     expansion.foreach(e => onFailure += (() => { e.unpersist(); () }))
@@ -300,8 +237,8 @@ object Incremental {
     * removed docs and for touched survivors are dropped, and the touched
     * survivors' representative rows (possibly re-keyed by the local
     * pre-collapse when a removed rep's copy was promoted) take their place.
-    * Pair with [[writeState]] — `writeState(dir, applyRetractSigs(oldSigs,
-    * res), res.assignments, key)` persists the retracted corpus as a
+    * Pair with [[Generation.write]] — `Generation.write(spark, dir,
+    * applyRetractSigs(oldSigs, res), res.assignments, key)` persists the retracted corpus as a
     * generation [[fromCheckpoint]] folds tomorrow's batch into, closing the
     * insert+delete production loop (`RetractSpec` asserts the composed
     * result byte-equals a full run). Call before `res.release()`.
@@ -355,7 +292,7 @@ object Incremental {
     implicit val s: SparkSession = spark
     import spark.implicits._
     val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    guarded { onFailure =>
+    Pipeline.guarded { onFailure =>
     val rm = removeIds.select("doc_id").distinct().persist(mem)
     onFailure += (() => { rm.unpersist(); () })
     val touched = existingAssign.join(rm, Seq("doc_id"))

@@ -30,7 +30,7 @@ object Pipeline {
                           release: () => Unit = () => ())
 
   /** Resume key root = config digest ⊕ input-data digest: reusing a
-    * checkpointDir with CHANGED input data (same config) invalidates every
+    * checkpoint dir with CHANGED input data (same config) invalidates every
     * stage. The digest is order-independent (count + bit_xor over per-row
     * hashes) and covers CONTENT, not just ids — xxhash64(doc_id,
     * to_json(spans)) changes when a doc's spans change under a stable
@@ -44,33 +44,37 @@ object Pipeline {
     Hashing.hash64(Hashing.hash64(cfg.configHash, row.getLong(0)), row.getLong(1))
   }
 
+  /** `checkpoint`: the TableIO every stage is materialized through
+    * (resumable; e.g. `new ParquetTableIO(dir)`, or
+    * [[BucketedParquetTableIO]] for co-located state joins). The completed
+    * dir is a full [[Generation]] — [[Generation.read]] /
+    * [[Incremental.fromCheckpoint]] fold the next batch into it.
+    */
   def run(spark: SparkSession, docs: Dataset[Doc],
           cfg: GraftConfig = GraftConfig(),
           resolver: MediaResolver = DefaultMedia,
-          checkpointDir: Option[String] = None,
-          checkpointIo: Option[TableIO] = None): Result = {
+          checkpoint: Option[TableIO] = None): Result = {
     implicit val s: SparkSession = spark
     import spark.implicits._
 
-    // a caller-supplied TableIO (e.g. [[BucketedParquetTableIO]] for
-    // co-located state joins) wins over the plain-parquet default
-    val io = checkpointIo.orElse(checkpointDir.map(new ParquetTableIO(_)))
-    val baseKey = if (io.isDefined) resumeBaseKey(docs, cfg) else cfg.configHash
+    val baseKey = if (checkpoint.isDefined) resumeBaseKey(docs, cfg) else cfg.configHash
 
+    guarded { onFailure =>
     // Without a TableIO every stage is persisted + materialized instead:
     // each stage below is consumed by more than one downstream action, and
     // an unmaterialized lineage would re-run the signature map (decode +
     // DCT + minhash — the expensive part) once per action.
     val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    onFailure += (() => cached.foreach(_.unpersist()))
     def materialize(name: String, key: Long)(compute: => DataFrame): DataFrame = {
       val t0 = System.nanoTime()
       var rows = -1L
-      val out = io match {
+      val out = checkpoint match {
         case Some(t) => Checkpoints.stage(spark, t, name, key)(compute)
         case None =>
           val df = compute.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          rows = df.count()
           cached += df
+          rows = df.count()
           df
       }
       log.info(f"stage $name: ${(System.nanoTime() - t0) / 1e9}%.2f s, $rows rows")
@@ -106,6 +110,7 @@ object Pipeline {
     val candidates = materialize("candidates", Hashing.hash64(baseKey, 2L)) {
       val (cands, s0, rel) = Blocking.candidatePairs(sigs, cfg)
       stats = s0; releaseBlocks = rel
+      onFailure += rel
       cands
     }
     releaseBlocks()
@@ -128,27 +133,39 @@ object Pipeline {
     val expanded = expandClusters(docs.toDF(), expansion, assignments)
       .select("doc_id", "cluster_id", "spans")
 
-    // 7. when checkpointing, the EXPANDED per-doc assignment is itself a
-    // stage table — the durable output, and the state a later
-    // [[Incremental.fromCheckpoint]] fold reads back together with the
-    // signature stage (it must cover every doc, singletons included)
-    val out = io match {
+    // 7. when checkpointing, the band relation and the EXPANDED per-doc
+    // assignment (every doc, singletons included) complete the dir as a
+    // generation: tomorrow's incremental fold links its batch against the
+    // checkpointed band keys instead of re-deriving them with an O(corpus)
+    // UDF pass (the 40.3 s vs 26.9 s fold delta measured in BASELINE.md)
+    val out = checkpoint match {
       case Some(t) =>
-        // the band relation is ALSO a stage table: tomorrow's incremental
-        // fold links its batch against these checkpointed keys instead of
-        // re-deriving them with an O(corpus) UDF pass (the 40.3 s vs 26.9 s
-        // fold delta measured in BASELINE.md) — see [[readBands]] /
-        // [[Incremental.fromCheckpoint]]. Written BEFORE assignments so the
-        // (signatures, assignments) consistency pair readState checks
-        // remains the generation's commit marker.
-        Checkpoints.stage(spark, t, "bands", Hashing.hash64(baseKey, 7L)) {
-          Blocking.bandRowsDF(sigs, cfg)
-        }
-        Checkpoints.stage(spark, t, "assignments", Hashing.hash64(baseKey, 5L))(expanded)
+        Generation.checkpointTail(spark, t, baseKey)(Blocking.bandRowsDF(sigs, cfg), expanded)
       case None => expanded
     }
 
     Result(out, edges, badMedia, stats, () => cached.foreach(_.unpersist()))
+    }
+  }
+
+  /** Failure-path cleanup registry of [[run]], [[Incremental.run]] and
+    * [[Incremental.retract]]: `body` registers a release thunk per
+    * relation it persists, and the thunks run (newest first, errors
+    * swallowed) only if `body` throws — on success, ownership of every
+    * persisted relation transfers to the result's release thunk. Runs,
+    * folds and takedowns live inside long-running drivers: a thrown stage
+    * (bad batch, FS hiccup) must not strand MEMORY_AND_DISK blocks for the
+    * life of the session. Every registered thunk is an idempotent
+    * unpersist, so the registry never double-frees anything live.
+    */
+  private[pipeline] def guarded[A](body: scala.collection.mutable.Buffer[() => Unit] => A): A = {
+    val onFailure = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
+    try body(onFailure)
+    catch {
+      case e: Throwable =>
+        onFailure.reverseIterator.foreach(c => try c() catch { case _: Throwable => () })
+        throw e
+    }
   }
 
   /** Exact-duplicate pre-collapse: one REPRESENTATIVE (min doc_id) per
@@ -222,53 +239,6 @@ object Pipeline {
         docsDF.join(assignments, Seq("doc_id"), "left")
           .withColumn("cluster_id", coalesce(col("cluster_id"), col("doc_id")))
     }
-
-  /** The checkpointed state of a completed [[run]] with `checkpointDir`
-    * set (or of a generation persisted by [[Incremental.writeState]]): the
-    * signature stage (representatives under pre-collapse) and the full
-    * per-doc assignment stage — exactly the inputs [[Incremental.run]]
-    * needs to fold the next batch in.
-    *
-    * Generation consistency is VERIFIED before anything is read: both
-    * manifests must exist and the assignment stage's resume key must be
-    * `hash64(signature key, 5)` — the derivation both writers use. A dir
-    * where a killed run left stages from different generations (day-N
-    * signatures beside day-N−1 assignments) would otherwise fold
-    * silently into wrong clusters: linkage matches against the newer
-    * signatures inner-join the stale assignment table and simply drop.
-    */
-  def readState(spark: SparkSession, checkpointDir: String)
-      : (Dataset[DocSig], DataFrame) = {
-    import spark.implicits._
-    val io = new ParquetTableIO(checkpointDir)
-    (io.completedKey("signatures"), io.completedKey("assignments")) match {
-      case (Some(k), Some(a)) if a == Hashing.hash64(k, 5L) => ()
-      case (sk, ak) => throw new IllegalStateException(
-        s"checkpoint $checkpointDir is not a consistent generation: " +
-          s"signatures key=$sk assignments key=$ak — stages come from " +
-          "different runs (or a run died mid-write); re-run the pipeline " +
-          "or fold from an intact generation dir")
-    }
-    val sigs = io.read(spark, "signatures").select("sig.*").as[DocSig]
-    val assign = io.read(spark, "assignments").select("doc_id", "cluster_id")
-    (sigs, assign)
-  }
-
-  /** The checkpointed band relation of a generation ([[Blocking.bandRowsDF]]
-    * schema), when present AND belonging to the same generation as the
-    * signature stage (key = hash64(signature key, 7) — the derivation both
-    * [[run]] and [[Incremental.writeState]] use). `None` for generations
-    * written before the bands stage existed — callers fall back to
-    * re-deriving keys from the signature table.
-    */
-  def readBands(spark: SparkSession, checkpointDir: String): Option[DataFrame] = {
-    val io = new ParquetTableIO(checkpointDir)
-    (io.completedKey("signatures"), io.completedKey("bands")) match {
-      case (Some(k), Some(b)) if b == Hashing.hash64(k, 7L) =>
-        Some(io.read(spark, "bands"))
-      case _ => None
-    }
-  }
 
   /** Targeted compare (reference E2, `dedupe.go:127-146`): which candidate
     * docs are duplicates of one target doc. The target's band keys are a

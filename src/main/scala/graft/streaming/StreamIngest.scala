@@ -2,10 +2,11 @@ package graft.streaming
 
 import graft.media.{DefaultMedia, MediaResolver}
 import graft.model.Doc
-import graft.pipeline.{GraftConfig, Incremental, ParquetTableIO, Pipeline}
+import graft.pipeline.{GraftConfig, Generation, Incremental, ParquetTableIO, Pipeline}
 import graft.text.Hashing
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import scala.jdk.CollectionConverters._
 
 /** Continuous entity resolution: fold every micro-batch of a document
   * stream into a clustered corpus maintained as immutable on-disk
@@ -21,21 +22,19 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger
   * StreamIngestSpec).
   *
   * State layout under `stateDir`:
-  *   - `gen-NNNNNNNN/` — one immutable generation. A FULL generation (the
-  *     [[seed]], and every `compactEvery`-th fold) carries the complete
-  *     `signatures` + `bands` + `assignments` stage tables
-  *     [[Pipeline.readState]]/`readBands` read. A DELTA generation carries
-  *     only its batch's rows as `signatures_delta` + `bands_delta`
-  *     (DIFFERENT stage names, so pointing `Pipeline.readState` at a delta
-  *     dir fails loudly instead of returning a partial corpus), the FULL
-  *     `assignments` table (tiny relative to signatures — two columns per
-  *     doc, no text payloads), and a `PARENT` file naming the previous
-  *     generation. A RETRACTION delta additionally carries a
-  *     `tombstones_delta` stage: the ids whose ancestor rows are dead.
-  *     Corpus state at a delta generation = fold the chain ROOT-FIRST,
-  *     subtracting each delta's tombstones from the accumulated ancestors
-  *     before unioning its own rows (so a tombstoned id re-inserted by a
-  *     later fold survives).
+  *   - `gen-NNNNNNNN/` — one immutable [[Generation]] (its stage format
+  *     is documented, read and written there and nowhere else). A FULL
+  *     generation (the [[seed]], and every `compactEvery`-th fold) carries
+  *     the complete corpus state [[Generation.read]] reads. A DELTA
+  *     generation carries only its batch's signature/band rows, its
+  *     tombstones (the ids whose ancestor rows are dead — empty for
+  *     folds), the FULL assignment table (tiny relative to signatures —
+  *     two columns per doc, no text payloads), and a link to the previous
+  *     generation; `Generation.read` refuses it rather than return a
+  *     partial corpus. Corpus state at a delta generation = fold the chain
+  *     ROOT-FIRST, subtracting each delta's tombstones from the accumulated
+  *     ancestors before unioning its own rows (so a tombstoned id
+  *     re-inserted by a later fold survives).
   *   - `CURRENT` — the committed generation's name, flipped by an atomic
   *     rename AFTER the new generation is fully written. A crash mid-fold
   *     leaves `CURRENT` on the previous intact generation.
@@ -79,7 +78,7 @@ object StreamIngest {
     val gen = genName(-1L)
     withStateLock(stateDir) {
       val res = Pipeline.run(spark, initial, cfg, resolver,
-        checkpointDir = Some(s"$stateDir/$gen"))
+        checkpoint = Some(new ParquetTableIO(s"$stateDir/$gen")))
       res.clusters.count()
       res.release()
       writeMaxBatch(s"$stateDir/$gen", -1L)
@@ -105,8 +104,8 @@ object StreamIngest {
     * stream into existing state, drive [[foldBatch]] directly with
     * batchIds past the high-water mark — it reads delta chains. ([[Incremental
     * .fromCheckpoint]] works only against a FULL generation dir — the
-    * seed or a compaction — since a delta dir deliberately has no
-    * `signatures` stage; read combined state with [[readCurrentState]].)
+    * seed or a compaction — since [[Generation.read]] refuses a delta
+    * dir; read combined state with [[readCurrentState]].)
     */
   def start(stream: Dataset[Doc], stateDir: String,
             streamingCheckpoint: String, cfg: GraftConfig = GraftConfig(),
@@ -134,15 +133,16 @@ object StreamIngest {
   }
 
   /** Corpus state at the committed generation — (signatures, assignments) —
-    * the chain-aware analog of [[Pipeline.readState]]: the signature
-    * relation is the union of the current chain's delta stages plus the
-    * root's full stage; assignments are always full in every generation.
+    * the chain-aware analog of [[Generation.read]]: the signature
+    * relation is the root's full stage folded with the current chain's
+    * delta rows and tombstones; assignments are always full in every
+    * generation.
     */
   def readCurrentState(spark: SparkSession, stateDir: String)
       : (Dataset[graft.model.DocSig], org.apache.spark.sql.DataFrame) = {
-    val cur = currentGen(stateDir)
-    val (sigs, assign, _, _) = readChainParts(spark, stateDir, chainOf(stateDir, cur))
-    (sigs, assign)
+    val state = Generation.readChain(spark, stateDir,
+      Generation.chain(stateDir, currentGen(stateDir)))
+    (state.sigs, state.assign)
   }
 
   /** One micro-batch fold (also directly callable for batch-driven
@@ -151,7 +151,7 @@ object StreamIngest {
     * `batchId + 1` — a DELTA generation (O(batch) signature/band rows +
     * the full assignment table) unless the chain has reached
     * `compactEvery` parts, in which case a FULL generation is compacted
-    * out (readable by [[Pipeline.readState]] / `fromCheckpoint` directly)
+    * out (readable by [[Generation.read]] / `fromCheckpoint` directly)
     * — and commit the pointer.
     */
   def foldBatch(spark: SparkSession, batch: Dataset[Doc], batchId: Long,
@@ -159,7 +159,7 @@ object StreamIngest {
                 resolver: MediaResolver = DefaultMedia,
                 compactEvery: Int = 8): Unit = withStateLock(stateDir) {
     // 1 = compact every fold (the full-rewrite behavior); chains never
-    // exceed compactEvery parts, which also bounds chainOf recursion
+    // exceed compactEvery parts, which also bounds the chain walk
     require(compactEvery >= 1, s"compactEvery must be >= 1, got $compactEvery")
     val cur = currentGen(stateDir)
     // replay guard: against the folded-batch HIGH-WATER MARK carried by
@@ -176,9 +176,9 @@ object StreamIngest {
     // corpus state = the chain's stages unioned, through the shared
     // widen + persist fold-input treatment; bands fall back to one
     // derivation only when some chain dir predates the bands stage
-    val chain = chainOf(stateDir, cur)
-    val (sigs0, assign, bands0, prevKey) = readChainParts(spark, stateDir, chain)
-    val (sigs, bandsOpt, releaseInputs) = Incremental.foldInputs(spark, sigs0, bands0)
+    val chain = Generation.chain(stateDir, cur)
+    val state = Generation.readChain(spark, stateDir, chain)
+    val (sigs, bandsOpt, releaseInputs) = Incremental.foldInputs(spark, state.sigs, state.bands)
     // the finally releases every persisted relation on BOTH paths: a
     // thrown fold (bad batch, FS hiccup) fails the streaming query but
     // must not strand corpus-sized MEMORY_AND_DISK blocks in the
@@ -191,7 +191,7 @@ object StreamIngest {
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         b.count(); derivedBands = Some(b); b
       }
-      inc = Incremental.run(spark, sigs, assign, batch, cfg, resolver,
+      inc = Incremental.run(spark, sigs, state.assign, batch, cfg, resolver,
         existingBands = Some(oldBands))
 
       // The batch side of the next generation is `inc.batchSigs` — the
@@ -200,20 +200,20 @@ object StreamIngest {
       // Pipeline.run stage 0) — so streamed-in exact copies never accumulate
       // in corpus state. The generation key chains off the previous key so
       // the manifest lineage links the whole history.
-      val genKey = Hashing.hash64(prevKey, batchId)
-      val newAssign = Incremental.applyRemap(assign, inc.remapped)
+      val genKey = Hashing.hash64(state.key, batchId)
+      val newAssign = Incremental.applyRemap(state.assign, inc.remapped)
         .unionByName(inc.assignments)
       val nextDir = s"$stateDir/$next"
       val batchBands = graft.pipeline.Blocking.bandRowsDF(inc.batchSigs, cfg)
       if (chain.length >= compactEvery) {
         // compaction: a self-contained full generation truncates the chain
-        commitFullGeneration(spark, nextDir, sigs.unionByName(inc.batchSigs),
-          newAssign, genKey, oldBands.unionByName(batchBands))
+        Generation.write(spark, nextDir, sigs.unionByName(inc.batchSigs),
+          newAssign, genKey, Some(oldBands.unionByName(batchBands)))
       } else {
         // delta generation: O(batch) signature/band rows (an EMPTY
-        // tombstone set — folds only add) under DISTINCT stage names, plus
-        // the full assignment table and the PARENT link
-        commitDeltaGeneration(spark, nextDir, inc.batchSigs, batchBands,
+        // tombstone set — folds only add), plus the full assignment table
+        // and the parent link
+        Generation.writeDelta(nextDir, inc.batchSigs, batchBands,
           newAssign.select("doc_id").limit(0), newAssign, genKey, cur)
       }
       writeMaxBatch(nextDir, batchId)
@@ -231,7 +231,7 @@ object StreamIngest {
     * and commit the result as the next generation. Retraction rewrites
     * state NON-monotonically — removed rows disappear and touched
     * survivors' signature rows may be re-keyed — so a retraction DELTA
-    * carries a `tombstones_delta` stage (the drop ids) beside its
+    * carries a tombstone stage (the drop ids) beside its
     * O(touched) signature/band delta rows: readers subtract each delta's
     * tombstones from its ANCESTORS before unioning its own rows. Like
     * folds, a retraction compacts to a FULL chain-truncating generation
@@ -264,16 +264,16 @@ object StreamIngest {
     val next = nextGen(cur)
     if (removeIds.isEmpty) return
 
-    val chain = chainOf(stateDir, cur)
-    val (sigs0, assign, bands0, prevKey) = readChainParts(spark, stateDir, chain)
-    val (sigs, bandsOpt, releaseInputs) = Incremental.foldInputs(spark, sigs0, bands0)
+    val chain = Generation.chain(stateDir, cur)
+    val state = Generation.readChain(spark, stateDir, chain)
+    val (sigs, bandsOpt, releaseInputs) = Incremental.foldInputs(spark, state.sigs, state.bands)
 
     // like foldBatch: the finally releases on success, failure, AND the
     // nothing-touched early return (whose non-local return also passes
     // through it) — a thrown takedown must not strand persisted state
     var res: Incremental.RetractResult = null
     try {
-      res = Incremental.retract(spark, docs, assign, removeIds, cfg, resolver,
+      res = Incremental.retract(spark, docs, state.assign, removeIds, cfg, resolver,
         existingSigs = Some(sigs))
       if (res.touched.isEmpty) { // nothing known was removed: state unchanged
         System.err.println(s"[graft] stream-ingest: retraction touched no cluster (at $cur) — nothing to commit")
@@ -282,7 +282,7 @@ object StreamIngest {
       // tagged key derivation: a crashed FOLD attempt can leave stages in
       // the same uncommitted dir; the tag keeps a retraction's keys from
       // ever pairing with them
-      val genKey = Hashing.hash64(Hashing.hash64(prevKey, 0x72657472616374L),
+      val genKey = Hashing.hash64(Hashing.hash64(state.key, 0x72657472616374L),
         genNum(next))
       val nextDir = s"$stateDir/$next"
       val memberBands = graft.pipeline.Blocking.bandRowsDF(res.memberSigs, cfg)
@@ -295,11 +295,11 @@ object StreamIngest {
           case None => // some chain dir predates the bands stage — derive once
             graft.pipeline.Blocking.bandRowsDF(nextSigs, cfg)
         }
-        commitFullGeneration(spark, nextDir, nextSigs,
-          res.assignments, genKey, nextBands)
+        Generation.write(spark, nextDir, nextSigs, res.assignments, genKey,
+          Some(nextBands))
       } else {
         // retraction delta: O(touched) rows + the tombstoned drop ids
-        commitDeltaGeneration(spark, nextDir, res.memberSigs, memberBands,
+        Generation.writeDelta(nextDir, res.memberSigs, memberBands,
           res.dropIds, res.assignments, genKey, cur)
       }
       writeMaxBatch(nextDir, maxBatch(stateDir, cur)) // carried, not consumed
@@ -308,53 +308,6 @@ object StreamIngest {
       if (res != null) res.release()
       releaseInputs()
     }
-  }
-
-  /** Write + scrub a DELTA generation dir — ONE implementation for fold
-    * and retraction deltas, so stage names, key derivations, the PARENT
-    * link, and the stale-full-stage scrub cannot drift apart. Every delta
-    * writes a `tombstones_delta` stage (folds write an EMPTY one): the
-    * chain reader REQUIRES the stage on every delta, so a retraction
-    * delta that lost its tombstones reads as corruption, never as a
-    * harmless fold that silently resurrects retracted docs.
-    */
-  private def commitDeltaGeneration(spark: SparkSession, nextDir: String,
-      sigs: Dataset[graft.model.DocSig], bands: org.apache.spark.sql.DataFrame,
-      tombstones: org.apache.spark.sql.DataFrame,
-      assign: org.apache.spark.sql.DataFrame, genKey: Long,
-      parent: String): Unit = {
-    import org.apache.spark.sql.functions.{col, struct}
-    // a crashed earlier FULL-generation attempt could have left
-    // 'signatures'/'bands' stages whose keys would PAIR with the fresh
-    // assignments key and make readState succeed on a partial dir
-    Seq("signatures", "bands").foreach(st =>
-      deleteRecursively(java.nio.file.Paths.get(nextDir, st)))
-    val io = new ParquetTableIO(nextDir)
-    io.write("signatures_delta",
-      sigs.toDF().select(struct(col("*")).as("sig")), genKey)
-    io.write("bands_delta", bands, Hashing.hash64(genKey, 7L))
-    io.write("tombstones_delta", tombstones.select("doc_id"),
-      Hashing.hash64(genKey, 9L))
-    io.write("assignments", assign.select("doc_id", "cluster_id"),
-      Hashing.hash64(genKey, 5L))
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(nextDir, "PARENT"), parent)
-  }
-
-  /** Write + scrub a FULL generation dir (compactions and retractions):
-    * the complete stage tables, plus removal of any stale PARENT or delta
-    * stages a crashed earlier attempt — e.g. under a different
-    * `compactEvery` — could have left in the (uncommitted) dir, whose
-    * deterministic manifest keys would otherwise pair with this write.
-    */
-  private def commitFullGeneration(spark: SparkSession, nextDir: String,
-      sigs: Dataset[graft.model.DocSig], assign: org.apache.spark.sql.DataFrame,
-      genKey: Long, bands: org.apache.spark.sql.DataFrame): Unit = {
-    Incremental.writeState(spark, nextDir, sigs, assign, genKey,
-      bands = Some(bands))
-    java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(nextDir, "PARENT"))
-    Seq("signatures_delta", "bands_delta", "tombstones_delta").foreach(st =>
-      deleteRecursively(java.nio.file.Paths.get(nextDir, st)))
   }
 
   /** One CDC record: an upsert carries the full document; a delete needs
@@ -421,8 +374,7 @@ object StreamIngest {
     val deletes = latest.filter((r: CdcRecord) => r.delete)
       .map(_.doc.doc_id).toDF("doc_id")
     val upserts = latest.filter((r: CdcRecord) => !r.delete).map(_.doc)
-    val liveIds = new ParquetTableIO(s"$stateDir/$cur")
-      .read(spark, "assignments").select("doc_id")
+    val liveIds = readCurrentState(spark, stateDir)._2.select("doc_id")
     val toRetract = deletes
       .union(liveIds.join(upserts.toDF().select("doc_id"), Seq("doc_id")))
       .distinct()
@@ -456,102 +408,6 @@ object StreamIngest {
     }
   }
 
-  /** Generation chain, current-first, ending at the root full generation.
-    * Tail-recursive: chain length is compactEvery-bounded in normal
-    * operation, but the walk must not assume it.
-    */
-  private def chainOf(stateDir: String, gen: String): List[String] = {
-    @annotation.tailrec
-    def loop(g: String, acc: List[String], seen: Set[String]): List[String] = {
-      if (seen(g)) // corrupted PARENT cycle: fail loudly, never spin
-        throw new IllegalStateException(
-          s"generation chain cycle at $g in $stateDir (PARENT links: ${acc.reverse.mkString(" -> ")})")
-      val p = java.nio.file.Paths.get(stateDir, g, "PARENT")
-      if (java.nio.file.Files.exists(p))
-        loop(java.nio.file.Files.readString(p).trim, g :: acc, seen + g)
-      else (g :: acc).reverse
-    }
-    loop(gen, Nil, Set.empty)
-  }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      val walk = java.nio.file.Files.walk(p)
-      val paths = try walk.iterator().asScala.toSeq.reverse finally walk.close()
-      paths.foreach(java.nio.file.Files.delete)
-    }
-
-  private def isDelta(stateDir: String, gen: String): Boolean =
-    java.nio.file.Files.exists(java.nio.file.Paths.get(stateDir, gen, "PARENT"))
-
-  /** (sig state, head assignments, band state, head signature key) of a
-    * chain. Each delta dir's stage keys are validated against the same
-    * pairing rule [[Pipeline.readState]] enforces for full dirs, so a dir
-    * mixing stages from different write attempts is rejected, not read.
-    *
-    * State is folded ROOT-FIRST: a delta's `tombstones_delta` ids (written
-    * by retraction deltas) are subtracted from everything accumulated so
-    * far — its ancestors — BEFORE the delta's own rows union in, so a
-    * tombstoned id re-inserted by a LATER fold (the CDC replace path)
-    * survives. Fold deltas carry no tombstones and reduce to the plain
-    * union this always was.
-    */
-  private def readChainParts(spark: SparkSession, stateDir: String,
-      chain: List[String])
-      : (Dataset[graft.model.DocSig], org.apache.spark.sql.DataFrame,
-         Option[org.apache.spark.sql.DataFrame], Long) = {
-    val sigEnc = org.apache.spark.sql.Encoders.product[graft.model.DocSig]
-    // (sigsDF, bands, key, headAssign, tombstones) per chain part
-    val parts = chain.zipWithIndex.map { case (g, idx) =>
-      val dir = s"$stateDir/$g"
-      if (isDelta(stateDir, g)) {
-        val io = new ParquetTableIO(dir)
-        val k = io.completedKey("signatures_delta").getOrElse(
-          throw new IllegalStateException(s"delta generation $dir lacks signatures_delta"))
-        if (!io.completedKey("assignments").contains(Hashing.hash64(k, 5L)) ||
-            !io.completedKey("bands_delta").contains(Hashing.hash64(k, 7L)))
-          throw new IllegalStateException(
-            s"delta generation $dir is not a consistent write (mixed stage keys)")
-        val tombstones = io.completedKey("tombstones_delta") match {
-          case Some(tk) if tk == Hashing.hash64(k, 9L) =>
-            io.read(spark, "tombstones_delta")
-          case other => throw new IllegalStateException(
-            s"delta generation $dir lacks a consistent tombstones_delta stage (key=$other) — " +
-              "a retraction delta that lost its tombstones must never be read as a fold")
-        }
-        // only the HEAD's assignments are consumed — skip the parquet
-        // open (driver-side listing + footer reads of a corpus-sized
-        // table) for the up-to-compactEvery non-head chain parts
-        val assign =
-          if (idx == 0) Some(io.read(spark, "assignments").select("doc_id", "cluster_id"))
-          else None
-        (io.read(spark, "signatures_delta").select("sig.*"),
-          Some(io.read(spark, "bands_delta")), k, assign, Some(tombstones))
-      } else {
-        val (s, a) = Pipeline.readState(spark, dir)
-        (s.toDF(), Pipeline.readBands(spark, dir),
-          new ParquetTableIO(dir).completedKey("signatures").get, Some(a),
-          Option.empty[org.apache.spark.sql.DataFrame])
-      }
-    }
-    val ordered = parts.reverse // root-first
-    val bandsAvailable = parts.forall(_._2.isDefined)
-    var sigsAcc = ordered.head._1
-    var bandsAcc = if (bandsAvailable) ordered.head._2 else None
-    ordered.tail.foreach { p =>
-      p._5.foreach { t =>
-        sigsAcc = sigsAcc.join(t, Seq("doc_id"), "left_anti")
-        bandsAcc = bandsAcc.map(_.join(t, Seq("doc_id"), "left_anti"))
-      }
-      sigsAcc = sigsAcc.unionByName(p._1)
-      bandsAcc = bandsAcc.map(_.unionByName(p._2.get))
-    }
-    // head's assignments come from the validated per-part reader —
-    // always full in every generation
-    (sigsAcc.as[graft.model.DocSig](sigEnc), parts.head._4.get, bandsAcc,
-      parts.head._3)
-  }
-
   /** Delete generations no longer needed. Kept: the current generation's
     * chain (which reads require), the newest `keep` FULL generations
     * outside it (self-contained rollback points), and any delta whose
@@ -563,7 +419,7 @@ object StreamIngest {
   def pruneGenerations(stateDir: String, keep: Int = 2): Seq[String] = {
     val root = java.nio.file.Paths.get(stateDir)
     val cur = currentGen(stateDir)
-    val chainSet = chainOf(stateDir, cur).toSet
+    val chainSet = Generation.chain(stateDir, cur).toSet
     val listing = java.nio.file.Files.list(root)
     val gens =
       try listing.iterator().asScala.map(_.getFileName.toString)
@@ -571,7 +427,7 @@ object StreamIngest {
         .toSeq.sortBy(genNum)
       finally listing.close()
     val rollbackFulls = gens
-      .filter(g => !chainSet(g) && !isDelta(stateDir, g))
+      .filter(g => !chainSet(g) && Generation.parentOf(stateDir, g).isEmpty)
       .takeRight(math.max(0, keep)).toSet
     // ascending pass: a delta additionally survives iff its parent
     // survived (parents have smaller ordinals, so one ordered pass
@@ -580,21 +436,12 @@ object StreamIngest {
     // are pruned
     val kept = scala.collection.mutable.Set.empty[String]
     gens.foreach { g =>
-      val intactDelta = isDelta(stateDir, g) && kept.contains(
-        java.nio.file.Files.readString(
-          java.nio.file.Paths.get(stateDir, g, "PARENT")).trim)
+      val intactDelta = Generation.parentOf(stateDir, g).exists(kept)
       if (chainSet(g) || rollbackFulls(g) || intactDelta) kept += g
     }
     val prune = gens.filterNot(kept)
-    prune.foreach(g => deleteRecursively(root.resolve(g)))
+    prune.foreach(g => Generation.deleteRecursively(root.resolve(g)))
     prune
-  }
-
-  private implicit class IterAsScala[A](it: java.util.Iterator[A]) {
-    def asScala: Iterator[A] = new Iterator[A] {
-      def hasNext: Boolean = it.hasNext
-      def next(): A = it.next()
-    }
   }
 
   private def genName(batchId: Long): String = f"gen-${batchId + 1}%08d"

@@ -61,7 +61,7 @@ class BucketingSpec extends AnyFunSuite with SparkTestBase {
       .map(_.doc)(org.apache.spark.sql.Encoders.product[graft.model.Doc])
     val cfg = Corpus.RecommendedConfig
     val io = new BucketedParquetTableIO(root, buckets = 4)
-    val r1 = Pipeline.run(spark, docs, cfg, checkpointIo = Some(io))
+    val r1 = Pipeline.run(spark, docs, cfg, checkpoint = Some(io))
     val out1 = r1.clusters.select("doc_id", "cluster_id").collect().toSet
     r1.release()
     assert(io.completedKey("assignments").isDefined, "assignments manifest missing")
@@ -77,13 +77,13 @@ class BucketingSpec extends AnyFunSuite with SparkTestBase {
       assert(j.count() === docs.count())
     }
     // back-compat: the SAME files read as plain parquet (the path-based
-    // readers: Pipeline.readState, older generations) see identical rows
+    // readers: Generation.read, older generations) see identical rows
     val plain = spark.read.parquet(s"$root/assignments")
       .select("doc_id", "cluster_id").collect().toSet
     assert(plain === out1)
     // resume: a second run with the same inputs + io reuses the stages and
     // reproduces the assignment byte-for-byte
-    val r2 = Pipeline.run(spark, docs, cfg, checkpointIo = Some(io))
+    val r2 = Pipeline.run(spark, docs, cfg, checkpoint = Some(io))
     assert(r2.clusters.select("doc_id", "cluster_id").collect().toSet === out1)
     r2.release()
 
@@ -102,16 +102,16 @@ class BucketingSpec extends AnyFunSuite with SparkTestBase {
       assert(!j.queryExecution.executedPlan.toString.contains("Exchange"),
         "persisted-layout registration must still co-locate")
     }
-    // the fold's actual read path (Pipeline.readState constructs a plain
+    // the fold's actual read path (Generation.read constructs a plain
     // ParquetTableIO) restores co-location from the sidecar too: the
     // --bucketed promise reaches its beneficiary
     spark.sql(s"DROP TABLE IF EXISTS ${Bucketing.tableNameFor(s"$root/assignments")}")
-    val (_, foldAssign) = Pipeline.readState(spark, root)
+    val foldAssign = graft.pipeline.Generation.read(spark, root).assign
     withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val j2 = foldAssign.join(foldAssign.select(col("doc_id"),
         col("cluster_id").as("c2")), "doc_id")
       assert(!j2.queryExecution.executedPlan.toString.contains("Exchange"),
-        "readState must restore bucket co-location from the sidecar")
+        "Generation.read must restore bucket co-location from the sidecar")
     }
   }
 

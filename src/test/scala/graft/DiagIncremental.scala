@@ -99,7 +99,8 @@ object DiagIncremental {
     // in-memory carryover at all (state write is outside the timed window:
     // it is yesterday's cost)
     val genDir = java.nio.file.Files.createTempDirectory("graft-diag-gen").toString
-    val oldCk = Pipeline.run(spark, oldDocs, cfg, checkpointDir = Some(genDir))
+    val oldCk = Pipeline.run(spark, oldDocs, cfg,
+      checkpoint = Some(new graft.pipeline.ParquetTableIO(genDir)))
     oldCk.clusters.count(); oldCk.release()
     val ((newAssign3, remap3), incCkSec) = time("incremental fold (fromCheckpoint: parquet sigs+bands)") {
       val inc = Incremental.fromCheckpoint(spark, genDir, newDocs, cfg)
@@ -118,7 +119,7 @@ object DiagIncremental {
     val genDirB = java.nio.file.Files.createTempDirectory("graft-diag-genb").toString
     val io = new graft.pipeline.BucketedParquetTableIO(genDirB,
       buckets = spark.sessionState.conf.numShufflePartitions)
-    val oldCkB = Pipeline.run(spark, oldDocs, cfg, checkpointIo = Some(io))
+    val oldCkB = Pipeline.run(spark, oldDocs, cfg, checkpoint = Some(io))
     oldCkB.clusters.count(); oldCkB.release()
     val ((newAssign4, remap4), incCkBSec) = time("incremental fold (fromCheckpoint: BUCKETED sigs+bands)") {
       val inc = Incremental.fromCheckpoint(spark, genDirB, newDocs, cfg)
@@ -133,10 +134,11 @@ object DiagIncremental {
       "(?<!Broadcast)Exchange".r.findAllIn(df.queryExecution.executedPlan.toString).length
     val oldBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val (_, assignB) = Pipeline.readState(spark, genDirB)
+    val stateB = graft.pipeline.Generation.read(spark, genDirB)
+    val assignB = stateB.assign
     val idJoin = assignB.join(assignB.select(col("doc_id"),
       col("cluster_id").as("c2")), "doc_id")
-    val bandsB = graft.pipeline.Pipeline.readBands(spark, genDirB).get
+    val bandsB = stateB.bands.get
     val bandAgg = bandsB.groupBy("block_key").agg(count(lit(1)))
     println(s"[diag] BUCKETED plan evidence: assignments id-self-join exchanges=${exchanges(idJoin)} " +
       s"band-key aggregate exchanges=${exchanges(bandAgg)} (0 = state side never reshuffles)")

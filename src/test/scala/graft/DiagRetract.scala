@@ -53,10 +53,12 @@ object DiagRetract {
     // run — NOT part of the retraction cost)
     val ckpt = java.nio.file.Files.createTempDirectory("graft-diag-retract").toString
     time("day-0 full run (writes state)") {
-      val r = Pipeline.run(spark, all, cfg, graft.media.DefaultMedia, Some(ckpt))
+      val r = Pipeline.run(spark, all, cfg, graft.media.DefaultMedia,
+        Some(new graft.pipeline.ParquetTableIO(ckpt)))
       r.clusters.count(); r.release()
     }
-    val (sigs, assign0) = Pipeline.readState(spark, ckpt)
+    val graft.pipeline.Generation.State(sigs, assign0, _, _) =
+      graft.pipeline.Generation.read(spark, ckpt)
     val assign = assign0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     assign.count()
 

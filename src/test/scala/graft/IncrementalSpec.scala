@@ -1,6 +1,6 @@
 package graft
 
-import graft.pipeline.{Incremental, Pipeline, Signatures}
+import graft.pipeline.{Generation, Incremental, ParquetTableIO, Pipeline, Signatures}
 import graft.synth.Corpus
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -110,33 +110,33 @@ class IncrementalSpec extends AnyFunSuite with SparkTestBase {
     val (batch1, batch2) = newSeq.splitAt(newSeq.size / 2)
 
     // generation 0: full pipeline run, checkpointed
-    val old = Pipeline.run(s, ds(oldSeq), cfg, checkpointDir = Some(gen0))
+    val old = Pipeline.run(s, ds(oldSeq), cfg, checkpoint = Some(new ParquetTableIO(gen0)))
     old.clusters.count()
     old.release()
 
     // gen0 carries the checkpointed bands stage (written by Pipeline.run);
     // day 1's fromCheckpoint fold auto-reads it
-    assert(Pipeline.readBands(s, gen0).isDefined, "gen0 missing bands stage")
+    assert(Generation.read(s, gen0).bands.isDefined, "gen0 missing bands stage")
 
     // day 1: fold batch1 from gen0's stage tables, persist generation 1
     val inc1 = Incremental.fromCheckpoint(s, gen0, ds(batch1), cfg)
-    val (sigs0, assign0) = Pipeline.readState(s, gen0)
+    val Generation.State(sigs0, assign0, _, _) = Generation.read(s, gen0)
     assert(sigs0.count() == oldSeq.size && assign0.count() == oldSeq.size)
     // the fold's own representative signatures (inc1.batchSigs) are the
     // batch side of the next generation — no re-derivation
     val gen1Sigs = sigs0.unionByName(inc1.batchSigs)
-    Incremental.writeState(s, gen1,
+    Generation.write(s, gen1,
       gen1Sigs,
       Incremental.applyRemap(assign0, inc1.remapped).unionByName(inc1.assignments),
-      generationKey = 20260817L,
+      key = 20260817L,
       bands = Some(graft.pipeline.Blocking.bandRowsDF(gen1Sigs, cfg)))
     inc1.release()
-    assert(Pipeline.readBands(s, gen1).isDefined, "gen1 missing bands stage")
+    assert(Generation.read(s, gen1).bands.isDefined, "gen1 missing bands stage")
 
     // day 2: fold batch2 from the WRITTEN generation (reading gen1's
     // checkpointed bands) — no full run anywhere
     val inc2 = Incremental.fromCheckpoint(s, gen1, ds(batch2), cfg)
-    val (sigs1, assign1) = Pipeline.readState(s, gen1)
+    val Generation.State(sigs1, assign1, _, _) = Generation.read(s, gen1)
     assert(sigs1.count() == oldSeq.size + batch1.size)
     val finalMap = Incremental.applyRemap(assign1, inc2.remapped)
       .unionByName(inc2.assignments)
@@ -153,7 +153,7 @@ class IncrementalSpec extends AnyFunSuite with SparkTestBase {
   test("readState rejects a mixed-generation checkpoint dir") {
     val s = spark
     val dir = java.nio.file.Files.createTempDirectory("graft-inc-mixed").toString
-    val old = Pipeline.run(s, ds(oldSeq.take(40)), cfg, checkpointDir = Some(dir))
+    val old = Pipeline.run(s, ds(oldSeq.take(40)), cfg, checkpoint = Some(new ParquetTableIO(dir)))
     old.clusters.count()
     old.release()
     // simulate a run killed between the signatures and assignments writes:
@@ -162,7 +162,7 @@ class IncrementalSpec extends AnyFunSuite with SparkTestBase {
     val json = java.nio.file.Files.readString(m)
     java.nio.file.Files.writeString(m,
       json.replaceAll("\"resume_key\":\"-?\\d+\"", "\"resume_key\":\"12345\""))
-    val e = intercept[IllegalStateException] { Pipeline.readState(s, dir) }
+    val e = intercept[IllegalStateException] { Generation.read(s, dir) }
     assert(e.getMessage.contains("not a consistent generation"))
   }
 

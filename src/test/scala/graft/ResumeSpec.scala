@@ -18,7 +18,7 @@ class ResumeSpec extends AnyFunSuite with SparkTestBase {
     import s.implicits._
     val dir = tempDir().toString
     val docs = s.createDataset(Corpus.generate(Corpus.Params(entities = 60)).map(_.doc))
-    Pipeline.run(s, docs, Corpus.RecommendedConfig, checkpointDir = Some(dir))
+    Pipeline.run(s, docs, Corpus.RecommendedConfig, checkpoint = Some(new ParquetTableIO(dir)))
       .clusters.count()
     Seq("signatures", "candidates", "scored", "clusters").foreach { stage =>
       val m = java.nio.file.Paths.get(dir, stage, "_graft_manifest.json")
@@ -34,12 +34,12 @@ class ResumeSpec extends AnyFunSuite with SparkTestBase {
     import s.implicits._
     val dir = tempDir().toString
     val docs = s.createDataset(Corpus.generate(Corpus.Params(entities = 60)).map(_.doc))
-    val first = Pipeline.run(s, docs, Corpus.RecommendedConfig, checkpointDir = Some(dir))
+    val first = Pipeline.run(s, docs, Corpus.RecommendedConfig, checkpoint = Some(new ParquetTableIO(dir)))
       .clusters.collect().map(r => (r.getString(0), r.getString(1))).toSet
     val sigManifest = java.nio.file.Paths.get(dir, "signatures", "_graft_manifest.json")
     val mtime = Files.getLastModifiedTime(sigManifest)
     Thread.sleep(20)
-    val second = Pipeline.run(s, docs, Corpus.RecommendedConfig, checkpointDir = Some(dir))
+    val second = Pipeline.run(s, docs, Corpus.RecommendedConfig, checkpoint = Some(new ParquetTableIO(dir)))
       .clusters.collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(Files.getLastModifiedTime(sigManifest) == mtime,
       "signatures stage was recomputed on resume")
@@ -51,7 +51,7 @@ class ResumeSpec extends AnyFunSuite with SparkTestBase {
     import s.implicits._
     val dir = tempDir().toString
     val docs = s.createDataset(Corpus.generate(Corpus.Params(entities = 40)).map(_.doc))
-    Pipeline.run(s, docs, Corpus.RecommendedConfig, checkpointDir = Some(dir)).clusters.count()
+    Pipeline.run(s, docs, Corpus.RecommendedConfig, checkpoint = Some(new ParquetTableIO(dir))).clusters.count()
     // the census announces itself on stderr ("[graft]   census: ...") —
     // a resumed run with a completed candidates stage must never reach it:
     // candidatePairs' collect() is the largest scan in the pipeline and
@@ -61,7 +61,7 @@ class ResumeSpec extends AnyFunSuite with SparkTestBase {
     val buf = new java.io.ByteArrayOutputStream()
     val r2 = try {
       System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
-      Pipeline.run(s, docs, Corpus.RecommendedConfig, checkpointDir = Some(dir))
+      Pipeline.run(s, docs, Corpus.RecommendedConfig, checkpoint = Some(new ParquetTableIO(dir)))
     } finally System.setErr(realErr)
     r2.clusters.count()
     r2.release()
@@ -76,12 +76,12 @@ class ResumeSpec extends AnyFunSuite with SparkTestBase {
     import s.implicits._
     val dir = tempDir().toString
     val docs = s.createDataset(Corpus.generate(Corpus.Params(entities = 30)).map(_.doc))
-    Pipeline.run(s, docs, Corpus.RecommendedConfig, checkpointDir = Some(dir)).clusters.count()
+    Pipeline.run(s, docs, Corpus.RecommendedConfig, checkpoint = Some(new ParquetTableIO(dir))).clusters.count()
     val sigManifest = java.nio.file.Paths.get(dir, "signatures", "_graft_manifest.json")
     val mtime = Files.getLastModifiedTime(sigManifest)
     Thread.sleep(20)
     Pipeline.run(s, docs, Corpus.RecommendedConfig.copy(shingleK = 9),
-      checkpointDir = Some(dir)).clusters.count()
+      checkpoint = Some(new ParquetTableIO(dir))).clusters.count()
     assert(Files.getLastModifiedTime(sigManifest) != mtime,
       "changed config must recompute the stage")
   }
@@ -91,13 +91,13 @@ class ResumeSpec extends AnyFunSuite with SparkTestBase {
     import s.implicits._
     val dir = tempDir().toString
     val docs = s.createDataset(Corpus.generate(Corpus.Params(entities = 30)).map(_.doc))
-    Pipeline.run(s, docs, Corpus.RecommendedConfig, checkpointDir = Some(dir)).clusters.count()
+    Pipeline.run(s, docs, Corpus.RecommendedConfig, checkpoint = Some(new ParquetTableIO(dir))).clusters.count()
     val sigManifest = java.nio.file.Paths.get(dir, "signatures", "_graft_manifest.json")
     val mtime = Files.getLastModifiedTime(sigManifest)
     Thread.sleep(20)
     // same config, DIFFERENT input: stale stage tables must not be reused
     val docs2 = s.createDataset(Corpus.generate(Corpus.Params(entities = 31)).map(_.doc))
-    Pipeline.run(s, docs2, Corpus.RecommendedConfig, checkpointDir = Some(dir)).clusters.count()
+    Pipeline.run(s, docs2, Corpus.RecommendedConfig, checkpoint = Some(new ParquetTableIO(dir))).clusters.count()
     assert(Files.getLastModifiedTime(sigManifest) != mtime,
       "signatures stage reused a checkpoint from different input data")
   }
@@ -108,7 +108,7 @@ class ResumeSpec extends AnyFunSuite with SparkTestBase {
     val dir = tempDir().toString
     val base = Corpus.generate(Corpus.Params(entities = 30)).map(_.doc)
     val docs = s.createDataset(base)
-    Pipeline.run(s, docs, Corpus.RecommendedConfig, checkpointDir = Some(dir)).clusters.count()
+    Pipeline.run(s, docs, Corpus.RecommendedConfig, checkpoint = Some(new ParquetTableIO(dir))).clusters.count()
     val sigManifest = java.nio.file.Paths.get(dir, "signatures", "_graft_manifest.json")
     val mtime = Files.getLastModifiedTime(sigManifest)
     Thread.sleep(20)
@@ -121,9 +121,30 @@ class ResumeSpec extends AnyFunSuite with SparkTestBase {
       else d
     }
     Pipeline.run(s, s.createDataset(edited), Corpus.RecommendedConfig,
-      checkpointDir = Some(dir)).clusters.count()
+      checkpoint = Some(new ParquetTableIO(dir))).clusters.count()
     assert(Files.getLastModifiedTime(sigManifest) != mtime,
       "signatures stage reused a checkpoint after doc CONTENT changed")
+  }
+
+  test("a failed run releases every relation it persisted") {
+    implicit val s = spark
+    import s.implicits._
+    val dir = tempDir().toString
+    // exact copies make stage 0 persist its pre-collapse mapping; the
+    // candidates stage persists its band relation before the write fails
+    val docs = s.createDataset(Corpus.generate(
+      Corpus.Params(entities = 30, hotEntityCopies = 4)).map(_.doc))
+    val failing = new ParquetTableIO(dir) {
+      override protected def writeData(name: String, df: org.apache.spark.sql.DataFrame): Unit =
+        if (name == "candidates") throw new java.io.IOException("injected candidates write failure")
+        else super.writeData(name, df)
+    }
+    val before = s.sparkContext.getPersistentRDDs.keySet
+    intercept[java.io.IOException] {
+      Pipeline.run(s, docs, Corpus.RecommendedConfig, checkpoint = Some(failing))
+    }
+    val leaked = s.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"failed run stranded persisted RDDs: ${leaked.toSeq.sorted}")
   }
 
   test("a killed run resumes mid-pipeline: later stages compute, earlier ones reuse") {
@@ -141,7 +162,7 @@ class ResumeSpec extends AnyFunSuite with SparkTestBase {
     assert(io.completedKey("signatures").contains(key))
     assert(io.completedKey("candidates").isEmpty)
     // full run picks up from there
-    val r = Pipeline.run(s, docs, cfg, checkpointDir = Some(dir))
+    val r = Pipeline.run(s, docs, cfg, checkpoint = Some(new ParquetTableIO(dir)))
     assert(r.clusters.count() == docs.count())
     assert(io.completedKey("clusters").isDefined)
   }

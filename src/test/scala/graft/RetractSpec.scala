@@ -114,7 +114,7 @@ class RetractSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("retract composes with next-day folds: writeState → fromCheckpoint equals a full run") {
-    import graft.pipeline.{Blocking, Incremental}
+    import graft.pipeline.{Blocking, Generation, Incremental, ParquetTableIO}
     val s = spark
     import s.implicits._
     val all = labeled.map(_.doc)
@@ -125,16 +125,17 @@ class RetractSpec extends AnyFunSuite with SparkTestBase {
     val removed = oldDocs.map(_.doc_id).filter(_.endsWith("-0")).take(60).toSet
 
     val gen0 = java.nio.file.Files.createTempDirectory("graft-retract-gen0").toString
-    val full0 = Pipeline.run(s, ds(oldDocs), cfg, graft.media.DefaultMedia, Some(gen0))
+    val full0 = Pipeline.run(s, ds(oldDocs), cfg, graft.media.DefaultMedia,
+      Some(new ParquetTableIO(gen0)))
     full0.clusters.count()
     full0.release()
-    val (sigs0, assign0) = Pipeline.readState(s, gen0)
+    val Generation.State(sigs0, assign0, _, _) = Generation.read(s, gen0)
 
     val res = Incremental.retract(s, ds(oldDocs), assign0,
       removed.toSeq.toDF("doc_id"), cfg, graft.media.DefaultMedia, Some(sigs0))
     val nextSigs = Incremental.applyRetractSigs(sigs0, res)
     val gen1 = java.nio.file.Files.createTempDirectory("graft-retract-gen1").toString
-    Incremental.writeState(s, gen1, nextSigs, res.assignments,
+    Generation.write(s, gen1, nextSigs, res.assignments,
       graft.text.Hashing.hash64(0xdeadL, 1L),
       Some(Blocking.bandRowsDF(nextSigs, cfg)))
     res.release()
@@ -144,7 +145,7 @@ class RetractSpec extends AnyFunSuite with SparkTestBase {
       .map(r => (r.getString(0), r.getString(1))).toMap
     val remap = inc.remapped.collect()
       .map(r => (r.getString(0), r.getString(1))).toMap
-    val (_, assign1) = Pipeline.readState(s, gen1)
+    val assign1 = Generation.read(s, gen1).assign
     val baseMap = assign1.collect().map { r =>
       val c = r.getString(1)
       (r.getString(0), remap.getOrElse(c, c))

@@ -1,6 +1,6 @@
 package graft
 
-import graft.pipeline.Pipeline
+import graft.pipeline.{Generation, Pipeline}
 import graft.streaming.StreamIngest
 import graft.synth.Corpus
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -56,7 +56,7 @@ class StreamIngestSpec extends AnyFunSuite with SparkTestBase {
     } finally q.stop()
 
     // generation shapes: gen1 delta (PARENT + delta stages, and
-    // Pipeline.readState must REFUSE it rather than return a partial
+    // Generation.read must REFUSE it rather than return a partial
     // corpus), gen2 compacted full (standard-readable), gen3 delta
     def has(g: String, f: String) = java.nio.file.Files.exists(
       java.nio.file.Paths.get(stateDir, g, f))
@@ -67,9 +67,9 @@ class StreamIngestSpec extends AnyFunSuite with SparkTestBase {
       has("gen-00000002", "bands/_graft_manifest.json"))
     assert(has("gen-00000003", "PARENT"))
     intercept[IllegalStateException] {
-      Pipeline.readState(s, s"$stateDir/gen-00000001")
+      Generation.read(s, s"$stateDir/gen-00000001")
     }
-    Pipeline.readState(s, s"$stateDir/gen-00000002") // compacted = readable
+    Generation.read(s, s"$stateDir/gen-00000002") // compacted = readable
 
     val (sigs, assign) = StreamIngest.readCurrentState(s, stateDir)
     assert(sigs.count() == all.size)
@@ -163,7 +163,7 @@ class StreamIngestSpec extends AnyFunSuite with SparkTestBase {
     // no PARENT, standard readers accept it
     val gen2 = s"$stateDir/gen-00000002"
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(gen2, "PARENT")))
-    Pipeline.readState(s, gen2) // must not throw
+    Generation.read(s, gen2) // must not throw
     // re-running the executed takedown commits nothing (ids now unknown)
     StreamIngest.retractBatch(s, ds(seedDocs ++ b1),
       removed.toSeq.toDF("doc_id"), stateDir, cfg, compactEvery = 2)
@@ -283,7 +283,7 @@ class StreamIngestSpec extends AnyFunSuite with SparkTestBase {
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(gen1, "PARENT")))
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(gen1, "tombstones_delta")))
-    intercept[IllegalStateException] { Pipeline.readState(s, gen1) }
+    intercept[IllegalStateException] { Generation.read(s, gen1) }
     // the replace really landed: state must carry exactly one row for the
     // edited id, clustered per its NEW content (covered by the equality)
     cdc(batch1, 0L) // replayed batch is a no-op
@@ -298,6 +298,67 @@ class StreamIngestSpec extends AnyFunSuite with SparkTestBase {
     assertEq(fullMap(corpus), currentMap())
     cdc(batch2, 1L) // and its replay is skipped outright
     assertEq(fullMap(corpus), currentMap())
+  }
+
+  test("corrupt chains are refused and a crashed attempt's stale full stages are scrubbed") {
+    import java.nio.file.{Files, Path, Paths}
+    val s = spark
+    val small = Corpus.generate(Corpus.Params(entities = 60, seed = 17)).map(_.doc)
+    val seedDocs = small.filterNot(_.doc_id.endsWith("-0"))
+    val (b1, b2) = small.filter(_.doc_id.endsWith("-0")).splitAt(15)
+    val stateDir = Files.createTempDirectory("graft-ingest-corrupt").toString
+    StreamIngest.seed(s, ds(seedDocs), stateDir, cfg)
+    StreamIngest.foldBatch(s, ds(b1), 0L, stateDir, cfg, compactEvery = 4)
+    val gen1 = Paths.get(stateDir, "gen-00000001")
+    assert(Files.exists(gen1.resolve("PARENT")), "fold 1 must write a delta")
+
+    // a tombstone stage from another write attempt: refused, never read
+    // as a fold that silently resurrects retracted docs
+    val tomb = gen1.resolve("tombstones_delta/_graft_manifest.json")
+    val tombJson = Files.readString(tomb)
+    Files.writeString(tomb,
+      tombJson.replaceAll("\"resume_key\":\"-?\\d+\"", "\"resume_key\":\"12345\""))
+    intercept[IllegalStateException] { StreamIngest.readCurrentState(s, stateDir) }
+    Files.writeString(tomb, tombJson)
+
+    // a PARENT cycle: the chain walk must throw, not spin
+    val parent = gen1.resolve("PARENT")
+    val parentName = Files.readString(parent)
+    Files.writeString(parent, "gen-00000001")
+    val cyc = scala.concurrent.Await.result(
+      scala.concurrent.Future(scala.util.Try(StreamIngest.readCurrentState(s, stateDir)))(
+        scala.concurrent.ExecutionContext.global),
+      scala.concurrent.duration.Duration(60, "s"))
+    assert(cyc.failed.toOption.exists(_.isInstanceOf[IllegalStateException]), cyc.toString)
+    Files.writeString(parent, parentName)
+
+    // a crashed FULL attempt left the seed's signatures + bands stages in
+    // the uncommitted next dir: the delta commit must scrub them
+    def copyTree(from: Path, to: Path): Unit = {
+      val walk = Files.walk(from)
+      try walk.forEach(p => Files.copy(p, to.resolve(from.relativize(p).toString)))
+      finally walk.close()
+    }
+    val gen2 = Paths.get(stateDir, "gen-00000002")
+    Files.createDirectories(gen2)
+    Seq("signatures", "bands").foreach(st =>
+      copyTree(Paths.get(stateDir, "gen-00000000", st), gen2.resolve(st)))
+    StreamIngest.foldBatch(s, ds(b2), 1L, stateDir, cfg, compactEvery = 4)
+    assert(StreamIngest.currentDir(stateDir).endsWith("gen-00000002"))
+    assert(Files.exists(gen2.resolve("PARENT")), "fold 2 must write a delta")
+    assert(!Files.exists(gen2.resolve("signatures")) && !Files.exists(gen2.resolve("bands")),
+      "stale full stages survived the delta commit")
+
+    val got = StreamIngest.readCurrentState(s, stateDir)._2.collect()
+      .map(r => (r.getString(0), r.getString(1))).toMap
+    val full = Pipeline.run(s, ds(small), cfg)
+    val want = full.clusters.select("doc_id", "cluster_id").collect()
+      .map(r => (r.getString(0), r.getString(1))).toMap
+    full.release()
+    assert(got == want, {
+      val diffs = want.collect { case (k, v) if got.get(k) != Some(v) => (k, got.get(k), v) }
+      s"scrubbed delta diverged from the full run: ${diffs.take(5)}"
+    })
   }
 
   test("exact copies streamed in do not accumulate in generation state") {
