@@ -267,10 +267,10 @@ object Blocking {
     // compact (doc_id, 1-4 media longs, simhash, key), so MEMORY_AND_DISK
     // holds them in memory at bench scale and spills rather than OOMs at
     // cluster scale. Released by the cleanup thunk once candidates are
-    // materialized.
-    val b = bandRowsDF(sigs, cfg)
-      .repartition(spark.sessionState.conf.numShufflePartitions, col("block_key"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // materialized — or here, if the census throws.
+    Pins.scoped { pins =>
+    val b = pins(bandRowsDF(sigs, cfg)
+      .repartition(spark.sessionState.conf.numShufflePartitions, col("block_key")))
 
     // Hot/degenerate block census via map-side-combined groupBy — NOT a
     // window over the full block table: a window would shuffle+sort every
@@ -287,6 +287,7 @@ object Blocking {
     val pairs = bandedPairs(b, b, degKeys.map(_.getLong(0)).toSeq,
       hotKeys.map(_.getLong(0)).toSeq, _ < _, cfg)
     // caller invokes the cleanup thunk once `pairs` is materialized
-    (pairs, stats, () => { b.unpersist(); () })
+    (pairs, stats, pins.release)
+    }
   }
 }

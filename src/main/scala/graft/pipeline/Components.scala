@@ -194,7 +194,7 @@ object Components {
       adj.getOrElseUpdate(r.get(0), scala.collection.mutable.ArrayBuffer.empty) += r.get(1)
       adj.getOrElseUpdate(r.get(1), scala.collection.mutable.ArrayBuffer.empty) += r.get(0)
     }
-    val nodes = adj.keys.toArray.sortWith(less)
+    val nodes = adj.keys.toArray.sorted(nodeOrder)
     val assigned = scala.collection.mutable.LinkedHashMap.empty[Any, Any]
     nodes.foreach { u =>
       if (!assigned.contains(u)) {
@@ -237,8 +237,9 @@ object Components {
 
   // node ids keep the edge column's type (string doc_ids in the pipeline,
   // but any orderable key works — the SQL-facing CC query uses bigints)
-  @inline private def less(a: Any, b: Any): Boolean =
-    a.asInstanceOf[Comparable[Any]].compareTo(b) < 0
+  private val nodeOrder: Ordering[Any] = new Ordering[Any] {
+    def compare(a: Any, b: Any): Int = a.asInstanceOf[Comparable[Any]].compareTo(b)
+  }
 
   /** (node, label) pairs → a (doc_id, `labelCol`) DataFrame with the edge
     * column's key type — the shared tail of both driver fast paths.
@@ -257,21 +258,14 @@ object Components {
   }
 
   private def driverUnionFind(e: DataFrame)(implicit spark: SparkSession): DataFrame = {
-    val parent = scala.collection.mutable.HashMap.empty[Any, Any]
-    def find(x: Any): Any = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent(r)
-      var c = x
-      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
+    val uf = new UnionFind[Any]()(nodeOrder)
     val arr = e.select("src", "dst").collect()
     arr.foreach { row =>
-      val (ra, rb) = (find(row.get(0)), find(row.get(1)))
-      if (ra != rb) { if (less(ra, rb)) parent(rb) = ra else parent(ra) = rb }
+      uf.add(row.get(0)); uf.add(row.get(1))
+      uf.union(row.get(0), row.get(1))
     }
     val nodes = (arr.iterator.map(_.get(0)) ++ arr.iterator.map(_.get(1))).toSet
-    labeledFrame(nodes.iterator.map(n => n -> find(n)), nodes.size,
+    labeledFrame(nodes.iterator.map(n => n -> uf.find(n)), nodes.size,
       e.schema("src").dataType, "cluster_id")
   }
 

@@ -59,44 +59,35 @@ object Constrained {
   private[graft] def cluster(members: Seq[Long], edges: Seq[(Long, Long, Int)],
                              cannot: Seq[(Long, Long)],
                              must: Seq[(Long, Long)] = Nil): Seq[(Long, Long, Int)] = {
-    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-    members.foreach(m => parent(m) = m)
-    def find(x: Long): Long = {
-      var r = x
-      while (parent(r) != r) r = parent(r)
-      var c = x
-      while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
+    val uf = new UnionFind[Long]
+    members.foreach(uf.add)
     // drop dangling references defensively (run() already filters both
     // endpoints against the capped set; a caller wiring raw relations
     // should not corrupt the union-find)
-    val cl = cannot.filter(p => parent.contains(p._1) && parent.contains(p._2))
+    val cl = cannot.filter(p => uf.contains(p._1) && uf.contains(p._2))
     // must-links lead the union order as pseudo-edges: ordering comes from
     // the CONCATENATION below (lead ++ sorted scored edges), not from the
     // sentinel distance — the Int.MinValue is decorative padding for the
     // shared tuple shape; must pairs order among themselves by (a, b)
-    val lead = must.filter(p => parent.contains(p._1) && parent.contains(p._2))
+    val lead = must.filter(p => uf.contains(p._1) && uf.contains(p._2))
       .sorted.map(p => (p._1, p._2, Int.MinValue))
     val ordered = lead ++ edges
-      .filter(e => parent.contains(e._1) && parent.contains(e._2))
+      .filter(e => uf.contains(e._1) && uf.contains(e._2))
       .sortBy(e => (e._3, e._1, e._2))
     ordered.foreach { case (a, b, _) =>
-      val ra = find(a); val rb = find(b)
+      val ra = uf.find(a); val rb = uf.find(b)
       if (ra != rb) {
         val violates = cl.exists { case (x, y) =>
-          val rx = find(x); val ry = find(y)
+          val rx = uf.find(x); val ry = uf.find(y)
           (rx == ra && ry == rb) || (rx == rb && ry == ra)
         }
         // min-root union keeps every root the min doc_id of its subcluster
-        if (!violates) {
-          if (ra < rb) parent(rb) = ra else parent(ra) = rb
-        }
+        if (!violates) uf.union(ra, rb)
       }
     }
     val size = scala.collection.mutable.HashMap.empty[Long, Int]
-    members.foreach { m => val r = find(m); size(r) = size.getOrElse(r, 0) + 1 }
-    members.map { m => val r = find(m); (m, r, size(r)) }
+    members.foreach { m => val r = uf.find(m); size(r) = size.getOrElse(r, 0) + 1 }
+    members.map { m => val r = uf.find(m); (m, r, size(r)) }
   }
 
   /** Constrained subclusters for every member of a multi-member component.

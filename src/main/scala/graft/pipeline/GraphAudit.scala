@@ -100,22 +100,11 @@ object GraphAudit {
     */
   private[graft] def spanningForest(members: Seq[Long],
                                     edges: Seq[(Long, Long, Int)]): Seq[(Long, Long, Int)] = {
-    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-    members.foreach(m => parent(m) = m)
-    def find(x: Long): Long = {
-      var r = x
-      while (parent(r) != r) r = parent(r)
-      var c = x
-      while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
-      r
-    }
-    edges.filter(e => parent.contains(e._1) && parent.contains(e._2))
+    val uf = new UnionFind[Long]
+    members.foreach(uf.add)
+    edges.filter(e => uf.contains(e._1) && uf.contains(e._2))
       .sortBy(e => (e._3, e._1, e._2))
-      .filter { case (a, b, _) =>
-        val ra = find(a); val rb = find(b)
-        if (ra == rb) false
-        else { if (ra < rb) parent(rb) = ra else parent(ra) = rb; true }
-      }
+      .filter { case (a, b, _) => uf.union(a, b) }
   }
 
   /** The shared capped slice ([[CappedSlices]], the group-size-bound

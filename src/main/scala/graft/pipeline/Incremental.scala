@@ -57,13 +57,15 @@ object Incremental {
   def fromCheckpoint(spark: SparkSession, checkpointDir: String,
                      newDocs: Dataset[Doc], cfg: GraftConfig = GraftConfig(),
                      resolver: MediaResolver = DefaultMedia,
-                     existingBands: Option[DataFrame] = None): IncrementalResult = {
-    val state = Generation.read(spark, checkpointDir)
-    val (sigs, bands, releaseState) =
-      foldInputs(spark, state.sigs, existingBands.orElse(state.bands))
-    val inner = run(spark, sigs, state.assign, newDocs, cfg, resolver, bands)
-    inner.copy(release = () => { inner.release(); releaseState() })
-  }
+                     existingBands: Option[DataFrame] = None): IncrementalResult =
+    Pins.scoped { pins =>
+      val state = Generation.read(spark, checkpointDir)
+      val (sigs, bands) =
+        foldInputs(spark, pins, state.sigs, existingBands.orElse(state.bands))
+      val inner = run(spark, sigs, state.assign, newDocs, cfg, resolver, bands)
+      pins.own(inner.release)
+      inner.copy(release = pins.release)
+    }
 
   /** A generation's fold inputs — (signatures, bands) — with the
     * fold-duration treatment applied to the parquet-backed relations
@@ -78,23 +80,18 @@ object Incremental {
     * first shuffle: measured 21 s vs 6 s for the same join at 102k docs.
     * At production scale the file count makes the repartition a no-op
     * (guarded), and the round-robin shuffle rides the one corpus scan the
-    * fold pays anyway to materialize the cache. The returned thunk
-    * releases everything.
+    * fold pays anyway to materialize the cache. `pins` owns both.
     */
-  private[graft] def foldInputs(spark: SparkSession, sigs0: Dataset[DocSig],
-      bands0: Option[DataFrame])
-      : (Dataset[DocSig], Option[DataFrame], () => Unit) = {
+  private[graft] def foldInputs(spark: SparkSession, pins: Pins, sigs0: Dataset[DocSig],
+      bands0: Option[DataFrame]): (Dataset[DocSig], Option[DataFrame]) = {
     val width = spark.sessionState.conf.numShufflePartitions
     def widen[T](ds: Dataset[T]): Dataset[T] =
       if (ds.rdd.getNumPartitions < width) ds.repartition(width) else ds
-    val sigs = widen(sigs0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bands = bands0
-      .map(b => widen(b).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    (sigs, bands,
-      () => { sigs.unpersist(); bands.foreach(_.unpersist()); () })
+    (pins(widen(sigs0)), bands0.map(b => pins(widen(b))))
   }
 
+  /** Call `release` once after consuming the result; a throwing fold
+    * leaves nothing persisted. */
   final case class IncrementalResult(
       assignments: DataFrame, // (doc_id, cluster_id) for every NEW doc
       remapped: DataFrame, // (old_cluster_id, cluster_id): old clusters whose id changed
@@ -144,32 +141,21 @@ object Incremental {
     val tRun = System.nanoTime()
     def mark(label: String): Unit =
       System.err.println(f"[graft] incremental $label: ${(System.nanoTime() - tRun) / 1e9}%.2f s elapsed")
-    Pipeline.guarded { onFailure =>
+    Pins.scoped { pins =>
     val (batchDocs, expansion) =
       if (cfg.exactPrecollapse) Pipeline.precollapse(newDocs) else (newDocs, None)
-    expansion.foreach(e => onFailure += (() => { e.unpersist(); () }))
+    expansion.foreach(e => pins.own(e))
     mark("precollapse")
 
-    val newSigs = Signatures.derive(batchDocs, cfg, resolver).map(_.sig)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    onFailure += (() => { newSigs.unpersist(); () })
+    val newSigs = pins(Signatures.derive(batchDocs, cfg, resolver).map(_.sig))
 
-    // new×new: the standard self-join pipeline on the batch alone. The
-    // edge set is materialized BEFORE the block relation is released —
-    // candidatePairs' persist contract — or the band udf would re-run for
-    // both self-join legs when CC later forces the edges.
-    val (cands, _, releaseBlocks) = Blocking.candidatePairs(newSigs, cfg)
-    onFailure += releaseBlocks
-    val newEdges = Pairs.edges(Pairs.score(cands, newSigs, cfg))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    onFailure += (() => { newEdges.unpersist(); () })
-    newEdges.count()
-    releaseBlocks()
+    // new×new: the standard self-join pipeline on the batch alone
+    val newEdges = selfEdges(newSigs, cfg, pins)
     mark("new-new edges")
 
     // new×old: bipartite band linkage — old-old pairs never exist in any plan
     val cross = Linkage.linkSigs(spark, newSigs, existingSigs, cfg, existingBands)
-    onFailure += (() => cross.release())
+    pins.own(cross.release)
 
     // contract matched old docs to their cluster supernode. The assignment
     // join is id-keyed and touches only matched old docs; distinct caps the
@@ -179,12 +165,10 @@ object Incremental {
     // the whole cross-scoring join each time (measured: the components
     // stage of a parquet-backed fold fell from 17.8 s to the in-memory
     // legs' ~5 s once the edges were persisted; newEdges already was).
-    val crossEdges = cross.matches
+    val crossEdges = pins(cross.matches
       .join(existingAssign.withColumnRenamed("doc_id", "right_id"), Seq("right_id"))
       .select(col("left_id").as("src"), col("cluster_id").as("dst"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    onFailure += (() => { crossEdges.unpersist(); () })
+      .distinct())
     crossEdges.count()
 
     mark("cross link built")
@@ -207,14 +191,28 @@ object Incremental {
       .filter(col("cluster_id") =!= col("doc_id"))
       .select(col("doc_id").as("old_cluster_id"), col("cluster_id"))
 
-    IncrementalResult(assignments, remapped, newSigs,
-      () => {
-        cross.release(); newSigs.unpersist(); newEdges.unpersist()
-        crossEdges.unpersist(); expansion.foreach(_.unpersist()); ()
-      })
+    IncrementalResult(assignments, remapped, newSigs, pins.release)
     }
   }
 
+  /** Duplicate edges among `sigs` — the self-join pipeline (band census,
+    * candidates, exact scoring) of a fold's batch and a retraction's
+    * members. The edge set is persisted in `pins` and materialized BEFORE
+    * the band relation is released — candidatePairs' persist contract —
+    * or the band udf would re-run for both self-join legs when CC later
+    * forces the edges.
+    */
+  private def selfEdges(sigs: Dataset[DocSig], cfg: GraftConfig, pins: Pins)(
+      implicit spark: SparkSession): DataFrame = Pins.using { blocks =>
+    val (cands, _, releaseBlocks) = Blocking.candidatePairs(sigs, cfg)
+    blocks.own(releaseBlocks)
+    val edges = pins(Pairs.edges(Pairs.score(cands, sigs, cfg)))
+    edges.count()
+    edges
+  }
+
+  /** Call `release` once after consuming the result; a throwing
+    * retraction leaves nothing persisted. */
   final case class RetractResult(
       assignments: DataFrame, // (doc_id, cluster_id) — the FULL remaining corpus
       reassigned: DataFrame, // (doc_id, cluster_id) — touched-cluster members only
@@ -291,13 +289,10 @@ object Incremental {
               existingSigs: Option[Dataset[DocSig]] = None): RetractResult = {
     implicit val s: SparkSession = spark
     import spark.implicits._
-    val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    Pipeline.guarded { onFailure =>
-    val rm = removeIds.select("doc_id").distinct().persist(mem)
-    onFailure += (() => { rm.unpersist(); () })
-    val touched = existingAssign.join(rm, Seq("doc_id"))
-      .select("cluster_id").distinct().persist(mem)
-    onFailure += (() => { touched.unpersist(); () })
+    Pins.scoped { pins =>
+    val rm = pins(removeIds.select("doc_id").distinct())
+    val touched = pins(existingAssign.join(rm, Seq("doc_id"))
+      .select("cluster_id").distinct())
     if (touched.count() == 0) {
       // nothing known was removed (e.g. a re-run of an already executed
       // takedown): the state is unchanged — short-circuit BEFORE any
@@ -306,17 +301,14 @@ object Incremental {
         existingAssign.select("doc_id", "cluster_id"),
         existingAssign.select("doc_id", "cluster_id").limit(0),
         touched, rm, rm.select("doc_id").limit(0),
-        spark.emptyDataset[DocSig],
-        () => { rm.unpersist(); touched.unpersist(); () })
+        spark.emptyDataset[DocSig], pins.release)
     } else {
 
     // surviving members of touched clusters; the broadcast is justified —
     // `touched` is bounded by the removal batch, not the corpus
     val memberIds = existingAssign.join(broadcast(touched), Seq("cluster_id"))
       .join(rm, Seq("doc_id"), "left_anti").select("doc_id")
-    val memberDocs = docs.join(memberIds, Seq("doc_id"), "left_semi").as[Doc]
-      .persist(mem)
-    onFailure += (() => { memberDocs.unpersist(); () })
+    val memberDocs = pins(docs.join(memberIds, Seq("doc_id"), "left_semi").as[Doc])
     // coverage is a hard precondition, not a best effort: a survivor the
     // doc table does not cover would silently VANISH from the output
     // assignment while its stale signature row survived — exactly the
@@ -327,7 +319,7 @@ object Incremental {
       .join(docs.toDF().select("doc_id"), Seq("doc_id"), "left_anti")
     if (!uncovered.isEmpty) {
       val sample = uncovered.take(5).map(_.getString(0)).mkString(", ")
-      throw new IllegalArgumentException( // guarded releases rm/touched/memberDocs
+      throw new IllegalArgumentException( // pins releases rm/touched/memberDocs
         "retract: docs does not cover every surviving member of the " +
           s"touched clusters (e.g. $sample) — an incomplete doc table " +
           "would silently drop the uncovered survivors from the corpus state")
@@ -337,8 +329,8 @@ object Incremental {
     val (repDocs, expansion) =
       if (cfg.exactPrecollapse) Pipeline.precollapse(memberDocs)
       else (memberDocs, None)
-    expansion.foreach(e => onFailure += (() => { e.unpersist(); () }))
-    val repSigs = (existingSigs match {
+    expansion.foreach(e => pins.own(e))
+    val repSigs = pins(existingSigs match {
       case Some(old) =>
         val oldDf = old.toDF()
         val reused = oldDf.join(repDocs.select("doc_id"), Seq("doc_id"), "left_semi")
@@ -346,16 +338,9 @@ object Incremental {
         reused.unionByName(Signatures.derive(fresh, cfg, resolver).map(_.sig).toDF())
           .as[DocSig]
       case None => Signatures.derive(repDocs, cfg, resolver).map(_.sig)
-    }).persist(mem)
-    onFailure += (() => { repSigs.unpersist(); () })
-
-    val (cands, _, releaseBlocks) = Blocking.candidatePairs(repSigs, cfg)
-    onFailure += releaseBlocks
-    val edges = Pairs.edges(Pairs.score(cands, repSigs, cfg)).persist(mem)
-    onFailure += (() => { edges.unpersist(); () })
-    edges.count()
-    releaseBlocks()
-    val comp = Components.connectedComponents(edges, cfg.maxCcIterations)
+    })
+    val comp = Components.connectedComponents(
+      selfEdges(repSigs, cfg, pins), cfg.maxCcIterations)
 
     val reassigned = Pipeline.expandClusters(
         memberDocs.toDF().select(col("doc_id")), expansion, comp)
@@ -364,12 +349,7 @@ object Incremental {
       .join(broadcast(touched), Seq("cluster_id"), "left_anti")
       .select("doc_id", "cluster_id")
     RetractResult(untouchedRows.unionByName(reassigned), reassigned, touched,
-      rm, memberDocs.toDF().select("doc_id"), repSigs,
-      () => {
-        rm.unpersist(); touched.unpersist(); memberDocs.unpersist()
-        repSigs.unpersist(); edges.unpersist()
-        expansion.foreach(_.unpersist()); ()
-      })
+      rm, memberDocs.toDF().select("doc_id"), repSigs, pins.release)
     }
     }
   }

@@ -41,6 +41,8 @@ import org.apache.spark.sql.functions._
   */
 object Linkage {
 
+  /** Call `release` once after consuming the result; a throwing link
+    * leaves nothing persisted. */
   final case class LinkResult(
       matches: DataFrame, // (left_id, right_id, score) — is_dup pairs only
       stats: Blocking.BlockStats, // droppedRows counts both sides' rows
@@ -48,14 +50,13 @@ object Linkage {
 
   def link(spark: SparkSession, left: Dataset[Doc], right: Dataset[Doc],
            cfg: GraftConfig = GraftConfig(),
-           resolver: MediaResolver = DefaultMedia): LinkResult = {
+           resolver: MediaResolver = DefaultMedia): LinkResult = Pins.scoped { pins =>
     import spark.implicits._
-    val lSigs = Signatures.derive(left, cfg, resolver)(spark).map(_.sig)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val rSigs = Signatures.derive(right, cfg, resolver)(spark).map(_.sig)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val lSigs = pins(Signatures.derive(left, cfg, resolver)(spark).map(_.sig))
+    val rSigs = pins(Signatures.derive(right, cfg, resolver)(spark).map(_.sig))
     val inner = linkSigs(spark, lSigs, rSigs, cfg)
-    inner.copy(release = () => { inner.release(); lSigs.unpersist(); rSigs.unpersist(); () })
+    pins.own(inner.release)
+    inner.copy(release = pins.release)
   }
 
   /** Signature-level entry point: link two already-derived signature sets.
@@ -72,14 +73,11 @@ object Linkage {
   def linkSigs(spark: SparkSession, lSigs: Dataset[graft.model.DocSig],
                rSigs: Dataset[graft.model.DocSig],
                cfg: GraftConfig,
-               rBands: Option[DataFrame] = None): LinkResult = {
+               rBands: Option[DataFrame] = None): LinkResult = Pins.scoped { pins =>
     implicit val s: SparkSession = spark
 
-    val lB = Blocking.bandRowsDF(lSigs, cfg)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val rBOwned = rBands.isEmpty
-    val rB = rBands.getOrElse(Blocking.bandRowsDF(rSigs, cfg)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val lB = pins(Blocking.bandRowsDF(lSigs, cfg))
+    val rB = rBands.getOrElse(pins(Blocking.bandRowsDF(rSigs, cfg)))
 
     // census of joinable keys only (inner join of per-side counts): hot and
     // degenerate keys are a bounded handful by construction, so the collect
@@ -111,7 +109,6 @@ object Linkage {
     val matches = scored.filter(col("is_dup"))
       .select(col("a").as("left_id"), col("b").as("right_id"), col("score"))
 
-    LinkResult(matches, stats,
-      () => { lB.unpersist(); if (rBOwned) { rB.unpersist() }; () })
+    LinkResult(matches, stats, pins.release)
   }
 }

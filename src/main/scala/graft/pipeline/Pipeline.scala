@@ -23,6 +23,8 @@ object Pipeline {
     def info(msg: String): Unit = System.err.println(s"[graft] $msg")
   }
 
+  /** Call `release` once after consuming the result; a throwing run
+    * leaves nothing persisted. */
   final case class Result(clusters: DataFrame, // (doc_id, cluster_id, spans)
                           edges: DataFrame, // (src, dst)
                           badMedia: DataFrame, // (doc_id, media_ref, error)
@@ -59,21 +61,18 @@ object Pipeline {
 
     val baseKey = if (checkpoint.isDefined) resumeBaseKey(docs, cfg) else cfg.configHash
 
-    guarded { onFailure =>
+    Pins.scoped { pins =>
     // Without a TableIO every stage is persisted + materialized instead:
     // each stage below is consumed by more than one downstream action, and
     // an unmaterialized lineage would re-run the signature map (decode +
     // DCT + minhash — the expensive part) once per action.
-    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    onFailure += (() => cached.foreach(_.unpersist()))
     def materialize(name: String, key: Long)(compute: => DataFrame): DataFrame = {
       val t0 = System.nanoTime()
       var rows = -1L
       val out = checkpoint match {
         case Some(t) => Checkpoints.stage(spark, t, name, key)(compute)
         case None =>
-          val df = compute.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          cached += df
+          val df = pins(compute)
           rows = df.count()
           df
       }
@@ -89,7 +88,7 @@ object Pipeline {
       if (cfg.exactPrecollapse) precollapse(docs) else (docs, None)
     log.info(f"stage collapse: ${(System.nanoTime() - t0Collapse) / 1e9}%.2f s" +
       (if (expansion.isEmpty) ", no exact duplicates" else ""))
-    expansion.foreach(cached += _)
+    expansion.foreach(e => pins.own(e))
 
     // 1. signatures (+ bad-media side output)
     val sigResults = materialize("signatures", baseKey) {
@@ -105,15 +104,17 @@ object Pipeline {
     // manifest is consulted would pay that O(corpus) pass on every RESUMED
     // run just to throw it away. On a resume the census never runs, so
     // stats honestly reads all-zeros (nothing was dropped/salted THIS run).
+    // The band relation is released as soon as the candidates are
+    // materialized.
     var stats = Blocking.BlockStats(0L, 0L, 0L)
-    var releaseBlocks: () => Unit = () => ()
-    val candidates = materialize("candidates", Hashing.hash64(baseKey, 2L)) {
-      val (cands, s0, rel) = Blocking.candidatePairs(sigs, cfg)
-      stats = s0; releaseBlocks = rel
-      onFailure += rel
-      cands
+    val candidates = Pins.using { blocks =>
+      materialize("candidates", Hashing.hash64(baseKey, 2L)) {
+        val (cands, s0, releaseBlocks) = Blocking.candidatePairs(sigs, cfg)
+        stats = s0
+        blocks.own(releaseBlocks)
+        cands
+      }
     }
-    releaseBlocks()
 
     // 4. exact scoring → duplicate edges
     val scored = materialize("scored", Hashing.hash64(baseKey, 3L)) {
@@ -144,27 +145,7 @@ object Pipeline {
       case None => expanded
     }
 
-    Result(out, edges, badMedia, stats, () => cached.foreach(_.unpersist()))
-    }
-  }
-
-  /** Failure-path cleanup registry of [[run]], [[Incremental.run]] and
-    * [[Incremental.retract]]: `body` registers a release thunk per
-    * relation it persists, and the thunks run (newest first, errors
-    * swallowed) only if `body` throws — on success, ownership of every
-    * persisted relation transfers to the result's release thunk. Runs,
-    * folds and takedowns live inside long-running drivers: a thrown stage
-    * (bad batch, FS hiccup) must not strand MEMORY_AND_DISK blocks for the
-    * life of the session. Every registered thunk is an idempotent
-    * unpersist, so the registry never double-frees anything live.
-    */
-  private[pipeline] def guarded[A](body: scala.collection.mutable.Buffer[() => Unit] => A): A = {
-    val onFailure = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
-    try body(onFailure)
-    catch {
-      case e: Throwable =>
-        onFailure.reverseIterator.foreach(c => try c() catch { case _: Throwable => () })
-        throw e
+    Result(out, edges, badMedia, stats, pins.release)
     }
   }
 
@@ -263,11 +244,10 @@ object Pipeline {
     import spark.implicits._
     // one signature derivation per side (the target's decodes media),
     // reused by blocking AND phase-2 scoring
-    val sigs = Signatures.derive(candidates, cfg, resolver).map(_.sig)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val targetSigs = Signatures
-      .derive(spark.createDataset(Seq(target)), cfg, resolver).map(_.sig)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    Pins.using { pins =>
+    val sigs = pins(Signatures.derive(candidates, cfg, resolver).map(_.sig))
+    val targetSigs = pins(
+      Signatures.derive(spark.createDataset(Seq(target)), cfg, resolver).map(_.sig))
 
     // a = corpus doc, b = target. `=!=` drops the target's own id when it
     // is ALSO in `candidates` (reference-style `graft cat.jpg photos/`
@@ -283,9 +263,7 @@ object Pipeline {
     // materialize the (per-target, small) result so the cached signature
     // blocks can be released before returning — repeated compare() calls in
     // a long-lived session would otherwise leak storage memory
-    val result = out.localCheckpoint(true)
-    sigs.unpersist()
-    targetSigs.unpersist()
-    result
+    out.localCheckpoint(true)
+    }
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.media.{DefaultMedia, MediaResolver}
 import graft.model.Doc
-import graft.pipeline.{GraftConfig, Generation, Incremental, ParquetTableIO, Pipeline}
+import graft.pipeline.{Blocking, GraftConfig, Generation, Incremental, ParquetTableIO, Pins, Pipeline}
 import graft.text.Hashing
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
@@ -178,21 +178,15 @@ object StreamIngest {
     // derivation only when some chain dir predates the bands stage
     val chain = Generation.chain(stateDir, cur)
     val state = Generation.readChain(spark, stateDir, chain)
-    val (sigs, bandsOpt, releaseInputs) = Incremental.foldInputs(spark, state.sigs, state.bands)
-    // the finally releases every persisted relation on BOTH paths: a
-    // thrown fold (bad batch, FS hiccup) fails the streaming query but
-    // must not strand corpus-sized MEMORY_AND_DISK blocks in the
-    // still-running driver's storage memory (unpersist is idempotent)
-    var derivedBands: Option[org.apache.spark.sql.DataFrame] = None
-    var inc: Incremental.IncrementalResult = null
-    try {
+    Pins.using { pins =>
+      val (sigs, bandsOpt) = Incremental.foldInputs(spark, pins, state.sigs, state.bands)
       val oldBands = bandsOpt.getOrElse {
-        val b = graft.pipeline.Blocking.bandRowsDF(sigs, cfg)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        b.count(); derivedBands = Some(b); b
+        val b = pins(Blocking.bandRowsDF(sigs, cfg))
+        b.count(); b
       }
-      inc = Incremental.run(spark, sigs, state.assign, batch, cfg, resolver,
+      val inc = Incremental.run(spark, sigs, state.assign, batch, cfg, resolver,
         existingBands = Some(oldBands))
+      pins.own(inc.release)
 
       // The batch side of the next generation is `inc.batchSigs` — the
       // exact-content REPRESENTATIVES the fold itself derived (one
@@ -204,7 +198,7 @@ object StreamIngest {
       val newAssign = Incremental.applyRemap(state.assign, inc.remapped)
         .unionByName(inc.assignments)
       val nextDir = s"$stateDir/$next"
-      val batchBands = graft.pipeline.Blocking.bandRowsDF(inc.batchSigs, cfg)
+      val batchBands = Blocking.bandRowsDF(inc.batchSigs, cfg)
       if (chain.length >= compactEvery) {
         // compaction: a self-contained full generation truncates the chain
         Generation.write(spark, nextDir, sigs.unionByName(inc.batchSigs),
@@ -218,10 +212,6 @@ object StreamIngest {
       }
       writeMaxBatch(nextDir, batchId)
       commitPointer(stateDir, next, Some(cur))
-    } finally {
-      if (inc != null) inc.release()
-      derivedBands.foreach(_.unpersist())
-      releaseInputs()
     }
   }
 
@@ -266,47 +256,40 @@ object StreamIngest {
 
     val chain = Generation.chain(stateDir, cur)
     val state = Generation.readChain(spark, stateDir, chain)
-    val (sigs, bandsOpt, releaseInputs) = Incremental.foldInputs(spark, state.sigs, state.bands)
-
-    // like foldBatch: the finally releases on success, failure, AND the
-    // nothing-touched early return (whose non-local return also passes
-    // through it) — a thrown takedown must not strand persisted state
-    var res: Incremental.RetractResult = null
-    try {
-      res = Incremental.retract(spark, docs, state.assign, removeIds, cfg, resolver,
+    Pins.using { pins =>
+      val (sigs, bandsOpt) = Incremental.foldInputs(spark, pins, state.sigs, state.bands)
+      val res = Incremental.retract(spark, docs, state.assign, removeIds, cfg, resolver,
         existingSigs = Some(sigs))
-      if (res.touched.isEmpty) { // nothing known was removed: state unchanged
+      pins.own(res.release)
+      if (res.touched.isEmpty) // nothing known was removed: state unchanged
         System.err.println(s"[graft] stream-ingest: retraction touched no cluster (at $cur) — nothing to commit")
-        return
-      }
-      // tagged key derivation: a crashed FOLD attempt can leave stages in
-      // the same uncommitted dir; the tag keeps a retraction's keys from
-      // ever pairing with them
-      val genKey = Hashing.hash64(Hashing.hash64(state.key, 0x72657472616374L),
-        genNum(next))
-      val nextDir = s"$stateDir/$next"
-      val memberBands = graft.pipeline.Blocking.bandRowsDF(res.memberSigs, cfg)
-      if (chain.length >= compactEvery) {
-        // compaction-style full generation, reusing the chain's band union
-        val nextSigs = Incremental.applyRetractSigs(sigs, res)
-        val nextBands = bandsOpt match {
-          case Some(b) => b.join(res.dropIds, Seq("doc_id"), "left_anti")
-            .unionByName(memberBands)
-          case None => // some chain dir predates the bands stage — derive once
-            graft.pipeline.Blocking.bandRowsDF(nextSigs, cfg)
+      else {
+        // tagged key derivation: a crashed FOLD attempt can leave stages in
+        // the same uncommitted dir; the tag keeps a retraction's keys from
+        // ever pairing with them
+        val genKey = Hashing.hash64(Hashing.hash64(state.key, 0x72657472616374L),
+          genNum(next))
+        val nextDir = s"$stateDir/$next"
+        val memberBands = Blocking.bandRowsDF(res.memberSigs, cfg)
+        if (chain.length >= compactEvery) {
+          // compaction-style full generation, reusing the chain's band union
+          val nextSigs = Incremental.applyRetractSigs(sigs, res)
+          val nextBands = bandsOpt match {
+            case Some(b) => b.join(res.dropIds, Seq("doc_id"), "left_anti")
+              .unionByName(memberBands)
+            case None => // some chain dir predates the bands stage — derive once
+              Blocking.bandRowsDF(nextSigs, cfg)
+          }
+          Generation.write(spark, nextDir, nextSigs, res.assignments, genKey,
+            Some(nextBands))
+        } else {
+          // retraction delta: O(touched) rows + the tombstoned drop ids
+          Generation.writeDelta(nextDir, res.memberSigs, memberBands,
+            res.dropIds, res.assignments, genKey, cur)
         }
-        Generation.write(spark, nextDir, nextSigs, res.assignments, genKey,
-          Some(nextBands))
-      } else {
-        // retraction delta: O(touched) rows + the tombstoned drop ids
-        Generation.writeDelta(nextDir, res.memberSigs, memberBands,
-          res.dropIds, res.assignments, genKey, cur)
+        writeMaxBatch(nextDir, maxBatch(stateDir, cur)) // carried, not consumed
+        commitPointer(stateDir, next, Some(cur))
       }
-      writeMaxBatch(nextDir, maxBatch(stateDir, cur)) // carried, not consumed
-      commitPointer(stateDir, next, Some(cur))
-    } finally {
-      if (res != null) res.release()
-      releaseInputs()
     }
   }
 
@@ -365,20 +348,19 @@ object StreamIngest {
       Hashing.hash64(r.doc.spans.map(sp =>
         s"${sp.kind}|${sp.text}|${sp.media_ref}|${sp.offset}").mkString("\u0000")))
     val ord = Ordering[(Long, Int, Long)]
-    val latest = batch.groupByKey(_.doc.doc_id)
-      .reduceGroups((a: CdcRecord, b: CdcRecord) =>
-        if (ord.compare(rank(a), rank(b)) >= 0) a else b)
-      .map(_._2)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    latest.count()
-    val deletes = latest.filter((r: CdcRecord) => r.delete)
-      .map(_.doc.doc_id).toDF("doc_id")
-    val upserts = latest.filter((r: CdcRecord) => !r.delete).map(_.doc)
-    val liveIds = readCurrentState(spark, stateDir)._2.select("doc_id")
-    val toRetract = deletes
-      .union(liveIds.join(upserts.toDF().select("doc_id"), Seq("doc_id")))
-      .distinct()
-    try {
+    Pins.using { pins =>
+      val latest = pins(batch.groupByKey(_.doc.doc_id)
+        .reduceGroups((a: CdcRecord, b: CdcRecord) =>
+          if (ord.compare(rank(a), rank(b)) >= 0) a else b)
+        .map(_._2))
+      latest.count()
+      val deletes = latest.filter((r: CdcRecord) => r.delete)
+        .map(_.doc.doc_id).toDF("doc_id")
+      val upserts = latest.filter((r: CdcRecord) => !r.delete).map(_.doc)
+      val liveIds = readCurrentState(spark, stateDir)._2.select("doc_id")
+      val toRetract = deletes
+        .union(liveIds.join(upserts.toDF().select("doc_id"), Seq("doc_id")))
+        .distinct()
       retractBatch(spark, corpusDocs(spark), toRetract, stateDir, cfg, resolver,
         compactEvery)
       foldBatch(spark, upserts, batchId, stateDir, cfg, resolver, compactEvery)
@@ -387,8 +369,7 @@ object StreamIngest {
       // (writeMaxBatch is atomic, so patching committed state is safe)
       if (maxBatch(stateDir, currentGen(stateDir)) < batchId)
         writeMaxBatch(currentDir(stateDir), batchId)
-    } finally latest.unpersist()
-    ()
+    }
   }
 
   /** The `DataStreamWriter` for a CDC stream (callers add

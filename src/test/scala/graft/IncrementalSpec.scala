@@ -184,4 +184,23 @@ class IncrementalSpec extends AnyFunSuite with SparkTestBase {
     val leaked = s.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty, s"failed fold stranded persisted RDDs: ${leaked.toSeq.sorted}")
   }
+
+  test("a fold whose band join fails releases the checkpoint's fold inputs") {
+    val s = spark
+    val dir = java.nio.file.Files.createTempDirectory("graft-inc-badbands").toString
+    val old = Pipeline.run(s, ds(oldSeq.take(40)), cfg, checkpoint = Some(new ParquetTableIO(dir)))
+    old.clusters.count()
+    old.release()
+    // caller-supplied corpus bands without the simhash prefilter column:
+    // the linkage census reads only block_key, so it materializes both band
+    // relations (and the persisted fold inputs) before the band join fails
+    // to resolve the missing column
+    val bands = Generation.read(s, dir).bands.get.drop("simhash")
+    val before = s.sparkContext.getPersistentRDDs.keySet
+    intercept[org.apache.spark.sql.AnalysisException] {
+      Incremental.fromCheckpoint(s, dir, ds(newSeq.take(20)), cfg, existingBands = Some(bands))
+    }
+    val leaked = s.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"failed fold stranded persisted RDDs: ${leaked.toSeq.sorted}")
+  }
 }

@@ -150,6 +150,24 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("a failed compare releases both signature sets") {
+    implicit val s = spark
+    import s.implicits._
+    // only the candidate corpus carries the poisoned ref: the target's
+    // signatures derive (and its broadcast band side materializes) before
+    // the corpus side's decode throws inside the result's job
+    val target = docsSeq.head
+    val poisoned = docsSeq.tail :+ Doc("poison-1", Seq(Span.media(PoisonMedia.Ref, 0)))
+    val before = s.sparkContext.getPersistentRDDs.keySet
+    val e = intercept[org.apache.spark.SparkException] {
+      Pipeline.compare(s, target, s.createDataset(poisoned), Corpus.RecommendedConfig,
+        PoisonMedia)
+    }
+    assert(e.getMessage.contains("injected decode failure"), e.getMessage)
+    val leaked = s.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"failed compare stranded persisted RDDs: ${leaked.toSeq.sorted}")
+  }
+
   test("media-only docs: clustering reduces to the reference radius predicate") {
     implicit val s = spark
     import s.implicits._
@@ -233,4 +251,14 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
       .map(ld => (ld.label, ld.doc.doc_id, ld.doc.spans)).sortBy(_._2)
     assert(dist == local)
   }
+}
+
+/** Synthetic media whose one poisoned ref throws — a resolver bug, not the
+  * bad-record `Left` the signature stage routes to its side channel.
+  */
+object PoisonMedia extends graft.media.MediaResolver {
+  val Ref = "synth://poison"
+  def resolve(ref: String): Either[String, graft.imaging.Raster] =
+    if (ref == Ref) throw new IllegalStateException("injected decode failure")
+    else SynthMedia.resolve(ref)
 }

@@ -319,6 +319,17 @@ class StreamIngestSpec extends AnyFunSuite with SparkTestBase {
     Files.writeString(tomb,
       tombJson.replaceAll("\"resume_key\":\"-?\\d+\"", "\"resume_key\":\"12345\""))
     intercept[IllegalStateException] { StreamIngest.readCurrentState(s, stateDir) }
+    // ... and a CDC batch against it fails after persisting its reduced
+    // batch, which must not stay persisted
+    val before = s.sparkContext.getPersistentRDDs.keySet
+    intercept[IllegalStateException] {
+      StreamIngest.cdcFoldBatch(s,
+        s.createDataset(b2.map(StreamIngest.CdcRecord(_, delete = false)))(
+          org.apache.spark.sql.Encoders.product),
+        1L, _ => ds(seedDocs ++ b1), stateDir, cfg, compactEvery = 4)
+    }
+    val leaked = s.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"failed CDC batch stranded persisted RDDs: ${leaked.toSeq.sorted}")
     Files.writeString(tomb, tombJson)
 
     // a PARENT cycle: the chain walk must throw, not spin
