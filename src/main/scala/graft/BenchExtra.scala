@@ -16,6 +16,10 @@ import org.apache.spark.sql.SparkSession
   *   GRAFT_BENCHX_REPS       timed repetitions per query (default 2)
   *   GRAFT_BENCHX_PLANDIR    if set, write <query>.txt explain(formatted)
   *   GRAFT_BENCHX_OUT        if set, write the JSON line to this file too
+  *   GRAFT_BENCHX_EVENTLOG   if set, write Spark event logs to this dir;
+  *                           jobs carry the description `benchx:<query>`
+  *                           and the local property `graft.benchx.rep`
+  *                           (tools/jobs_per_query.py counts them)
   *
   * Output: one JSON line {"queries":{name:[sec,...]},"sf":...} — every rep
   * is reported (rep 1 carries the session's cold caches, like the driver's
@@ -41,8 +45,11 @@ object BenchExtra {
     // job/stage attribution (the UI is disabled in the bench protocol)
     sys.env.get("GRAFT_BENCHX_EVENTLOG").foreach { d =>
       new java.io.File(d).mkdirs()
+      // uncompressed (Spark 4 defaults to zstd), so plain JSON-lines
+      // readers like tools/jobs_per_query.py can parse it
       builder.config("spark.eventLog.enabled", "true")
         .config("spark.eventLog.dir", d)
+        .config("spark.eventLog.compress", "false")
     }
     val spark = builder
       .withExtensions(new graft.functions.GraftExtensions)
@@ -67,13 +74,15 @@ object BenchExtra {
         java.nio.file.Files.writeString(
           java.nio.file.Paths.get(d, s"$name.txt"), plan)
       }
-      val times = (1 to reps).map { _ =>
+      val times = (1 to reps).map { rep =>
         spark.sparkContext.setJobDescription(s"benchx:$name")
+        spark.sparkContext.setLocalProperty("graft.benchx.rep", rep.toString)
         val t0 = System.nanoTime()
         fn(spark, sfDir).count()
         (System.nanoTime() - t0) / 1e9
       }
       spark.sparkContext.setJobDescription(null)
+      spark.sparkContext.setLocalProperty("graft.benchx.rep", null)
       System.err.println(f"[benchx] $name%-24s ${times.map(t => f"$t%.2f").mkString(" ")}")
       name -> times
     }

@@ -182,38 +182,6 @@ object SparkEntry {
       i => t.substr(i, lit(8))))
   }
 
-  /** EXACT set-similarity self-join over [[shingleSet]] sets at Jaccard ≥
-    * `thr` — PPJoin (Bayardo, Ma & Srikant, WWW'07; Xiao et al., WWW'08)
-    * with both lossless filters:
-    *
-    *  - PREFIX filter: tokens get a global total order by ascending
-    *    document frequency (rarest first, ties by token); a doc with n
-    *    distinct tokens joins only on its first p = n − ⌈t·n⌉ + 1 ordered
-    *    tokens. For a pair with Jaccard ≥ t the overlap o ≥ t·n on BOTH
-    *    sides, so the globally-smallest shared token must sit inside both
-    *    prefixes (else one side's prefix holds p all-unshared tokens,
-    *    forcing o ≤ n − p = ⌈t·n⌉ − 1 < o).
-    *  - POSITIONAL filter: that smallest shared token w is exactly the
-    *    join match with minimal positions (ia, jb); every shared token
-    *    ranks ≥ w on both sides, so o ≤ min(nA−ia+1, nB−jb+1), while
-    *    jac ≥ t needs o ≥ t·(nA+nB)/(1+t). Pairs failing the bound are
-    *    dropped BEFORE the array_intersect verify (measured at sf0.1:
-    *    2.23M prefix candidates → the handful of true near-dups).
-    *
-    * Both ε=1e-9 slacks err toward KEEPING candidates (longer prefix,
-    * looser bound), so double rounding can never prune an integer
-    * boundary — candidacy stays lossless and the verify step restores
-    * exactness. Scale shape: df is one token-keyed map-side-combined
-    * groupBy; the per-doc order is a local sort of the ~113-shingle list
-    * (never a global window); the equi-join keys on the RAREST shingles
-    * by construction and the shingle vocabulary GROWS with the corpus,
-    * so block sizes shrink as data grows — word unigrams here saturated
-    * at 126 tokens / 34M candidate pairs / 97 s at sf0.1.
-    */
-  /** The df-ordered prefix relation (doc_id, n, pos, ptok) for a
-    * (doc_id, toks) set table — shared by [[exactShinglePairs]] and the
-    * DiagPPJoin census so the census always measures the join that ships.
-    */
   /** The THRESHOLD-INDEPENDENT half of [[shinglePrefix]]: per doc, the
     * ascending-(df, token) ordered shingle list and its size. Extracted so
     * the df census + ordered-list build (the expensive, thr-free part of
@@ -245,6 +213,11 @@ object SparkEntry {
       .withColumnRenamed("col", "ptok")
       .withColumn("pos", col("pos") + 1)
 
+  /** The df-ordered prefix relation (doc_id, n, pos, ptok) for a
+    * (doc_id, toks) set table: [[shingleOrd]] then [[prefixFromOrd]], the
+    * two steps [[exactShinglePairs]] runs over its shared ordered relation,
+    * so the DiagPPJoin census always measures the join that ships.
+    */
   private[graft] def shinglePrefix(d: DataFrame, thr: Double): DataFrame =
     prefixFromOrd(shingleOrd(d), thr)
 
@@ -282,51 +255,46 @@ object SparkEntry {
     (toks, mins)
   }
 
-  /** Memoized per (session, dir, thr) and localCheckpoint-pinned: the
-    * PPJoin is the shared truth generator for q_prefix_join (0.8) and the
-    * q_er_f1 / q_bcubed / q_strategy_f1 evaluation family (0.9) — without
-    * the pin each consumer re-ran the full prefix+verify derivation
-    * (~6 s each at sf0.1, three times per bench sweep).
+  /** The one session cache of the query surface: every expensive
+    * derivation several queries share (band relation, levEdges, the PPJoin
+    * truth, flagship CC, FS vectors, PQ codebooks, ...) is derived once per
+    * Spark application through [[SessionCache.value]] or, for relations
+    * materialized once for all their consumers, [[SessionCache.pinned]].
     *
-    * Cache contract (same as [[sBandRelation]]): table dirs are IMMUTABLE
-    * within a Spark application — the driver writes each sf dir once —
-    * so entries are never invalidated; rewriting a dir in-session would
-    * serve the pre-rewrite relation. Entries pin checkpoint blocks for
-    * the application's lifetime, bounded by the handful of (dir, thr)
-    * combinations the query surface uses. The first derivation is
-    * serialized so a concurrent first call cannot double-checkpoint and
-    * leak an unreachable pinned copy.
+    * Contract, for every entry:
+    *  - the key is (applicationId, name, key): `name` names the
+    *    derivation, so two derivations over equal keys never collide, and
+    *    a fresh application derives afresh;
+    *  - table dirs are IMMUTABLE within an application (the driver writes
+    *    each sf dir once), so entries are never invalidated — rewriting a
+    *    dir in-session would serve the pre-rewrite value;
+    *  - racing first callers derive once: the map holds an inert lazy cell
+    *    per key and only the winning cell evaluates, while unrelated keys
+    *    derive in parallel (no map-wide monitor held over a multi-second
+    *    derivation);
+    *  - pinned relations are localCheckpoint-materialized once, here, and
+    *    their blocks live until the application ends; entries whose
+    *    SparkContext has stopped are evicted on the next access, so a JVM
+    *    that runs applications one after another (the test suite) never
+    *    holds pins across them.
     */
-  /** Session-pinned derivation cache shared by the memoized relations
-    * below. One entry per (application, key); the first caller on a key
-    * derives while concurrent first callers serialize on THAT key's lazy
-    * cell only — unrelated (dir, thr) derivations proceed in parallel
-    * (previously a map-wide `synchronized` held a global monitor for the
-    * full multi-second first derivation). Entries whose owning
-    * SparkContext has stopped are evicted on the next access, so a JVM
-    * that runs Spark applications sequentially (the test suite) cannot
-    * leak pinned DataFrames across applications.
-    */
-  /** Session-scoped memo: applicationId keys, eviction of stopped
-    * contexts, an inert lazy Cell so racing first callers never derive
-    * twice. One implementation for BOTH pinned DataFrames
-    * ([[SessionMemo]]) and session-free plain values like fitted models
-    * ([[SessionValueMemo]]) — the eviction/race contract lives here once.
-    */
-  private class SessionValueMemo[K, V] {
-    private final class Cell(thunk: () => V) { lazy val value: V = thunk() }
+  private[graft] object SessionCache {
+    private final class Cell(thunk: () => Any) { lazy val value: Any = thunk() }
     private final class Entry(val ctx: org.apache.spark.SparkContext, val cell: Cell)
-    private val m = scala.collection.concurrent.TrieMap.empty[(String, K), Entry]
-    def apply(s: SparkSession, k: K)(derive: => V): V = {
+    private val m = scala.collection.concurrent.TrieMap.empty[(String, String, Any), Entry]
+
+    def value[V](s: SparkSession, name: String, key: Any)(derive: => V): V = {
       m.filterInPlace((_, e) => !e.ctx.isStopped)
       val ctx = s.sparkContext
-      // getOrElseUpdate is atomic on TrieMap; the Cell is a cheap inert
-      // wrapper, and only the winning entry's lazy value ever derives
-      m.getOrElseUpdate((ctx.applicationId, k), new Entry(ctx, new Cell(() => derive)))
-        .cell.value
+      // getOrElseUpdate is atomic on TrieMap; only the winning entry's
+      // lazy cell ever derives
+      m.getOrElseUpdate((ctx.applicationId, name, key), new Entry(ctx, new Cell(() => derive)))
+        .cell.value.asInstanceOf[V]
     }
+
+    def pinned(s: SparkSession, name: String, key: Any)(derive: => DataFrame): DataFrame =
+      value(s, name, key)(derive.localCheckpoint(true))
   }
-  private final class SessionMemo[K] extends SessionValueMemo[K, DataFrame]
 
   /** Deterministic hash stratum for the bounded evaluator mode: the first
     * 15 md5 hex digits of "esample:" + doc_id as int64 (the bucket recipe
@@ -382,27 +350,59 @@ object SparkEntry {
           .otherwise(lit(0.0)), 6).as("f1"))
   }
 
-  /** ONE pinned [[shingleOrd]] relation per (session, dir, sampleK) — the
-    * thr-free half of the PPJoin, shared by every threshold over the same
-    * doc population. The ordered token arrays double as the verify side's
+  /** ONE pinned [[shingleOrd]] relation per (dir, sampleK) — the thr-free
+    * half of the PPJoin, shared by every threshold over the same doc
+    * population. The ordered token arrays double as the verify side's
     * token sets (array_intersect is order-insensitive and the lists are
     * distinct by construction), so the PPJoin never re-derives
-    * [[shingleSet]] either. Cache contract as on [[sBandRelation]].
+    * [[shingleSet]] either.
     */
-  private val shingleOrdCache = new SessionMemo[(String, Int)]
   private def sShingleOrd(s: SparkSession, dir: String, sampleK: Int): DataFrame =
-    shingleOrdCache(s, (dir, sampleK)) {
+    SessionCache.pinned(s, "shingleOrd", (dir, sampleK)) {
       val all = docsTable(s, dir)
       val base = if (sampleK <= 1) all
         else all.filter(sampleBucket(col("doc_id")) % sampleK === 0)
       // spread: the shingle HOF below is scan-rooted on the one-split table
       val d = spread(base.select("doc_id", "text"))
         .select(col("doc_id"), shingleSet(col("text")).as("toks"))
-      shingleOrd(d).localCheckpoint(true)
+      shingleOrd(d)
     }
 
-  private val exactPairsCache = new SessionMemo[(String, Double, Int)]
-  /** @param sampleK 1 = full corpus (default). k > 1 = the deterministic
+  /** EXACT set-similarity self-join over [[shingleSet]] sets at Jaccard ≥
+    * `thr` — PPJoin (Bayardo, Ma & Srikant, WWW'07; Xiao et al., WWW'08)
+    * with both lossless filters:
+    *
+    *  - PREFIX filter: tokens get a global total order by ascending
+    *    document frequency (rarest first, ties by token); a doc with n
+    *    distinct tokens joins only on its first p = n − ⌈t·n⌉ + 1 ordered
+    *    tokens. For a pair with Jaccard ≥ t the overlap o ≥ t·n on BOTH
+    *    sides, so the globally-smallest shared token must sit inside both
+    *    prefixes (else one side's prefix holds p all-unshared tokens,
+    *    forcing o ≤ n − p = ⌈t·n⌉ − 1 < o).
+    *  - POSITIONAL filter: that smallest shared token w is exactly the
+    *    join match with minimal positions (ia, jb); every shared token
+    *    ranks ≥ w on both sides, so o ≤ min(nA−ia+1, nB−jb+1), while
+    *    jac ≥ t needs o ≥ t·(nA+nB)/(1+t). Pairs failing the bound are
+    *    dropped BEFORE the array_intersect verify (measured at sf0.1:
+    *    2.23M prefix candidates → the handful of true near-dups).
+    *
+    * Both ε=1e-9 slacks err toward KEEPING candidates (longer prefix,
+    * looser bound), so double rounding can never prune an integer
+    * boundary — candidacy stays lossless and the verify step restores
+    * exactness. Scale shape: df is one token-keyed map-side-combined
+    * groupBy; the per-doc order is a local sort of the ~113-shingle list
+    * (never a global window); the equi-join keys on the RAREST shingles
+    * by construction and the shingle vocabulary GROWS with the corpus,
+    * so block sizes shrink as data grows — word unigrams here saturated
+    * at 126 tokens / 34M candidate pairs / 97 s at sf0.1.
+    *
+    * Pinned once per (dir, thr, sampleK): the PPJoin is the shared truth
+    * generator for q_prefix_join (0.8) and the q_er_f1 / q_bcubed /
+    * q_strategy_f1 evaluation family (0.9) — without the pin each consumer
+    * re-ran the full prefix+verify derivation (~6 s each at sf0.1, three
+    * times per bench sweep).
+    *
+    * @param sampleK 1 = full corpus (default). k > 1 = the deterministic
     *                1/k hash stratum ([[sampleBucket]]) — the bounded
     *                evaluator mode for real scale: prefix-candidate volume
     *                is quadratic in doc count on saturated vocabularies
@@ -415,7 +415,7 @@ object SparkEntry {
     */
   private[graft] def exactShinglePairs(s: SparkSession, dir: String, thr: Double,
       sampleK: Int = 1): DataFrame =
-    exactPairsCache(s, (dir, thr, sampleK)) {
+    SessionCache.pinned(s, "exactShinglePairs", (dir, thr, sampleK)) {
       // the pinned thr-free ordered relation serves the prefix explode AND
       // both verify sides (ord's token list is the distinct shingle set,
       // just df-ordered — intersection sizes are order-insensitive)
@@ -429,70 +429,55 @@ object SparkEntry {
           (size(col("tA")) + size(col("tB")) - col("inter")), 6))
         .filter(col("jac") >= thr)
         .select("a", "b", "jac")
-        .localCheckpoint(true)
     }
 
-  /** ONE pinned band relation per (session, table dir): the exploded
-    * (doc_id, band key) rows, localCheckpoint-materialized so every
-    * consumer — both sides of a self-join AND every subsequent band query
-    * in the session — reads the same blocks instead of re-running the md5
-    * band UDF over the corpus (the persist-the-block-relation treatment
-    * the pipeline applies, hoisted to the query surface). Keyed by
-    * applicationId so a fresh session recomputes; the cache bounds the
-    * pinned copies at one per dir rather than one per query. Cache
-    * contract as on [[exactShinglePairs]]: table dirs are immutable
-    * within an application; first derivation serialized.
+  /** ONE pinned band relation per table dir: the exploded (doc_id, band
+    * key) rows, materialized once so every consumer — both sides of a
+    * self-join AND every subsequent band query in the session — reads the
+    * same blocks instead of re-running the md5 band UDF over the corpus
+    * (the persist-the-block-relation treatment the pipeline applies,
+    * hoisted to the query surface).
     */
-  private val bandRelCache = new SessionMemo[String]
   private def sBandRelation(s: SparkSession, dir: String): DataFrame =
-    bandRelCache(s, dir) {
+    SessionCache.pinned(s, "bandRelation", dir) {
       // spread BEFORE the md5-shingle band kernel: the one-split scan
       // otherwise runs the whole corpus's sBandUdf serially
       spread(docsTable(s, dir).select("doc_id", "text"))
         .select(col("doc_id"), explode(sBandKeys(col("text"))).as("bk"))
-        .localCheckpoint(true)
     }
 
-  /** ONE pinned flagship clustering per (session, table dir): CC over the
-    * shared band+lev edge contract ([[levEdges]]), localCheckpoint-pinned.
-    * Ten query-surface consumers (cluster reports, survivorship, the whole
-    * evaluation family) previously each re-ran the candidate join, the
-    * levenshtein scoring, AND the iterative CC; the assignment relation is
-    * O(docs)-narrow, so pinning one copy per dir is the same treatment as
-    * [[sBandRelation]]. Same cache contract: dirs immutable within an
-    * application, first derivation serialized.
-    */
   /** Strict-cut (lev < 8) CC over the pinned levEdges — shared by
     * q_threshold_sweep and q_cluster_stability, so the iterative CC over
-    * the strict edge set runs once per (session, dir) like its loose
-    * sibling below.
+    * the strict edge set runs once per dir like its loose sibling
+    * [[sFlagshipCC]]. Cached, not pinned.
     */
-  private val strictCcCache = new SessionMemo[String]
   private def sStrictCC(s: SparkSession, dir: String): DataFrame =
-    strictCcCache(s, dir) {
+    SessionCache.value(s, "strictCC", dir) {
       Components.connectedComponents(
         levEdges(s, dir).filter(col("d") < 8).select("src", "dst"))(s)
         .withColumnRenamed("cluster_id", "strict_id")
     }
 
-  private val flagshipCcCache = new SessionMemo[String]
+  /** ONE pinned flagship clustering per table dir: CC over the shared
+    * band+lev edge contract ([[levEdges]]). Ten query-surface consumers
+    * (cluster reports, survivorship, the whole evaluation family)
+    * previously each re-ran the candidate join, the levenshtein scoring,
+    * AND the iterative CC; the assignment relation is O(docs)-narrow.
+    */
   private[graft] def sFlagshipCC(s: SparkSession, dir: String): DataFrame =
-    flagshipCcCache(s, dir) {
+    SessionCache.pinned(s, "flagshipCC", dir) {
       Components.connectedComponents(levEdges(s, dir).select("src", "dst"))(s)
-        .localCheckpoint(true)
     }
 
   /** ONE pinned (doc_id, pred-cluster `c`, truth-cluster `tt`) evaluation
-    * assignment per (session, table dir), shared by the contingency-cell
-    * evaluators (q_bcubed, q_ari, q_nmi): truth = CC over the exact
-    * shingle-Jaccard ≥ 0.9 pairs, predicted = [[sFlagshipCC]], unmatched
-    * docs singletons on both sides. Mirrored by [[evalAssignCte]] in both
-    * oracles so the two evaluators can never desynchronize. Cache contract
-    * as on [[sBandRelation]].
+    * assignment per table dir, shared by the contingency-cell evaluators
+    * (q_bcubed, q_ari, q_nmi): truth = CC over the exact shingle-Jaccard ≥
+    * 0.9 pairs, predicted = [[sFlagshipCC]], unmatched docs singletons on
+    * both sides. Mirrored by [[evalAssignCte]] in both oracles so the two
+    * evaluators can never desynchronize.
     */
-  private val evalAssignCache = new SessionMemo[String]
   private def sEvalAssignment(s: SparkSession, dir: String): DataFrame =
-    evalAssignCache(s, dir) {
+    SessionCache.pinned(s, "evalAssignment", dir) {
         val tcc = Components.connectedComponents(
           exactShinglePairs(s, dir, 0.9).select(col("a").as("src"), col("b").as("dst")))(s)
         val pcc = sFlagshipCC(s, dir)
@@ -501,22 +486,20 @@ object SparkEntry {
           .join(tcc.withColumnRenamed("cluster_id", "tt"), Seq("doc_id"), "left")
           .select(col("doc_id"), coalesce(col("c"), col("doc_id")).as("c"),
             coalesce(col("tt"), col("doc_id")).as("tt"))
-          .localCheckpoint(true)
     }
 
-  /** ONE pinned flagship `Pipeline.run` assignment per (session, dir,
-    * config): q_pipeline_clusters and q_retract_clusters previously each
-    * ran the FULL block → score → cluster pipeline from scratch with the
-    * identical config — the two slowest bench queries (~5.7 s + 9.9 s at
-    * sf0.1 on a quiet box). The retraction query needs the clustering only
-    * as its starting state, so both now ride one run. Cache contract as on
-    * [[sBandRelation]]; only the O(docs)-narrow assignment is pinned, the
-    * run's internal state is released.
+  /** ONE pinned flagship `Pipeline.run` assignment per (dir, config):
+    * q_pipeline_clusters and q_retract_clusters previously each ran the
+    * FULL block → score → cluster pipeline from scratch with the identical
+    * config — the two slowest bench queries (~5.7 s + 9.9 s at sf0.1 on a
+    * quiet box). The retraction query needs the clustering only as its
+    * starting state, so both now ride one run. A plain cached value: the
+    * O(docs)-narrow assignment must be pinned BEFORE the run's internal
+    * state is released, so the pin stays inside the derivation.
     */
-  private val flagshipRunCache = new SessionMemo[(String, GraftConfig)]
   private[graft] def sFlagshipAssignment(s: SparkSession, dir: String,
       cfg: GraftConfig): DataFrame =
-    flagshipRunCache(s, (dir, cfg)) {
+    SessionCache.value(s, "flagshipRun", (dir, cfg)) {
       // spread the one-split scan so the signature map parallelizes
       val full = Pipeline.run(s,
         asDocs(s, dir).repartition(s.sessionState.conf.numShufflePartitions), cfg)
@@ -525,120 +508,84 @@ object SparkEntry {
       assign
     }
 
-  /** ONE persisted IVF index per (session, table dir): centroids + corpus
-    * cell assignment checkpointed as TableIO generation stages
-    * (`ivf_centroids` / `ivf_cells`) under a deterministic per-dir root, so
-    * the k-means fit and the corpus-wide argmin are paid once per
-    * GENERATION — a later session over the same embeddings table resumes
-    * from the manifests instead of refitting (the band-relation precedent,
-    * extended across sessions). Staleness and concurrency, explicitly:
-    *
-    *  - the data key is a FILE FINGERPRINT of the embeddings parquet
-    *    (sorted name:length:mtime of every data file), so a regenerated
-    *    table at the same path invalidates the stage even when the row
-    *    count is unchanged — the count-preserving-regeneration hazard a
-    *    row-count key cannot see; fit params are mixed in by
-    *    [[graft.ann.Ivf.fitOrLoad]] from the values actually applied;
-    *  - an OS file lock under the index root serializes the
-    *    check-then-write across JVMs (a Verify run and a test suite over
-    *    the same table race Checkpoints.stage otherwise), and the memo is
-    *    keyed by the owning SparkSession (weakly — entries die with the
-    *    session) so a sibling session is never handed a DataFrame bound to
-    *    another session's state.
-    */
-  private final class IvfCell {
-    var value: Option[(graft.ann.Ivf.Model, String)] = None
-  }
-  private val ivfIndexCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, IvfCell]]()
   // one monitor per index root, JVM-wide (bounded: one entry per distinct
-  // table dir ever queried) — see the same-JVM note at the lock site
+  // table generation ever queried)
   private val ivfRootMonitors =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private def sIvfIndex(s: SparkSession, dir: String): (graft.ann.Ivf.Model, DataFrame) = {
-    // the memo holds only session-FREE values (Model + stage root): a
-    // cached DataFrame would strongly reference its owning session from
-    // inside a WeakHashMap value, pinning the key forever — the cells
-    // frame is re-derived per call from the persisted stage (plan
-    // creation over parquet, no recompute). The global monitor guards
-    // ONLY the map insert; the multi-second fit (and the blocking
-    // cross-JVM file-lock wait) runs under the per-(session, dir) cell
-    // lock, so other sessions/dirs never stall behind it (the SessionMemo
-    // lesson).
-    val cell = ivfIndexCache.synchronized {
-      val perSession = {
-        val m = ivfIndexCache.get(s)
-        if (m != null) m
-        else {
-          val m2 = scala.collection.mutable.Map.empty[String, IvfCell]
-          ivfIndexCache.put(s, m2); m2
-        }
-      }
-      perSession.getOrElseUpdate(dir, new IvfCell)
-    }
-    val (model, root) = cell.synchronized {
-      // reaper guard: a /tmp cleaner can delete the stage between the
-      // memoized first call and a later query in a long-lived session —
-      // revalidate the cached root and rebuild if the stage vanished
-      cell.value = cell.value.filter { case (_, r) =>
-        java.nio.file.Files.exists(java.nio.file.Paths.get(r, "ivf_cells"))
-      }
-      cell.value.getOrElse {
-        val e = embTable(s, dir)
-        // parquet-file fingerprint: every data file's name:length:mtime,
-        // order-stable — O(#files) driver metadata, no data scan; a
-        // regenerated table at the same path changes it even when the row
-        // count does not
-        val tablePath = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
-        val hfs = tablePath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        val dataKey = hfs.listStatus(tablePath)
-          .filter(st => st.isFile && !st.getPath.getName.startsWith("_"))
-          .sortBy(_.getPath.getName)
-          .foldLeft(graft.text.Hashing.hash64(dir, 0L)) { (acc, st) =>
-            graft.text.Hashing.hash64(
-              s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}", acc)
-          }
-        val dirKey = java.security.MessageDigest.getInstance("MD5")
-          .digest(dir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-        // the root carries user + dataKey: (a) two users over one table
-        // never fight for a world-shared path; (b) a REGENERATED table
-        // selects a brand-new root instead of mode("overwrite")-rewriting
-        // files a sibling JVM may be lazily scanning — the old root
-        // lingers in tmp (bounded by table regenerations), which is the
-        // price of never pulling parquet files out from under a reader
-        val user = Option(System.getProperty("user.name")).getOrElse("nouser")
-          .replaceAll("[^A-Za-z0-9_-]", "_")
-        val r = s"${System.getProperty("java.io.tmpdir")}/graft-ivf-$user-$dirKey-" +
-          java.lang.Long.toHexString(dataKey)
-        // cross-JVM lock: Checkpoints.stage is check-then-write; two JVMs
-        // over the same table (Verify + test suite) must not interleave
-        // concurrent writes of the same files. Same-JVM contenders (two
-        // SESSIONS over one dir — each has its own IvfCell, so
-        // cell.synchronized does not serialize them) must be serialized
-        // BEFORE the file lock: FileChannel.lock THROWS
-        // OverlappingFileLockException, it does not wait, when this JVM
-        // already holds the lock — hence the JVM-global per-root monitor.
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(r))
-        val built = ivfRootMonitors.computeIfAbsent(r, _ => new Object).synchronized {
-          val lockCh = java.nio.channels.FileChannel.open(
-            java.nio.file.Paths.get(r, ".graft_ivf_lock"),
-            java.nio.file.StandardOpenOption.CREATE,
-            java.nio.file.StandardOpenOption.WRITE)
-          val lock = lockCh.lock()
-          try {
-            val (m, _) = graft.ann.Ivf.fitOrLoad(s, new graft.pipeline.ParquetTableIO(r),
-              e, "embedding", "vec_id", k = 8, dataKey = dataKey)
-            (m, r)
-          } finally {
-            lock.release(); lockCh.close()
-          }
-        }
-        cell.value = Some(built)
-        built
+
+  /** ONE persisted IVF index per table dir: centroids + corpus cell
+    * assignment checkpointed as TableIO generation stages
+    * (`ivf_centroids` / `ivf_cells`) under a per-table root, resumed from
+    * disk by [[graft.ann.Ivf.fitOrLoad]] on every call — the k-means fit
+    * and the corpus-wide argmin are paid once per GENERATION, by this
+    * session or any later one over the same embeddings table; a later call
+    * pays the manifest checks and the k-row centroid read-back. Staleness
+    * and concurrency, explicitly:
+    *
+    *  - the root is [[ivfIndexRoot]], recomputed per call from a FILE
+    *    FINGERPRINT of the embeddings parquet, so a table regenerated at
+    *    the same path — in this session or another, even with an
+    *    unchanged row count — selects a new root and refits; fit params
+    *    are mixed in by fitOrLoad from the values actually applied;
+    *  - a stage a tmp cleaner deleted has no manifest, so fitOrLoad
+    *    rebuilds it;
+    *  - an OS file lock under the index root serializes the
+    *    check-then-write across JVMs (a Verify run and a test suite over
+    *    the same table race Checkpoints.stage otherwise), behind a JVM-wide
+    *    monitor per root: FileChannel.lock THROWS
+    *    OverlappingFileLockException, it does not wait, when this JVM
+    *    already holds the lock, so same-JVM contenders (two sessions, or
+    *    concurrent queries over one dir) must be serialized before it.
+    *
+    * @param emb `dir`'s embeddings table as the caller already read it
+    *            (each `spark.read.parquet` costs a schema-inference job)
+    */
+  private def sIvfIndex(s: SparkSession, dir: String,
+      emb: DataFrame): (graft.ann.Ivf.Model, DataFrame) = {
+    val (root, dataKey) = ivfIndexRoot(s, dir)
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
+    ivfRootMonitors.computeIfAbsent(root, _ => new Object).synchronized {
+      val lockCh = java.nio.channels.FileChannel.open(
+        java.nio.file.Paths.get(root, ".graft_ivf_lock"),
+        java.nio.file.StandardOpenOption.CREATE,
+        java.nio.file.StandardOpenOption.WRITE)
+      val lock = lockCh.lock()
+      try {
+        graft.ann.Ivf.fitOrLoad(s, new graft.pipeline.ParquetTableIO(root),
+          emb, "embedding", "vec_id", k = 8, dataKey = dataKey)
+      } finally {
+        lock.release(); lockCh.close()
       }
     }
-    (model, new graft.pipeline.ParquetTableIO(root).read(s, "ivf_cells"))
+  }
+
+  /** (index root, data key) of [[sIvfIndex]] for a table dir. The data key
+    * is a parquet-file fingerprint — every data file's name:length:mtime,
+    * order-stable; O(#files) driver metadata, no data scan — so a
+    * regenerated table at the same path changes it even when the row
+    * count does not. The root carries user + data key: (a) two users over
+    * one table never fight for a world-shared path; (b) a REGENERATED
+    * table selects a brand-new root instead of mode("overwrite")-rewriting
+    * files a sibling JVM may be lazily scanning — the old root lingers in
+    * tmp (bounded by table regenerations), which is the price of never
+    * pulling parquet files out from under a reader.
+    */
+  private[graft] def ivfIndexRoot(s: SparkSession, dir: String): (String, Long) = {
+    val tablePath = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
+    val hfs = tablePath.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val dataKey = hfs.listStatus(tablePath)
+      .filter(st => st.isFile && !st.getPath.getName.startsWith("_"))
+      .sortBy(_.getPath.getName)
+      .foldLeft(graft.text.Hashing.hash64(dir, 0L)) { (acc, st) =>
+        graft.text.Hashing.hash64(
+          s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}", acc)
+      }
+    val dirKey = java.security.MessageDigest.getInstance("MD5")
+      .digest(dir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
+    val user = Option(System.getProperty("user.name")).getOrElse("nouser")
+      .replaceAll("[^A-Za-z0-9_-]", "_")
+    (s"${System.getProperty("java.io.tmpdir")}/graft-ivf-$user-$dirKey-" +
+      java.lang.Long.toHexString(dataKey), dataKey)
   }
 
   /** k-word-gram 60-bit md5 keys for one tokenized doc, ONE udf call per
@@ -985,28 +932,25 @@ object SparkEntry {
     * plus two id-keyed payload joins; shared by the scoring query
     * (q_fellegi_sunter) and the EM estimation query (q_fs_em), and
     * mirrored verbatim by [[fsPairCte]] in both oracles. Four queries
-    * consume this corpus-scale relation, so it is localCheckpoint-pinned
-    * once per (session, dir) — the [[sBandRelation]] cache contract.
+    * consume this corpus-scale relation, so it is pinned once per dir.
     */
-  private val fsVecCache = new SessionMemo[String]
   private def fsVectors(s: SparkSession, dir: String): DataFrame =
-    fsVecCache(s, dir) { fsVectorsBuild(s, dir).localCheckpoint(true) }
-  private def fsVectorsBuild(s: SparkSession, dir: String): DataFrame = {
-    val d = fsDocFeatures(s, dir)
-    sBandCandidates(s, dir)
-      .join(d.select(col("doc_id").as("a"), col("lang").as("langA"), col("lb").as("lbA"),
-        col("t").as("tA"), col("toks").as("toksA")), "a")
-      .join(d.select(col("doc_id").as("b"), col("lang").as("langB"), col("lb").as("lbB"),
-        col("t").as("tB"), col("toks").as("toksB")), "b")
-      .withColumn("inter", size(array_intersect(col("toksA"), col("toksB"))))
-      .withColumn("lang_agree", col("langA") === col("langB"))
-      .withColumn("len_agree", col("lbA") === col("lbB"))
-      .withColumn("jac_agree",
-        col("inter").cast("double") /
-          (size(col("toksA")) + size(col("toksB")) - col("inter")) >= 0.6)
-      .withColumn("lev_agree", levLt15(col("tA"), col("tB")))
-      .select("a", "b", "langA", "lang_agree", "len_agree", "jac_agree", "lev_agree")
-  }
+    SessionCache.pinned(s, "fsVectors", dir) {
+      val d = fsDocFeatures(s, dir)
+      sBandCandidates(s, dir)
+        .join(d.select(col("doc_id").as("a"), col("lang").as("langA"), col("lb").as("lbA"),
+          col("t").as("tA"), col("toks").as("toksA")), "a")
+        .join(d.select(col("doc_id").as("b"), col("lang").as("langB"), col("lb").as("lbB"),
+          col("t").as("tB"), col("toks").as("toksB")), "b")
+        .withColumn("inter", size(array_intersect(col("toksA"), col("toksB"))))
+        .withColumn("lang_agree", col("langA") === col("langB"))
+        .withColumn("len_agree", col("lbA") === col("lbB"))
+        .withColumn("jac_agree",
+          col("inter").cast("double") /
+            (size(col("toksA")) + size(col("toksB")) - col("inter")) >= 0.6)
+        .withColumn("lev_agree", levLt15(col("tA"), col("tB")))
+        .select("a", "b", "langA", "lang_agree", "len_agree", "jac_agree", "lev_agree")
+    }
 
   /** ARI over a (doc_id, c, tt) assignment: contingency cells + marginals
     * as exact int64 pair counts (three map-side-combined groupBys, no pair
@@ -1116,17 +1060,14 @@ object SparkEntry {
     * exactly by the recursive-CTE oracles. Four direct consumers (the
     * [[sFlagshipCC]] builder, center clustering, q_strategy_f1's center
     * leg, q_cross_source_dups) — so the corpus-scale candidate join +
-    * levenshtein scan is localCheckpoint-pinned once per (session, table
-    * dir) under the [[sBandRelation]] cache contract.
-    */
-  private val levEdgeCache = new SessionMemo[String]
-  /** (src, dst, d) — the distance rides along (it is computed by the
-    * filter anyway, one int per edge) so threshold-sensitivity consumers
+    * levenshtein scan is pinned once per table dir. Rows are (src, dst,
+    * d): the distance rides along (it is computed by the filter anyway,
+    * one int per edge) so threshold-sensitivity consumers
     * (q_threshold_sweep's strict cut) reuse the pinned scan instead of
     * re-running the candidate join + levenshtein pass.
     */
   private[graft] def levEdges(s: SparkSession, dir: String): DataFrame =
-    levEdgeCache(s, dir) {
+    SessionCache.pinned(s, "levEdges", dir) {
       val t = docsTable(s, dir)
         .select(col("doc_id"), substring(col("text"), 1, 60).as("t"))
       sBandCandidates(s, dir)
@@ -1137,7 +1078,6 @@ object SparkEntry {
         .withColumn("d", levenshtein(col("ta"), col("tb"), 14))
         .filter(col("d") >= 0)
         .select(col("a").as("src"), col("b").as("dst"), col("d"))
-        .localCheckpoint(true)
     }
 
   /** Cluster-cohesion audit (ER precision proxy): per cluster, the pairwise
@@ -1224,8 +1164,8 @@ object SparkEntry {
       .filter(levLt15(col("ta"), col("tb")))
       .drop("ta", "tb")
 
-  /** ONE pinned (scheme, a, b) stratum candidate-pair relation per
-    * (session, dir) for the four blocking-scheme predicates — MinHash band,
+  /** ONE pinned (scheme, a, b) stratum candidate-pair relation per dir
+    * for the four blocking-scheme predicates — MinHash band,
     * first-token Soundex, 8-char prefix, (lang, len-bucket) — restricted to
     * the deterministic 1/[[evalSampleK]] md5 stratum, pairs distinct within
     * each scheme. Shared by q_blocking_scheme (all four schemes) and
@@ -1235,11 +1175,9 @@ object SparkEntry {
     * 132 Exchange nodes). A doc's scheme key does not depend on the
     * stratum, so keys-then-restrict ≡ restrict-then-keys; the pinned
     * relation is O(stratum candidates), bounded by the 1/k dial at scale.
-    * Cache contract as on [[sBandRelation]].
     */
-  private val stratumSchemePairsCache = new SessionMemo[String]
   private def sStratumSchemePairs(s: SparkSession, dir: String): DataFrame =
-    stratumSchemePairsCache(s, dir) {
+    SessionCache.pinned(s, "stratumSchemePairs", dir) {
       val d = docsTable(s, dir)
       val strat = d.filter(sampleBucket(col("doc_id")) % evalSampleK === 0)
       val band = sBandRelation(s, dir).join(strat.select("doc_id"), "doc_id")
@@ -1261,21 +1199,18 @@ object SparkEntry {
           Seq("scheme", "k"))
         .filter(col("a") < col("b"))
         .select("scheme", "a", "b").distinct()
-        .localCheckpoint(true)
     }
 
-  /** ONE pinned verified-pair relation per (session, dir): the DISTINCT
+  /** ONE pinned verified-pair relation per dir: the DISTINCT
     * (a, b) pairs of the four-scheme stratum candidate union that pass the
     * shared lev < 15 edge contract. The levenshtein pass over the stratum
     * candidates runs once per session; q_blocking_scheme's per-scheme
     * verified legs and q_dup_rate_cr's capture legs are semi-joins against
     * it (membership is the same pair-level predicate whichever candidate
-    * superset carried the pair there). Cache contract as on
-    * [[sBandRelation]].
+    * superset carried the pair there).
     */
-  private val stratumVerifiedCache = new SessionMemo[String]
   private def sStratumVerified(s: SparkSession, dir: String): DataFrame =
-    stratumVerifiedCache(s, dir) {
+    SessionCache.pinned(s, "stratumVerified", dir) {
       val t = docsTable(s, dir)
         .select(col("doc_id"), substring(col("text"), 1, 60).as("t"))
       // the bounded-lev pass runs on the distinct's AQE partitioning; a
@@ -1283,67 +1218,58 @@ object SparkEntry {
       // per session) and cost the tiny downstream aggregates more than it
       // saved — see the sStratumSchemePairs note
       levVerify(sStratumSchemePairs(s, dir).select("a", "b").distinct(), t)
-        .localCheckpoint(true)
     }
 
   /** ONE review-queue pair derivation shared by q_constrained_cc and
-    * q_constrained_must (so the two queues cannot drift), pinned per
-    * (session, dir) like every sibling shared derivation: one
+    * q_constrained_must (so the two queues cannot drift), pinned per dir
+    * like every sibling shared derivation: one
     * representative (min doc_id) per (flagship component, source), capped
     * at 16 reps/component BEFORE the pair expansion so the relation is
     * O(components), with each rep pair carrying whether the two reps agree
     * on lang. Returns (a, b, same_lang), a < b within one component.
     */
-  private val repPairsCache = new SessionMemo[String]
   private def repPairs(s: SparkSession, dir: String): DataFrame =
-    repPairsCache(s, dir) { repPairsDerive(s, dir).localCheckpoint(true) }
-  private def repPairsDerive(s: SparkSession, dir: String): DataFrame = {
-    val cc = sFlagshipCC(s, dir)
-    val src = docsTable(s, dir).select(col("doc_id"), col("source"), col("lang"))
-    val reps = cc.join(src, "doc_id")
-      .groupBy("cluster_id", "source")
-      .agg(min(struct(col("doc_id"), col("lang"))).as("m"))
-      .select(col("cluster_id"), col("m.doc_id").as("rep"), col("m.lang").as("lang"))
-      .withColumn("rrk", row_number().over(
-        Window.partitionBy("cluster_id").orderBy("rep")))
-      .filter(col("rrk") <= 16)
-      .select("cluster_id", "rep", "lang")
-    reps.as("l").join(reps.as("r"),
-        col("l.cluster_id") === col("r.cluster_id") && col("l.rep") < col("r.rep"))
-      .select(col("l.rep").as("a"), col("r.rep").as("b"),
-        (col("l.lang") === col("r.lang")).as("same_lang"))
-  }
+    SessionCache.pinned(s, "repPairs", dir) {
+      val cc = sFlagshipCC(s, dir)
+      val src = docsTable(s, dir).select(col("doc_id"), col("source"), col("lang"))
+      val reps = cc.join(src, "doc_id")
+        .groupBy("cluster_id", "source")
+        .agg(min(struct(col("doc_id"), col("lang"))).as("m"))
+        .select(col("cluster_id"), col("m.doc_id").as("rep"), col("m.lang").as("lang"))
+        .withColumn("rrk", row_number().over(
+          Window.partitionBy("cluster_id").orderBy("rep")))
+        .filter(col("rrk") <= 16)
+        .select("cluster_id", "rep", "lang")
+      reps.as("l").join(reps.as("r"),
+          col("l.cluster_id") === col("r.cluster_id") && col("l.rep") < col("r.rep"))
+        .select(col("l.rep").as("a"), col("r.rep").as("b"),
+          (col("l.lang") === col("r.lang")).as("same_lang"))
+    }
 
-  /** Per-(session, dir, m) PQ codebook — the fit collects a 512-row seeded
-    * sample and runs driver-side Lloyd's; q_ann_pq (3 widths) and
-    * q_ann_ivfpq (m=16) share the m=16 fit instead of re-deriving it. The
-    * Model is session-free plain arrays; [[SessionValueMemo]] carries the
-    * SessionMemo eviction + race-safe lazy-cell contract for it.
+  /** Per-(dir, m) PQ codebook — the fit collects a 512-row seeded sample
+    * and runs driver-side Lloyd's; q_ann_pq (3 widths) and q_ann_ivfpq
+    * (m=16) share the m=16 fit instead of re-deriving it.
     */
-  private val pqModelCache = new SessionValueMemo[(String, Int), graft.ann.Pq.Model]
   private def sPqModel(s: SparkSession, dir: String, m: Int): graft.ann.Pq.Model =
-    pqModelCache(s, (dir, m)) {
+    SessionCache.value(s, "pqModel", (dir, m)) {
       graft.ann.Pq.fit(embTable(s, dir), "embedding", "vec_id", m = m, k = 16)
     }
 
-  /** Pinned (vec_id, code) PQ corpus relation per (session, dir, m) — the
+  /** Pinned (vec_id, code) PQ corpus relation per (dir, m) — the
     * corpus-wide encode pass runs once per session like [[sBandRelation]].
     */
-  private val pqCodesCache = new SessionMemo[(String, Int)]
   private def sPqCodes(s: SparkSession, dir: String, m: Int): DataFrame =
-    pqCodesCache(s, (dir, m)) {
+    SessionCache.pinned(s, "pqCodes", (dir, m)) {
       graft.ann.Pq.encode(embTable(s, dir), "embedding", sPqModel(s, dir, m))
-        .select(col("vec_id"), col("code")).localCheckpoint(true)
+        .select(col("vec_id"), col("code"))
     }
 
   /** Pinned exact inner-product top-10 truth for the 50-query ANN sample —
     * the (q, n) relation both PQ evaluators measure recall against; the
-    * 50×N cross join runs once per (session, dir) instead of once per
-    * query.
+    * 50×N cross join runs once per dir instead of once per query.
     */
-  private val ipTruthCache = new SessionMemo[String]
   private def sIpTruth(s: SparkSession, dir: String): DataFrame =
-    ipTruthCache(s, dir) {
+    SessionCache.pinned(s, "ipTruth", dir) {
       val e = embTable(s, dir)
       val w = Window.partitionBy("q").orderBy(col("dot").desc, col("n"))
       // spread: BNLJ parallelizes over left partitions (q_cosine_topk note)
@@ -1353,7 +1279,7 @@ object SparkEntry {
         .filter(col("q") =!= col("n"))
         .select(col("q"), col("n"), dotCol(col("qv"), col("nv")).as("dot"))
         .withColumn("rank", row_number().over(w)).filter(col("rank") <= 10)
-        .select("q", "n").localCheckpoint(true)
+        .select("q", "n")
     }
 
   /** Bipartite linkage match relation (left_id, right_id, jw): even-id docs
@@ -3208,7 +3134,7 @@ object SparkEntry {
     // measures the real nprobe trade instead of reading ~1 everywhere.
     "q_ann_recall" -> ((s, dir) => {
       val e = embTable(s, dir)
-      val (model, cells) = sIvfIndex(s, dir)
+      val (model, cells) = sIvfIndex(s, dir, e)
       val queries = e.filter(col("vec_id") < 50)
       val cosRound = (a: Column, b: Column) =>
         round(dotCol(a, b) / (normCol(a) * normCol(b)), 6)
@@ -3239,7 +3165,7 @@ object SparkEntry {
 
     "q_ann_ivf" -> ((s, dir) => {
       val e = embTable(s, dir)
-      val (model, cells) = sIvfIndex(s, dir)
+      val (model, cells) = sIvfIndex(s, dir, e)
       val queries = e.filter(col("vec_id") < 50)
       graft.ann.Ivf.topKWithIndex(queries, e, cells, model, "embedding",
           "vec_id", k = 3, nprobe = 4,
@@ -3293,7 +3219,7 @@ object SparkEntry {
     // cell-pruning loss on top (measured 0.354/0.402/0.440 at sf0.01).
     "q_ann_ivfpq" -> ((s, dir) => {
       val e = embTable(s, dir)
-      val (ivfModel, cells) = sIvfIndex(s, dir)
+      val (ivfModel, cells) = sIvfIndex(s, dir, e)
       val queries = e.filter(col("vec_id") < 50)
       val pqModel = sPqModel(s, dir, 16)
       val codes = sPqCodes(s, dir, 16)

@@ -144,10 +144,12 @@ object Ivf {
       .toDF("cell", "centroid")
 
   /** Inverse of [[centroidsDF]]: exact round-trip (parquet doubles are
-    * bit-preserving), cells ordered by index.
+    * bit-preserving), cells ordered by index. The k rows are sorted on the
+    * driver: an `orderBy` would add a sampling and a shuffle job to every
+    * resumed index read.
     */
   def modelFromDF(df: DataFrame): Model =
-    Model(df.select("cell", "centroid").orderBy("cell").collect()
+    Model(df.select("cell", "centroid").collect().sortBy(_.getInt(0))
       .map(_.getSeq[Double](1).toArray))
 
   /** Fit-or-resume the IVF index as checkpoint stages: `ivf_centroids`

@@ -109,27 +109,16 @@ object StreamDedup {
       }
   }
 
-  /** Keyed streaming dedup with explicit state: the first doc of each
-    * exact-content key is the keeper; later arrivals are tagged duplicates
-    * (reference keep-first survivorship, `cmd/dedupe/main.go:226-236`,
-    * reinterpreted for unbounded input).
-    *
-    * State is BOUNDED by a processing-time TTL: a key idle for `stateTtl`
-    * has its entry evicted, so the state store stays proportional to the
-    * active working set, not the stream's lifetime key cardinality — the
-    * difference between running for an hour and running for a year. A
-    * re-arrival after eviction re-opens the key (its first doc becomes the
-    * new keeper): the standard recall/state trade every windowed dedup makes.
-    * Pass `stateTtl = None` for the unbounded exact mode.
-    *
-    * Trigger note: under ProcessingTimeTimeout, Spark's
-    * FlatMapGroupsWithStateExec reports shouldRunAnotherBatch = true
-    * unconditionally (processing time always advances), so the query MUST
-    * run with an interval trigger (e.g. Trigger.ProcessingTime("1 minute")).
-    * With the default as-fast-as-possible trigger it spins empty
-    * timeout-check batches back-to-back — and
-    * StreamingQuery.processAllAvailable never quiesces (livelock).
+  /** Keep-first copy numbering of one key's batch (sorted by doc_id):
+    * each row is numbered after the key's `copies` so far, and every row
+    * but the keeper `firstDocId` is a duplicate.
     */
+  private def keepFirst(key: String, sorted: Seq[StreamSig], firstDocId: String,
+                        copies: Long): Seq[DupTag] =
+    sorted.zipWithIndex.map { case (s, i) =>
+      DupTag(s.doc_id, key, s.doc_id != firstDocId, firstDocId, copies + i + 1)
+    }
+
   /** [[tagDuplicates]] with an EVENT-time TTL: a key whose last-seen event
     * time is more than `ttl` behind the WATERMARK is evicted. Unlike the
     * processing-time variant, eviction is a function of the DATA, not the
@@ -163,20 +152,16 @@ object StreamDedup {
             Iterator.empty
           } else {
             val sorted = rows.toSeq.sortBy(_.doc_id)
-            var st = state.getOption.getOrElse(
+            val st = state.getOption.getOrElse(
               SeenStateEv(sorted.head.doc_id, 0L, Long.MinValue))
-            val out = sorted.map { s =>
-              st = st.copy(copies = st.copies + 1)
-              DupTag(s.doc_id, key, s.doc_id != st.firstDocId, st.firstDocId, st.copies)
-            }
+            val out = keepFirst(key, sorted, st.firstDocId, st.copies)
             // last-seen is the MAX event time ever observed for this key —
             // carried in state so a late (out-of-order, within-watermark)
             // batch with OLDER events cannot rewind the eviction deadline
             // below lastSeen + ttl
             val lastSeen = math.max(st.lastSeenMs,
               sorted.map(_.event_time.getTime).max)
-            st = st.copy(lastSeenMs = lastSeen)
-            state.update(st)
+            state.update(SeenStateEv(st.firstDocId, st.copies + sorted.size, lastSeen))
             state.setTimeoutTimestamp(
               math.max(state.getCurrentWatermarkMs() + 1, lastSeen + ttlMs))
             out.iterator
@@ -184,6 +169,27 @@ object StreamDedup {
       }
   }
 
+  /** Keyed streaming dedup with explicit state: the first doc of each
+    * exact-content key is the keeper; later arrivals are tagged duplicates
+    * (reference keep-first survivorship, `cmd/dedupe/main.go:226-236`,
+    * reinterpreted for unbounded input).
+    *
+    * State is BOUNDED by a processing-time TTL: a key idle for `stateTtl`
+    * has its entry evicted, so the state store stays proportional to the
+    * active working set, not the stream's lifetime key cardinality — the
+    * difference between running for an hour and running for a year. A
+    * re-arrival after eviction re-opens the key (its first doc becomes the
+    * new keeper): the standard recall/state trade every windowed dedup makes.
+    * Pass `stateTtl = None` for the unbounded exact mode.
+    *
+    * Trigger note: under ProcessingTimeTimeout, Spark's
+    * FlatMapGroupsWithStateExec reports shouldRunAnotherBatch = true
+    * unconditionally (processing time always advances), so the query MUST
+    * run with an interval trigger (e.g. Trigger.ProcessingTime("1 minute")).
+    * With the default as-fast-as-possible trigger it spins empty
+    * timeout-check batches back-to-back — and
+    * StreamingQuery.processAllAvailable never quiesces (livelock).
+    */
   def tagDuplicates(sigs: Dataset[StreamSig],
                     stateTtl: Option[String] = Some("1 hour"))(
       implicit spark: SparkSession): Dataset[DupTag] = {
@@ -199,13 +205,10 @@ object StreamDedup {
             Iterator.empty
           } else {
             val sorted = rows.toSeq.sortBy(_.doc_id)
-            var st = state.getOption.getOrElse(
+            val st = state.getOption.getOrElse(
               SeenState(sorted.head.doc_id, 0L))
-            val out = sorted.map { s =>
-              st = st.copy(copies = st.copies + 1)
-              DupTag(s.doc_id, key, s.doc_id != st.firstDocId, st.firstDocId, st.copies)
-            }
-            state.update(st)
+            val out = keepFirst(key, sorted, st.firstDocId, st.copies)
+            state.update(st.copy(copies = st.copies + sorted.size))
             stateTtl.foreach(state.setTimeoutDuration)
             out.iterator
           }

@@ -1,8 +1,11 @@
 package graft
 
 import graft.ann.Ivf
+import graft.pipeline.Generation
+import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** IVF coarse-quantizer ANN: determinism, cell partition sanity, and
   * measured recall vs the brute-force top-k on the sf0.01 embeddings.
@@ -102,5 +105,65 @@ class IvfSpec extends AnyFunSuite with SparkTestBase {
       s"stage NOT rewritten on param change: $p"))
     Files.walk(Paths.get(root)).iterator().asScala.toList.reverse
       .foreach(Files.deleteIfExists(_))
+  }
+
+  // ---- the IVF index behind q_ann_ivf / q_ann_ivfpq / q_ann_recall resumes
+  // from its on-disk stages on every call, so what it serves follows the
+  // table and the index root, not an in-JVM copy.
+
+  private def annIvf(dir: String): Seq[Seq[Any]] =
+    SparkEntry.queries("q_ann_ivf")(spark, dir).collect().toSeq.map(_.toSeq)
+
+  /** Runs `body` over a fresh base dir for throwaway tables, then deletes
+    * it and every IVF index root (all generations) built for its tables.
+    */
+  private def withTableDirs(body: Path => Unit): Unit = {
+    val base = Files.createTempDirectory("graft-ivf-table")
+    try body(base)
+    finally {
+      val prefixes = list(base).map { t =>
+        val root = SparkEntry.ivfIndexRoot(spark, t.toString)._1
+        root.substring(0, root.lastIndexOf('-') + 1)
+      }
+      list(Paths.get(System.getProperty("java.io.tmpdir")))
+        .filter(p => prefixes.exists(p.toString.startsWith))
+        .foreach(Generation.deleteRecursively)
+      Generation.deleteRecursively(base)
+    }
+  }
+  private def list(d: Path): List[Path] = {
+    val s = Files.list(d)
+    try s.iterator().asScala.toList finally s.close()
+  }
+
+  test("q_ann_ivf over a table overwritten in place follows the new table") {
+    withTableDirs { base =>
+      val dir = base.resolve("t").toString
+      emb.write.parquet(s"$dir/embeddings.parquet")
+      val before = annIvf(dir)
+      // a non-isometric rewrite (a coordinate permutation or reflection
+      // would keep every cosine, centroid cell and neighbour), same ids
+      val regen = emb.withColumn("embedding",
+        transform(col("embedding"), x => x + lit(0.25f)))
+      regen.write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+      val after = annIvf(dir)
+      val fresh = base.resolve("fresh").toString
+      regen.write.parquet(s"$fresh/embeddings.parquet")
+      assert(after == annIvf(fresh))
+      assert(after != before)
+    }
+  }
+
+  test("q_ann_ivf rebuilds an index root deleted between two calls") {
+    withTableDirs { base =>
+      val dir = base.resolve("t").toString
+      emb.write.parquet(s"$dir/embeddings.parquet")
+      val first = annIvf(dir)
+      val root = Paths.get(SparkEntry.ivfIndexRoot(spark, dir)._1)
+      assert(Files.exists(root.resolve("ivf_cells")))
+      Generation.deleteRecursively(root)
+      assert(annIvf(dir) == first)
+      assert(Files.exists(root.resolve("ivf_cells/_graft_manifest.json")))
+    }
   }
 }
