@@ -2,7 +2,7 @@ package graft
 
 import graft.media.SynthMedia
 import graft.model.{Doc, Span}
-import graft.pipeline.{Canopy, Components, GraftConfig, Pipeline, Swoosh}
+import graft.pipeline.{Canopy, CappedSlices, Components, GraftConfig, Pipeline, Swoosh}
 import graft.text.{JaroWinkler, MinHash, SimHash, TextStats, Tokenize}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -86,18 +86,9 @@ object SparkEntry {
       val v = element_at(a, i + 1).cast("double"); v * v
     }.reduceLeft(_ + _))
 
-  /** Cosine as a primitive-loop UDF: identical left-to-right double fold as
-    * the unrolled column expression AND DuckDB's list_sum (bit-identical
-    * results), but ~20× faster when Catalyst pushes the similarity predicate
-    * into a BroadcastNestedLoopJoin condition, where expressions evaluate
-    * interpreted per pair (measured: 97 s vs 5 s on the 4M-pair census).
-    */
-  private val cosUdf = udf { (a: Seq[Float], b: Seq[Float], na: Double, nb: Double) =>
-    var dot = 0.0
-    var i = 0
-    while (i < a.length) { dot += a(i).toDouble * b(i).toDouble; i += 1 }
-    dot / (na * nb)
-  }
+  /** Round-6 cosine of two embedding columns (the IVF rescoring measure). */
+  private def cosRound(a: Column, b: Column): Column =
+    round(dotCol(a, b) / (normCol(a) * normCol(b)), 6)
 
   /** Banded-MinHash blocking for the string-scorer query family
     * (q_lev_pairs, q_jw_pairs, q_ngram_jaccard, levEdges → CC/report/
@@ -333,8 +324,9 @@ object SparkEntry {
 
   /** n_true / n_pred / n_hit plus rounded precision/recall/F1 from two
     * pinned (a, b) pair relations — the pairwise-metric block shared by
-    * q_er_f1 and q_er_f1_sampled. Ratios are UNROUNDED doubles of exact
-    * integer counts, rounded once — identical bits in both engines.
+    * q_er_f1, q_er_f1_sampled and q_strategy_f1. Ratios are UNROUNDED
+    * doubles of exact integer counts, rounded once — identical bits in
+    * both engines.
     */
   private def pairwisePrf(truth: DataFrame, pred: DataFrame): DataFrame = {
     val hit = truth.join(pred, Seq("a", "b"), "left_semi")
@@ -349,6 +341,16 @@ object SparkEntry {
           lit(2.0) * col("p") * col("r") / (col("p") + col("r")))
           .otherwise(lit(0.0)), 6).as("f1"))
   }
+
+  /** (a < b) pairs of docs that share a cluster in a (doc_id, cluster_id)
+    * assignment — the predicted side of the pairwise evaluators.
+    * Quadratic only within a cluster.
+    */
+  private def sameClusterPairs(assign: DataFrame): DataFrame =
+    assign.select(col("doc_id").as("a"), col("cluster_id"))
+      .join(assign.select(col("doc_id").as("b"), col("cluster_id")), "cluster_id")
+      .filter(col("a") < col("b"))
+      .select("a", "b")
 
   /** ONE pinned [[shingleOrd]] relation per (dir, sampleK) — the thr-free
     * half of the PPJoin, shared by every threshold over the same doc
@@ -1057,10 +1059,10 @@ object SparkEntry {
 
   /** Shared near-dup edge relation for the CC/report/survivorship queries:
     * band candidates → levenshtein < 15 on 60-char prefixes. Mirrored
-    * exactly by the recursive-CTE oracles. Four direct consumers (the
+    * exactly by the recursive-CTE oracles. Five direct consumers (the
     * [[sFlagshipCC]] builder, center clustering, q_strategy_f1's center
-    * leg, q_cross_source_dups) — so the corpus-scale candidate join +
-    * levenshtein scan is pinned once per table dir. Rows are (src, dst,
+    * leg, q_cross_source_dups, q_lev_pairs) — so the corpus-scale
+    * candidate join + levenshtein scan is pinned once per table dir. Rows are (src, dst,
     * d): the distance rides along (it is computed by the filter anyway,
     * one int per edge) so threshold-sensitivity consumers
     * (q_threshold_sweep's strict cut) reuse the pinned scan instead of
@@ -1086,10 +1088,11 @@ object SparkEntry {
     * low min_sim is a probable over-merge; this is the report a reviewer
     * reads before approving a survivorship delete.
     *
-    * Members are capped at `cap` per cluster (row_number over doc_id)
-    * BEFORE the pair expansion, so an adversarial million-member cluster
-    * costs O(cap·k) rows and O(cap²) scored pairs, never O(k²); n_members
-    * still reports the true cluster size. All aggregates are exact integer
+    * Members are capped at `cap` per cluster ([[CappedSlices.membership]],
+    * doc_id order; the text is joined after the cap) BEFORE the pair
+    * expansion, so an adversarial million-member cluster costs O(cap·k)
+    * rows and O(cap²) scored pairs, never O(k²); n_members still reports
+    * the true cluster size. All aggregates are exact integer
     * sums; the only doubles are per-pair round-6 quotients — bit-identical
     * across engines.
     *
@@ -1100,10 +1103,7 @@ object SparkEntry {
   private[graft] def clusterCohesion(cc: DataFrame, t: DataFrame,
                                      cap: Int = 32): DataFrame = {
     val sz = cc.groupBy("cluster_id").agg(count(lit(1)).as("n_members"))
-    val mem = cc.join(t, "doc_id")
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("cluster_id").orderBy("doc_id")))
-      .filter(col("rk") <= cap)
+    val mem = CappedSlices.membership(cc, cap)._1.join(t, "doc_id")
     val l = mem.select(col("cluster_id"), col("doc_id").as("a"), col("t").as("ta"))
     val r = mem.select(col("cluster_id"), col("doc_id").as("b"), col("t").as("tb"))
     val pairs = l.join(r, "cluster_id").filter(col("a") < col("b"))
@@ -1128,13 +1128,12 @@ object SparkEntry {
     * the oracles mirror it with the shared n0/n1 + [[soundexCteSql]] CTEs.
     */
   private def firstTokenSdx(df: DataFrame): DataFrame =
-    // spread BEFORE the extraction so the regex + Soundex chain runs wide
-    // (the one-split scan otherwise serializes it); substring_index takes
-    // the first token without materializing the full ~300-element split
-    // array per doc (equivalent: both yield "" on a leading space and the
-    // whole text when no space exists)
-    spread(df.select(col("doc_id"), col("text")))
-      .select(col("doc_id"), upper(regexp_replace(
+    // substring_index takes the first token without materializing the
+    // full ~300-element split array per doc (equivalent: both yield "" on
+    // a leading space and the whole text when no space exists). No
+    // spread: the chain is cheap enough that a round-robin exchange costs
+    // more than the one-split scan saves.
+    df.select(col("doc_id"), upper(regexp_replace(
         substring_index(col("text"), " ", 1), "[^A-Za-z]", "")).as("w"))
       .filter(length(col("w")) > 0)
       .withColumn("sdx", soundexCol(col("w")))
@@ -1264,22 +1263,93 @@ object SparkEntry {
         .select(col("vec_id"), col("code"))
     }
 
-  /** Pinned exact inner-product top-10 truth for the 50-query ANN sample —
-    * the (q, n) relation both PQ evaluators measure recall against; the
-    * 50×N cross join runs once per dir instead of once per query.
+  /** Pinned exact neighbours of the 50-query ANN sample (vec_id < 50):
+    * every (q, n ≠ q) pair against the whole corpus is scored once, with
+    * the sequential-fold [[dotCol]] and the round-6 cosine over norms
+    * computed once per vector, and kept when n is in q's top 10 by either
+    * measure — (q, n, dot, cos, cos_rank, dot_rank), ranks tie-broken on
+    * n. Its consumers filter by rank: q_cosine_topk (cos_rank ≤ 3),
+    * q_ann_recall's cosine truth (cos_rank ≤ 10) and the exact
+    * inner-product truth both PQ evaluators measure against (dot_rank ≤
+    * 10, [[ipTruth]]), so the 50×N cross join runs once per dir instead of
+    * once per consumer.
     */
-  private def sIpTruth(s: SparkSession, dir: String): DataFrame =
-    SessionCache.pinned(s, "ipTruth", dir) {
+  private def sExactNeighbours(s: SparkSession, dir: String): DataFrame =
+    SessionCache.pinned(s, "exactNeighbours", dir) {
       val e = embTable(s, dir)
-      val w = Window.partitionBy("q").orderBy(col("dot").desc, col("n"))
-      // spread: BNLJ parallelizes over left partitions (q_cosine_topk note)
-      spread(e.filter(col("vec_id") < 50))
-        .select(col("vec_id").as("q"), col("embedding").as("qv"))
-        .crossJoin(e.select(col("vec_id").as("n"), col("embedding").as("nv")))
-        .filter(col("q") =!= col("n"))
-        .select(col("q"), col("n"), dotCol(col("qv"), col("nv")).as("dot"))
-        .withColumn("rank", row_number().over(w)).filter(col("rank") <= 10)
-        .select("q", "n")
+        .select(col("vec_id"), col("embedding"), normCol(col("embedding")).as("nrm"))
+      // spread: BroadcastNestedLoopJoin parallelizes over LEFT partitions
+      // only, and the query side reads as one split — the 50×N scoring pass
+      // otherwise runs in a single task (measured 2.6 s in one stage)
+      val q = spread(e.filter(col("vec_id") < 50))
+        .select(col("vec_id").as("q"), col("embedding").as("qv"), col("nrm").as("nq"))
+      val byCos = Window.partitionBy("q").orderBy(col("cos").desc, col("n"))
+      val byDot = Window.partitionBy("q").orderBy(col("dot").desc, col("n"))
+      q.join(e.select(col("vec_id").as("n"), col("embedding").as("nv"), col("nrm").as("nn")),
+          col("q") =!= col("n"))
+        .select(col("q"), col("n"), dotCol(col("qv"), col("nv")).as("dot"), col("nq"), col("nn"))
+        .withColumn("cos", round(col("dot") / (col("nq") * col("nn")), 6))
+        .withColumn("cos_rank", row_number().over(byCos))
+        .withColumn("dot_rank", row_number().over(byDot))
+        .filter(col("cos_rank") <= 10 || col("dot_rank") <= 10)
+        .select("q", "n", "dot", "cos", "cos_rank", "dot_rank")
+    }
+
+  /** (q, n) exact inner-product top-10 truth of the ANN sample. */
+  private def ipTruth(s: SparkSession, dir: String): DataFrame =
+    sExactNeighbours(s, dir).filter(col("dot_rank") <= 10).select("q", "n")
+
+  /** Recall curve of an ANN evaluator: for each setting v of `grid`,
+    * `topK(v)`'s (q, n) rows are matched against the (q, n) `truth` —
+    * (key, n_hits, n_truth, recall), recall rounded once from exact
+    * counts. The literal grid keeps a zero-hit setting's row.
+    */
+  private def recallCurve(s: SparkSession, truth: DataFrame, key: String, grid: Seq[Int])(
+      topK: Int => DataFrame): DataFrame = {
+    import s.implicits._
+    val gots = grid.map(v => topK(v).select(lit(v).as(key), col("q"), col("n")))
+      .reduce(_ unionByName _)
+    val hits = truth.join(gots, Seq("q", "n")).groupBy(key).agg(count(lit(1)).as("n_hits"))
+    grid.toDF(key).join(hits, Seq(key), "left").na.fill(0L, Seq("n_hits"))
+      .crossJoin(truth.agg(count(lit(1)).as("n_truth")))
+      .select(col(key), col("n_hits"), col("n_truth"),
+        round(col("n_hits").cast("double") / col("n_truth"), 6).as("recall"))
+  }
+
+  /** Pinned sign-LSH candidate pairs of the embeddings: (a < b) sharing at
+    * least one of 8 8-bit bands of the 63-bit [[signHash]], with their
+    * UNROUNDED cosine and label agreement — (a, b, cos, same_label). The
+    * band predicate is part of the q_embed_near_dup / q_semdedup /
+    * q_ann_lsh contract (the oracles define candidacy identically); each
+    * consumer applies only its own cosine cut.
+    *
+    * The band shuffle carries bare (vec_id, bucket) rows, the up-to-8×
+    * replicated pairs dedup on the two ids alone, and the 64-float vectors
+    * rejoin by id after the distinct, so they never ride the band
+    * explode/shuffle.
+    */
+  private def sSignBandPairs(s: SparkSession, dir: String): DataFrame =
+    SessionCache.pinned(s, "signBandPairs", dir) {
+      val e = embTable(s, dir).select(col("vec_id"), col("label"), col("embedding"),
+        normCol(col("embedding")).as("nrm"), signHash(col("embedding")).as("h"))
+      val bands = e.select(col("vec_id"),
+        explode(array((0 until 8).map(i =>
+          concat_ws(":", lit(i), shiftright(col("h"), i * 8).bitwiseAND(lit(0xffL)))): _*)).as("bucket"))
+      // spread after the distinct: AQE coalesces the byte-small pair
+      // exchange to one partition, serializing the 64-d cosine verify
+      // (event-log: a 2.05 s single-task stage)
+      val cand = spread(bands.select(col("vec_id").as("a"), col("bucket"))
+        .join(bands.select(col("vec_id").as("b"), col("bucket")), Seq("bucket"))
+        .filter(col("a") < col("b"))
+        .select("a", "b").distinct())
+      val ea = e.select(col("vec_id").as("a"), col("label").as("la"),
+        col("embedding").as("ea"), col("nrm").as("na"))
+      val eb = e.select(col("vec_id").as("b"), col("label").as("lb"),
+        col("embedding").as("eb"), col("nrm").as("nb"))
+      cand.join(ea, "a").join(eb, "b")
+        .select(col("a"), col("b"),
+          (dotCol(col("ea"), col("eb")) / (col("na") * col("nb"))).as("cos"),
+          (col("la") === col("lb")).as("same_label"))
     }
 
   /** Bipartite linkage match relation (left_id, right_id, jw): even-id docs
@@ -1369,14 +1439,7 @@ object SparkEntry {
 
     // edit-distance near-dup pairs over banded-MinHash blocks (graft text scorer)
     "q_lev_pairs" -> ((s, dir) => {
-      val t = docsTable(s, dir)
-        .select(col("doc_id"), substring(col("text"), 1, 60).as("t"))
-      sBandCandidates(s, dir)
-        .join(t.select(col("doc_id").as("a"), col("t").as("ta")), "a")
-        .join(t.select(col("doc_id").as("b"), col("t").as("tb")), "b")
-        .withColumn("d", levenshtein(col("ta"), col("tb"), 14))
-        .filter(col("d") >= 0)
-        .select("a", "b", "d")
+      levEdges(s, dir).select(col("src").as("a"), col("dst").as("b"), col("d"))
         .orderBy("a", "b")
     }),
 
@@ -2264,11 +2327,10 @@ object SparkEntry {
         .filter(sampleBucket(col("doc_id")) % evalSampleK === 0)
         .select(col("doc_id"), substring(col("text"), 1, 60).as("t"))
       // the sample reads as 1-2 parquet splits, and BroadcastNestedLoopJoin
-      // parallelizes over LEFT partitions only — without this repartition
-      // the O(sample²) lev pass runs on one core (measured 88.7 s at
-      // sf0.1; ~3 s fanned out)
-      val pairs = sample.select(col("doc_id").as("a"), col("t").as("ta"))
-        .repartition(64)
+      // parallelizes over LEFT partitions only — without this spread the
+      // O(sample²) lev pass runs on one core (measured 88.7 s at sf0.1;
+      // ~3 s fanned out)
+      val pairs = spread(sample.select(col("doc_id").as("a"), col("t").as("ta")))
         .crossJoin(sample.select(col("doc_id").as("b"), col("t").as("tb")))
         .filter(col("a") < col("b"))
       // pinned: the lev pass over the sample² pairs is the expensive leg
@@ -2307,13 +2369,8 @@ object SparkEntry {
     // exact integer counts, then rounded once — identical bits in both
     // engines.
     "q_er_f1" -> ((s, dir) => {
-      val truth = exactShinglePairs(s, dir, 0.9).select("a", "b").localCheckpoint(true)
-      val cc = sFlagshipCC(s, dir)
-      val pred = cc.select(col("doc_id").as("a"), col("cluster_id"))
-        .join(cc.select(col("doc_id").as("b"), col("cluster_id")), "cluster_id")
-        .filter(col("a") < col("b"))
-        .select("a", "b").localCheckpoint(true)
-      pairwisePrf(truth, pred)
+      pairwisePrf(exactShinglePairs(s, dir, 0.9).select("a", "b"),
+        sameClusterPairs(sFlagshipCC(s, dir)).localCheckpoint(true))
     }),
 
     // q_er_f1 on the deterministic 1/[[evalSampleK]] hash stratum
@@ -2328,18 +2385,13 @@ object SparkEntry {
     // metric is exact — a measurement of the full clustering on a
     // deterministic subpopulation, not an approximation of q_er_f1.
     "q_er_f1_sampled" -> ((s, dir) => {
-      val truth = exactShinglePairs(s, dir, 0.9, sampleK = evalSampleK)
-        .select("a", "b").localCheckpoint(true)
       val inS = docsTable(s, dir)
         .filter(sampleBucket(col("doc_id")) % evalSampleK === 0).select("doc_id")
-      val cc = sFlagshipCC(s, dir)
-      val pred = cc.select(col("doc_id").as("a"), col("cluster_id"))
-        .join(cc.select(col("doc_id").as("b"), col("cluster_id")), "cluster_id")
-        .filter(col("a") < col("b"))
+      val pred = sameClusterPairs(sFlagshipCC(s, dir))
         .join(inS.withColumnRenamed("doc_id", "a"), Seq("a"), "left_semi")
         .join(inS.withColumnRenamed("doc_id", "b"), Seq("b"), "left_semi")
         .select("a", "b").localCheckpoint(true)
-      pairwisePrf(truth, pred)
+      pairwisePrf(exactShinglePairs(s, dir, 0.9, sampleK = evalSampleK).select("a", "b"), pred)
     }),
 
     // Clustering-STRATEGY comparison — q_er_f1's pairwise metric computed
@@ -2355,29 +2407,14 @@ object SparkEntry {
     // side from the committed golden, so a center-clustering drift trips
     // this query too.
     "q_strategy_f1" -> ((s, dir) => {
-      val truth = exactShinglePairs(s, dir, 0.9).select("a", "b").localCheckpoint(true)
+      val truth = exactShinglePairs(s, dir, 0.9).select("a", "b")
       val edges = levEdges(s, dir).select("src", "dst")
-      def pairsOf(assign: DataFrame): DataFrame = assign
-        .select(col("doc_id").as("a"), col("cluster_id"))
-        .join(assign.select(col("doc_id").as("b"), col("cluster_id")), "cluster_id")
-        .filter(col("a") < col("b")).select("a", "b").localCheckpoint(true)
-      def leg(name: String, pred: DataFrame): DataFrame = {
-        val hit = truth.join(pred, Seq("a", "b"), "left_semi")
-        truth.agg(count(lit(1)).as("n_true"))
-          .crossJoin(pred.agg(count(lit(1)).as("n_pred")))
-          .crossJoin(hit.agg(count(lit(1)).as("n_hit")))
-          .withColumn("strategy", lit(name))
-      }
-      leg("cc", pairsOf(sFlagshipCC(s, dir)))
-        .unionByName(leg("center", pairsOf(Components.centerClusters(edges)(s)
-          .withColumnRenamed("center_id", "cluster_id"))))
-        .withColumn("p", when(col("n_pred") > 0, col("n_hit") / col("n_pred")).otherwise(lit(0.0)))
-        .withColumn("r", when(col("n_true") > 0, col("n_hit") / col("n_true")).otherwise(lit(0.0)))
-        .select(col("strategy"), col("n_true"), col("n_pred"), col("n_hit"),
-          round(col("p"), 6).as("prec"), round(col("r"), 6).as("rec"),
-          round(when(col("p") + col("r") > 0,
-            lit(2.0) * col("p") * col("r") / (col("p") + col("r")))
-            .otherwise(lit(0.0)), 6).as("f1"))
+      def leg(name: String, assign: DataFrame): DataFrame =
+        pairwisePrf(truth, sameClusterPairs(assign).localCheckpoint(true))
+          .select(lit(name).as("strategy"), col("*"))
+      leg("cc", sFlagshipCC(s, dir))
+        .unionByName(leg("center", Components.centerClusters(edges)(s)
+          .withColumnRenamed("center_id", "cluster_id")))
         .orderBy("strategy")
     }),
 
@@ -2490,7 +2527,7 @@ object SparkEntry {
     // SimHash near-dup signatures + banded candidates (no SQL analog)
     "q_simhash" -> ((s, dir) => {
       import s.implicits._
-      val sh = spread(docsTable(s, dir).select(col("doc_id").cast("string"), col("text")))
+      val sh = docsTable(s, dir).select(col("doc_id").cast("string"), col("text"))
         .as[(String, String)].map { case (id, t) => (id, SimHash.simhash64(t)) }
         .toDF("doc_id", "simhash")
       val bands = sh.select(col("doc_id"), col("simhash"),
@@ -2998,20 +3035,8 @@ object SparkEntry {
 
     // brute-force cosine top-3 neighbors for the first 50 query vectors
     "q_cosine_topk" -> ((s, dir) => {
-      val e = embTable(s, dir)
-      val en = e.withColumn("nrm", normCol(col("embedding")))
-      // spread: BroadcastNestedLoopJoin parallelizes over LEFT partitions
-      // only, and the query side reads as one split — the 50×N cosUdf pass
-      // otherwise runs in a single task (measured 2.6 s in one stage)
-      val q = spread(en.filter(col("vec_id") < 50))
-        .select(col("vec_id").as("q"), col("embedding").as("eq"), col("nrm").as("nq"))
-      val c = en.select(col("vec_id").as("n"), col("embedding").as("en"), col("nrm").as("nn"))
-      val scored = q.join(c, col("q") =!= col("n"))
-        .withColumn("cos", round(cosUdf(col("eq"), col("en"), col("nq"), col("nn")), 6))
-      val w = Window.partitionBy("q").orderBy(col("cos").desc, col("n"))
-      scored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 3)
-        .select("q", "n", "rank", "cos")
+      sExactNeighbours(s, dir).filter(col("cos_rank") <= 3)
+        .select(col("q"), col("n"), col("cos_rank").as("rank"), col("cos"))
         .orderBy("q", "rank")
     }),
 
@@ -3033,28 +3058,8 @@ object SparkEntry {
     // band join scans 3.5% of pairs here and stays O(N * bucket_size) at
     // 100x, with `q_cosine_topk` as the exact ground-truth query.
     "q_embed_near_dup" -> ((s, dir) => {
-      val e = embTable(s, dir).select(col("vec_id"), col("label"), col("embedding"),
-        normCol(col("embedding")).as("nrm"), signHash(col("embedding")).as("h"))
-      val bands = e.select(col("vec_id"),
-        explode(array((0 until 8).map(i =>
-          concat_ws(":", lit(i), shiftright(col("h"), i * 8).bitwiseAND(lit(0xffL)))): _*)).as("bucket"))
-      // spread after the distinct: AQE coalesces the byte-small pair
-      // exchange to one partition, serializing the 64-d cosine verify
-      // (event-log: a 2.05 s single-task stage)
-      val cand = spread(bands.select(col("vec_id").as("a"), col("bucket"))
-        .join(bands.select(col("vec_id").as("b"), col("bucket")), Seq("bucket"))
-        .filter(col("a") < col("b"))
-        .select("a", "b").distinct())
-      // rejoin embeddings by id AFTER distinct: the 64-float vectors are never
-      // duplicated through the band explode/shuffle (the 100-TB-safe shape)
-      val ea = e.select(col("vec_id").as("a"), col("label").as("la"),
-        col("embedding").as("ea"), col("nrm").as("na"))
-      val eb = e.select(col("vec_id").as("b"), col("label").as("lb"),
-        col("embedding").as("eb"), col("nrm").as("nb"))
-      cand.join(ea, "a").join(eb, "b")
-        .withColumn("cos", dotCol(col("ea"), col("eb")) / (col("na") * col("nb")))
-        .filter(col("cos") > 0.35)
-        .groupBy((col("la") === col("lb")).as("same_label"))
+      sSignBandPairs(s, dir).filter(col("cos") > 0.35)
+        .groupBy("same_label")
         .agg(count(lit(1)).as("n_pairs"))
         .orderBy("same_label")
     }),
@@ -3070,21 +3075,7 @@ object SparkEntry {
     // rejoin by id after the distinct, and CC runs on the edge relation
     // only (near-dup pairs, ≪ corpus) — the 100-TB path end to end.
     "q_semdedup" -> ((s, dir) => {
-      val e = embTable(s, dir).select(col("vec_id"), col("embedding"),
-        normCol(col("embedding")).as("nrm"), signHash(col("embedding")).as("h"))
-      val bands = e.select(col("vec_id"),
-        explode(array((0 until 8).map(i =>
-          concat_ws(":", lit(i), shiftright(col("h"), i * 8).bitwiseAND(lit(0xffL)))): _*)).as("bucket"))
-      // spread after the distinct (the q_embed_near_dup treatment): AQE
-      // folds the small pair exchange to one partition before the verify
-      val cand = spread(bands.select(col("vec_id").as("a"), col("bucket"))
-        .join(bands.select(col("vec_id").as("b"), col("bucket")), Seq("bucket"))
-        .filter(col("a") < col("b"))
-        .select("a", "b").distinct())
-      val ea = e.select(col("vec_id").as("a"), col("embedding").as("ea"), col("nrm").as("na"))
-      val eb = e.select(col("vec_id").as("b"), col("embedding").as("eb"), col("nrm").as("nb"))
-      val edges = cand.join(ea, "a").join(eb, "b")
-        .filter(dotCol(col("ea"), col("eb")) / (col("na") * col("nb")) > 0.35)
+      val edges = sSignBandPairs(s, dir).filter(col("cos") > 0.35)
         .select(col("a").as("src"), col("b").as("dst"))
       Components.connectedComponents(edges)(s)
         .filter(col("doc_id") =!= col("cluster_id"))
@@ -3092,30 +3083,13 @@ object SparkEntry {
         .orderBy("vec_id")
     }),
 
-    // LSH-bucketed approximate NN (scale path; no SQL analog — rows-only).
-    // Band shuffle carries bare (vec_id, bucket) rows; the up-to-8×
-    // replicated pairs dedup on the two ids ALONE, and the 64-float
-    // vectors rejoin by id after the distinct (the q_embed_near_dup /
-    // q_semdedup shape — previously the vectors rode the shuffle AND the
-    // distinct key)
+    // LSH-bucketed approximate NN (scale path; no SQL analog — rows-only):
+    // the sign-band candidates ([[sSignBandPairs]]) at round-6 cosine > 0.3
     "q_ann_lsh" -> ((s, dir) => {
-      val e = embTable(s, dir).select(col("vec_id"), col("embedding"),
-        normCol(col("embedding")).as("nrm"), signHash(col("embedding")).as("h"))
-      // probe buckets: 8 bands of 8 bits over the sign hash
-      val bands = e.select(col("vec_id"),
-        explode(array((0 until 8).map(i =>
-          concat_ws(":", lit(i), shiftright(col("h"), i * 8).bitwiseAND(lit(0xffL)))): _*)).as("bucket"))
-      // spread after the distinct (the q_embed_near_dup treatment)
-      val cand = spread(bands.select(col("vec_id").as("a"), col("bucket"))
-        .join(bands.select(col("vec_id").as("b"), col("bucket")), Seq("bucket"))
-        .filter(col("a") < col("b"))
-        .select("a", "b").distinct())
-      val ea = e.select(col("vec_id").as("a"), col("embedding").as("ea"), col("nrm").as("na"))
-      val eb = e.select(col("vec_id").as("b"), col("embedding").as("eb"), col("nrm").as("nb"))
-      cand.join(ea, "a").join(eb, "b")
-        .withColumn("cos", round(dotCol(col("ea"), col("eb")) / (col("na") * col("nb")), 6))
+      sSignBandPairs(s, dir)
+        .select(col("a"), col("b"), round(col("cos"), 6).as("cos"))
         .filter(col("cos") > 0.3)
-        .select("a", "b", "cos").orderBy("a", "b")
+        .orderBy("a", "b")
     }),
 
     // IVF ANN (coarse-quantizer scale path; deterministic centroids —
@@ -3127,8 +3101,9 @@ object SparkEntry {
     // exact-cosine truth, per nprobe ∈ {1, 2, 4} — the standard ANN quality
     // curve (recall vs probed fraction) that justifies an nprobe choice.
     // The brute truth is the EVALUATOR leg and stays bounded the evaluator
-    // way: a fixed query sample (50 ids) × corpus, one pass, pinned for its
-    // three consumers; the production path is Ivf.topK (cell-partitioned,
+    // way: a fixed query sample (50 ids) × corpus, one pass per session
+    // ([[sExactNeighbours]], shared with q_cosine_topk and the PQ
+    // evaluators); the production path is Ivf.topK (cell-partitioned,
     // nprobe/K of the data per query batch). On these isotropic synthetic
     // embeddings Voronoi cells cut neighbourhoods arbitrarily, so the curve
     // measures the real nprobe trade instead of reading ~1 everywhere.
@@ -3136,31 +3111,11 @@ object SparkEntry {
       val e = embTable(s, dir)
       val (model, cells) = sIvfIndex(s, dir, e)
       val queries = e.filter(col("vec_id") < 50)
-      val cosRound = (a: Column, b: Column) =>
-        round(dotCol(a, b) / (normCol(a) * normCol(b)), 6)
-      val w = Window.partitionBy("q").orderBy(col("cos").desc, col("n"))
-      // spread: BNLJ parallelizes over left partitions (q_cosine_topk note)
-      val truth = spread(queries).select(col("vec_id").as("q"), col("embedding").as("qv"))
-        .crossJoin(e.select(col("vec_id").as("n"), col("embedding").as("nv")))
-        .filter(col("q") =!= col("n"))
-        .select(col("q"), col("n"), cosRound(col("qv"), col("nv")).as("cos"))
-        .withColumn("rank", row_number().over(w)).filter(col("rank") <= 10)
-        .select("q", "n").localCheckpoint(true)
-      val gots = Seq(1, 2, 4).map { np =>
+      val truth = sExactNeighbours(s, dir).filter(col("cos_rank") <= 10).select("q", "n")
+      recallCurve(s, truth, "nprobe", Seq(1, 2, 4)) { np =>
         graft.ann.Ivf.topKWithIndex(queries, e, cells, model, "embedding",
-            "vec_id", k = 10, nprobe = np, cosRound)
-          .select(lit(np).as("nprobe"), col("q"), col("n"))
-      }.reduce(_ unionByName _)
-      val hits = truth.join(gots, Seq("q", "n"))
-        .groupBy("nprobe").agg(count(lit(1)).as("n_hits"))
-      // literal nprobe grid so a zero-hit setting still emits its row
-      val grid = s.range(0, 3)
-        .select(expr("cast(1 << id AS int)").as("nprobe"))
-      grid.join(hits, Seq("nprobe"), "left").na.fill(0L, Seq("n_hits"))
-        .crossJoin(truth.agg(count(lit(1)).as("n_truth")))
-        .select(col("nprobe"), col("n_hits"), col("n_truth"),
-          round(col("n_hits").cast("double") / col("n_truth"), 6).as("recall"))
-        .orderBy("nprobe")
+          "vec_id", k = 10, nprobe = np, cosRound)
+      }.orderBy("nprobe")
     }),
 
     "q_ann_ivf" -> ((s, dir) => {
@@ -3168,8 +3123,7 @@ object SparkEntry {
       val (model, cells) = sIvfIndex(s, dir, e)
       val queries = e.filter(col("vec_id") < 50)
       graft.ann.Ivf.topKWithIndex(queries, e, cells, model, "embedding",
-          "vec_id", k = 3, nprobe = 4,
-          (a, b) => round(dotCol(a, b) / (normCol(a) * normCol(b)), 6))
+          "vec_id", k = 3, nprobe = 4, cosRound)
         .select("q", "n", "rank", "cos")
         .orderBy("q", "rank")
     }),
@@ -3188,23 +3142,12 @@ object SparkEntry {
     // exact INNER PRODUCT (what ADC approximates), not cosine — documented
     // difference vs q_ann_recall's metric.
     "q_ann_pq" -> ((s, dir) => {
-      val e = embTable(s, dir)
-      val queries = e.filter(col("vec_id") < 50)
-      val truth = sIpTruth(s, dir)
-      val gots = Seq(8, 16, 32).map { m =>
+      val queries = embTable(s, dir).filter(col("vec_id") < 50)
+      recallCurve(s, ipTruth(s, dir), "m_sub", Seq(8, 16, 32)) { m =>
         graft.ann.Pq.adcTopK(queries, sPqCodes(s, dir, m), sPqModel(s, dir, m),
-            "embedding", "vec_id", k = 10)
-          .select(lit(m).as("m_sub"), col("q"), col("n"))
-      }.reduce(_ unionByName _)
-      val hits = truth.join(gots, Seq("q", "n"))
-        .groupBy("m_sub").agg(count(lit(1)).as("n_hits"))
-      // literal m grid so a zero-hit code width still emits its row
-      val grid = s.range(3, 6).select(expr("cast(1 << id AS int)").as("m_sub"))
-      grid.join(hits, Seq("m_sub"), "left").na.fill(0L, Seq("n_hits"))
-        .crossJoin(truth.agg(count(lit(1)).as("n_truth")))
-        .select(col("m_sub"), (col("m_sub") / 2).cast("int").as("code_bytes"),
-          col("n_hits"), col("n_truth"),
-          round(col("n_hits").cast("double") / col("n_truth"), 6).as("recall"))
+          "embedding", "vec_id", k = 10)
+      }.select(col("m_sub"), (col("m_sub") / 2).cast("int").as("code_bytes"),
+          col("n_hits"), col("n_truth"), col("recall"))
         .orderBy("m_sub")
     }),
 
@@ -3223,22 +3166,11 @@ object SparkEntry {
       val queries = e.filter(col("vec_id") < 50)
       val pqModel = sPqModel(s, dir, 16)
       val codes = sPqCodes(s, dir, 16)
-      val truth = sIpTruth(s, dir)
-      val gots = Seq(2, 4, 8).map { np =>
+      recallCurve(s, ipTruth(s, dir), "nprobe", Seq(2, 4, 8)) { np =>
         val probed = graft.ann.Ivf.withProbes(queries, "embedding", ivfModel, np)
         graft.ann.Pq.adcTopKProbed(probed, cells, codes, pqModel,
-            "embedding", "vec_id", k = 10)
-          .select(lit(np).as("nprobe"), col("q"), col("n"))
-      }.reduce(_ unionByName _)
-      val hits = truth.join(gots, Seq("q", "n"))
-        .groupBy("nprobe").agg(count(lit(1)).as("n_hits"))
-      // literal nprobe grid so a zero-hit setting still emits its row
-      val grid = s.range(1, 4).select(expr("cast(1 << id AS int)").as("nprobe"))
-      grid.join(hits, Seq("nprobe"), "left").na.fill(0L, Seq("n_hits"))
-        .crossJoin(truth.agg(count(lit(1)).as("n_truth")))
-        .select(col("nprobe"), col("n_hits"), col("n_truth"),
-          round(col("n_hits").cast("double") / col("n_truth"), 6).as("recall"))
-        .orderBy("nprobe")
+          "embedding", "vec_id", k = 10)
+      }.orderBy("nprobe")
     }),
 
     // ---- relational coverage (scan/filter/agg/join/window/sort/set ops) ---

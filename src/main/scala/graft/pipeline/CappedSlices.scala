@@ -5,18 +5,17 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 /** The shared bounded-state slice behind the component-parallel
-  * solver/audit family ([[Constrained]], [[GraphAudit]]): multi-member
-  * components' members are capped (row_number over doc_id) BEFORE any
-  * group shuffle, overflow is split out for caller-specific pass-through,
+  * solver/audit family ([[Constrained]], [[GraphAudit]], [[Hac]] and
+  * SparkEntry's cluster-cohesion audit): multi-member components' members
+  * are capped (row_number over doc_id) BEFORE any group shuffle,
+  * overflow is split out for caller-specific pass-through,
   * and pair relations (edges, constraints) are inner-joined on BOTH
   * endpoints against the capped member set with component equality
   * required — so a task never holds more than cap members + cap² pair
   * rows however large the component, and a cross-component pair never
   * reaches a solver. Tagged row shape: (cluster_id, kind, x, y, d).
-  * ([[Hac]] predates this helper and carries its own payload-joining
-  * variant of the same contract.)
   */
-private[pipeline] object CappedSlices {
+private[graft] object CappedSlices {
 
   /** (capped, overflow) — both (cluster_id, doc_id), multi-member
     * components only; `capped` holds ranks 1..cap, `overflow` the rest.

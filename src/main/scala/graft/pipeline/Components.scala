@@ -72,10 +72,10 @@ object Components {
     // same contract centerClusters and Swoosh.resolve already enforce.
     // (Alternating star rounds converge in O(log n) on real graphs; 50
     // covers components of ~2^50 nodes, so tripping this means a
-    // misconfigured maxCcIterations, not a big input.)
+    // too-small maxIterations, not a big input.)
     require(converged,
       s"connected components did not converge after $maxIterations " +
-        "large-star/small-star rounds; raise maxCcIterations")
+        "large-star/small-star rounds; pass a larger maxIterations")
     // At the fixpoint the edge set is a union of stars (child → component
     // min); roots appear only on the dst side.
     e.select(col("src").as("doc_id"), col("dst").as("cluster_id"))

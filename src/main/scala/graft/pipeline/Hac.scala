@@ -2,7 +2,6 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** Average-linkage hierarchical agglomerative clustering WITHIN connected
   * components — the classic record-linkage post-step (used by e.g. the
@@ -16,8 +15,8 @@ import org.apache.spark.sql.expressions.Window
   *
   * Spark shape: clustering is embarrassingly parallel ACROSS components —
   * one `groupByKey(cluster_id).flatMapGroups` where each group runs an
-  * exact O(k³) dendrogram locally. Members are capped (row_number over
-  * doc_id, the q_cluster_cohesion pattern) BEFORE the group shuffle, so an
+  * exact O(k³) dendrogram locally. Members are capped
+  * ([[CappedSlices.membership]], doc_id order) BEFORE the group shuffle, so an
   * adversarial million-member component costs O(cap²) state per task, never
   * O(k²); at 100 TB the millions of small components spread over all
   * executors and no component's work exceeds cap² = 1024 distances.
@@ -96,10 +95,10 @@ object Hac {
   }
 
   /** (doc_id, cluster_id, hac_id, n_sub) for every member of a multi-member
-    * component in `cc`, texts joined from `t` (doc_id, t). Members beyond
-    * `cap` per component (doc_id order) pass through as their own
-    * subclusters — bounded like q_cluster_cohesion, true size unreported
-    * here by design (cohesion already reports it).
+    * component in `cc`, texts joined from `t` (doc_id, t) after the cap.
+    * Members beyond `cap` per component (doc_id order) pass through as
+    * their own subclusters — bounded like q_cluster_cohesion, true size
+    * unreported here by design (cohesion already reports it).
     */
   def run(cc: DataFrame, t: DataFrame, cut: Int, cap: Int = 32)(
       spark: SparkSession): DataFrame = {
@@ -107,23 +106,17 @@ object Hac {
     // cap ≤ 1024 keeps the product < 2⁶³ for any text length ≤ 8M chars
     require(cap >= 1 && cap <= 1024, s"cap must be in [1, 1024], got $cap")
     import spark.implicits._
-    val multi = cc.groupBy("cluster_id").agg(count(lit(1)).as("n"))
-      .filter(col("n") > 1).select("cluster_id")
-    val mem = cc.join(multi, "cluster_id").join(t, "doc_id")
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("cluster_id").orderBy("doc_id")))
-    val capped = mem.filter(col("rk") <= cap)
+    val (capped, overflow) = CappedSlices.membership(cc, cap)
+    val clustered = capped.join(t, "doc_id")
       .select(col("cluster_id"), col("doc_id"), col("t"))
       .as[(Long, Long, String)]
-    val overflow = mem.filter(col("rk") > cap)
-      .select(col("doc_id"), col("cluster_id"),
-        col("doc_id").as("hac_id"), lit(1).as("n_sub"))
-    val clustered = capped.groupByKey(_._1)
+      .groupByKey(_._1)
       .flatMapGroups { (cid, it) =>
         val rows = it.map(r => (r._2, r._3)).toSeq
         cluster(rows, cut).iterator.map { case (d, h, n) => (d, cid, h, n) }
       }
       .toDF("doc_id", "cluster_id", "hac_id", "n_sub")
-    clustered.unionByName(overflow)
+    clustered.unionByName(overflow.select(col("doc_id"), col("cluster_id"),
+      col("doc_id").as("hac_id"), lit(1).as("n_sub")))
   }
 }

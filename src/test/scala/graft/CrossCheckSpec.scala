@@ -1,6 +1,10 @@
 package graft
 
 import graft.text.Tokenize
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{GenerateExec, LogicalRDD, RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastNestedLoopJoinExec,
+  CartesianProductExec}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Independent value-level cross-checks for golden-snapshot oracles
@@ -966,5 +970,49 @@ class CrossCheckSpec extends AnyFunSuite with SparkTestBase {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == assigned.toMap)
     assert(got.nonEmpty)
+  }
+
+  // The embedding queries share two pinned relations (the exact neighbours
+  // of the 50-query sample and the sign-band candidate pairs): once one
+  // consumer has run, every other consumer plans a scan of the pinned
+  // relation and none of its derivation.
+  private def q(name: String): DataFrame = SparkEntry.queries(name)(spark, dir)
+  private def nodes(df: DataFrame): Seq[SparkPlan] =
+    df.queryExecution.sparkPlan.collect { case p => p }
+  private def pinnedRdds(df: DataFrame): Set[Int] =
+    df.queryExecution.analyzed.collect { case r: LogicalRDD => r.rdd.id }.toSet
+
+  test("a second exact-neighbour consumer reads the pinned relation, no cross join") {
+    q("q_ann_pq").collect() // first consumer derives the 50×N relation
+    for (name <- Seq("q_cosine_topk", "q_ann_recall")) {
+      val ns = nodes(q(name))
+      assert(ns.exists(_.isInstanceOf[RDDScanExec]), s"$name: no pinned scan")
+      // the recall curve's one-row count cross joins carry no condition;
+      // the derivation's q ≠ n pair join does
+      assert(!ns.exists {
+        case j: BroadcastNestedLoopJoinExec => j.condition.isDefined
+        case j: CartesianProductExec => j.condition.isDefined
+        case _ => false
+      }, s"$name re-derives the cross join")
+    }
+  }
+
+  test("q_ann_recall called twice derives its truth once") {
+    val first = q("q_ann_recall")
+    val rows = first.collect().toSeq
+    val second = q("q_ann_recall")
+    assert(second.collect().toSeq == rows)
+    // the truth is one pinned relation: both calls scan the same RDD
+    assert(pinnedRdds(first).nonEmpty && pinnedRdds(second) == pinnedRdds(first))
+  }
+
+  test("a second sign-band consumer reads the pinned pairs, no band explode or self-join") {
+    q("q_semdedup").collect() // first consumer derives the band pairs
+    for (name <- Seq("q_embed_near_dup", "q_ann_lsh")) {
+      val ns = nodes(q(name))
+      assert(ns.exists(_.isInstanceOf[RDDScanExec]), s"$name: no pinned scan")
+      assert(!ns.exists(n => n.isInstanceOf[GenerateExec] || n.isInstanceOf[BaseJoinExec]),
+        s"$name re-derives the band join")
+    }
   }
 }

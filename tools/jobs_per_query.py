@@ -6,10 +6,14 @@ Spark event log in which every job of a timed rep carries the job
 description `benchx:<query>` and the local property `graft.benchx.rep`.
 
   python3 tools/jobs_per_query.py LOG
-      one line per (query, rep): query, rep, job count
+      one line per (query, rep): query, rep, job count; then the total
   python3 tools/jobs_per_query.py BEFORE_LOG AFTER_LOG
       only the (query, rep) rows whose counts differ, with both counts
-      and the delta; exit status 1 if any row differs
+      and the delta, then each side's total job count; exit status 1 if
+      any row differs
+  python3 tools/jobs_per_query.py --only q1,q2,... LOG [AFTER_LOG]
+      either mode over these queries only; the totals are the sums over
+      that list
 
 LOG is an event log file, a rolling event log dir (`eventlog_v2_<app>`),
 or a log root dir holding exactly one of either.
@@ -61,18 +65,32 @@ def job_counts(path):
 
 
 def main(argv):
+    only = None
+    if len(argv) > 2 and argv[1] == "--only":
+        only = set(argv[2].split(","))
+        argv = argv[:1] + argv[3:]
+
+    def counts(path):
+        c = job_counts(path)
+        return c if only is None else collections.Counter(
+            {k: n for k, n in c.items() if k[0] in only})
+
     if len(argv) == 2:
-        for (q, rep), n in sorted(job_counts(argv[1]).items()):
+        c = counts(argv[1])
+        for (q, rep), n in sorted(c.items()):
             print(f"{q}\t{rep}\t{n}")
+        print(f"total\t\t{sum(c.values())}")
         return 0
     if len(argv) == 3:
-        before, after = job_counts(argv[1]), job_counts(argv[2])
+        before, after = counts(argv[1]), counts(argv[2])
         differ = 0
         for key in sorted(set(before) | set(after)):
             b, a = before.get(key, 0), after.get(key, 0)
             if a != b:
                 differ += 1
                 print(f"{key[0]}\t{key[1]}\t{b}\t{a}\t{a - b:+d}")
+        b, a = sum(before.values()), sum(after.values())
+        print(f"total\t\t{b}\t{a}\t{a - b:+d}")
         print(f"{differ} of {len(set(before) | set(after))} (query, rep) rows differ",
               file=sys.stderr)
         return 1 if differ else 0
