@@ -164,7 +164,7 @@ object Main {
     if (cli.checkpointDir.isEmpty) None
     else if (cli.bucketed)
       Some(new graft.pipeline.BucketedParquetTableIO(cli.checkpointDir,
-        buckets = spark.sessionState.conf.numShufflePartitions))
+        buckets = graft.pipeline.Parallelism.width(spark)))
     else Some(new graft.pipeline.ParquetTableIO(cli.checkpointDir))
 
   private val imageExts = Seq(".png", ".jpg", ".jpeg")

@@ -3,6 +3,7 @@ package graft
 import graft.media.SynthMedia
 import graft.model.{Doc, Span}
 import graft.pipeline.{Canopy, CappedSlices, Components, GraftConfig, Pipeline, Swoosh}
+import graft.pipeline.Parallelism.{spread, widen, width}
 import graft.text.{JaroWinkler, MinHash, SimHash, TextStats, Tokenize}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -25,22 +26,6 @@ object SparkEntry {
     spark.read.parquet(s"$dir/documents.parquet")
   private def embTable(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"$dir/embeddings.parquet")
-
-  /** Round-robin spread to the session's shuffle parallelism — the
-    * q_blocking_recall lesson generalized (guide §2.6 idle capacity): the
-    * sf tables read as ONE parquet split, so a scan-rooted leg whose
-    * downstream operators are compute-heavy (per-doc md5/UDF kernels,
-    * broadcast-join pair verifies) runs serially on one core; AQE's
-    * post-shuffle coalescing likewise folds byte-small but compute-heavy
-    * exchanges down to one partition (event-log evidence: 1-task stages of
-    * 1.5-2.6 s inside q_cosine_topk / q_embed_near_dup / q_pprl).
-    * Parameterized on the session's shuffle parallelism, never a literal
-    * core count. Row order downstream changes, so ONLY order-insensitive
-    * consumers (sets, sorted aggs, joins, total ORDER BY outputs) may sit
-    * above a spread.
-    */
-  private def spread(df: DataFrame): DataFrame =
-    df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions)
 
   /** American Soundex (census rule) of an UPPER-CASE word, as the same
     * translate/regexp chain the DuckDB oracle runs — see q_soundex_blocks.
@@ -182,13 +167,10 @@ object SparkEntry {
     */
   private[graft] def shingleOrd(d: DataFrame): DataFrame = {
     val tok = d.select(col("doc_id"), explode(col("toks")).as("token"))
-    tok
-      .join(tok.groupBy("token").agg(count(lit(1)).as("df")), "token")
-      // explicit key repartition: AQE otherwise coalesces this exchange to
-      // a couple of tasks (the token-join output is byte-small) and the
-      // collect_list+sort aggregate runs nearly serial
-      .repartition(d.sparkSession.sessionState.conf.numShufflePartitions,
-        col("doc_id"))
+    // explicit key spread: AQE otherwise coalesces this exchange to a
+    // couple of tasks (the token-join output is byte-small) and the
+    // collect_list+sort aggregate runs nearly serial
+    spread(tok.join(tok.groupBy("token").agg(count(lit(1)).as("df")), "token"), col("doc_id"))
       .groupBy("doc_id")
       .agg(sort_array(collect_list(struct(col("df"), col("token")))).as("ord"))
       .withColumn("n", size(col("ord")))
@@ -216,14 +198,12 @@ object SparkEntry {
     * the candidate (a, b) pairs that can still reach Jaccard ≥ thr.
     */
   private[graft] def positionalCandidates(pref: DataFrame, thr: Double): DataFrame =
-    pref.select(col("doc_id").as("a"), col("ptok"), col("pos").as("ia"), col("n").as("na"))
+    // explicit key spread: the prefix-hit relation is the volume peak of
+    // the PPJoin (2.23M rows at sf0.1/0.8) but byte-small, so AQE folds
+    // the aggregate to ~6 tasks without this
+    spread(pref.select(col("doc_id").as("a"), col("ptok"), col("pos").as("ia"), col("n").as("na"))
       .join(pref.select(col("doc_id").as("b"), col("ptok"), col("pos").as("jb"), col("n").as("nb")), Seq("ptok"))
-      .filter(col("a") < col("b"))
-      // explicit key repartition: the prefix-hit relation is the volume
-      // peak of the PPJoin (2.23M rows at sf0.1/0.8) but byte-small, so
-      // AQE folds the aggregate to ~6 tasks without this
-      .repartition(pref.sparkSession.sessionState.conf.numShufflePartitions,
-        col("a"), col("b"))
+      .filter(col("a") < col("b")), col("a"), col("b"))
       .groupBy("a", "b")
       .agg(min("ia").as("ia"), min("jb").as("jb"), min("na").as("na"), min("nb").as("nb"))
       .filter(least(col("na") - col("ia") + 1, col("nb") - col("jb") + 1).cast("double") >=
@@ -236,9 +216,9 @@ object SparkEntry {
     * bench-scale census always measures the shipping derivation.
     */
   private[graft] def swooshInputs(base: DataFrame): (DataFrame, DataFrame) = {
-    // spread: both derivations run per-doc md5/shingle kernels off the
+    // widen: both derivations run per-doc md5/shingle kernels off the
     // one-split scan
-    val b = spread(base.select("doc_id", "text"))
+    val b = widen(base.select("doc_id", "text"))
     val toks = b.select(col("doc_id"), shingleSet(col("text")).as("toks"))
     val mins = b.select(col("doc_id"),
       transform(flatten(transform(sBandKeys(col("text")),
@@ -330,9 +310,12 @@ object SparkEntry {
     */
   private def pairwisePrf(truth: DataFrame, pred: DataFrame): DataFrame = {
     val hit = truth.join(pred, Seq("a", "b"), "left_semi")
+    // broadcast hints pin the build sides: left to AQE, a one-row side whose
+    // runtime size lands first can flip a join's build side and cost one
+    // more broadcast job, depending on stage completion order
     truth.agg(count(lit(1)).as("n_true"))
-      .crossJoin(pred.agg(count(lit(1)).as("n_pred")))
-      .crossJoin(hit.agg(count(lit(1)).as("n_hit")))
+      .crossJoin(broadcast(pred.agg(count(lit(1)).as("n_pred"))))
+      .crossJoin(broadcast(hit.agg(count(lit(1)).as("n_hit"))))
       .withColumn("p", when(col("n_pred") > 0, col("n_hit") / col("n_pred")).otherwise(lit(0.0)))
       .withColumn("r", when(col("n_true") > 0, col("n_hit") / col("n_true")).otherwise(lit(0.0)))
       .select(col("n_true"), col("n_pred"), col("n_hit"),
@@ -364,8 +347,8 @@ object SparkEntry {
       val all = docsTable(s, dir)
       val base = if (sampleK <= 1) all
         else all.filter(sampleBucket(col("doc_id")) % sampleK === 0)
-      // spread: the shingle HOF below is scan-rooted on the one-split table
-      val d = spread(base.select("doc_id", "text"))
+      // widen: the shingle HOF below is scan-rooted on the one-split table
+      val d = widen(base.select("doc_id", "text"))
         .select(col("doc_id"), shingleSet(col("text")).as("toks"))
       shingleOrd(d)
     }
@@ -442,10 +425,10 @@ object SparkEntry {
     */
   private def sBandRelation(s: SparkSession, dir: String): DataFrame =
     SessionCache.pinned(s, "bandRelation", dir) {
-      // spread BEFORE the md5-shingle band kernel: the one-split scan
-      // otherwise runs the whole corpus's sBandUdf serially
-      spread(docsTable(s, dir).select("doc_id", "text"))
-        .select(col("doc_id"), explode(sBandKeys(col("text"))).as("bk"))
+      // not widened: in paired sf0.1 runs (4 cores) the one-split derive
+      // and its one-partition pin were faster for the cold derive and for
+      // every band-relation leaf than a 64-way spread of the scan
+      docsTable(s, dir).select(col("doc_id"), explode(sBandKeys(col("text"))).as("bk"))
     }
 
   /** Strict-cut (lev < 8) CC over the pinned levEdges — shared by
@@ -502,9 +485,8 @@ object SparkEntry {
   private[graft] def sFlagshipAssignment(s: SparkSession, dir: String,
       cfg: GraftConfig): DataFrame =
     SessionCache.value(s, "flagshipRun", (dir, cfg)) {
-      // spread the one-split scan so the signature map parallelizes
-      val full = Pipeline.run(s,
-        asDocs(s, dir).repartition(s.sessionState.conf.numShufflePartitions), cfg)
+      // widen the one-split scan so the signature map parallelizes
+      val full = Pipeline.run(s, widen(asDocs(s, dir)), cfg)
       val assign = full.clusters.select("doc_id", "cluster_id").localCheckpoint(true)
       full.release()
       assign
@@ -892,7 +874,7 @@ object SparkEntry {
     * (1-based, total order by `order` columns).
     */
   private def globalRank(s: SparkSession, df: DataFrame, order: Seq[String]): DataFrame = {
-    val nPart = s.sessionState.conf.numShufflePartitions
+    val nPart = width(s)
     val part = df.repartitionByRange(nPart, order.map(col): _*)
       .withColumn("pid", spark_partition_id())
       .localCheckpoint(true)
@@ -1033,7 +1015,8 @@ object SparkEntry {
       .agg(sum(col("mx")).as("sum_max_pred"))
     val tm = cells.groupBy("tt").agg(max(col("m")).as("mx"))
       .agg(sum(col("mx")).as("sum_max_truth"))
-    assign.agg(count(lit(1)).as("n_docs")).crossJoin(pm).crossJoin(tm)
+    // broadcast hints pin the build sides, as in [[pairwisePrf]]
+    assign.agg(count(lit(1)).as("n_docs")).crossJoin(broadcast(pm)).crossJoin(broadcast(tm))
       .withColumn("purity_micro", expr("(1000000 * sum_max_pred) div n_docs"))
       .withColumn("inv_purity_micro", expr("(1000000 * sum_max_truth) div n_docs"))
       .select(col("n_docs"), col("sum_max_pred"), col("sum_max_truth"),
@@ -1278,10 +1261,10 @@ object SparkEntry {
     SessionCache.pinned(s, "exactNeighbours", dir) {
       val e = embTable(s, dir)
         .select(col("vec_id"), col("embedding"), normCol(col("embedding")).as("nrm"))
-      // spread: BroadcastNestedLoopJoin parallelizes over LEFT partitions
+      // widen: BroadcastNestedLoopJoin parallelizes over LEFT partitions
       // only, and the query side reads as one split — the 50×N scoring pass
       // otherwise runs in a single task (measured 2.6 s in one stage)
-      val q = spread(e.filter(col("vec_id") < 50))
+      val q = widen(e.filter(col("vec_id") < 50))
         .select(col("vec_id").as("q"), col("embedding").as("qv"), col("nrm").as("nq"))
       val byCos = Window.partitionBy("q").orderBy(col("cos").desc, col("n"))
       val byDot = Window.partitionBy("q").orderBy(col("dot").desc, col("n"))
@@ -1647,10 +1630,10 @@ object SparkEntry {
     // all-pairs dice ≥ 0.8 truth; the 8-char shingle feature keeps the
     // filters sparse where bigrams saturated them (15% pair candidacy).
     "q_pprl" -> ((s, dir) => {
-      // spread: the shingle explode + per-shingle md5 position derivation
+      // widen: the shingle explode + per-shingle md5 position derivation
       // is scan-rooted on the one-split table (event-log: 1.55 s single-
       // task Generate stage), and every downstream leg inherits it
-      val t = spread(docsTable(s, dir).select(col("doc_id"),
+      val t = widen(docsTable(s, dir).select(col("doc_id"),
         lower(substring(col("text"), 1, 40)).as("t")))
       val shingled = array_distinct(transform(
         sequence(lit(1), greatest(length(col("t")) - 7, lit(1))),
@@ -1669,13 +1652,13 @@ object SparkEntry {
         concat_ws(":", lit(s"$li-$i-$j"),
           shiftrightunsigned(col(s"w$li"), 8 * i).bitwiseAND(lit(255L)),
           shiftrightunsigned(col(s"w$li"), 8 * j).bitwiseAND(lit(255L)))
-      // spread: bloom checkpoints on an AQE-coalesced near-single
+      // widen: bloom checkpoints on an AQE-coalesced near-single
       // partition, so the 112-key explode + self-join probe otherwise
       // serialize (event-log: two ~1.8 s single-task stages)
       // (a transform-over-literal-combos rewrite of the 112 key
       // expressions was tried for codegen-size reasons and measured
       // neutral-to-negative — kept in the expression form)
-      val keys = spread(bloom)
+      val keys = widen(bloom)
         .select(col("doc_id"), explode(array(keyExprs: _*)).as("k"))
         .filter(!col("k").endsWith(":0:0"))
       val cand = keys.select(col("doc_id").as("a"), col("k"))
@@ -1951,8 +1934,8 @@ object SparkEntry {
     // md5-keyed in the shuffle at production scale; here the text itself
     // rides so the report is readable (oracle matches either way).
     "q_boilerplate" -> ((s, dir) => {
-      // spread: the 8-gram phrase explode builds ~1.5M strings, scan-rooted
-      val ph = spread(docsTable(s, dir).select("doc_id", "text"))
+      // widen: the 8-gram phrase explode builds ~1.5M strings, scan-rooted
+      val ph = widen(docsTable(s, dir).select("doc_id", "text"))
         .select(col("doc_id"), split(col("text"), " ").as("w"))
         .filter(size(col("w")) >= 8)
         .select(col("doc_id"),
@@ -2327,10 +2310,10 @@ object SparkEntry {
         .filter(sampleBucket(col("doc_id")) % evalSampleK === 0)
         .select(col("doc_id"), substring(col("text"), 1, 60).as("t"))
       // the sample reads as 1-2 parquet splits, and BroadcastNestedLoopJoin
-      // parallelizes over LEFT partitions only — without this spread the
+      // parallelizes over LEFT partitions only — without this widen the
       // O(sample²) lev pass runs on one core (measured 88.7 s at sf0.1;
       // ~3 s fanned out)
-      val pairs = spread(sample.select(col("doc_id").as("a"), col("t").as("ta")))
+      val pairs = widen(sample.select(col("doc_id").as("a"), col("t").as("ta")))
         .crossJoin(sample.select(col("doc_id").as("b"), col("t").as("tb")))
         .filter(col("a") < col("b"))
       // pinned: the lev pass over the sample² pairs is the expensive leg
@@ -2505,8 +2488,8 @@ object SparkEntry {
     // MinHash/LSH candidate generation over document text (no SQL analog)
     "q_minhash_lsh" -> ((s, dir) => {
       import s.implicits._
-      // spread: the 128-permutation signature map is scan-rooted serial work
-      val sigs = spread(docsTable(s, dir).select(col("doc_id").cast("string"), col("text")))
+      // widen: the 128-permutation signature map is scan-rooted serial work
+      val sigs = widen(docsTable(s, dir).select(col("doc_id").cast("string"), col("text")))
         .as[(String, String)].map { case (id, t) =>
           (id, MinHash.signature(Tokenize.shingleHashes(t, 5)))
         }.toDF("doc_id", "sig")
@@ -2575,8 +2558,8 @@ object SparkEntry {
     // perceptual-hash signature stage over synthetic media (P2-P4/P7; no SQL analog)
     "q_media_phash" -> ((s, dir) => {
       import s.implicits._
-      // spread: render + DCT per doc off the one-split scan
-      spread(docsTable(s, dir).select(col("doc_id"))).as[Long].map { id =>
+      // widen: render + DCT per doc off the one-split scan
+      widen(docsTable(s, dir).select(col("doc_id"))).as[Long].map { id =>
         val img = SynthMedia.render(graft.text.Hashing.hash64(s"doc-$id"), 0)
         val (row, colh) = graft.imaging.PHash.dhash(img)
         (id, graft.imaging.PHash.dct64(img), row, colh)
@@ -2593,10 +2576,8 @@ object SparkEntry {
       val perturbed = (words.take(words.length / 2) ++
         words.drop(words.length / 2 + 1)).mkString(" ")
       val target = Doc("probe-0", Seq(Span.text(perturbed, 0)))
-      // spread: compare() derives signatures over the whole candidate corpus
-      Pipeline.compare(s, target,
-        asDocs(s, dir).repartition(s.sessionState.conf.numShufflePartitions),
-        GraftConfig(mediaThreshold = 11))
+      // widen: compare() derives signatures over the whole candidate corpus
+      Pipeline.compare(s, target, widen(asDocs(s, dir)), GraftConfig(mediaThreshold = 11))
         .select(col("doc_id"), round(col("score"), 4).as("score"))
         .orderBy("doc_id")
     }),
@@ -2605,8 +2586,8 @@ object SparkEntry {
     // (real PNG round-trip; no SQL analog)
     "q_image_features" -> ((s, dir) => {
       import s.implicits._
-      // spread: render + PNG encode per kept doc off the one-split scan
-      val media = spread(docsTable(s, dir).select(col("doc_id"))).as[Long]
+      // widen: render + PNG encode per kept doc off the one-split scan
+      val media = widen(docsTable(s, dir).select(col("doc_id"))).as[Long]
         .filter(_ % 10 == 0).map { id =>
           val img = SynthMedia.render(graft.text.Hashing.hash64(s"img-$id"), 0)
           val bi = new java.awt.image.BufferedImage(img.width, img.height,
@@ -2642,8 +2623,8 @@ object SparkEntry {
     // >= minShared sampled frames
     "q_video_near_dups" -> ((s, dir) => {
       import s.implicits._
-      // spread: AVI synth + JPEG decode per kept doc, scan-rooted
-      val media = spread(docsTable(s, dir).select(col("doc_id"))).as[Long]
+      // widen: AVI synth + JPEG decode per kept doc, scan-rooted
+      val media = widen(docsTable(s, dir).select(col("doc_id"))).as[Long]
         .filter(_ % 20 == 0).flatMap { id =>
           // floor of 6 frames: everyNth=2 samples >= 3 of them, so EVERY
           // planted re-upload clears minShared=3 (a 4-frame clip samples
@@ -2673,8 +2654,8 @@ object SparkEntry {
     // of 32 (window, value) fingerprint slots
     "q_audio_near_dups" -> ((s, dir) => {
       import s.implicits._
-      // spread: WAV synth + decode per kept doc, scan-rooted
-      val media = spread(docsTable(s, dir).select(col("doc_id"))).as[Long]
+      // widen: WAV synth + decode per kept doc, scan-rooted
+      val media = widen(docsTable(s, dir).select(col("doc_id"))).as[Long]
         .filter(_ % 15 == 0).flatMap { id =>
           val seed = graft.text.Hashing.hash64(s"aud-$id")
           val base = graft.media.Multimodal.MediaRow(s"a$id", s"aud-$id", "audio/wav",
@@ -2700,8 +2681,8 @@ object SparkEntry {
     // no SQL analog)
     "q_doc_stats" -> ((s, dir) => {
       import s.implicits._
-      // spread: winnow/quality/langId kernels per doc off the one-split scan
-      spread(docsTable(s, dir).select(col("doc_id"), col("text"))).as[(Long, String)]
+      // widen: winnow/quality/langId kernels per doc off the one-split scan
+      widen(docsTable(s, dir).select(col("doc_id"), col("text"))).as[(Long, String)]
         .map { case (id, t) =>
           val q = TextStats.quality(t)
           (id, TextStats.langId(t), math.round(q.score * 10000.0) / 10000.0,
@@ -2788,11 +2769,10 @@ object SparkEntry {
     // table is small by construction, so the probe side broadcasts instead
     // of shuffling the full corpus gram relation.
     "q_decontam" -> ((s, dir) => {
-      // the sf parquet is a single file = one input partition, which would
-      // serialize the hash kernel on one core; spread docs first (at real
-      // scale the scan has many partitions and this repartition is moot)
-      val grams = docsTable(s, dir)
-        .repartition(s.sessionState.conf.numShufflePartitions, col("doc_id"))
+      // spread docs by doc_id before the hash kernel: the sf parquet is
+      // one split, and the doc_id layout also lets the per-doc n_hits
+      // aggregate run without an exchange of its own, at any scale
+      val grams = spread(docsTable(s, dir), col("doc_id"))
         .select(col("doc_id"),
           explode(gramHashUdf(13)(split(trim(col("text")), "\\s+"))).as("g"))
       val bench = grams.filter(col("doc_id") % 20 === 0).select("g").distinct()
@@ -2818,8 +2798,8 @@ object SparkEntry {
     // distributedly (treeAggregate under stat.bloomFilter), costs O(eval
     // grams), and is deterministic.
     "q_decontam_bloom" -> ((s, dir) => {
-      val grams = docsTable(s, dir)
-        .repartition(s.sessionState.conf.numShufflePartitions, col("doc_id"))
+      // doc_id spread: as in q_decontam
+      val grams = spread(docsTable(s, dir), col("doc_id"))
         .select(col("doc_id"),
           explode(gramHashUdf(13)(split(trim(col("text")), "\\s+"))).as("g"))
       // pinned: the eval side feeds three consumers (count, bloom build,
@@ -2866,8 +2846,10 @@ object SparkEntry {
     // quadratic. Output per affected doc: span count, covered words, and
     // the duplicated fraction a span-removal pass would excise.
     "q_dup_spans" -> ((s, dir) => {
-      val grams = docsTable(s, dir)
-        .repartition(s.sessionState.conf.numShufflePartitions, col("doc_id"))
+      // doc_id spread: parallelizes the gram kernel, and the layout
+      // serves the (g, doc_id) countDistinct, the hit distinct and the
+      // per-doc window without further exchanges
+      val grams = spread(docsTable(s, dir), col("doc_id"))
         .select(col("doc_id"), split(trim(col("text")), "\\s+").as("w"))
         .select(col("doc_id"), size(col("w")).as("n_words"),
           posexplode(gramHashUdf(8)(col("w"))))
@@ -3023,8 +3005,8 @@ object SparkEntry {
     // winnowing fingerprints (no SQL analog — rows-only check)
     "q_fingerprint" -> ((s, dir) => {
       import s.implicits._
-      // spread: the winnowing kernel per doc is scan-rooted serial work
-      spread(docsTable(s, dir).select(col("doc_id").cast("string"), col("text")))
+      // widen: the winnowing kernel per doc is scan-rooted serial work
+      widen(docsTable(s, dir).select(col("doc_id").cast("string"), col("text")))
         .as[(String, String)].map { case (id, t) =>
           val fp = TextStats.winnow(t)
           (id.toLong, fp.length, if (fp.isEmpty) 0L else fp.min)
@@ -3329,7 +3311,7 @@ object SparkEntry {
       // merges sorted int arrays instead of hash-intersecting 8-char
       // string arrays. shingleSet is non-empty for every (non-null) text,
       // so the explode/groupBy round-trip drops no doc.
-      val sample = spread(docsTable(s, dir)
+      val sample = widen(docsTable(s, dir)
         .filter(sampleBucket(col("doc_id")) % evalSampleK === 0)
         .select("doc_id", "text"))
         .select(col("doc_id"), shingleSet(col("text")).as("shs"))
@@ -3339,10 +3321,9 @@ object SparkEntry {
       val enc = tok.join(dict, "sh")
         .groupBy("doc_id").agg(sort_array(collect_list(col("tid"))).as("ids"))
         .localCheckpoint(true) // both cross-join sides read the pinned codes
-      // spread the LEFT side: BroadcastNestedLoopJoin parallelizes over
-      // left partitions only (the q_blocking_recall lesson; previously a
-      // literal repartition(64) — now the session's shuffle parallelism)
-      val l = spread(enc).select(col("doc_id").as("a"), col("ids").as("sa"))
+      // widen the LEFT side: BroadcastNestedLoopJoin parallelizes over
+      // left partitions only (the q_blocking_recall lesson)
+      val l = widen(enc).select(col("doc_id").as("a"), col("ids").as("sa"))
       val r = enc.select(col("doc_id").as("b"), col("ids").as("sb"))
       val cands = sBandCandidates(s, dir).withColumn("is_cand", lit(1L))
       l.crossJoin(r).filter(col("a") < col("b"))

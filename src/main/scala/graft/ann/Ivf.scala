@@ -126,9 +126,9 @@ object Ivf {
     // spread the corpus side: both the base table and the persisted index
     // read as one split, so the per-cell cosine rescoring otherwise runs
     // in a single task (parameterized on the session's parallelism)
-    val c = corpus.select(col(idCol).as("n"), col(vecCol).as("nv"))
-      .join(cells.select(col(idCol).as("n"), col("cell")), "n")
-      .repartition(corpus.sparkSession.sessionState.conf.numShufflePartitions)
+    val c = graft.pipeline.Parallelism.spread(
+      corpus.select(col(idCol).as("n"), col(vecCol).as("nv"))
+        .join(cells.select(col(idCol).as("n"), col("cell")), "n"))
     val scored = q.join(c, Seq("cell"))
       .filter(col("q") =!= col("n"))
       .select(col("q"), col("n"), cosine(col("qv"), col("nv")).as("cos"))

@@ -166,8 +166,7 @@ object Pq {
     // spread the streamed code side: the persisted (id, code) relation
     // reads as one split, serializing the ADC pass otherwise
     val scored = broadcast(q)
-      .join(codes.select(col(idCol).as("n"), col("code"))
-        .repartition(codes.sparkSession.sessionState.conf.numShufflePartitions),
+      .join(graft.pipeline.Parallelism.spread(codes.select(col(idCol).as("n"), col("code"))),
         col("q") =!= col("n"))
       .select(col("q"), col("n"), scoreUdf(col("lut"), col("code")).as("adc"))
     val w = Window.partitionBy("q").orderBy(col("adc").desc, col("n"))
@@ -196,8 +195,7 @@ object Pq {
     val lut = queriesWithCell.dropDuplicates(idCol)
       .select(col(idCol).as("q"), lutUdf(col(vecCol)).as("lut"))
     val cand = broadcast(probes)
-      .join(cells.select(col(idCol).as("n"), col("cell"))
-        .repartition(cells.sparkSession.sessionState.conf.numShufflePartitions),
+      .join(graft.pipeline.Parallelism.spread(cells.select(col(idCol).as("n"), col("cell"))),
         Seq("cell"))
       .filter(col("q") =!= col("n"))
       .select("q", "n").distinct()

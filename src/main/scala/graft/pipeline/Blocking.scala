@@ -269,8 +269,7 @@ object Blocking {
     // cluster scale. Released by the cleanup thunk once candidates are
     // materialized — or here, if the census throws.
     Pins.scoped { pins =>
-    val b = pins(bandRowsDF(sigs, cfg)
-      .repartition(spark.sessionState.conf.numShufflePartitions, col("block_key")))
+    val b = pins(Parallelism.spread(bandRowsDF(sigs, cfg), col("block_key")))
 
     // Hot/degenerate block census via map-side-combined groupBy — NOT a
     // window over the full block table: a window would shuffle+sort every

@@ -120,13 +120,14 @@ object Bucketing {
     * count/keys drive the registration, so a session with a different
     * shuffle-partitions setting cannot corrupt the read, and a dir written
     * plain never gets bucket metadata stamped over it (which would throw
-    * 'Invalid bucket file' at scan).
+    * 'Invalid bucket file' at scan). A schema recorded in the dir's
+    * manifest spares the inferred read's footer-scan job.
     */
   def readMaybeBucketed(spark: SparkSession, path: String): DataFrame =
     readBucketMeta(path) match {
       case Some((buckets, keys)) =>
         registerExisting(spark, tableNameFor(path), path, buckets, keys)
-      case None => spark.read.parquet(path)
+      case None => ParquetTableIO.readParquet(spark, path)
     }
 
   /** Re-register an existing bucketed parquet directory as an external
@@ -137,7 +138,7 @@ object Bucketing {
   def registerExisting(spark: SparkSession, table: String, path: String,
                        buckets: Int, keys: Seq[String]): DataFrame = {
     if (!spark.catalog.tableExists(table)) {
-      val schema = spark.read.parquet(path).schema.toDDL
+      val schema = ParquetTableIO.readParquet(spark, path).schema.toDDL
       spark.sql(s"CREATE TABLE $table ($schema) USING PARQUET " +
         s"CLUSTERED BY (${keys.mkString(", ")}) " +
         s"SORTED BY (${keys.mkString(", ")}) INTO $buckets BUCKETS " +

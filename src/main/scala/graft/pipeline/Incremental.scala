@@ -61,7 +61,7 @@ object Incremental {
     Pins.scoped { pins =>
       val state = Generation.read(spark, checkpointDir)
       val (sigs, bands) =
-        foldInputs(spark, pins, state.sigs, existingBands.orElse(state.bands))
+        foldInputs(pins, state.sigs, existingBands.orElse(state.bands))
       val inner = run(spark, sigs, state.assign, newDocs, cfg, resolver, bands)
       pins.own(inner.release)
       inner.copy(release = pins.release)
@@ -78,17 +78,14 @@ object Incremental {
     * shuffle width (one ~150 MB sig table = 1-2 splits at the default
     * maxPartitionBytes), which strangles the cross-scoring join until its
     * first shuffle: measured 21 s vs 6 s for the same join at 102k docs.
-    * At production scale the file count makes the repartition a no-op
-    * (guarded), and the round-robin shuffle rides the one corpus scan the
-    * fold pays anyway to materialize the cache. `pins` owns both.
+    * At production scale the file count gives the width and
+    * [[Parallelism.widen]] skips the repartition; otherwise the round-robin
+    * shuffle rides the one corpus scan the fold pays anyway to materialize
+    * the cache. `pins` owns both.
     */
-  private[graft] def foldInputs(spark: SparkSession, pins: Pins, sigs0: Dataset[DocSig],
-      bands0: Option[DataFrame]): (Dataset[DocSig], Option[DataFrame]) = {
-    val width = spark.sessionState.conf.numShufflePartitions
-    def widen[T](ds: Dataset[T]): Dataset[T] =
-      if (ds.rdd.getNumPartitions < width) ds.repartition(width) else ds
-    (pins(widen(sigs0)), bands0.map(b => pins(widen(b))))
-  }
+  private[graft] def foldInputs(pins: Pins, sigs0: Dataset[DocSig],
+      bands0: Option[DataFrame]): (Dataset[DocSig], Option[DataFrame]) =
+    (pins(Parallelism.widen(sigs0)), bands0.map(b => pins(Parallelism.widen(b))))
 
   /** Call `release` once after consuming the result; a throwing fold
     * leaves nothing persisted. */

@@ -85,7 +85,7 @@ object Pairs {
 
     // phase B: spread survivors across all cores before the O(n²) scorers
     // (AQE would coalesce these few-MB partitions to 1-2 tasks otherwise)
-    val withTb = gated.repartition(spark.sessionState.conf.numShufflePartitions)
+    val withTb = Parallelism.spread(gated)
 
     val hasText = length(col("t_a")) > 0 && length(col("t_b")) > 0
     val maxLen = greatest(length(col("t_a")), length(col("t_b")))

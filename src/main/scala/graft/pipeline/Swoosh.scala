@@ -68,9 +68,8 @@ object Swoosh {
     // repartition after the distinct: its byte-small exchange otherwise
     // AQE-coalesces to a couple of partitions, and the pinned token
     // relation then serializes every round's profile semi-join + verify
-    val toksRel = docToks
-      .select(col("doc_id"), explode(col("toks")).as("tok")).distinct()
-      .repartition(spark.sessionState.conf.numShufflePartitions, col("doc_id"))
+    val toksRel = Parallelism.spread(docToks
+      .select(col("doc_id"), explode(col("toks")).as("tok")).distinct(), col("doc_id"))
       .localCheckpoint(false)
     val minsRel = docMins
       .select(col("doc_id"), posexplode(col("mins")).as(Seq("pos", "m")))

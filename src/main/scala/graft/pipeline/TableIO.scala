@@ -1,7 +1,9 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 import java.nio.file.{Files, Paths}
+import scala.util.Try
 
 /** Stage checkpointing with lineage + metrics manifests (north rule:
   * "resumable from checkpoint with per-partition lineage + metrics").
@@ -9,9 +11,9 @@ import java.nio.file.{Files, Paths}
   * No Iceberg runtime jar ships in this sandbox (SURVEY.md preamble), so the
   * abstraction is a partitioned Parquet table plus a `_graft_manifest.json`
   * sidecar carrying {stage, resume key, row count, per-partition row counts,
-  * wall time}. `stage()` skips recompute when an existing manifest's resume
-  * key (config digest ⊕ input-data digest ⊕ stage ordinal — see
-  * Pipeline.run's baseKey) matches — a rerun after a kill
+  * wall time, schema}. `stage()` skips recompute when an existing
+  * manifest's resume key (config digest ⊕ input-data digest ⊕ stage
+  * ordinal — see Pipeline.run's baseKey) matches — a rerun after a kill
   * resumes at the first missing/mismatched stage with byte-identical results
   * (the pipeline is deterministic end-to-end). An Iceberg-backed TableIO can
   * be dropped in where the runtime exists; the contract is this trait.
@@ -25,7 +27,6 @@ trait TableIO extends Serializable {
 
 class ParquetTableIO(root: String) extends TableIO {
   protected def dir(name: String) = s"$root/$name"
-  private def manifestPath(name: String) = Paths.get(dir(name), "_graft_manifest.json")
 
   /** The data write alone (manifest handled by [[write]]) — the override
     * point for layouts that keep the same path contract but a different
@@ -38,9 +39,9 @@ class ParquetTableIO(root: String) extends TableIO {
     val t0 = System.nanoTime()
     writeData(name, df)
     // per-partition (file) row counts from the written footers = the
-    // per-partition lineage/metrics record
-    val spark = df.sparkSession
-    val written = spark.read.parquet(dir(name))
+    // per-partition lineage/metrics record; read with the frame's schema,
+    // which infers nothing (an inferred read costs a footer-scan job)
+    val written = df.sparkSession.read.schema(df.schema).parquet(dir(name))
     val perFileCounts = written
       .select(org.apache.spark.sql.functions.input_file_name().as("f"))
       .groupBy("f").count().collect()
@@ -51,27 +52,23 @@ class ParquetTableIO(root: String) extends TableIO {
     val wallMs = (System.nanoTime() - t0) / 1000000
     val json =
       s"""{"stage":${jsonStr(name)},"resume_key":"$resumeKey","rows":$rows,""" +
-        s""""wall_ms":$wallMs,"partitions":[${perFile.mkString(",")}]}"""
-    Files.writeString(manifestPath(name), json)
+        s""""wall_ms":$wallMs,"partitions":[${perFile.mkString(",")}],""" +
+        s""""schema":${written.schema.json}}"""
+    Files.writeString(ParquetTableIO.manifestPath(dir(name)), json)
   }
 
   /** Reads restore bucket co-location whenever the stage dir self-describes
     * as bucketed (see [[Bucketing.readMaybeBucketed]]) — so a later
     * generation's fold gets shuffle-free state joins no matter which
-    * TableIO class reads the checkpoint.
+    * TableIO class reads the checkpoint — and use the manifest's recorded
+    * schema when it has one.
     */
   def read(spark: SparkSession, name: String): DataFrame =
     Bucketing.readMaybeBucketed(spark, dir(name))
 
-  def completedKey(name: String): Option[Long] = {
-    val p = manifestPath(name)
-    if (!Files.exists(p)) None
-    else {
-      val s = Files.readString(p)
-      val m = """"resume_key":"(-?\d+)"""".r.findFirstMatchIn(s)
-      m.map(_.group(1).toLong)
-    }
-  }
+  def completedKey(name: String): Option[Long] =
+    ParquetTableIO.manifest(dir(name)).flatMap(m =>
+      """"resume_key":"(-?\d+)"""".r.findFirstMatchIn(m).map(_.group(1).toLong))
 
   private def fileTail(f: String): String = f.split('/').takeRight(1).mkString
   private def jsonStr(s: String): String =
@@ -81,6 +78,27 @@ class ParquetTableIO(root: String) extends TableIO {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
+}
+
+object ParquetTableIO {
+  private def manifestPath(dir: String) = Paths.get(dir, "_graft_manifest.json")
+  private val RecordedSchema = """"schema":(.*)\}""".r.unanchored
+
+  /** The stage at `dir` as plain parquet, read with the schema
+    * [[ParquetTableIO.write]] recorded in its manifest (the written files'
+    * own, all columns nullable), so no footer-scan job infers it. A dir
+    * whose manifest is missing, predates the field or does not parse (a
+    * truncated file) keeps the inferred read.
+    */
+  private[pipeline] def readParquet(spark: SparkSession, dir: String): DataFrame =
+    manifest(dir).collect { case RecordedSchema(json) => json }
+      .flatMap(json => Try(DataType.fromJson(json)).toOption)
+      .collect { case st: StructType => spark.read.schema(st) }
+      .getOrElse(spark.read).parquet(dir)
+
+  /** The manifest text of the stage at `dir`; None if missing or unreadable. */
+  private def manifest(dir: String): Option[String] =
+    Try(Files.readString(manifestPath(dir))).toOption
 }
 
 object Checkpoints {

@@ -179,7 +179,7 @@ object StreamIngest {
     val chain = Generation.chain(stateDir, cur)
     val state = Generation.readChain(spark, stateDir, chain)
     Pins.using { pins =>
-      val (sigs, bandsOpt) = Incremental.foldInputs(spark, pins, state.sigs, state.bands)
+      val (sigs, bandsOpt) = Incremental.foldInputs(pins, state.sigs, state.bands)
       val oldBands = bandsOpt.getOrElse {
         val b = pins(Blocking.bandRowsDF(sigs, cfg))
         b.count(); b
@@ -257,7 +257,7 @@ object StreamIngest {
     val chain = Generation.chain(stateDir, cur)
     val state = Generation.readChain(spark, stateDir, chain)
     Pins.using { pins =>
-      val (sigs, bandsOpt) = Incremental.foldInputs(spark, pins, state.sigs, state.bands)
+      val (sigs, bandsOpt) = Incremental.foldInputs(pins, state.sigs, state.bands)
       val res = Incremental.retract(spark, docs, state.assign, removeIds, cfg, resolver,
         existingSigs = Some(sigs))
       pins.own(res.release)

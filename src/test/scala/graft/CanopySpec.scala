@@ -81,7 +81,7 @@ class CanopySpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("q_canopy equals the sequential greedy over independently derived band edges (sf0.01)") {
-    val dir = "/root/testdata/sf0.01"
+    val dir = SparkTestBase.Sf001Dir
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select("doc_id", "text").collect()
       .map(r => r.getLong(0) -> BandMirror.bandsOf(

@@ -133,7 +133,7 @@ class ConstrainedSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("q_constrained_cc equals a from-scratch sequential solver (sf0.01)") {
-    val dir = "/root/testdata/sf0.01"
+    val dir = SparkTestBase.Sf001Dir
     val got = SparkEntry.queries("q_constrained_cc")(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSeq
 
@@ -201,7 +201,7 @@ class ConstrainedSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("q_constrained_must equals a from-scratch sequential solver (sf0.01)") {
-    val dir = "/root/testdata/sf0.01"
+    val dir = SparkTestBase.Sf001Dir
     val got = SparkEntry.queries("q_constrained_must")(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSeq
 

@@ -16,7 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class CrossCheckSpec extends AnyFunSuite with SparkTestBase {
 
-  private val dir = "/root/testdata/sf0.01"
+  private val dir = SparkTestBase.Sf001Dir
 
   test("q_minhash_lsh: banded estimates track EXACT shingle Jaccard; no high-Jaccard pair missed") {
     val rows = SparkEntry.queries("q_minhash_lsh")(spark, dir).collect()

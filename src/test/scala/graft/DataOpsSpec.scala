@@ -16,7 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class DataOpsSpec extends AnyFunSuite with SparkTestBase {
 
-  private val sfDir = "/root/testdata/sf0.01"
+  private val sfDir = SparkTestBase.Sf001Dir
 
   /** Plant a documents.parquet shaped like the driver's sf tables so the
     * (spark, dir) query surface can run against known content.

@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class DecontamBloomSpec extends AnyFunSuite with SparkTestBase {
 
   test("bloom-prefiltered decontam equals the exact decontam row-for-row") {
-    val dir = "/root/testdata/sf0.01"
+    val dir = SparkTestBase.Sf001Dir
     val exact = SparkEntry.queries("q_decontam")(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     val bloom = SparkEntry.queries("q_decontam_bloom")(spark, dir).collect()

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   */
 object DiagPq {
   def main(args: Array[String]): Unit = {
-    val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
+    val dir = if (args.nonEmpty) args(0) else SparkTestBase.Sf001Dir
     val spark = org.apache.spark.sql.SparkSession.builder()
       .master("local[8]").config("spark.sql.shuffle.partitions", "8")
       .config("spark.ui.enabled", "false").getOrCreate()

@@ -31,7 +31,7 @@ object DiagStringBands {
       b.unpersist()
     }
 
-    census("sf0.01", spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+    census("sf0.01", spark.read.parquet(s"${SparkTestBase.Sf001Dir}/documents.parquet")
       .select(col("doc_id").cast("string").as("doc_id"), col("text")))
     census("sf0.1", spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
       .select(col("doc_id").cast("string").as("doc_id"), col("text")))

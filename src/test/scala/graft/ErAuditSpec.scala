@@ -14,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ErAuditSpec extends AnyFunSuite with SparkTestBase {
 
-  private val dir = "/root/testdata/sf0.01"
+  private val dir = SparkTestBase.Sf001Dir
 
   /** Local DP Levenshtein (not Spark's). */
   private def lev(a: String, b: String): Int = {

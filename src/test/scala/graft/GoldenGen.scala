@@ -24,7 +24,7 @@ object GoldenGen {
     "q_pipeline_clusters", "q_retract_clusters", "q_simhash", "q_swoosh",
     "q_video_near_dups")
 
-  val SfDir = "/root/testdata/sf0.01" // the driver's Verify scale
+  val SfDir = SparkTestBase.Sf001Dir // the Verify scale
   val OutRoot = "/root/repo/golden"
 
   def main(args: Array[String]): Unit = {

@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class GraphAuditSpec extends AnyFunSuite with SparkTestBase {
 
-  private val dir = "/root/testdata/sf0.01"
+  private val dir = SparkTestBase.Sf001Dir
 
   /** Connected-component count of the graph over `members` minus `drop`. */
   private def nComponents(members: Seq[Long], edges: Seq[(Long, Long)],

@@ -89,7 +89,7 @@ class HacSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("q_hac_clusters equals a from-scratch naive HAC over the flagship CC (sf0.01)") {
-    val dir = "/root/testdata/sf0.01"
+    val dir = SparkTestBase.Sf001Dir
     val got = SparkEntry.queries("q_hac_clusters")(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSeq
 

@@ -12,7 +12,7 @@ import scala.jdk.CollectionConverters._
   */
 class IvfSpec extends AnyFunSuite with SparkTestBase {
 
-  private val sf = "/root/testdata/sf0.01"
+  private val sf = SparkTestBase.Sf001Dir
   private def emb = spark.read.parquet(s"$sf/embeddings.parquet")
 
   test("fit is deterministic and assigns every vector to a valid cell") {

@@ -16,7 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class PprlSpec extends AnyFunSuite with SparkTestBase {
 
-  private val dir = "/root/testdata/sf0.01"
+  private val dir = SparkTestBase.Sf001Dir
 
   /** Mirror of the query's encoding: lowercased 40-char prefix, distinct
     * 8-char shingles, two md5-hex-derived positions per shingle into a

@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class PqSpec extends AnyFunSuite with SparkTestBase {
 
-  private val sf = "/root/testdata/sf0.01"
+  private val sf = SparkTestBase.Sf001Dir
   private def emb = spark.read.parquet(s"$sf/embeddings.parquet")
 
   test("fit is deterministic; encode yields valid m-entry codes for every vector") {

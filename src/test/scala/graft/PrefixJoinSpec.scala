@@ -15,7 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class PrefixJoinSpec extends AnyFunSuite with SparkTestBase {
 
-  private val sfDir = "/root/testdata/sf0.01"
+  private val sfDir = SparkTestBase.Sf001Dir
 
   private def plantedDir(rows: Seq[(Long, String)]): String = {
     import spark.implicits._

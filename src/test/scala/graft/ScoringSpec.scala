@@ -11,7 +11,7 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 class ScoringSpec extends AnyFunSuite with SparkTestBase {
 
-  private val dir = "/root/testdata/sf0.01"
+  private val dir = SparkTestBase.Sf001Dir
 
   private def jw(a: String, b: String): Double =
     graft.functions.JaroWinklerExpr.jw(UTF8String.fromString(a), UTF8String.fromString(b))

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.{BeforeAndAfterAll, Suite}
 
@@ -11,6 +12,9 @@ trait SparkTestBase extends BeforeAndAfterAll { self: Suite =>
 }
 
 object SparkTestBase {
+  /** The sf0.01 fixture tables (TESTDATA.md), the scale `Verify` checks. */
+  val Sf001Dir = "/root/testdata/sf0.01"
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
@@ -22,5 +26,32 @@ object SparkTestBase {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** The number of Spark jobs `body` submits. The listener bus delivers in
+    * order, so one tagged sentinel job after `body` marks the point by
+    * which every job of `body` has been seen.
+    */
+  def jobsDuring(spark: SparkSession)(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = "graft.test.jobsDuring"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(tag))).foreach(seen.add)
+    }
+    def tagged(t: String)(f: => Unit): Unit = {
+      sc.setLocalProperty(tag, t)
+      try f finally sc.setLocalProperty(tag, null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      tagged("body")(body)
+      tagged("end")(sc.parallelize(Seq(1), 1).count())
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!seen.contains("end") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains("end"), "sentinel job never reached the listener")
+      seen.toArray.count(_ == "body")
+    } finally sc.removeSparkListener(listener)
   }
 }

@@ -135,7 +135,7 @@ class SwooshSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("q_swoosh equals the sequential banded fixpoint on sf0.01") {
-    val dir = "/root/testdata/sf0.01"
+    val dir = SparkTestBase.Sf001Dir
     val got = SparkEntry.queries("q_swoosh")(spark, dir)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val toks = spark.read.parquet(s"$dir/documents.parquet")
