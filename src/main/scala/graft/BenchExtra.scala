@@ -11,7 +11,9 @@ import org.apache.spark.sql.SparkSession
   *
   * Env:
   *   SPARK_GRAFT_SF_DIR      table dir (default /root/testdata/sf0.1)
-  *   SPARK_GRAFT_CPUS        local[N] (default 32)
+  *   SPARK_GRAFT_CPUS        local[N] (default: the JVM's available
+  *                           processors, so an unset variable never
+  *                           oversubscribes the host)
   *   GRAFT_BENCHX_ONLY       comma-separated query subset (default: all)
   *   GRAFT_BENCHX_REPS       timed repetitions per query (default 2)
   *   GRAFT_BENCHX_PLANDIR    if set, write <query>.txt explain(formatted)
@@ -28,7 +30,8 @@ import org.apache.spark.sql.SparkSession
 object BenchExtra {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val reps = sys.env.getOrElse("GRAFT_BENCHX_REPS", "2").toInt
     val planDir = sys.env.get("GRAFT_BENCHX_PLANDIR")
     val builder = SparkSession.builder()

@@ -158,14 +158,14 @@ object SparkEntry {
       i => t.substr(i, lit(8))))
   }
 
-  /** The THRESHOLD-INDEPENDENT half of [[shinglePrefix]]: per doc, the
+  /** The THRESHOLD-INDEPENDENT half of the PPJoin prefix: per doc, the
     * ascending-(df, token) ordered shingle list and its size. Extracted so
     * the df census + ordered-list build (the expensive, thr-free part of
     * the PPJoin) can be derived once and shared across thresholds — the
     * 0.8 (q_prefix_join) and 0.9 (evaluation family) PPJoins previously
     * each rebuilt it (~3 s apiece at sf0.1).
     */
-  private[graft] def shingleOrd(d: DataFrame): DataFrame = {
+  private def shingleOrd(d: DataFrame): DataFrame = {
     val tok = d.select(col("doc_id"), explode(col("toks")).as("token"))
     // explicit key spread: AQE otherwise coalesces this exchange to a
     // couple of tasks (the token-join output is byte-small) and the
@@ -177,7 +177,7 @@ object SparkEntry {
   }
 
   /** The per-threshold prefix explode over a [[shingleOrd]] relation. */
-  private[graft] def prefixFromOrd(ordRel: DataFrame, thr: Double): DataFrame =
+  private def prefixFromOrd(ordRel: DataFrame, thr: Double): DataFrame =
     ordRel
       .withColumn("plen",
         (col("n") - ceil(col("n") * lit(thr) - lit(1e-9)) + lit(1)).cast("int"))
@@ -186,18 +186,11 @@ object SparkEntry {
       .withColumnRenamed("col", "ptok")
       .withColumn("pos", col("pos") + 1)
 
-  /** The df-ordered prefix relation (doc_id, n, pos, ptok) for a
-    * (doc_id, toks) set table: [[shingleOrd]] then [[prefixFromOrd]], the
-    * two steps [[exactShinglePairs]] runs over its shared ordered relation,
-    * so the DiagPPJoin census always measures the join that ships.
+  /** Prefix-block equi-join + positional filter over a [[prefixFromOrd]]
+    * relation (doc_id, n, pos, ptok): the candidate (a, b) pairs that can
+    * still reach Jaccard ≥ thr.
     */
-  private[graft] def shinglePrefix(d: DataFrame, thr: Double): DataFrame =
-    prefixFromOrd(shingleOrd(d), thr)
-
-  /** Prefix-block equi-join + positional filter over [[shinglePrefix]]:
-    * the candidate (a, b) pairs that can still reach Jaccard ≥ thr.
-    */
-  private[graft] def positionalCandidates(pref: DataFrame, thr: Double): DataFrame =
+  private def positionalCandidates(pref: DataFrame, thr: Double): DataFrame =
     // explicit key spread: the prefix-hit relation is the volume peak of
     // the PPJoin (2.23M rows at sf0.1/0.8) but byte-small, so AQE folds
     // the aggregate to ~6 tasks without this
@@ -209,22 +202,6 @@ object SparkEntry {
       .filter(least(col("na") - col("ia") + 1, col("nb") - col("jb") + 1).cast("double") >=
         lit(thr / (1.0 + thr)) * (col("na") + col("nb")) - lit(1e-9))
       .select("a", "b")
-
-  /** Swoosh input pair — (doc_id, toks) profile sets and (doc_id, mins)
-    * 12-function MinHash minima recovered from the shared band keys — for
-    * a (doc_id, text) relation. Shared by q_swoosh and DiagSwoosh so the
-    * bench-scale census always measures the shipping derivation.
-    */
-  private[graft] def swooshInputs(base: DataFrame): (DataFrame, DataFrame) = {
-    // widen: both derivations run per-doc md5/shingle kernels off the
-    // one-split scan
-    val b = widen(base.select("doc_id", "text"))
-    val toks = b.select(col("doc_id"), shingleSet(col("text")).as("toks"))
-    val mins = b.select(col("doc_id"),
-      transform(flatten(transform(sBandKeys(col("text")),
-        b => slice(split(b, ":"), 2, 3))), _.cast("long")).as("mins"))
-    (toks, mins)
-  }
 
   /** The one session cache of the query surface: every expensive
     * derivation several queries share (band relation, levEdges, the PPJoin
@@ -1611,7 +1588,14 @@ object SparkEntry {
     // rounds never re-hash text. Golden-backed; SwooshSpec re-derives the
     // fixpoint sequentially with brute-force all-pairs matching.
     "q_swoosh" -> ((s, dir) => {
-      val (toks, mins) = swooshInputs(docsTable(s, dir))
+      // profiles are shingle sets; the 12 MinHash minima are recovered
+      // from the shared band keys. widen: both derivations run per-doc
+      // md5/shingle kernels off the one-split scan
+      val b = widen(docsTable(s, dir).select("doc_id", "text"))
+      val toks = b.select(col("doc_id"), shingleSet(col("text")).as("toks"))
+      val mins = b.select(col("doc_id"),
+        transform(flatten(transform(sBandKeys(col("text")),
+          k => slice(split(k, ":"), 2, 3))), _.cast("long")).as("mins"))
       Swoosh.resolve(toks, mins, 0.8)(s).orderBy("doc_id")
     }),
 
@@ -3118,11 +3102,11 @@ object SparkEntry {
     // curve is the compression/recall trade that picks a code width at
     // 10^12 vectors (measured 0.272/0.440/0.668 on these ISOTROPIC
     // synthetic embeddings — the hardest case for quantizers, same caveat
-    // as q_ann_recall; DiagPq holds the wider census). The corpus-side scan
-    // is the narrow (id, code) relation with the query LUTs broadcast (no
-    // vector shuffle), the same plan family as the IVF probe. Truth is
-    // exact INNER PRODUCT (what ADC approximates), not cosine — documented
-    // difference vs q_ann_recall's metric.
+    // as q_ann_recall; BASELINE.md's PQ-ADC census holds the wider grid).
+    // The corpus-side scan is the narrow (id, code) relation with the
+    // query LUTs broadcast (no vector shuffle), the same plan family as
+    // the IVF probe. Truth is exact INNER PRODUCT (what ADC approximates),
+    // not cosine — documented difference vs q_ann_recall's metric.
     "q_ann_pq" -> ((s, dir) => {
       val queries = embTable(s, dir).filter(col("vec_id") < 50)
       recallCurve(s, ipTruth(s, dir), "m_sub", Seq(8, 16, 32)) { m =>
@@ -3305,26 +3289,31 @@ object SparkEntry {
     // candidacy flag is the same pinned band relation the pipeline blocks
     // on, so the curve measures the join that actually ships.
     "q_lsh_empirical" -> ((s, dir) => {
-      // Dictionary-encode the sampled shingle sets ONCE (bijection:
-      // row_number over the sorted distinct shingles — exact by
-      // construction, see [[sortedInterUdf]]), so the O((N/k)²) pair pass
-      // merges sorted int arrays instead of hash-intersecting 8-char
-      // string arrays. shingleSet is non-empty for every (non-null) text,
-      // so the explode/groupBy round-trip drops no doc.
+      // Dictionary-encode the sampled shingle sets ONCE (bijection: the
+      // [[globalRank]] of the distinct shingles — exact by construction,
+      // see [[graft.functions.GraftFunctions.sortedIntersect]]), so the
+      // O((N/k)²) pair pass merges sorted int arrays instead of
+      // hash-intersecting 8-char string arrays. shingleSet is non-empty
+      // for every (non-null) text, so the explode/groupBy round-trip drops
+      // no doc.
       val sample = widen(docsTable(s, dir)
         .filter(sampleBucket(col("doc_id")) % evalSampleK === 0)
         .select("doc_id", "text"))
         .select(col("doc_id"), shingleSet(col("text")).as("shs"))
       val tok = sample.select(col("doc_id"), explode(col("shs")).as("sh"))
-      val dict = tok.select("sh").distinct()
-        .withColumn("tid", row_number().over(Window.orderBy("sh")))
+      val dict = globalRank(s, tok.select("sh").distinct(), Seq("sh"))
+        .select(col("sh"), col("rn").cast("int").as("tid"))
       val enc = tok.join(dict, "sh")
         .groupBy("doc_id").agg(sort_array(collect_list(col("tid"))).as("ids"))
         .localCheckpoint(true) // both cross-join sides read the pinned codes
       // widen the LEFT side: BroadcastNestedLoopJoin parallelizes over
-      // left partitions only (the q_blocking_recall lesson)
+      // the streamed side's partitions only (the q_blocking_recall
+      // lesson). The hint pins the build side to the right: the two
+      // sides' size estimates are the same relation's, so AQE's pick
+      // otherwise follows whichever estimate lands lower, and building
+      // the widened side streams the pair pass through one task
       val l = widen(enc).select(col("doc_id").as("a"), col("ids").as("sa"))
-      val r = enc.select(col("doc_id").as("b"), col("ids").as("sb"))
+      val r = broadcast(enc.select(col("doc_id").as("b"), col("ids").as("sb")))
       val cands = sBandCandidates(s, dir).withColumn("is_cand", lit(1L))
       l.crossJoin(r).filter(col("a") < col("b"))
         .withColumn("inter",

@@ -275,11 +275,9 @@ object Blocking {
     // window over the full block table: a window would shuffle+sort every
     // block row (the largest relation in the pipeline) just to tag sizes,
     // while the interesting keys (hot or degenerate) are a handful.
-    val tCensus = System.nanoTime()
     val census = b.groupBy("block_key").agg(count(lit(1)).as("bsize"))
       .filter(col("bsize") > math.min(cfg.hotBlockSize, cfg.maxBlockSize))
       .collect()
-    System.err.println(f"[graft]   census: ${(System.nanoTime() - tCensus) / 1e9}%.2f s, ${census.length} hot/deg keys")
     val (degKeys, hotKeys) = census.partition(_.getLong(1) > cfg.maxBlockSize)
     val stats = BlockStats(degKeys.length.toLong, degKeys.map(_.getLong(1)).sum,
       hotKeys.length.toLong)

@@ -114,8 +114,8 @@ object Incremental {
   /** `existingBands`: optionally the old corpus's prebuilt band relation
     * ([[Blocking.bandRowsDF]] schema, checkpointed by the previous run).
     * Without it the fold re-derives old band keys — an O(corpus) UDF pass
-    * the production shape avoids (measured by `DiagIncremental`, recorded
-    * in BASELINE.md).
+    * the production shape avoids (measured at bench scale; BASELINE.md,
+    * "Incremental-fold evidence").
     */
   def run(spark: SparkSession, existingSigs: Dataset[DocSig],
           existingAssign: DataFrame, newDocs: Dataset[Doc],
@@ -135,20 +135,15 @@ object Incremental {
     // join against the old corpus; the one uncovered case is a new doc
     // whose content is band-less (no text, no media) AND identical to an
     // old doc, which a full run would merge by digest.)
-    val tRun = System.nanoTime()
-    def mark(label: String): Unit =
-      System.err.println(f"[graft] incremental $label: ${(System.nanoTime() - tRun) / 1e9}%.2f s elapsed")
     Pins.scoped { pins =>
     val (batchDocs, expansion) =
       if (cfg.exactPrecollapse) Pipeline.precollapse(newDocs) else (newDocs, None)
     expansion.foreach(e => pins.own(e))
-    mark("precollapse")
 
     val newSigs = pins(Signatures.derive(batchDocs, cfg, resolver).map(_.sig))
 
     // new×new: the standard self-join pipeline on the batch alone
     val newEdges = selfEdges(newSigs, cfg, pins)
-    mark("new-new edges")
 
     // new×old: bipartite band linkage — old-old pairs never exist in any plan
     val cross = Linkage.linkSigs(spark, newSigs, existingSigs, cfg, existingBands)
@@ -168,10 +163,8 @@ object Incremental {
       .distinct())
     crossEdges.count()
 
-    mark("cross link built")
     val comp = Components.connectedComponents(
       newEdges.unionByName(crossEdges), cfg.maxCcIterations)
-    mark("components")
 
     // new docs: component id, or themselves when untouched by any edge;
     // with pre-collapse every copy routes through its representative

@@ -19,10 +19,6 @@ import org.apache.spark.sql.functions._
   */
 object Pipeline {
 
-  private object log {
-    def info(msg: String): Unit = System.err.println(s"[graft] $msg")
-  }
-
   /** Call `release` once after consuming the result; a throwing run
     * leaves nothing persisted. */
   final case class Result(clusters: DataFrame, // (doc_id, cluster_id, spans)
@@ -66,28 +62,20 @@ object Pipeline {
     // each stage below is consumed by more than one downstream action, and
     // an unmaterialized lineage would re-run the signature map (decode +
     // DCT + minhash — the expensive part) once per action.
-    def materialize(name: String, key: Long)(compute: => DataFrame): DataFrame = {
-      val t0 = System.nanoTime()
-      var rows = -1L
-      val out = checkpoint match {
+    def materialize(name: String, key: Long)(compute: => DataFrame): DataFrame =
+      checkpoint match {
         case Some(t) => Checkpoints.stage(spark, t, name, key)(compute)
         case None =>
           val df = pins(compute)
-          rows = df.count()
+          df.count()
           df
       }
-      log.info(f"stage $name: ${(System.nanoTime() - t0) / 1e9}%.2f s, $rows rows")
-      out
-    }
 
     // 0. exact-duplicate pre-collapse (shared with Incremental's batch
     // path — the byte-equality contract between the two depends on ONE
     // digest rule, so there is one implementation)
-    val t0Collapse = System.nanoTime()
     val (pipelineDocs, expansion) =
       if (cfg.exactPrecollapse) precollapse(docs) else (docs, None)
-    log.info(f"stage collapse: ${(System.nanoTime() - t0Collapse) / 1e9}%.2f s" +
-      (if (expansion.isEmpty) ", no exact duplicates" else ""))
     expansion.foreach(e => pins.own(e))
 
     // 1. signatures (+ bad-media side output)

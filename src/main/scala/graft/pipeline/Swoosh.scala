@@ -63,7 +63,7 @@ object Swoosh {
     *         min member doc_id
     */
   def resolve(docToks: DataFrame, docMins: DataFrame, thr: Double,
-              maxRounds: Int = 10, logRounds: Boolean = false)(
+              maxRounds: Int = 10)(
       implicit spark: SparkSession): DataFrame = {
     // repartition after the distinct: its byte-small exchange otherwise
     // AQE-coalesces to a couple of partitions, and the pinned token
@@ -102,8 +102,7 @@ object Swoosh {
     var rounds = 0
     var done = false
     while (!done) {
-      // pinned: feeds the candidate-entity scope, the verify join, and
-      // the optional census
+      // pinned: feeds the candidate-entity scope and the verify join
       val cand = changedBands.select(col("entity_id").as("x"), col("bk"))
         .join(eBands.select(col("entity_id").as("y"), col("bk")), Seq("bk"))
         .filter(col("x") =!= col("y"))
@@ -137,9 +136,6 @@ object Swoosh {
           (col("na") + col("nb") - col("inter")) >= thr)
         .select(col("a").as("src"), col("b").as("dst"))
         .localCheckpoint(false)
-      if (logRounds)
-        println(s"[graft] swoosh round $rounds: ${cand.count()} candidates, " +
-          s"${matches.count()} matches")
       if (matches.isEmpty) done = true
       else {
         // maxRounds bounds MERGE rounds only: the final fixpoint-confirming

@@ -65,7 +65,8 @@ object Corpus {
     * syllable, higher ranks two) — frequent words are short like natural
     * text. Concatenated two-syllable forms can in principle collide with
     * each other, so the DISTINCT type count is ~types, not exactly; the
-    * Diag censuses measure the realized vocabulary rather than assume it.
+    * censuses recorded in BASELINE.md measure the realized vocabulary
+    * rather than assume it.
     */
   private def zipfWord(r: Int): String =
     if (r < Syllables.length) Syllables(r)

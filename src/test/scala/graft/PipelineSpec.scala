@@ -44,9 +44,10 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
   test("pairwise F1 >= 0.99 holds on the Zipf natural-vocabulary corpus") {
     // The headline F1 gate above runs on the uniform-vocabulary corpus;
     // natural text is heavy-tailed (frequent words shared across unrelated
-    // docs — the precision hazard; DiagStringBands measured hot MinHash
-    // bands ~7× larger under this draw — the recall/skew hazard). Same
-    // gate, same config, Zipf(1.07) over ~50k types.
+    // docs — the precision hazard; BASELINE.md's string-band census
+    // measured hot MinHash bands ~7× larger under this draw — the
+    // recall/skew hazard). Same gate, same config, Zipf(1.07) over ~50k
+    // types.
     implicit val s = spark
     val zipfLabeled = Corpus.generate(
       Corpus.Params(entities = 300, seed = 42, zipfTypes = 50000))

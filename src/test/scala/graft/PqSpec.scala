@@ -88,7 +88,8 @@ class PqSpec extends AnyFunSuite with SparkTestBase {
     // the compression/recall trade must be a real trade on this corpus
     // (isotropic synthetic embeddings — the hardest case for quantizers,
     // same caveat as IvfSpec): wider codes strictly help, floors are the
-    // DiagPq measurements (0.272 / 0.440 / 0.668) with slack
+    // measurements in BASELINE.md's PQ-ADC census (0.272 / 0.440 / 0.668)
+    // with slack
     assert(recalls(0) < recalls(1) && recalls(1) < recalls(2),
       s"recall not rising with code width: $recalls")
     assert(recalls(2) >= 0.55, s"m=32 recall ${recalls(2)} below measured floor")

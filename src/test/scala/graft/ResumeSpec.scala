@@ -51,22 +51,29 @@ class ResumeSpec extends AnyFunSuite with SparkTestBase {
     import s.implicits._
     val dir = tempDir().toString
     val docs = s.createDataset(Corpus.generate(Corpus.Params(entities = 40)).map(_.doc))
-    Pipeline.run(s, docs, Corpus.RecommendedConfig, checkpoint = Some(new ParquetTableIO(dir))).clusters.count()
-    // the census announces itself on stderr ("[graft]   census: ...") —
-    // a resumed run with a completed candidates stage must never reach it:
-    // candidatePairs' collect() is the largest scan in the pipeline and
-    // used to run eagerly at plan-construction time, before the manifest
-    // check, wasting a full band pass on every resume
-    val realErr = System.err
-    val buf = new java.io.ByteArrayOutputStream()
-    val r2 = try {
-      System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
+    // a job "points into" Blocking.scala when one of its stages was
+    // submitted from there: the stage name is the short call site, the
+    // details the long one. The census collect() is the largest scan in
+    // the pipeline and used to run eagerly at plan-construction time,
+    // before the manifest check, wasting a full band pass on every resume.
+    def blockingJobs(body: => Unit): Seq[String] =
+      SparkTestBase.jobStartsDuring(s)(body).flatMap(_.stageInfos)
+        .map(si => s"${si.name}\n${si.details}").filter(_.contains("Blocking.scala"))
+    val fresh = blockingJobs {
       Pipeline.run(s, docs, Corpus.RecommendedConfig, checkpoint = Some(new ParquetTableIO(dir)))
-    } finally System.setErr(realErr)
-    r2.clusters.count()
+        .clusters.count()
+    }
+    // the detector sees the census when it does run
+    assert(fresh.exists(_.startsWith("collect at Blocking.scala")),
+      s"no census job detected on the first run: $fresh")
+    var r2: Pipeline.Result = null
+    val resumed = blockingJobs {
+      r2 = Pipeline.run(s, docs, Corpus.RecommendedConfig, checkpoint = Some(new ParquetTableIO(dir)))
+      r2.clusters.count()
+    }
     r2.release()
-    assert(!buf.toString("UTF-8").contains("census:"),
-      "hot-key census ran on a fully-resumed pipeline")
+    assert(resumed.isEmpty,
+      s"a fully-resumed pipeline ran Spark jobs from Blocking.scala: $resumed")
     // and the contract value: nothing was dropped/salted THIS run
     assert(r2.stats == graft.pipeline.Blocking.BlockStats(0L, 0L, 0L))
   }

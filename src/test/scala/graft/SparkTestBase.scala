@@ -28,30 +28,36 @@ object SparkTestBase {
     s
   }
 
-  /** The number of Spark jobs `body` submits. The listener bus delivers in
-    * order, so one tagged sentinel job after `body` marks the point by
-    * which every job of `body` has been seen.
+  /** The number of Spark jobs `body` submits. */
+  def jobsDuring(spark: SparkSession)(body: => Unit): Int =
+    jobStartsDuring(spark)(body).size
+
+  /** The start events of the Spark jobs `body` submits, in order. The
+    * listener bus delivers in order, so one tagged sentinel job after
+    * `body` marks the point by which every job of `body` has been seen.
     */
-  def jobsDuring(spark: SparkSession)(body: => Unit): Int = {
+  def jobStartsDuring(spark: SparkSession)(body: => Unit): Seq[SparkListenerJobStart] = {
     val sc = spark.sparkContext
     val tag = "graft.test.jobsDuring"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkListenerJobStart)]
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(tag))).foreach(seen.add)
+        Option(e.properties).flatMap(p => Option(p.getProperty(tag))).foreach(t => seen.add(t -> e))
     }
     def tagged(t: String)(f: => Unit): Unit = {
       sc.setLocalProperty(tag, t)
       try f finally sc.setLocalProperty(tag, null)
     }
+    def events = seen.toArray(Array.empty[(String, SparkListenerJobStart)]).toSeq
+    def ended = events.exists(_._1 == "end")
     sc.addSparkListener(listener)
     try {
       tagged("body")(body)
       tagged("end")(sc.parallelize(Seq(1), 1).count())
       val deadline = System.nanoTime() + 60L * 1000000000L
-      while (!seen.contains("end") && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(seen.contains("end"), "sentinel job never reached the listener")
-      seen.toArray.count(_ == "body")
+      while (!ended && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(ended, "sentinel job never reached the listener")
+      events.collect { case ("body", e) => e }
     } finally sc.removeSparkListener(listener)
   }
 }
