@@ -249,11 +249,15 @@ object Blocking {
     * text) and dropped with logged counts; blocks larger than
     * `cfg.hotBlockSize` are salted.
     *
+    * `width`: the band persist's partition count, when the caller sized
+    * it from a known row count ([[Parallelism.sized]]); the session width
+    * otherwise.
+    *
     * Returns (candidates (a, b, media_dist, sim_ham) with a < b, the
     * census's [[BlockStats]], the cleanup thunk the caller invokes once
     * the candidates are materialized).
     */
-  def candidatePairs(sigs: Dataset[DocSig], cfg: GraftConfig)(
+  def candidatePairs(sigs: Dataset[DocSig], cfg: GraftConfig, width: Option[Int] = None)(
       implicit spark: SparkSession): (DataFrame, BlockStats, () => Unit) = {
     // Persisted PRE-PARTITIONED BY block_key: the band relation has 3
     // consumers (census, join left, join right) that all need a
@@ -269,7 +273,7 @@ object Blocking {
     // cluster scale. Released by the cleanup thunk once candidates are
     // materialized — or here, if the census throws.
     Pins.scoped { pins =>
-    val b = pins(Parallelism.spread(bandRowsDF(sigs, cfg), col("block_key")))
+    val b = pins(Parallelism.spreadTo(bandRowsDF(sigs, cfg), width, col("block_key")))
 
     // Hot/degenerate block census via map-side-combined groupBy — NOT a
     // window over the full block table: a window would shuffle+sort every

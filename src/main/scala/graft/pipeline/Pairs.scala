@@ -38,10 +38,13 @@ object Pairs {
     when(a.isNull || b.isNull || length(a) === 0 || length(b) === 0, lit(0.0))
       .otherwise(graft.functions.GraftFunctions.jw(a, b))
 
-  /** candidates: (a, b, media_dist, sim_ham). Returns scored pairs with `is_dup`. */
-  def score(candidates: DataFrame, sigs: Dataset[DocSig], cfg: GraftConfig)(
-      implicit spark: SparkSession): DataFrame =
-    scoreSides(candidates, sigs, sigs, cfg)
+  /** candidates: (a, b, media_dist, sim_ham). Returns scored pairs with
+    * `is_dup`. `width`: phase B's partition count, when the caller sized
+    * it from a known row count ([[Parallelism.sized]]); the session width
+    * otherwise. */
+  def score(candidates: DataFrame, sigs: Dataset[DocSig], cfg: GraftConfig,
+            width: Option[Int] = None)(implicit spark: SparkSession): DataFrame =
+    scoreSides(candidates, sigs, sigs, cfg, width)
 
   /** [[score]] with per-side signature tables: every `a` must resolve in
     * `aSigs` and every `b` in `bSigs`. For bipartite candidates (linkage,
@@ -51,7 +54,7 @@ object Pairs {
     * to score a few thousand pairs.
     */
   def scoreSides(candidates: DataFrame, aSigs: Dataset[DocSig],
-                 bSigs: Dataset[DocSig], cfg: GraftConfig)(
+                 bSigs: Dataset[DocSig], cfg: GraftConfig, width: Option[Int] = None)(
       implicit spark: SparkSession): DataFrame = {
     val cap = cfg.scoreTextCap
 
@@ -85,7 +88,7 @@ object Pairs {
 
     // phase B: spread survivors across all cores before the O(n²) scorers
     // (AQE would coalesce these few-MB partitions to 1-2 tasks otherwise)
-    val withTb = Parallelism.spread(gated)
+    val withTb = Parallelism.spreadTo(gated, width)
 
     val hasText = length(col("t_a")) > 0 && length(col("t_b")) > 0
     val maxLen = greatest(length(col("t_a")), length(col("t_b")))

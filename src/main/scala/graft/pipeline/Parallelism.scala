@@ -3,8 +3,9 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, Dataset, SparkSession}
 
 /** The one parallelism policy: every relation the engine re-partitions
-  * goes to the session's shuffle width, never a literal core count, and
-  * only through these three members.
+  * goes to the session's shuffle width — or, where the row count is
+  * known, to the width that count needs — never a literal core count,
+  * and only through these members.
   *
   * Why re-partition at all (the q_blocking_recall lesson, guide §2.6 idle
   * capacity): a modest parquet table reads as ONE split, so a scan-rooted
@@ -18,6 +19,25 @@ import org.apache.spark.sql.{Column, Dataset, SparkSession}
   * consumers (sets, sorted aggs, joins, total ORDER BY outputs) may sit
   * above a re-partition.
   *
+  * The sizing rule ([[tasksFor]], [[sized]]): a relation of `rows` rows
+  * needs one task per [[RowsPerTask]] rows, and never fewer tasks than
+  * the cores; a shuffle over it needs no more than the session width.
+  * Each partition of a re-partition has a fixed cost (task launch, the
+  * per-task framework code and the JIT work it triggers), so on a small
+  * corpus the session's 64 tasks per stage cost more than the data;
+  * width should follow the data (Hyper Dimension Shuffle, VLDB 2019). At
+  * 1,024 docs per task a task holds about 0.4 s of signature work (the
+  * traced shingle + minhash + simhash + phash kernels add up to about
+  * 0.42 ms per doc). `Pipeline.run` is the one caller with a known row
+  * count: it takes the doc count from an action it runs anyway (the
+  * pre-collapse count, the resume-key count when checkpointing, or the
+  * signatures stage's count), narrows its input and every stage it
+  * persists or writes to the [[sized]] width with [[coalesceTo]], and
+  * passes that width to the band persist and to scoring's phase B (a
+  * persisted relation keeps the partitioning of the plan it caches: AQE
+  * does not coalesce a cached plan's output). Every other caller's row
+  * count is unknown and keeps [[width]].
+  *
   *  - [[widen]] is for EXCHANGE-FREE inputs: scans, pinned relations
   *    (`localCheckpoint`, `SessionCache.pinned`) and stage reads. Counting
   *    their partitions plans them and runs nothing, so the guard is free;
@@ -29,11 +49,35 @@ import org.apache.spark.sql.{Column, Dataset, SparkSession}
   *    AQE only fixes at runtime (the coalesced output of a byte-small
   *    exchange), for a library caller's relation of unknown shape, and —
   *    with keys — for a hash layout a consumer's plan relies on.
+  *  - [[coalesceTo]] narrows a relation to a [[sized]] width without a
+  *    shuffle. Its guard is arithmetic (it counts no partitions, so it
+  *    is safe on a post-shuffle input), and a coalesce never adds
+  *    partitions: it only ever cuts a relation whose row count is small
+  *    against the session width, never below [[tasksFor]] that count, and
+  *    at scale, where the sized width is the session width, it plans
+  *    nothing.
   */
 private[graft] object Parallelism {
 
+  /** Rows one task of a sized relation holds. */
+  val RowsPerTask = 1024L
+
   /** The session's shuffle width. */
   def width(spark: SparkSession): Int = spark.sessionState.conf.numShufflePartitions
+
+  /** Tasks a relation of `rows` rows needs: one per [[RowsPerTask]] rows,
+    * never fewer than `cores`. */
+  def tasksFor(rows: Long, cores: Int): Int =
+    math.min(math.max(cores.toLong, (rows + RowsPerTask - 1) / RowsPerTask), Int.MaxValue).toInt
+
+  /** Shuffle width for a relation of `rows` rows (`None`: unknown) in a
+    * session of `width` shuffle partitions on `cores` cores. */
+  def sized(rows: Option[Long], cores: Int, width: Int): Int =
+    rows.fold(width)(r => math.min(width, tasksFor(r, cores)))
+
+  /** [[sized]] in `spark`'s session. */
+  def sized(spark: SparkSession, rows: Option[Long]): Int =
+    sized(rows, spark.sparkContext.defaultParallelism, width(spark))
 
   /** Round-robin to [[width]], only when `ds` has fewer partitions. */
   def widen[T](ds: Dataset[T]): Dataset[T] =
@@ -41,8 +85,17 @@ private[graft] object Parallelism {
 
   /** Re-partition to [[width]] unconditionally: round-robin without
     * `keys`, hash-partitioned on them otherwise. */
-  def spread[T](ds: Dataset[T], keys: Column*): Dataset[T] = {
-    val n = width(ds.sparkSession)
-    if (keys.isEmpty) ds.repartition(n) else ds.repartition(n, keys: _*)
+  def spread[T](ds: Dataset[T], keys: Column*): Dataset[T] = spreadTo(ds, None, keys: _*)
+
+  /** [[spread]] to `n` partitions, or to [[width]] when `n` is `None`. */
+  def spreadTo[T](ds: Dataset[T], n: Option[Int], keys: Column*): Dataset[T] = {
+    val w = n.getOrElse(width(ds.sparkSession))
+    if (keys.isEmpty) ds.repartition(w) else ds.repartition(w, keys: _*)
   }
+
+  /** Coalesce `ds` to `n` partitions, without a shuffle, when `n` is
+    * below the session width; `ds` itself otherwise (`n` of `None`
+    * included). */
+  def coalesceTo[T](ds: Dataset[T], n: Option[Int]): Dataset[T] =
+    n.filter(_ < width(ds.sparkSession)).fold(ds)(k => ds.coalesce(k))
 }

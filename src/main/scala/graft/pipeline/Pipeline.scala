@@ -35,11 +35,16 @@ object Pipeline {
     * doc_id, which would otherwise silently reuse every stale stage table.
     * One narrow scan, only paid when checkpointing is enabled.
     */
-  def resumeBaseKey(docs: Dataset[Doc], cfg: GraftConfig): Long = {
+  def resumeBaseKey(docs: Dataset[Doc], cfg: GraftConfig): Long =
+    resumeKeyAndCount(docs, cfg)._1
+
+  /** [[resumeBaseKey]] and the doc count its scan reads. */
+  private def resumeKeyAndCount(docs: Dataset[Doc], cfg: GraftConfig): (Long, Long) = {
     val row = docs.toDF().selectExpr(
       "count(*) AS n",
       "coalesce(bit_xor(xxhash64(doc_id, to_json(spans))), 0L) AS dg").head()
-    Hashing.hash64(Hashing.hash64(cfg.configHash, row.getLong(0)), row.getLong(1))
+    (Hashing.hash64(Hashing.hash64(cfg.configHash, row.getLong(0)), row.getLong(1)),
+      row.getLong(0))
   }
 
   /** `checkpoint`: the TableIO every stage is materialized through
@@ -55,33 +60,57 @@ object Pipeline {
     implicit val s: SparkSession = spark
     import spark.implicits._
 
-    val baseKey = if (checkpoint.isDefined) resumeBaseKey(docs, cfg) else cfg.configHash
+    // The doc count sizes the pass (Parallelism.sized). It comes from an
+    // action the pass runs anyway: the resume key's scan when
+    // checkpointing, else the pre-collapse count, else the signatures
+    // stage's count. From then on every stage reads the input narrowed to
+    // the sized width, every stage is persisted or written at that width,
+    // and the band persist and scoring's phase B spread to it.
+    def sizedFor(n: Long): Option[Int] = Some(Parallelism.sized(spark, Some(n)))
+    val (baseKey, keyWidth) = checkpoint match {
+      case Some(_) =>
+        val (k, n) = resumeKeyAndCount(docs, cfg)
+        (k, sizedFor(n))
+      case None => (cfg.configHash, None)
+    }
 
     Pins.scoped { pins =>
     // Without a TableIO every stage is persisted + materialized instead:
     // each stage below is consumed by more than one downstream action, and
     // an unmaterialized lineage would re-run the signature map (decode +
-    // DCT + minhash — the expensive part) once per action.
-    def materialize(name: String, key: Long)(compute: => DataFrame): DataFrame =
+    // DCT + minhash — the expensive part) once per action. The count is
+    // returned when it ran (no TableIO).
+    def materializeCounted(name: String, key: Long, width: Option[Int])(
+        compute: => DataFrame): (DataFrame, Option[Long]) =
       checkpoint match {
-        case Some(t) => Checkpoints.stage(spark, t, name, key)(compute)
+        case Some(t) =>
+          (Checkpoints.stage(spark, t, name, key)(Parallelism.coalesceTo(compute, width)), None)
         case None =>
-          val df = pins(compute)
-          df.count()
-          df
+          val df = pins(Parallelism.coalesceTo(compute, width))
+          (df, Some(df.count()))
       }
+    def materialize(name: String, key: Long, width: Option[Int])(
+        compute: => DataFrame): DataFrame =
+      materializeCounted(name, key, width)(compute)._1
 
     // 0. exact-duplicate pre-collapse (shared with Incremental's batch
     // path — the byte-equality contract between the two depends on ONE
     // digest rule, so there is one implementation)
-    val (pipelineDocs, expansion) =
-      if (cfg.exactPrecollapse) precollapse(docs) else (docs, None)
+    val (pipelineDocs, expansion, knownWidth) =
+      if (cfg.exactPrecollapse) {
+        val (reps, mapping, n) = collapse(Parallelism.coalesceTo(docs, keyWidth), sizedFor)
+        (reps, mapping, sizedFor(n))
+      } else (Parallelism.coalesceTo(docs, keyWidth), None, keyWidth)
     expansion.foreach(e => pins.own(e))
 
-    // 1. signatures (+ bad-media side output)
-    val sigResults = materialize("signatures", baseKey) {
+    // 1. signatures (+ bad-media side output). With pre-collapse off and
+    // no TableIO the signatures read the input at its own width and count
+    // the docs; the cached stage is narrowed once that count is known.
+    val (sigStage, sigRows) = materializeCounted("signatures", baseKey, knownWidth) {
       Signatures.derive(pipelineDocs, cfg, resolver).toDF()
     }
+    val width = knownWidth.orElse(sigRows.flatMap(sizedFor))
+    val sigResults = Parallelism.coalesceTo(sigStage, width)
     val sigs: Dataset[DocSig] = sigResults.select("sig.*").as[DocSig]
     val badMedia = sigResults.select(explode(col("errors")).as("e")).select("e.*")
 
@@ -96,8 +125,8 @@ object Pipeline {
     // materialized.
     var stats = Blocking.BlockStats(0L, 0L, 0L)
     val candidates = Pins.using { blocks =>
-      materialize("candidates", Hashing.hash64(baseKey, 2L)) {
-        val (cands, s0, releaseBlocks) = Blocking.candidatePairs(sigs, cfg)
+      materialize("candidates", Hashing.hash64(baseKey, 2L), width) {
+        val (cands, s0, releaseBlocks) = Blocking.candidatePairs(sigs, cfg, width)
         stats = s0
         blocks.own(releaseBlocks)
         cands
@@ -105,13 +134,13 @@ object Pipeline {
     }
 
     // 4. exact scoring → duplicate edges
-    val scored = materialize("scored", Hashing.hash64(baseKey, 3L)) {
-      Pairs.score(candidates, sigs, cfg)
+    val scored = materialize("scored", Hashing.hash64(baseKey, 3L), width) {
+      Pairs.score(candidates, sigs, cfg, width)
     }
     val edges = Pairs.edges(scored)
 
     // 5. connected components
-    val assignments = materialize("clusters", Hashing.hash64(baseKey, 4L)) {
+    val assignments = materialize("clusters", Hashing.hash64(baseKey, 4L), width) {
       Components.connectedComponents(edges, cfg.maxCcIterations)
     }
 
@@ -119,8 +148,9 @@ object Pipeline {
     // pre-collapse, every doc routes through its representative's
     // assignment (exact copies of an otherwise-singleton rep still cluster
     // together under the rep's id).
-    val expanded = expandClusters(docs.toDF(), expansion, assignments)
-      .select("doc_id", "cluster_id", "spans")
+    val expanded =
+      expandClusters(Parallelism.coalesceTo(docs, width).toDF(), expansion, assignments)
+        .select("doc_id", "cluster_id", "spans")
 
     // 7. when checkpointing, the band relation and the EXPANDED per-doc
     // assignment (every doc, singletons included) complete the dir as a
@@ -154,6 +184,15 @@ object Pipeline {
     */
   private[pipeline] def precollapse(docs: Dataset[Doc])(
       implicit spark: SparkSession): (Dataset[Doc], Option[DataFrame]) = {
+    val (repDocs, mapping, _) = collapse(docs, _ => None)
+    (repDocs, mapping)
+  }
+
+  /** [[precollapse]] that also returns the doc count `n` its detection
+    * scan reads; everything past that scan is narrowed to `width(n)`
+    * ([[Parallelism.coalesceTo]]). [[run]] passes the sized width. */
+  private def collapse(docs: Dataset[Doc], width: Long => Option[Int])(
+      implicit spark: SparkSession): (Dataset[Doc], Option[DataFrame], Long) = {
     import spark.implicits._
     // 128-bit content digest as a two-lane xxhash64 over a canonical span
     // struct — replaces md5(to_json(spans)): the Jackson serialization of
@@ -173,19 +212,23 @@ object Pipeline {
       sp.getField("text").isNull, sp.getField("text"),
       sp.getField("media_ref").isNull, sp.getField("media_ref"),
       sp.getField("offset")))
-    val keyed = docs.toDF()
+    def keyed(d: Dataset[Doc]) = d.toDF()
       .select(col("doc_id"),
         struct(xxhash64(lit(1L), canon), xxhash64(lit(2L), canon)).as("digest"))
-    val head = keyed.agg(count(lit(1)), count_distinct(col("digest"))).head()
-    if (head.getLong(1) == head.getLong(0)) (docs, None)
+    val head = keyed(docs).agg(count(lit(1)), count_distinct(col("digest"))).head()
+    val n = head.getLong(0)
+    val w = width(n)
+    val input = Parallelism.coalesceTo(docs, w)
+    if (head.getLong(1) == n) (input, None, n)
     else {
-      val reps = keyed.groupBy("digest").agg(min(col("doc_id")).as("rep"))
-      val mapping = keyed.join(reps, "digest").select("doc_id", "rep")
+      val k = keyed(input)
+      val reps = k.groupBy("digest").agg(min(col("doc_id")).as("rep"))
+      val mapping = Parallelism.coalesceTo(k.join(reps, "digest").select("doc_id", "rep"), w)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       mapping.count()
-      val repDocs = docs.join(mapping.filter(col("doc_id") === col("rep"))
+      val repDocs = input.join(mapping.filter(col("doc_id") === col("rep"))
         .select("doc_id"), Seq("doc_id"), "left_semi").as[Doc]
-      (repDocs, Some(mapping))
+      (repDocs, Some(mapping), n)
     }
   }
 

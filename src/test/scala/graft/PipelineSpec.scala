@@ -1,8 +1,8 @@
 package graft
 
-import graft.media.SynthMedia
+import graft.media.{DefaultMedia, SynthMedia}
 import graft.model.{Doc, Span}
-import graft.pipeline.{GraftConfig, Pipeline}
+import graft.pipeline.{Blocking, Components, GraftConfig, Pairs, Parallelism, Pipeline, Signatures}
 import graft.synth.Corpus
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -242,6 +242,62 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
         .map(x => (x.getString(0), x.getString(1))).toSet
     assert(run(true) == run(false))
   }
+
+  test("a small corpus on 64 partitions runs every stage past its count at the sized width") {
+    implicit val s = spark
+    import s.implicits._
+    val key = "spark.sql.shuffle.partitions"
+    val old = s.conf.get(key)
+    s.conf.set(key, "64")
+    try {
+      val cfg = Corpus.RecommendedConfig
+      // exact copies drive the pre-collapse mapping path
+      val corpus = Corpus.generate(Corpus.Params(entities = 300, seed = 42, hotEntityCopies = 20))
+        .map(_.doc)
+      val docs = s.createDataset(s.sparkContext.parallelize(corpus, 64))
+      val sized = Parallelism.sized(s, Some(corpus.size.toLong))
+      assert(sized === 4)
+      var edges = Set.empty[(String, String)]
+      var clusters = Set.empty[(String, String)]
+      val stages = SparkTestBase.stagesDuring(s) {
+        val r = Pipeline.run(s, docs, cfg)
+        edges = pairs(r.edges)
+        clusters = pairs(r.clusters.select("doc_id", "cluster_id"))
+        r.release()
+      }
+      // the pre-collapse detection scan reads the input before the count
+      // is known; every later stage runs at the sized width or narrower
+      assert(stages.head.numTasks === 64)
+      val wide = stages.tail.filter(_.numTasks > sized)
+      assert(wide.isEmpty, wide.map(st => s"${st.name}: ${st.numTasks} tasks").mkString("\n"))
+
+      // the same stages at width 64 throughout, over the representatives
+      // (min doc_id per exact content) the pre-collapse keeps
+      val repOf = corpus.groupBy(_.spans).values.flatMap { g =>
+        val rep = g.map(_.doc_id).min
+        g.map(_.doc_id -> rep)
+      }.toMap
+      assert(repOf.values.toSet.size < corpus.size)
+      val reps = s.createDataset(s.sparkContext.parallelize(
+        corpus.filter(d => repOf(d.doc_id) == d.doc_id), 64))
+      val sigs = Signatures.derive(reps, cfg, DefaultMedia).map(_.sig).persist()
+      val (cands, _, releaseBands) = Blocking.candidatePairs(sigs, cfg)
+      val candidates = cands.persist()
+      candidates.count()
+      releaseBands()
+      val wideEdges = Pairs.edges(Pairs.score(candidates, sigs, cfg)).persist()
+      val assign = pairs(Components.connectedComponents(wideEdges, cfg.maxCcIterations)).toMap
+      assert(edges == pairs(wideEdges))
+      assert(clusters == corpus.map { d =>
+        val rep = repOf(d.doc_id)
+        d.doc_id -> assign.getOrElse(rep, rep)
+      }.toSet)
+      Seq(sigs, candidates, wideEdges).foreach(_.unpersist())
+    } finally s.conf.set(key, old)
+  }
+
+  private def pairs(df: org.apache.spark.sql.DataFrame): Set[(String, String)] =
+    df.collect().map(r => (r.getString(0), r.getString(1))).toSet
 
   test("distributed corpus generation is byte-identical to local generation") {
     val p = Corpus.Params(entities = 200)

@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The query surface's one session cache ([[SparkEntry.SessionCache]]):
   * racing first callers derive once, derivation names partition the key
-  * space, and a pinned relation is materialized once for all consumers.
+  * space, a pinned relation is materialized once for all consumers, and a
+  * fixture table's schema is inferred once per table generation.
   */
 class SessionCacheSpec extends AnyFunSuite with SparkTestBase {
   import SparkEntry.SessionCache
@@ -54,5 +55,22 @@ class SessionCacheSpec extends AnyFunSuite with SparkTestBase {
     assert(first.count() == 10)
     // localCheckpoint truncates the lineage: the plan reads the pinned RDD
     assert(first.queryExecution.analyzed.toString.contains("LogicalRDD"))
+  }
+
+  test("a fixture table infers its schema once, and again after a rewrite with a new column") {
+    val base = java.nio.file.Files.createTempDirectory("graft-fixture").toString
+    try {
+      val dir = s"$base/t"
+      val table = s"$dir/documents.parquet"
+      spark.range(5).selectExpr("id AS doc_id", "'x' AS text").write.parquet(table)
+      assert(SparkEntry.docsTable(spark, dir).columns.toSeq == Seq("doc_id", "text"))
+      // the second read of an unchanged table reuses the schema: no job
+      assert(SparkTestBase.jobsDuring(spark)(SparkEntry.docsTable(spark, dir)) == 0)
+      spark.range(5).selectExpr("id AS doc_id", "'x' AS text", "id * 2 AS extra")
+        .write.mode("overwrite").parquet(table)
+      val again = SparkEntry.docsTable(spark, dir)
+      assert(again.columns.toSeq == Seq("doc_id", "text", "extra"))
+      assert(again.agg(org.apache.spark.sql.functions.sum("extra")).head().getLong(0) == 20L)
+    } finally graft.pipeline.Generation.deleteRecursively(java.nio.file.Paths.get(base))
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.SparkFirehoseListener
+import org.apache.spark.scheduler.{SparkListenerEvent, SparkListenerJobStart, SparkListenerStageSubmitted, StageInfo}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.{BeforeAndAfterAll, Suite}
 
@@ -32,23 +33,35 @@ object SparkTestBase {
   def jobsDuring(spark: SparkSession)(body: => Unit): Int =
     jobStartsDuring(spark)(body).size
 
-  /** The start events of the Spark jobs `body` submits, in order. The
+  /** The start events of the Spark jobs `body` submits, in order. */
+  def jobStartsDuring(spark: SparkSession)(body: => Unit): Seq[SparkListenerJobStart] =
+    eventsDuring(spark)(body).collect { case e: SparkListenerJobStart => e }
+
+  /** The stages `body` runs (skipped stages excluded), in submission order. */
+  def stagesDuring(spark: SparkSession)(body: => Unit): Seq[StageInfo] =
+    eventsDuring(spark)(body).collect { case e: SparkListenerStageSubmitted => e.stageInfo }
+
+  /** The job-start and stage-submitted events of `body`, in order. The
     * listener bus delivers in order, so one tagged sentinel job after
-    * `body` marks the point by which every job of `body` has been seen.
+    * `body` marks the point by which every event of `body` has been seen.
     */
-  def jobStartsDuring(spark: SparkSession)(body: => Unit): Seq[SparkListenerJobStart] = {
+  private def eventsDuring(spark: SparkSession)(body: => Unit): Seq[SparkListenerEvent] = {
     val sc = spark.sparkContext
     val tag = "graft.test.jobsDuring"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkListenerJobStart)]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(tag))).foreach(t => seen.add(t -> e))
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkListenerEvent)]
+    def tagOf(p: java.util.Properties) = Option(p).flatMap(p => Option(p.getProperty(tag)))
+    val listener = new SparkFirehoseListener {
+      override def onEvent(e: SparkListenerEvent): Unit = e match {
+        case j: SparkListenerJobStart => tagOf(j.properties).foreach(t => seen.add(t -> e))
+        case st: SparkListenerStageSubmitted => tagOf(st.properties).foreach(t => seen.add(t -> e))
+        case _ =>
+      }
     }
     def tagged(t: String)(f: => Unit): Unit = {
       sc.setLocalProperty(tag, t)
       try f finally sc.setLocalProperty(tag, null)
     }
-    def events = seen.toArray(Array.empty[(String, SparkListenerJobStart)]).toSeq
+    def events = seen.toArray(Array.empty[(String, SparkListenerEvent)]).toSeq
     def ended = events.exists(_._1 == "end")
     sc.addSparkListener(listener)
     try {

@@ -1,16 +1,21 @@
 #!/usr/bin/env python3
-"""Spark job counts per BenchExtra query and rep, read from an event log.
+"""Spark job and task counts per BenchExtra query and rep, read from an
+event log.
 
 BenchExtra run with GRAFT_BENCHX_EVENTLOG=<dir> writes an uncompressed
 Spark event log in which every job of a timed rep carries the job
 description `benchx:<query>` and the local property `graft.benchx.rep`.
+A task counts toward the first job that lists its stage (a stage a later
+job reuses is skipped there and runs no task); every task end counts,
+retries included.
 
   python3 tools/jobs_per_query.py LOG
-      one line per (query, rep): query, rep, job count; then the total
+      one line per (query, rep): query, rep, job count, task count; then
+      the totals
   python3 tools/jobs_per_query.py BEFORE_LOG AFTER_LOG
-      only the (query, rep) rows whose counts differ, with both counts
-      and the delta, then each side's total job count; exit status 1 if
-      any row differs
+      only the (query, rep) rows whose job or task counts differ: both
+      job counts and their delta, then both task counts and their delta;
+      then each side's totals; exit status 1 if any row differs
   python3 tools/jobs_per_query.py --only q1,q2,... LOG [AFTER_LOG]
       either mode over these queries only; the totals are the sums over
       that list
@@ -49,19 +54,27 @@ def log_files(path):
     return files
 
 
-def job_counts(path):
-    counts = collections.Counter()
+def counts_of(path):
+    """(jobs, tasks): two Counters keyed by (query, rep)."""
+    jobs, tasks = collections.Counter(), collections.Counter()
+    stage_key = {}
     for name in log_files(path):
         with open(name, encoding="utf-8") as f:
             for line in f:
-                if '"SparkListenerJobStart"' not in line:
-                    continue
-                props = json.loads(line).get("Properties") or {}
-                desc = props.get("spark.job.description") or ""
-                if desc.startswith("benchx:"):
-                    rep = props.get("graft.benchx.rep", "?")
-                    counts[(desc[len("benchx:"):], rep)] += 1
-    return counts
+                if '"SparkListenerJobStart"' in line:
+                    ev = json.loads(line)
+                    props = ev.get("Properties") or {}
+                    desc = props.get("spark.job.description") or ""
+                    if desc.startswith("benchx:"):
+                        key = (desc[len("benchx:"):], props.get("graft.benchx.rep", "?"))
+                        jobs[key] += 1
+                        for sid in ev.get("Stage IDs") or []:
+                            stage_key.setdefault(sid, key)
+                elif '"SparkListenerTaskEnd"' in line:
+                    key = stage_key.get(json.loads(line).get("Stage ID"))
+                    if key is not None:
+                        tasks[key] += 1
+    return jobs, tasks
 
 
 def main(argv):
@@ -71,28 +84,28 @@ def main(argv):
         argv = argv[:1] + argv[3:]
 
     def counts(path):
-        c = job_counts(path)
-        return c if only is None else collections.Counter(
-            {k: n for k, n in c.items() if k[0] in only})
+        return tuple(c if only is None else collections.Counter(
+            {k: n for k, n in c.items() if k[0] in only}) for c in counts_of(path))
 
     if len(argv) == 2:
-        c = counts(argv[1])
-        for (q, rep), n in sorted(c.items()):
-            print(f"{q}\t{rep}\t{n}")
-        print(f"total\t\t{sum(c.values())}")
+        jobs, tasks = counts(argv[1])
+        for key in sorted(jobs):
+            print(f"{key[0]}\t{key[1]}\t{jobs[key]}\t{tasks[key]}")
+        print(f"total\t\t{sum(jobs.values())}\t{sum(tasks.values())}")
         return 0
     if len(argv) == 3:
-        before, after = counts(argv[1]), counts(argv[2])
+        (jb, tb), (ja, ta) = counts(argv[1]), counts(argv[2])
+        keys = sorted(set(jb) | set(ja))
         differ = 0
-        for key in sorted(set(before) | set(after)):
-            b, a = before.get(key, 0), after.get(key, 0)
-            if a != b:
+        for key in keys:
+            if (jb[key], tb[key]) != (ja[key], ta[key]):
                 differ += 1
-                print(f"{key[0]}\t{key[1]}\t{b}\t{a}\t{a - b:+d}")
-        b, a = sum(before.values()), sum(after.values())
-        print(f"total\t\t{b}\t{a}\t{a - b:+d}")
-        print(f"{differ} of {len(set(before) | set(after))} (query, rep) rows differ",
-              file=sys.stderr)
+                print(f"{key[0]}\t{key[1]}\t{jb[key]}\t{ja[key]}\t{ja[key] - jb[key]:+d}"
+                      f"\t{tb[key]}\t{ta[key]}\t{ta[key] - tb[key]:+d}")
+        b, a = sum(jb.values()), sum(ja.values())
+        bt, at = sum(tb.values()), sum(ta.values())
+        print(f"total\t\t{b}\t{a}\t{a - b:+d}\t{bt}\t{at}\t{at - bt:+d}")
+        print(f"{differ} of {len(keys)} (query, rep) rows differ", file=sys.stderr)
         return 1 if differ else 0
     sys.exit(__doc__)
 
