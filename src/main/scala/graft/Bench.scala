@@ -131,12 +131,6 @@ object Bench {
       .map(_.doc)(org.apache.spark.sql.Encoders.product[graft.model.Doc])
       .cache()
     val nDocs = docs.count() // materialize input outside the timed window
-    // A/B knob for isolating the exact-precollapse stage's cost on dup-free
-    // corpora (SPARK_GRAFT_COLLAPSE=0 disables)
-    val benchCfg =
-      if (sys.env.get("SPARK_GRAFT_COLLAPSE").contains("0"))
-        Corpus.RecommendedConfig.copy(exactPrecollapse = false)
-      else Corpus.RecommendedConfig
     // Load-robust trials (BENCH_r01-r03 each read 2-3.5x below quiet-box
     // re-runs of IDENTICAL code because the box was loaded during the
     // driver's window): record the 1-min system load at each trial start,
@@ -149,7 +143,7 @@ object Bench {
     def runTrial(): Unit = {
       trialLoads += loadAvg1m
       val t0 = System.nanoTime()
-      val result = Pipeline.run(spark, docs, benchCfg)
+      val result = Pipeline.run(spark, docs, Corpus.RecommendedConfig)
       val outRows = result.clusters.count()
       require(outRows == nDocs)
       result.release()

@@ -28,11 +28,6 @@ final case class GraftConfig(
                          // KB-scale text (5-char shingles collide at 0.15+,
                          // flooding the bands with false candidates)
     // skew handling
-    exactPrecollapse: Boolean = true, // collapse exact-content copies to one
-                                // representative before fuzzy blocking: a
-                                // k-copy duplicate farm costs O(k), not the
-                                // O(k²) within-block pairs identical content
-                                // otherwise generates
     hotBlockSize: Int = 2048,   // blocks larger than this get salted replication
     maxBlockSize: Int = 100000) { // degenerate blocks dropped (counts logged, never silent)
 

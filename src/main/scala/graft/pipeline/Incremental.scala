@@ -136,8 +136,7 @@ object Incremental {
     // whose content is band-less (no text, no media) AND identical to an
     // old doc, which a full run would merge by digest.)
     Pins.scoped { pins =>
-    val (batchDocs, expansion) =
-      if (cfg.exactPrecollapse) Pipeline.precollapse(newDocs) else (newDocs, None)
+    val (batchDocs, expansion) = Pipeline.precollapse(newDocs)
     expansion.foreach(e => pins.own(e))
 
     val newSigs = pins(Signatures.derive(batchDocs, cfg, resolver).map(_.sig))
@@ -316,9 +315,7 @@ object Incremental {
     }
 
     // the same stage composition as Pipeline.run, restricted to members
-    val (repDocs, expansion) =
-      if (cfg.exactPrecollapse) Pipeline.precollapse(memberDocs)
-      else (memberDocs, None)
+    val (repDocs, expansion) = Pipeline.precollapse(memberDocs)
     expansion.foreach(e => pins.own(e))
     val repSigs = pins(existingSigs match {
       case Some(old) =>

@@ -29,14 +29,13 @@ import org.apache.spark.sql.{Column, Dataset, SparkSession}
   * 1,024 docs per task a task holds about 0.4 s of signature work (the
   * traced shingle + minhash + simhash + phash kernels add up to about
   * 0.42 ms per doc). `Pipeline.run` is the one caller with a known row
-  * count: it takes the doc count from an action it runs anyway (the
-  * pre-collapse count, the resume-key count when checkpointing, or the
-  * signatures stage's count), narrows its input and every stage it
-  * persists or writes to the [[sized]] width with [[coalesceTo]], and
-  * passes that width to the band persist and to scoring's phase B (a
-  * persisted relation keeps the partitioning of the plan it caches: AQE
-  * does not coalesce a cached plan's output). Every other caller's row
-  * count is unknown and keeps [[width]].
+  * count: the one aggregate it runs over its input before any stage work
+  * (which also keys a checkpointed pass and decides the pre-collapse)
+  * counts the docs. It narrows its input and every stage it persists or
+  * writes to the [[sized]] width with [[coalesceTo]], and passes that
+  * width to the band persist and to scoring's phase B (a persisted
+  * relation keeps the partitioning of the plan it caches: AQE does not
+  * coalesce a cached plan's output). Every other caller keeps [[width]].
   *
   *  - [[widen]] is for EXCHANGE-FREE inputs: scans, pinned relations
   *    (`localCheckpoint`, `SessionCache.pinned`) and stage reads. Counting
@@ -70,13 +69,12 @@ private[graft] object Parallelism {
   def tasksFor(rows: Long, cores: Int): Int =
     math.min(math.max(cores.toLong, (rows + RowsPerTask - 1) / RowsPerTask), Int.MaxValue).toInt
 
-  /** Shuffle width for a relation of `rows` rows (`None`: unknown) in a
-    * session of `width` shuffle partitions on `cores` cores. */
-  def sized(rows: Option[Long], cores: Int, width: Int): Int =
-    rows.fold(width)(r => math.min(width, tasksFor(r, cores)))
+  /** Shuffle width for a relation of `rows` rows in a session of `width`
+    * shuffle partitions on `cores` cores. */
+  def sized(rows: Long, cores: Int, width: Int): Int = math.min(width, tasksFor(rows, cores))
 
   /** [[sized]] in `spark`'s session. */
-  def sized(spark: SparkSession, rows: Option[Long]): Int =
+  def sized(spark: SparkSession, rows: Long): Int =
     sized(rows, spark.sparkContext.defaultParallelism, width(spark))
 
   /** Round-robin to [[width]], only when `ds` has fewer partitions. */
@@ -94,8 +92,7 @@ private[graft] object Parallelism {
   }
 
   /** Coalesce `ds` to `n` partitions, without a shuffle, when `n` is
-    * below the session width; `ds` itself otherwise (`n` of `None`
-    * included). */
-  def coalesceTo[T](ds: Dataset[T], n: Option[Int]): Dataset[T] =
-    n.filter(_ < width(ds.sparkSession)).fold(ds)(k => ds.coalesce(k))
+    * below the session width; `ds` itself otherwise. */
+  def coalesceTo[T](ds: Dataset[T], n: Int): Dataset[T] =
+    if (n < width(ds.sparkSession)) ds.coalesce(n) else ds
 }

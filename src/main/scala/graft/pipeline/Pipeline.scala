@@ -3,7 +3,7 @@ package graft.pipeline
 import graft.media.{DefaultMedia, MediaResolver}
 import graft.model.{Doc, DocSig}
 import graft.text.Hashing
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** End-to-end record-linkage pipeline (the Spark lifecycle replacing the
@@ -33,18 +33,35 @@ object Pipeline {
     * hashes) and covers CONTENT, not just ids — xxhash64(doc_id,
     * to_json(spans)) changes when a doc's spans change under a stable
     * doc_id, which would otherwise silently reuse every stale stage table.
-    * One narrow scan, only paid when checkpointing is enabled.
+    * Read by the one input scan ([[scanInput]]), only when checkpointing.
     */
   def resumeBaseKey(docs: Dataset[Doc], cfg: GraftConfig): Long =
-    resumeKeyAndCount(docs, cfg)._1
+    resumeKey(scanInput(docs, resumeDigest = true), cfg)
 
-  /** [[resumeBaseKey]] and the doc count its scan reads. */
-  private def resumeKeyAndCount(docs: Dataset[Doc], cfg: GraftConfig): (Long, Long) = {
-    val row = docs.toDF().selectExpr(
-      "count(*) AS n",
-      "coalesce(bit_xor(xxhash64(doc_id, to_json(spans))), 0L) AS dg").head()
-    (Hashing.hash64(Hashing.hash64(cfg.configHash, row.getLong(0)), row.getLong(1)),
-      row.getLong(0))
+  private def resumeKey(in: InputScan, cfg: GraftConfig): Long =
+    Hashing.hash64(Hashing.hash64(cfg.configHash, in.n), in.digest)
+
+  /** What the one pre-pass over a caller's docs reads: the doc count, whether
+    * two docs share a [[contentDigest]] (fewer distinct digests than docs),
+    * and the resume digest when asked for (0 otherwise). */
+  private final case class InputScan(n: Long, hasCopies: Boolean, digest: Long)
+
+  /** The one aggregate over `docs` that sizes, keys and collapses a pass.
+    * It also rejects a doc whose `spans` is null: such a doc would fail a
+    * signatures task, or, since xxhash64 skips nulls, share the digest of
+    * an empty-spans doc and merge into its cluster. */
+  private def scanInput(docs: Dataset[Doc], resumeDigest: Boolean): InputScan = {
+    val nullSpans = col("spans").isNull
+    val aggs = Seq(count(lit(1)), count_distinct(contentDigest), count_if(nullSpans),
+      min(when(nullSpans, col("doc_id")))) ++
+      (if (resumeDigest) Seq(expr("coalesce(bit_xor(xxhash64(doc_id, to_json(spans))), 0L)"))
+       else Nil)
+    val row = docs.toDF().agg(aggs.head, aggs.tail: _*).head()
+    if (row.getLong(2) > 0)
+      throw new IllegalArgumentException(s"${row.getLong(2)} doc(s) have null spans " +
+        s"(e.g. doc_id ${row.getString(3)}); an empty document has an empty span list")
+    InputScan(row.getLong(0), row.getLong(1) < row.getLong(0),
+      if (resumeDigest) row.getLong(4) else 0L)
   }
 
   /** `checkpoint`: the TableIO every stage is materialized through
@@ -60,57 +77,41 @@ object Pipeline {
     implicit val s: SparkSession = spark
     import spark.implicits._
 
-    // The doc count sizes the pass (Parallelism.sized). It comes from an
-    // action the pass runs anyway: the resume key's scan when
-    // checkpointing, else the pre-collapse count, else the signatures
-    // stage's count. From then on every stage reads the input narrowed to
-    // the sized width, every stage is persisted or written at that width,
-    // and the band persist and scoring's phase B spread to it.
-    def sizedFor(n: Long): Option[Int] = Some(Parallelism.sized(spark, Some(n)))
-    val (baseKey, keyWidth) = checkpoint match {
-      case Some(_) =>
-        val (k, n) = resumeKeyAndCount(docs, cfg)
-        (k, sizedFor(n))
-      case None => (cfg.configHash, None)
-    }
+    // One scan of the caller's docs sizes the pass (Parallelism.sized),
+    // keys it when checkpointing and decides the pre-collapse. From then on
+    // every stage reads the input narrowed to the sized width, every stage
+    // is persisted or written at that width, and the band persist and
+    // scoring's phase B spread to it.
+    val in = scanInput(docs, resumeDigest = checkpoint.isDefined)
+    val width = Parallelism.sized(spark, in.n)
+    val baseKey = if (checkpoint.isDefined) resumeKey(in, cfg) else cfg.configHash
+    val input = Parallelism.coalesceTo(docs, width)
 
     Pins.scoped { pins =>
     // Without a TableIO every stage is persisted + materialized instead:
     // each stage below is consumed by more than one downstream action, and
     // an unmaterialized lineage would re-run the signature map (decode +
-    // DCT + minhash — the expensive part) once per action. The count is
-    // returned when it ran (no TableIO).
-    def materializeCounted(name: String, key: Long, width: Option[Int])(
-        compute: => DataFrame): (DataFrame, Option[Long]) =
+    // DCT + minhash — the expensive part) once per action.
+    def materialize(name: String, key: Long)(compute: => DataFrame): DataFrame =
       checkpoint match {
         case Some(t) =>
-          (Checkpoints.stage(spark, t, name, key)(Parallelism.coalesceTo(compute, width)), None)
+          Checkpoints.stage(spark, t, name, key)(Parallelism.coalesceTo(compute, width))
         case None =>
           val df = pins(Parallelism.coalesceTo(compute, width))
-          (df, Some(df.count()))
+          df.count()
+          df
       }
-    def materialize(name: String, key: Long, width: Option[Int])(
-        compute: => DataFrame): DataFrame =
-      materializeCounted(name, key, width)(compute)._1
 
     // 0. exact-duplicate pre-collapse (shared with Incremental's batch
     // path — the byte-equality contract between the two depends on ONE
     // digest rule, so there is one implementation)
-    val (pipelineDocs, expansion, knownWidth) =
-      if (cfg.exactPrecollapse) {
-        val (reps, mapping, n) = collapse(Parallelism.coalesceTo(docs, keyWidth), sizedFor)
-        (reps, mapping, sizedFor(n))
-      } else (Parallelism.coalesceTo(docs, keyWidth), None, keyWidth)
+    val (pipelineDocs, expansion) = collapse(input, in.hasCopies, width)
     expansion.foreach(e => pins.own(e))
 
-    // 1. signatures (+ bad-media side output). With pre-collapse off and
-    // no TableIO the signatures read the input at its own width and count
-    // the docs; the cached stage is narrowed once that count is known.
-    val (sigStage, sigRows) = materializeCounted("signatures", baseKey, knownWidth) {
+    // 1. signatures (+ bad-media side output)
+    val sigResults = materialize("signatures", baseKey) {
       Signatures.derive(pipelineDocs, cfg, resolver).toDF()
     }
-    val width = knownWidth.orElse(sigRows.flatMap(sizedFor))
-    val sigResults = Parallelism.coalesceTo(sigStage, width)
     val sigs: Dataset[DocSig] = sigResults.select("sig.*").as[DocSig]
     val badMedia = sigResults.select(explode(col("errors")).as("e")).select("e.*")
 
@@ -125,8 +126,8 @@ object Pipeline {
     // materialized.
     var stats = Blocking.BlockStats(0L, 0L, 0L)
     val candidates = Pins.using { blocks =>
-      materialize("candidates", Hashing.hash64(baseKey, 2L), width) {
-        val (cands, s0, releaseBlocks) = Blocking.candidatePairs(sigs, cfg, width)
+      materialize("candidates", Hashing.hash64(baseKey, 2L)) {
+        val (cands, s0, releaseBlocks) = Blocking.candidatePairs(sigs, cfg, Some(width))
         stats = s0
         blocks.own(releaseBlocks)
         cands
@@ -134,13 +135,13 @@ object Pipeline {
     }
 
     // 4. exact scoring → duplicate edges
-    val scored = materialize("scored", Hashing.hash64(baseKey, 3L), width) {
-      Pairs.score(candidates, sigs, cfg, width)
+    val scored = materialize("scored", Hashing.hash64(baseKey, 3L)) {
+      Pairs.score(candidates, sigs, cfg, Some(width))
     }
     val edges = Pairs.edges(scored)
 
     // 5. connected components
-    val assignments = materialize("clusters", Hashing.hash64(baseKey, 4L), width) {
+    val assignments = materialize("clusters", Hashing.hash64(baseKey, 4L)) {
       Components.connectedComponents(edges, cfg.maxCcIterations)
     }
 
@@ -148,9 +149,8 @@ object Pipeline {
     // pre-collapse, every doc routes through its representative's
     // assignment (exact copies of an otherwise-singleton rep still cluster
     // together under the rep's id).
-    val expanded =
-      expandClusters(Parallelism.coalesceTo(docs, width).toDF(), expansion, assignments)
-        .select("doc_id", "cluster_id", "spans")
+    val expanded = expandClusters(input.toDF(), expansion, assignments)
+      .select("doc_id", "cluster_id", "spans")
 
     // 7. when checkpointing, the band relation and the EXPANDED per-doc
     // assignment (every doc, singletons included) complete the dir as a
@@ -170,12 +170,9 @@ object Pipeline {
   /** Exact-duplicate pre-collapse: one REPRESENTATIVE (min doc_id) per
     * content-digest group, so a k-copy farm costs O(k) — one narrow digest
     * map, one (digest, doc_id) shuffle — instead of the O(k²) within-block
-    * pair blowup no blocking scheme can avoid for identical content. The
-    * digest is a 128-bit two-lane xxhash64 over a canonical span struct —
-    * whole-stage codegen, and wide enough for 10^12 docs (64 bits would
-    * birthday-collide there and silently merge unrelated docs). Cheap
+    * pair blowup no blocking scheme can avoid for identical content. Cheap
     * detection first: a corpus with no exact duplicates (the common case)
-    * pays ONLY the digest scan. Returns (repDocs, mapping) — the mapping is
+    * pays ONLY the input scan. Returns (repDocs, mapping) — the mapping is
     * persisted; the CALLER unpersists it.
     *
     * Shared by [[run]] stage 0 and [[Incremental.run]]'s batch path: the
@@ -183,52 +180,50 @@ object Pipeline {
     * under the identical digest rule.
     */
   private[pipeline] def precollapse(docs: Dataset[Doc])(
-      implicit spark: SparkSession): (Dataset[Doc], Option[DataFrame]) = {
-    val (repDocs, mapping, _) = collapse(docs, _ => None)
-    (repDocs, mapping)
-  }
+      implicit spark: SparkSession): (Dataset[Doc], Option[DataFrame]) =
+    collapse(docs, scanInput(docs, resumeDigest = false).hasCopies, Parallelism.width(spark))
 
-  /** [[precollapse]] that also returns the doc count `n` its detection
-    * scan reads; everything past that scan is narrowed to `width(n)`
-    * ([[Parallelism.coalesceTo]]). [[run]] passes the sized width. */
-  private def collapse(docs: Dataset[Doc], width: Long => Option[Int])(
-      implicit spark: SparkSession): (Dataset[Doc], Option[DataFrame], Long) = {
-    import spark.implicits._
-    // 128-bit content digest as a two-lane xxhash64 over a canonical span
-    // struct — replaces md5(to_json(spans)): the Jackson serialization of
-    // every span list was ~60% of the collapse stage's cost, and the hash
-    // can consume the struct directly. Two chained-seed lanes keep the
-    // 128-bit width the 10¹²-doc collision argument needs (64 bits would
-    // birthday-collide there). Canonicalization: xxhash64 SKIPS null
-    // leaves, so (text=null, media_ref="x") and (text="x",
-    // media_ref=null) would otherwise hash identically — the isNull
-    // booleans are never skipped and disambiguate every null pattern;
-    // each leaf is hashed as its own length-delimited step, so no
-    // cross-field byte-boundary ambiguity exists either. Grouping is
-    // therefore identical to the JSON digest's up to hash collisions
-    // (the same bar md5 set).
+  /** 128-bit content digest as a two-lane xxhash64 over a canonical span
+    * struct — replaces md5(to_json(spans)): the Jackson serialization of
+    * every span list was ~60% of the collapse stage's cost, and the hash
+    * can consume the struct directly. Two chained-seed lanes keep the
+    * 128-bit width the 10¹²-doc birthday argument needs (64 bits would
+    * collide there and silently merge unrelated docs). That argument holds
+    * for non-adversarial input only: xxhash64 is not a cryptographic hash,
+    * and colliding inputs can be constructed, so two docs with different
+    * spans can share a digest (span equality inside a digest group is not
+    * checked). Canonicalization: xxhash64 SKIPS null leaves, so
+    * (text=null, media_ref="x") and (text="x", media_ref=null) would
+    * otherwise hash identically — the isNull booleans are never skipped
+    * and disambiguate every null pattern; each leaf is hashed as its own
+    * length-delimited step, so no cross-field byte-boundary ambiguity
+    * exists either. A null span list is rejected by [[scanInput]].
+    */
+  private def contentDigest: Column = {
     val canon = transform(col("spans"), sp => struct(
       sp.getField("kind").isNull, sp.getField("kind"),
       sp.getField("text").isNull, sp.getField("text"),
       sp.getField("media_ref").isNull, sp.getField("media_ref"),
       sp.getField("offset")))
-    def keyed(d: Dataset[Doc]) = d.toDF()
-      .select(col("doc_id"),
-        struct(xxhash64(lit(1L), canon), xxhash64(lit(2L), canon)).as("digest"))
-    val head = keyed(docs).agg(count(lit(1)), count_distinct(col("digest"))).head()
-    val n = head.getLong(0)
-    val w = width(n)
-    val input = Parallelism.coalesceTo(docs, w)
-    if (head.getLong(1) == n) (input, None, n)
+    struct(xxhash64(lit(1L), canon), xxhash64(lit(2L), canon))
+  }
+
+  /** [[precollapse]] once the input scan has decided whether `docs` holds
+    * exact copies; the mapping is narrowed to `width`
+    * ([[Parallelism.coalesceTo]]). */
+  private def collapse(docs: Dataset[Doc], hasCopies: Boolean, width: Int)(
+      implicit spark: SparkSession): (Dataset[Doc], Option[DataFrame]) = {
+    import spark.implicits._
+    if (!hasCopies) (docs, None)
     else {
-      val k = keyed(input)
+      val k = docs.toDF().select(col("doc_id"), contentDigest.as("digest"))
       val reps = k.groupBy("digest").agg(min(col("doc_id")).as("rep"))
-      val mapping = Parallelism.coalesceTo(k.join(reps, "digest").select("doc_id", "rep"), w)
+      val mapping = Parallelism.coalesceTo(k.join(reps, "digest").select("doc_id", "rep"), width)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       mapping.count()
-      val repDocs = input.join(mapping.filter(col("doc_id") === col("rep"))
+      val repDocs = docs.join(mapping.filter(col("doc_id") === col("rep"))
         .select("doc_id"), Seq("doc_id"), "left_semi").as[Doc]
-      (repDocs, Some(mapping), n)
+      (repDocs, Some(mapping))
     }
   }
 

@@ -47,32 +47,27 @@ class ParallelismSpec extends AnyFunSuite with SparkTestBase {
 
   test("sized: 2,554 docs at 4 cores and width 64 give 4 tasks") {
     assert(Parallelism.tasksFor(2554, 4) === 4)
-    assert(Parallelism.sized(Some(2554L), 4, 64) === 4)
+    assert(Parallelism.sized(2554L, 4, 64) === 4)
   }
 
   test("sized: 102,484 docs give 64, and the input coalesce is a no-op on 64 partitions") {
-    assert(Parallelism.sized(Some(102484L), 4, 64) === 64)
+    assert(Parallelism.sized(102484L, 4, 64) === 64)
     val input = spark.range(0, 1000, 1, 64).toDF("k")
     withWidth(64) {
-      val sized = Parallelism.sized(spark, Some(102484L))
+      val sized = Parallelism.sized(spark, 102484L)
       assert(sized === 64)
-      val narrowed = Parallelism.coalesceTo(input, Some(sized))
+      val narrowed = Parallelism.coalesceTo(input, sized)
       assert(narrowed eq input)
       assert(!plan(narrowed).contains("Coalesce"), plan(narrowed))
       // a small count on the same input plans a narrow coalesce, no shuffle
-      val small = plan(Parallelism.coalesceTo(input, Some(Parallelism.sized(spark, Some(2554L)))))
+      val small = plan(Parallelism.coalesceTo(input, Parallelism.sized(spark, 2554L)))
       assert(small.contains("Coalesce 4") && !small.contains("Exchange"), small)
     }
   }
 
   test("sized: cores above the session width give the session width") {
-    assert(Parallelism.sized(Some(2554L), 8, 4) === 4)
-    assert(Parallelism.sized(Some(10L), 16, 4) === 4)
-  }
-
-  test("sized: an unknown row count gives the session width") {
-    assert(Parallelism.sized(None, 4, 64) === 64)
-    assert(Parallelism.sized(spark, None) === Parallelism.width(spark))
+    assert(Parallelism.sized(2554L, 8, 4) === 4)
+    assert(Parallelism.sized(10L, 16, 4) === 4)
   }
 
   private def withWidth[A](n: Int)(body: => A): A = {

@@ -2,7 +2,7 @@ package graft
 
 import graft.media.{DefaultMedia, SynthMedia}
 import graft.model.{Doc, Span}
-import graft.pipeline.{Blocking, Components, GraftConfig, Pairs, Parallelism, Pipeline, Signatures}
+import graft.pipeline.{Blocking, Components, GraftConfig, Incremental, Pairs, Parallelism, Pipeline, Signatures}
 import graft.synth.Corpus
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -232,15 +232,21 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     r.release()
   }
 
-  test("pre-collapse off reproduces identical clusters on a dup-free corpus") {
+  test("a doc with null spans is rejected by name, by Pipeline.run and Incremental.run") {
     implicit val s = spark
     import s.implicits._
-    val docs = s.createDataset(Corpus.generate(Corpus.Params(entities = 120)).map(_.doc))
-    def run(collapse: Boolean) =
-      Pipeline.run(s, docs, Corpus.RecommendedConfig.copy(exactPrecollapse = collapse))
-        .clusters.select("doc_id", "cluster_id").collect()
-        .map(x => (x.getString(0), x.getString(1))).toSet
-    assert(run(true) == run(false))
+    // xxhash64 skips nulls, so a null span list would share the content
+    // digest of the empty one and collapse into its cluster
+    val docs = s.createDataset(Corpus.generate(Corpus.Params(entities = 20)).map(_.doc) ++
+      Seq(Doc("a-empty", Seq.empty), Doc("z-null", null)))
+    val full = intercept[IllegalArgumentException](Pipeline.run(s, docs, Corpus.RecommendedConfig))
+    assert(full.getMessage.contains("z-null"), full.getMessage)
+    val before = s.sparkContext.getPersistentRDDs.keySet
+    val fold = intercept[IllegalArgumentException](Incremental.run(s,
+      s.emptyDataset[graft.model.DocSig], Seq.empty[(String, String)].toDF("doc_id", "cluster_id"),
+      docs, Corpus.RecommendedConfig))
+    assert(fold.getMessage.contains("z-null"), fold.getMessage)
+    assert(s.sparkContext.getPersistentRDDs.keySet == before)
   }
 
   test("a small corpus on 64 partitions runs every stage past its count at the sized width") {
@@ -255,7 +261,7 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
       val corpus = Corpus.generate(Corpus.Params(entities = 300, seed = 42, hotEntityCopies = 20))
         .map(_.doc)
       val docs = s.createDataset(s.sparkContext.parallelize(corpus, 64))
-      val sized = Parallelism.sized(s, Some(corpus.size.toLong))
+      val sized = Parallelism.sized(s, corpus.size.toLong)
       assert(sized === 4)
       var edges = Set.empty[(String, String)]
       var clusters = Set.empty[(String, String)]

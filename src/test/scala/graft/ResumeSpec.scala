@@ -78,6 +78,28 @@ class ResumeSpec extends AnyFunSuite with SparkTestBase {
     assert(r2.stats == graft.pipeline.Blocking.BlockStats(0L, 0L, 0L))
   }
 
+  test("a fully resumed run reads each input row once: one scan keys, sizes and collapses it") {
+    implicit val s = spark
+    import s.implicits._
+    val dir = tempDir().toString
+    val base = Corpus.generate(Corpus.Params(entities = 40)).map(_.doc)
+    assert(base.map(_.spans).distinct.size == base.size, "the corpus must hold no exact copies")
+    val reads = s.sparkContext.longAccumulator("input rows read")
+    val docs = s.createDataset(base).map { d => reads.add(1); d }
+    def run(): Set[(String, String)] = {
+      val r = Pipeline.run(s, docs, Corpus.RecommendedConfig,
+        checkpoint = Some(new ParquetTableIO(dir)))
+      val out = r.clusters.collect().map(x => (x.getString(0), x.getString(1))).toSet
+      r.release()
+      out
+    }
+    val first = run()
+    reads.reset()
+    val second = run()
+    assert(reads.value == base.size, s"${reads.value} input rows read for ${base.size} docs")
+    assert(first == second)
+  }
+
   test("config change invalidates the resume key and forces recompute") {
     implicit val s = spark
     import s.implicits._
