@@ -288,25 +288,11 @@ object SparkEntry {
   /** Stratum denominator for the brute-force evaluator legs
     * (q_blocking_recall, q_lsh_empirical, q_er_f1_sampled): the evaluators
     * measure a deterministic 1/k md5 stratum ([[sampleBucket]] % k == 0),
-    * so their O((N/k)²) truth cost is a PARAMETER at scale instead of a
-    * hard-coded fraction — at 100× data, raise k instead of paying 10⁴×
-    * work. Read once at class-load so the Spark queries and the dumped
-    * oracle SQL (which bakes the same k into [[sampleSqlPred]]) can never
-    * disagree within a run. Default 2 = the driver's Verify protocol.
+    * so their O((N/k)²) truth cost is set by one constant the Spark
+    * queries and the dumped oracle SQL ([[sampleSqlPred]]) share — at 100×
+    * data, raise k instead of paying 10⁴× work. 2 = the Verify protocol.
     */
-  private[graft] val evalSampleK: Int =
-    sys.env.get("GRAFT_EVAL_SAMPLE_K") match {
-      case None => 2 // the driver's Verify protocol default
-      case Some(v) =>
-        // fail LOUDLY on a malformed value: silently falling back to 2
-        // would run the O((N/k)²) evaluator legs at half-corpus cost —
-        // the exact bill this knob exists to avoid at scale
-        val k = scala.util.Try(v.trim.toInt).getOrElse(
-          throw new IllegalArgumentException(
-            s"GRAFT_EVAL_SAMPLE_K must be a positive integer, got '$v'"))
-        require(k >= 1, s"GRAFT_EVAL_SAMPLE_K must be >= 1, got $k")
-        k
-    }
+  private[graft] val evalSampleK: Int = 2
 
   /** n_true / n_pred / n_hit plus rounded precision/recall/F1 from two
     * pinned (a, b) pair relations — the pairwise-metric block shared by
@@ -2306,9 +2292,8 @@ object SparkEntry {
     // 60-prefixes) versus the banded candidate set restricted to the
     // sample. The O((N/k)²) scorer is the deliberate, bounded cost of
     // ESTIMATING recall; the production path never pays it, and because k
-    // is a parameter (GRAFT_EVAL_SAMPLE_K) the evaluator cost is tunable
-    // at 100 TB instead of hard-coded — the q_er_f1_sampled contract,
-    // oracle carrying the identical predicate.
+    // is one named constant the evaluator cost is tunable at 100 TB — the
+    // q_er_f1_sampled contract, oracle carrying the identical predicate.
     "q_blocking_recall" -> ((s, dir) => {
       val sample = docsTable(s, dir)
         .filter(sampleBucket(col("doc_id")) % evalSampleK === 0)

@@ -131,33 +131,6 @@ object SynthMedia extends MediaResolver {
     a
   }
 
-  /** Deterministic 16-bit PCM mono WAV tone (RIFF container bytes) — the
-    * synthetic payload the audio queries feed through the REAL
-    * `Multimodal.decodeWavPcm` path. `noise` adds a small deterministic
-    * jitter (`sin(13.7·i)`), sized to sit below the fingerprint
-    * quantization so a "re-record" still matches.
-    */
-  def wavTone(rate: Int, freqHz: Double, amp: Double, nSamples: Int,
-              noise: Double = 0.0): Array[Byte] = {
-    val dataLen = nSamples * 2
-    val bb = java.nio.ByteBuffer.allocate(44 + dataLen)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    bb.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataLen)
-      .put("WAVE".getBytes("US-ASCII"))
-    bb.put("fmt ".getBytes("US-ASCII")).putInt(16)
-      .putShort(1).putShort(1).putInt(rate).putInt(rate * 2)
-      .putShort(2).putShort(16)
-    bb.put("data".getBytes("US-ASCII")).putInt(dataLen)
-    var i = 0
-    while (i < nSamples) {
-      val v = amp * math.sin(2 * math.Pi * freqHz * i / rate) +
-        noise * math.sin(13.7 * i)
-      bb.putShort(math.round(math.max(-1.0, math.min(1.0, v)) * 32767).toShort)
-      i += 1
-    }
-    bb.array()
-  }
-
   /** Deterministic 8-segment "melody" WAV: each eighth of the clip is a
     * tone whose frequency and amplitude derive from `hash64(seed, seg)`.
     * A CONSTANT tone carries only one (energy, zcr) feature pair, so any

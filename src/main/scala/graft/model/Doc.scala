@@ -20,7 +20,6 @@ object Span {
 }
 
 final case class Doc(doc_id: String, spans: Seq[Span]) {
-  def textSpans: Seq[String] = spans.collect { case Span(Span.Text, t, _, _) if t != null => t }
   def mediaRefs: Seq[String] = spans.collect { case Span(Span.Media, _, r, _) if r != null => r }
   /** All text spans concatenated in offset order (north rule: MinHash/LSH
     * bands over concatenated text spans). */

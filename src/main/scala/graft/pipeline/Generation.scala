@@ -14,15 +14,14 @@ import scala.jdk.CollectionConverters._
   *
   * A FULL generation holds the [[ParquetTableIO]] stages `signatures`
   * ([[DocSig]] rows nested under `sig`, manifest key = the generation key
-  * `k`), optionally `bands` ([[Blocking.bandRowsDF]] rows, `hash64(k, 7)`)
-  * and `assignments` (`(doc_id, cluster_id)` for every doc,
-  * `hash64(k, 5)`), written LAST: the (signatures, assignments) key pair
-  * is the commit marker. A DELTA generation holds only its batch's rows as
-  * `signatures_delta` (`k`) + `bands_delta` (`hash64(k, 7)`) +
-  * `tombstones_delta` (`hash64(k, 9)`: ids whose ANCESTOR rows are dead,
-  * empty for folds), the FULL `assignments` table, and a `PARENT` file
-  * naming the previous generation; [[read]] refuses it rather than return
-  * a partial corpus.
+  * `k`), `bands` ([[Blocking.bandRowsDF]] rows, `hash64(k, 7)`) and
+  * `assignments` (`(doc_id, cluster_id)` for every doc, `hash64(k, 5)`),
+  * written LAST: the three paired keys are the commit marker. A DELTA
+  * generation holds only its batch's rows as `signatures_delta` (`k`) +
+  * `bands_delta` (`hash64(k, 7)`) + `tombstones_delta` (`hash64(k, 9)`:
+  * ids whose ANCESTOR rows are dead, empty for folds), the FULL
+  * `assignments` table, and a `PARENT` file naming the previous
+  * generation; [[read]] refuses it rather than return a partial corpus.
   *
   * Each writer first scrubs the other layout's leftovers from its dir: a
   * crashed earlier attempt (e.g. under a different compaction cadence)
@@ -31,12 +30,12 @@ import scala.jdk.CollectionConverters._
   */
 object Generation {
 
-  /** Corpus state: signatures, per-doc assignments, the band relation when
-    * the generation carries one, and the generation key (the signature
-    * stage's manifest key — the root later generation keys chain off).
+  /** Corpus state: signatures, per-doc assignments, the band relation, and
+    * the generation key (the signature stage's manifest key — the root
+    * later generation keys chain off).
     */
   final case class State(sigs: Dataset[DocSig], assign: DataFrame,
-                         bands: Option[DataFrame], key: Long)
+                         bands: DataFrame, key: Long)
 
   private val SigStage = "signatures"
   private val BandStage = "bands"
@@ -51,49 +50,45 @@ object Generation {
   private def tombKey(key: Long): Long = Hashing.hash64(key, 9L)
 
   /** The full generation at `dir`. Consistency is VERIFIED before anything
-    * is read: both manifests must exist and the assignment key must be
-    * `hash64(signature key, 5)`. A dir where a killed run left stages from
-    * different generations (day-N signatures beside day-N−1 assignments)
-    * would otherwise fold silently into wrong clusters: linkage matches
-    * against the newer signatures inner-join the stale assignment table
-    * and simply drop. A bands stage whose key does not pair reads as
-    * `None`.
+    * is read: all three manifests must exist and the band and assignment
+    * keys must be `hash64(signature key, 7)` and `hash64(signature key, 5)`.
+    * A dir where a killed run left stages from different generations
+    * (day-N signatures beside day-N−1 assignments) would otherwise fold
+    * silently into wrong clusters: linkage matches against the newer
+    * signatures inner-join the stale assignment table and simply drop.
     */
   def read(spark: SparkSession, dir: String): State = {
     import spark.implicits._
     val io = new ParquetTableIO(dir)
-    val key = (io.completedKey(SigStage), io.completedKey(AssignStage)) match {
-      case (Some(k), Some(a)) if a == assignKey(k) => k
-      case (sk, ak) => throw new IllegalStateException(
-        s"checkpoint $dir is not a consistent generation: " +
-          s"signatures key=$sk assignments key=$ak — stages come from " +
-          "different runs (or a run died mid-write); re-run the pipeline " +
-          "or fold from an intact generation dir")
-    }
-    val bands =
-      if (io.completedKey(BandStage).contains(bandsKey(key))) Some(io.read(spark, BandStage))
-      else None
+    val (sk, bk, ak) =
+      (io.completedKey(SigStage), io.completedKey(BandStage), io.completedKey(AssignStage))
+    val key = sk.filter(k => bk.contains(bandsKey(k)) && ak.contains(assignKey(k)))
+      .getOrElse(throw new IllegalStateException(
+        s"checkpoint $dir is not a consistent generation: signatures key=$sk " +
+          s"bands key=$bk assignments key=$ak — stages come from different " +
+          "runs (or a run died mid-write); re-run the pipeline or fold from " +
+          "an intact generation dir"))
     State(io.read(spark, SigStage).select("sig.*").as[DocSig],
-      io.read(spark, AssignStage).select("doc_id", "cluster_id"), bands, key)
+      io.read(spark, AssignStage).select("doc_id", "cluster_id"),
+      io.read(spark, BandStage), key)
   }
 
-  /** Write a full generation to `dir` — signatures, then the optional band
-    * relation, then assignments (the commit marker) — after scrubbing any
-    * stale `PARENT` and delta stages. After a fold, `sigs` is the previous
-    * signatures ∪ the fold's `batchSigs` and `assign` is
-    * `Incremental.applyRemap(oldAssign, remapped) ∪ assignments`; after a
-    * retraction, `Incremental.applyRetractSigs` and the result's
-    * assignments. `key` is any value unique per generation, e.g.
+  /** Write a full generation to `dir` — signatures, then the band relation
+    * ([[Blocking.bandRowsDF]] rows of `sigs`), then assignments (the commit
+    * marker) — after scrubbing any stale `PARENT` and delta stages. After a
+    * fold, `sigs` is the previous signatures ∪ the fold's `batchSigs` and
+    * `assign` is `Incremental.applyRemap(oldAssign, remapped) ∪
+    * assignments`; after a retraction, `Incremental.applyRetractSigs` and
+    * the result's assignments. `key` is any value unique per generation, e.g.
     * `Hashing.hash64(previousKey, batchDigest)`.
     */
   def write(spark: SparkSession, dir: String, sigs: Dataset[DocSig],
-            assign: DataFrame, key: Long,
-            bands: Option[DataFrame] = None): Unit = {
+            assign: DataFrame, key: Long, bands: DataFrame): Unit = {
     Files.deleteIfExists(Paths.get(dir, ParentFile))
     Seq(SigDelta, BandDelta, TombDelta).foreach(st => deleteRecursively(Paths.get(dir, st)))
     val io = new ParquetTableIO(dir)
     io.write(SigStage, sigs.toDF().select(struct(col("*")).as("sig")), key)
-    bands.foreach(b => io.write(BandStage, b, bandsKey(key)))
+    io.write(BandStage, bands, bandsKey(key))
     io.write(AssignStage, assign.select("doc_id", "cluster_id"), assignKey(key))
   }
 
@@ -153,11 +148,11 @@ object Generation {
     loop(gen, Nil, Set.empty)
   }
 
-  /** Corpus state at the head of `chain` (as [[chain]] returns it); `key`
-    * is the head's signature key. Each delta dir's stage keys are
-    * validated against the same pairing rule [[read]] enforces for full
-    * dirs, so a dir mixing stages from different write attempts is
-    * rejected, not read.
+  /** Corpus state at the head of `chain` (as [[chain]] returns it): its
+    * root is a full generation [[read]] validates, every later part a
+    * delta whose stage keys are validated against the same pairing rule,
+    * so a dir mixing stages from different write attempts is rejected,
+    * not read. `key` is the head's signature key; `assign` the head's.
     *
     * State is folded ROOT-FIRST: a delta's tombstone ids (written by
     * retraction deltas) are subtracted from everything accumulated so far
@@ -168,52 +163,40 @@ object Generation {
     */
   private[graft] def readChain(spark: SparkSession, stateDir: String,
       chain: List[String]): State = {
-    val sigEnc = org.apache.spark.sql.Encoders.product[DocSig]
-    // (sigsDF, bands, key, headAssign, tombstones) per chain part
-    val parts = chain.zipWithIndex.map { case (g, idx) =>
-      val dir = s"$stateDir/$g"
-      if (parentOf(stateDir, g).isDefined) {
-        val io = new ParquetTableIO(dir)
-        val k = io.completedKey(SigDelta).getOrElse(
-          throw new IllegalStateException(s"delta generation $dir lacks $SigDelta"))
-        if (!io.completedKey(AssignStage).contains(assignKey(k)) ||
-            !io.completedKey(BandDelta).contains(bandsKey(k)))
-          throw new IllegalStateException(
-            s"delta generation $dir is not a consistent write (mixed stage keys)")
-        val tombstones = io.completedKey(TombDelta) match {
-          case Some(tk) if tk == tombKey(k) => io.read(spark, TombDelta)
-          case other => throw new IllegalStateException(
-            s"delta generation $dir lacks a consistent $TombDelta stage (key=$other) — " +
-              "a retraction delta that lost its tombstones must never be read as a fold")
-        }
-        // only the HEAD's assignments are consumed — skip the parquet
-        // open (driver-side listing + footer reads of a corpus-sized
-        // table) for the up-to-compactEvery non-head chain parts
-        val assign =
-          if (idx == 0) Some(io.read(spark, AssignStage).select("doc_id", "cluster_id"))
-          else None
-        (io.read(spark, SigDelta).select("sig.*"),
-          Some(io.read(spark, BandDelta)), k, assign, Some(tombstones))
-      } else {
-        val st = read(spark, dir)
-        (st.sigs.toDF(), st.bands, st.key, Some(st.assign), Option.empty[DataFrame])
-      }
+    import spark.implicits._
+    val root = read(spark, s"$stateDir/${chain.last}")
+    val deltas = chain.init.map(g => new Delta(spark, s"$stateDir/$g")) // head-first
+    val (sigs, bands) = deltas.foldRight((root.sigs.toDF(), root.bands)) {
+      case (d, (s, b)) =>
+        val t = d.tombstones
+        (s.join(t, Seq("doc_id"), "left_anti").unionByName(d.sigs),
+          b.join(t, Seq("doc_id"), "left_anti").unionByName(d.bands))
     }
-    val ordered = parts.reverse // root-first
-    val bandsAvailable = parts.forall(_._2.isDefined)
-    var sigsAcc = ordered.head._1
-    var bandsAcc = if (bandsAvailable) ordered.head._2 else None
-    ordered.tail.foreach { p =>
-      p._5.foreach { t =>
-        sigsAcc = sigsAcc.join(t, Seq("doc_id"), "left_anti")
-        bandsAcc = bandsAcc.map(_.join(t, Seq("doc_id"), "left_anti"))
-      }
-      sigsAcc = sigsAcc.unionByName(p._1)
-      bandsAcc = bandsAcc.map(_.unionByName(p._2.get))
+    deltas.headOption.fold(root)(h => State(sigs.as[DocSig], h.assign, bands, h.key))
+  }
+
+  /** One delta generation's stages, validated on construction. Only the
+    * chain head's assignments are read: a non-head part skips the parquet
+    * open (driver-side listing + footer reads of a corpus-sized table).
+    */
+  private final class Delta(spark: SparkSession, dir: String) {
+    private val io = new ParquetTableIO(dir)
+    val key: Long = io.completedKey(SigDelta).getOrElse(
+      throw new IllegalStateException(s"delta generation $dir lacks $SigDelta"))
+    if (!io.completedKey(AssignStage).contains(assignKey(key)) ||
+        !io.completedKey(BandDelta).contains(bandsKey(key)))
+      throw new IllegalStateException(
+        s"delta generation $dir is not a consistent write (mixed stage keys)")
+    io.completedKey(TombDelta) match {
+      case Some(tk) if tk == tombKey(key) =>
+      case other => throw new IllegalStateException(
+        s"delta generation $dir lacks a consistent $TombDelta stage (key=$other) — " +
+          "a retraction delta that lost its tombstones must never be read as a fold")
     }
-    // head's assignments come from the validated per-part reader —
-    // always full in every generation
-    State(sigsAcc.as[DocSig](sigEnc), parts.head._4.get, bandsAcc, parts.head._3)
+    def sigs: DataFrame = io.read(spark, SigDelta).select("sig.*")
+    def bands: DataFrame = io.read(spark, BandDelta)
+    def tombstones: DataFrame = io.read(spark, TombDelta)
+    def assign: DataFrame = io.read(spark, AssignStage).select("doc_id", "cluster_id")
   }
 
   private[graft] def deleteRecursively(p: Path): Unit =

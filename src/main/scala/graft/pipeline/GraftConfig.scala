@@ -23,15 +23,14 @@ final case class GraftConfig(
     //   2⁻¹⁶ selectivity — what the bench/corpus config uses.
     mediaBlockBits: Int = 4,
     mediaBlocksPerKey: Int = 1,
-    // text signatures
-    shingleK: Int = 7,   // 7-char shingles: inter-doc Jaccard ~0.01-0.05 on
-                         // KB-scale text (5-char shingles collide at 0.15+,
-                         // flooding the bands with false candidates)
     // skew handling
     hotBlockSize: Int = 2048,   // blocks larger than this get salted replication
     maxBlockSize: Int = 100000) { // degenerate blocks dropped (counts logged, never silent)
 
   // text signatures
+  val shingleK: Int = 7       // 7-char shingles: inter-doc Jaccard ~0.01-0.05 on
+                              // KB-scale text (5-char shingles collide at 0.15+,
+                              // flooding the bands with false candidates)
   val minhashK: Int = 128
   val textBands: Int = 32     // 32 bands × 4 rows: P(miss) at Jaccard 0.8 is
                               // (1−0.8⁴)³² ≈ 1e-4 — high recall; the extra
@@ -64,6 +63,6 @@ final case class GraftConfig(
     * (resume keys).
     */
   def configHash: Long = graft.text.Hashing.hash64(
-    Seq(this, minhashK, textBands, simhashPrefilter, minTextBands, scoreTextCap,
+    Seq(this, shingleK, minhashK, textBands, simhashPrefilter, minTextBands, scoreTextCap,
       minhashGate, wJw, wLev, wMinhash, tau, saltFactor, maxCcIterations).mkString("|"))
 }

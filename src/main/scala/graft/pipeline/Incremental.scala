@@ -50,19 +50,16 @@ object Incremental {
   /** Fold a batch into the full [[Generation]] at `checkpointDir` — a
     * [[Pipeline.run]] checkpoint or a dir [[Generation.write]] persisted —
     * the production entry point: yesterday's run persisted its lineage,
-    * today's fold reads it instead of recomputing anything over the old
-    * corpus. Caller-supplied `existingBands` win over the checkpointed
-    * band stage.
+    * today's fold reads it (signatures, bands, assignments) instead of
+    * recomputing anything over the old corpus.
     */
   def fromCheckpoint(spark: SparkSession, checkpointDir: String,
                      newDocs: Dataset[Doc], cfg: GraftConfig = GraftConfig(),
-                     resolver: MediaResolver = DefaultMedia,
-                     existingBands: Option[DataFrame] = None): IncrementalResult =
+                     resolver: MediaResolver = DefaultMedia): IncrementalResult =
     Pins.scoped { pins =>
       val state = Generation.read(spark, checkpointDir)
-      val (sigs, bands) =
-        foldInputs(pins, state.sigs, existingBands.orElse(state.bands))
-      val inner = run(spark, sigs, state.assign, newDocs, cfg, resolver, bands)
+      val (sigs, bands) = foldInputs(pins, state.sigs, state.bands)
+      val inner = run(spark, sigs, state.assign, newDocs, cfg, resolver, Some(bands))
       pins.own(inner.release)
       inner.copy(release = pins.release)
     }
@@ -84,8 +81,8 @@ object Incremental {
     * the cache. `pins` owns both.
     */
   private[graft] def foldInputs(pins: Pins, sigs0: Dataset[DocSig],
-      bands0: Option[DataFrame]): (Dataset[DocSig], Option[DataFrame]) =
-    (pins(Parallelism.widen(sigs0)), bands0.map(b => pins(Parallelism.widen(b))))
+      bands0: DataFrame): (Dataset[DocSig], DataFrame) =
+    (pins(Parallelism.widen(sigs0)), pins(Parallelism.widen(bands0)))
 
   /** Call `release` once after consuming the result; a throwing fold
     * leaves nothing persisted. */
@@ -213,7 +210,7 @@ object Incremental {
     /** removed ∪ surviving touched members — the ids whose OLD state rows
       * (signatures, bands) must not survive into the next generation (the
       * survivors' replacements come from [[memberSigs]]). One definition,
-      * shared by [[Incremental.applyRetractSigs]] and the band splice in
+      * shared by [[Incremental.applyRetractSigs]] and the tombstones of
       * `StreamIngest.retractBatch`.
       */
     def dropIds: DataFrame =
@@ -224,8 +221,9 @@ object Incremental {
     * removed docs and for touched survivors are dropped, and the touched
     * survivors' representative rows (possibly re-keyed by the local
     * pre-collapse when a removed rep's copy was promoted) take their place.
-    * Pair with [[Generation.write]] — `Generation.write(spark, dir,
-    * applyRetractSigs(oldSigs, res), res.assignments, key)` persists the retracted corpus as a
+    * Pair with [[Generation.write]] — `Generation.write(spark, dir, sigs,
+    * res.assignments, key, Blocking.bandRowsDF(sigs, cfg))` with `sigs =
+    * applyRetractSigs(oldSigs, res)` persists the retracted corpus as a
     * generation [[fromCheckpoint]] folds tomorrow's batch into, closing the
     * insert+delete production loop (`RetractSpec` asserts the composed
     * result byte-equals a full run). Call before `res.release()`.

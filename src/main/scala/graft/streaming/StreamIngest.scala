@@ -1,10 +1,10 @@
 package graft.streaming
 
 import graft.media.{DefaultMedia, MediaResolver}
-import graft.model.Doc
+import graft.model.{Doc, DocSig}
 import graft.pipeline.{Blocking, GraftConfig, Generation, Incremental, ParquetTableIO, Pins, Pipeline}
 import graft.text.Hashing
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import scala.jdk.CollectionConverters._
 
@@ -25,13 +25,13 @@ import scala.jdk.CollectionConverters._
   *   - `gen-NNNNNNNN/` — one immutable [[Generation]] (its stage format
   *     is documented, read and written there and nowhere else). A FULL
   *     generation (the [[seed]], and every `compactEvery`-th fold) carries
-  *     the complete corpus state [[Generation.read]] reads. A DELTA
-  *     generation carries only its batch's signature/band rows, its
-  *     tombstones (the ids whose ancestor rows are dead — empty for
-  *     folds), the FULL assignment table (tiny relative to signatures —
-  *     two columns per doc, no text payloads), and a link to the previous
-  *     generation; `Generation.read` refuses it rather than return a
-  *     partial corpus. Corpus state at a delta generation = fold the chain
+  *     the complete corpus state [[Generation.read]] reads (signatures,
+  *     bands, assignments). A DELTA generation carries only its batch's
+  *     signature/band rows, its tombstones (the ids whose ancestor rows
+  *     are dead — empty for folds), the FULL assignment table (tiny
+  *     relative to signatures — two columns per doc, no text payloads),
+  *     and a link to the previous generation; `Generation.read` refuses it
+  *     rather than return a partial corpus. Corpus state at a delta generation = fold the chain
   *     ROOT-FIRST, subtracting each delta's tombstones from the accumulated
   *     ancestors before unioning its own rows (so a tombstoned id
   *     re-inserted by a later fold survives).
@@ -139,7 +139,7 @@ object StreamIngest {
     * generation.
     */
   def readCurrentState(spark: SparkSession, stateDir: String)
-      : (Dataset[graft.model.DocSig], org.apache.spark.sql.DataFrame) = {
+      : (Dataset[DocSig], DataFrame) = {
     val state = Generation.readChain(spark, stateDir,
       Generation.chain(stateDir, currentGen(stateDir)))
     (state.sigs, state.assign)
@@ -170,22 +170,16 @@ object StreamIngest {
       System.err.println(s"[graft] stream-ingest: batch $batchId already folded (at $cur) — skipping replay")
       return
     }
-    val next = nextGen(cur)
     if (batch.isEmpty) return // no state change
 
     // corpus state = the chain's stages unioned, through the shared
-    // widen + persist fold-input treatment; bands fall back to one
-    // derivation only when some chain dir predates the bands stage
+    // widen + persist fold-input treatment
     val chain = Generation.chain(stateDir, cur)
     val state = Generation.readChain(spark, stateDir, chain)
     Pins.using { pins =>
-      val (sigs, bandsOpt) = Incremental.foldInputs(pins, state.sigs, state.bands)
-      val oldBands = bandsOpt.getOrElse {
-        val b = pins(Blocking.bandRowsDF(sigs, cfg))
-        b.count(); b
-      }
+      val (sigs, bands) = Incremental.foldInputs(pins, state.sigs, state.bands)
       val inc = Incremental.run(spark, sigs, state.assign, batch, cfg, resolver,
-        existingBands = Some(oldBands))
+        existingBands = Some(bands))
       pins.own(inc.release)
 
       // The batch side of the next generation is `inc.batchSigs` — the
@@ -193,25 +187,13 @@ object StreamIngest {
       // derivation, persisted until release; same collapse rule as
       // Pipeline.run stage 0) — so streamed-in exact copies never accumulate
       // in corpus state. The generation key chains off the previous key so
-      // the manifest lineage links the whole history.
-      val genKey = Hashing.hash64(state.key, batchId)
+      // the manifest lineage links the whole history. Folds only add: the
+      // tombstone set is empty.
       val newAssign = Incremental.applyRemap(state.assign, inc.remapped)
         .unionByName(inc.assignments)
-      val nextDir = s"$stateDir/$next"
-      val batchBands = Blocking.bandRowsDF(inc.batchSigs, cfg)
-      if (chain.length >= compactEvery) {
-        // compaction: a self-contained full generation truncates the chain
-        Generation.write(spark, nextDir, sigs.unionByName(inc.batchSigs),
-          newAssign, genKey, Some(oldBands.unionByName(batchBands)))
-      } else {
-        // delta generation: O(batch) signature/band rows (an EMPTY
-        // tombstone set — folds only add), plus the full assignment table
-        // and the parent link
-        Generation.writeDelta(nextDir, inc.batchSigs, batchBands,
-          newAssign.select("doc_id").limit(0), newAssign, genKey, cur)
-      }
-      writeMaxBatch(nextDir, batchId)
-      commitPointer(stateDir, next, Some(cur))
+      commit(spark, stateDir, chain, sigs, bands, cfg, compactEvery)(inc.batchSigs,
+        newAssign.select("doc_id").limit(0), newAssign,
+        Hashing.hash64(state.key, batchId), batchId)
     }
   }
 
@@ -245,19 +227,18 @@ object StreamIngest {
     * final state byte-equals a full run over the surviving union.
     */
   def retractBatch(spark: SparkSession, docs: Dataset[Doc],
-                   removeIds: org.apache.spark.sql.DataFrame,
+                   removeIds: DataFrame,
                    stateDir: String, cfg: GraftConfig,
                    resolver: MediaResolver = DefaultMedia,
                    compactEvery: Int = 8): Unit = withStateLock(stateDir) {
     require(compactEvery >= 1, s"compactEvery must be >= 1, got $compactEvery")
     val cur = currentGen(stateDir)
-    val next = nextGen(cur)
     if (removeIds.isEmpty) return
 
     val chain = Generation.chain(stateDir, cur)
     val state = Generation.readChain(spark, stateDir, chain)
     Pins.using { pins =>
-      val (sigs, bandsOpt) = Incremental.foldInputs(pins, state.sigs, state.bands)
+      val (sigs, bands) = Incremental.foldInputs(pins, state.sigs, state.bands)
       val res = Incremental.retract(spark, docs, state.assign, removeIds, cfg, resolver,
         existingSigs = Some(sigs))
       pins.own(res.release)
@@ -266,31 +247,44 @@ object StreamIngest {
       else {
         // tagged key derivation: a crashed FOLD attempt can leave stages in
         // the same uncommitted dir; the tag keeps a retraction's keys from
-        // ever pairing with them
+        // ever pairing with them. The touched survivors' rows replace the
+        // dropped ones; the high-water mark is carried, not consumed.
         val genKey = Hashing.hash64(Hashing.hash64(state.key, 0x72657472616374L),
-          genNum(next))
-        val nextDir = s"$stateDir/$next"
-        val memberBands = Blocking.bandRowsDF(res.memberSigs, cfg)
-        if (chain.length >= compactEvery) {
-          // compaction-style full generation, reusing the chain's band union
-          val nextSigs = Incremental.applyRetractSigs(sigs, res)
-          val nextBands = bandsOpt match {
-            case Some(b) => b.join(res.dropIds, Seq("doc_id"), "left_anti")
-              .unionByName(memberBands)
-            case None => // some chain dir predates the bands stage — derive once
-              Blocking.bandRowsDF(nextSigs, cfg)
-          }
-          Generation.write(spark, nextDir, nextSigs, res.assignments, genKey,
-            Some(nextBands))
-        } else {
-          // retraction delta: O(touched) rows + the tombstoned drop ids
-          Generation.writeDelta(nextDir, res.memberSigs, memberBands,
-            res.dropIds, res.assignments, genKey, cur)
-        }
-        writeMaxBatch(nextDir, maxBatch(stateDir, cur)) // carried, not consumed
-        commitPointer(stateDir, next, Some(cur))
+          genNum(nextGen(cur)))
+        commit(spark, stateDir, chain, sigs, bands, cfg, compactEvery)(res.memberSigs,
+          res.dropIds, res.assignments, genKey, maxBatch(stateDir, cur))
       }
     }
+  }
+
+  /** The one commit of [[foldBatch]] and [[retractBatch]]: derive the
+    * delta's band rows, write the next generation — a DELTA (`deltaSigs`,
+    * their bands, `tombstones`, the full `assign`, the parent link), or
+    * once the chain has reached `compactEvery` parts a FULL generation
+    * `(state − tombstones) ∪ delta` for both signatures and bands — then
+    * its high-water `mark`, then flip the pointer. `sigs`/`bands` are the
+    * chain's state as the fold inputs hold it. A fold's tombstone set is
+    * an empty relation, and Spark drops the anti-join against it.
+    */
+  private def commit(spark: SparkSession, stateDir: String, chain: List[String],
+      sigs: Dataset[DocSig], bands: DataFrame, cfg: GraftConfig, compactEvery: Int)(
+      deltaSigs: Dataset[DocSig], tombstones: DataFrame, assign: DataFrame,
+      key: Long, mark: Long): Unit = {
+    import spark.implicits._
+    val cur = chain.head
+    val next = nextGen(cur)
+    val nextDir = s"$stateDir/$next"
+    val deltaBands = Blocking.bandRowsDF(deltaSigs, cfg)
+    if (chain.length >= compactEvery) {
+      // compaction: a self-contained full generation truncates the chain
+      def live(df: DataFrame) = df.join(tombstones, Seq("doc_id"), "left_anti")
+      Generation.write(spark, nextDir,
+        live(sigs.toDF()).unionByName(deltaSigs.toDF()).as[DocSig], assign, key,
+        live(bands).unionByName(deltaBands))
+    } else
+      Generation.writeDelta(nextDir, deltaSigs, deltaBands, tombstones, assign, key, cur)
+    writeMaxBatch(nextDir, mark)
+    commitPointer(stateDir, next, Some(cur))
   }
 
   /** One CDC record: an upsert carries the full document; a delete needs
@@ -441,16 +435,16 @@ object StreamIngest {
   private def genNum(name: String): Long = name.stripPrefix("gen-").toLong
 
   /** The folded-batch high-water mark at `gen` — the replay criterion:
-    * batchIds at or below it are already folded. Carried forward by every
-    * write (folds set it to their batchId; retractions copy the parent's).
-    * Generations from before the marker existed used gen number =
-    * batchId + 1, so `genNum - 1` is the exact legacy equivalent.
+    * batchIds at or below it are already folded. Every write stamps it
+    * before the pointer flips (folds set it to their batchId; retractions
+    * copy the parent's), so a committed generation without it is corrupt.
     */
   private def maxBatch(stateDir: String, gen: String): Long = {
     val p = java.nio.file.Paths.get(stateDir, gen, "MAXBATCH")
-    if (java.nio.file.Files.exists(p))
-      java.nio.file.Files.readString(p).trim.toLong
-    else genNum(gen) - 1
+    if (!java.nio.file.Files.exists(p))
+      throw new IllegalStateException(
+        s"generation $stateDir/$gen has no MAXBATCH high-water mark — corrupt state")
+    java.nio.file.Files.readString(p).trim.toLong
   }
 
   /** Atomic (tmp + rename) so a torn write can never leave a committed

@@ -282,7 +282,7 @@ class DataOpsSpec extends AnyFunSuite with SparkTestBase {
     }
     // the SAME 1/evalSampleK md5 stratum the query filters on, rederived
     // here via the JVM's own MessageDigest so the predicate itself is
-    // cross-checked (robust at any GRAFT_EVAL_SAMPLE_K)
+    // cross-checked
     def inStratum(id: Long): Boolean = {
       val hex = java.security.MessageDigest.getInstance("MD5")
         .digest(s"esample:$id".getBytes("UTF-8"))
@@ -474,8 +474,6 @@ class DataOpsSpec extends AnyFunSuite with SparkTestBase {
     // the planted ids must all land in the 1/k md5 stratum the query
     // filters on; 2,4,6,10 all have md5("esample:<id>") bucket % 2 == 0
     // (id 8 does NOT — the old doc_id%2 stratum's id set no longer works)
-    assume(SparkEntry.evalSampleK == 2,
-      "planted ids are chosen for the default k=2 stratum")
     val dir = plantedDir(Seq(
       (2L, a, "en", "web"), (4L, a, "en", "cc"),
       (6L, b, "en", "web"), (10L, b, "en", "cc")))

@@ -115,8 +115,8 @@ class IncrementalSpec extends AnyFunSuite with SparkTestBase {
     old.release()
 
     // gen0 carries the checkpointed bands stage (written by Pipeline.run);
-    // day 1's fromCheckpoint fold auto-reads it
-    assert(Generation.read(s, gen0).bands.isDefined, "gen0 missing bands stage")
+    // day 1's fromCheckpoint fold reads it
+    assert(Generation.read(s, gen0).bands.count() > 0, "gen0 bands stage is empty")
 
     // day 1: fold batch1 from gen0's stage tables, persist generation 1
     val inc1 = Incremental.fromCheckpoint(s, gen0, ds(batch1), cfg)
@@ -129,9 +129,9 @@ class IncrementalSpec extends AnyFunSuite with SparkTestBase {
       gen1Sigs,
       Incremental.applyRemap(assign0, inc1.remapped).unionByName(inc1.assignments),
       key = 20260817L,
-      bands = Some(graft.pipeline.Blocking.bandRowsDF(gen1Sigs, cfg)))
+      bands = graft.pipeline.Blocking.bandRowsDF(gen1Sigs, cfg))
     inc1.release()
-    assert(Generation.read(s, gen1).bands.isDefined, "gen1 missing bands stage")
+    assert(Generation.read(s, gen1).bands.count() > 0, "gen1 bands stage is empty")
 
     // day 2: fold batch2 from the WRITTEN generation (reading gen1's
     // checkpointed bands) — no full run anywhere
@@ -191,14 +191,16 @@ class IncrementalSpec extends AnyFunSuite with SparkTestBase {
     val old = Pipeline.run(s, ds(oldSeq.take(40)), cfg, checkpoint = Some(new ParquetTableIO(dir)))
     old.clusters.count()
     old.release()
-    // caller-supplied corpus bands without the simhash prefilter column:
+    // a generation whose corpus bands lack the simhash prefilter column:
     // the linkage census reads only block_key, so it materializes both band
     // relations (and the persisted fold inputs) before the band join fails
     // to resolve the missing column
-    val bands = Generation.read(s, dir).bands.get.drop("simhash")
+    val st = Generation.read(s, dir)
+    val bad = java.nio.file.Files.createTempDirectory("graft-inc-badbands-gen").toString
+    Generation.write(s, bad, st.sigs, st.assign, st.key, st.bands.drop("simhash"))
     val before = s.sparkContext.getPersistentRDDs.keySet
     intercept[org.apache.spark.sql.AnalysisException] {
-      Incremental.fromCheckpoint(s, dir, ds(newSeq.take(20)), cfg, existingBands = Some(bands))
+      Incremental.fromCheckpoint(s, bad, ds(newSeq.take(20)), cfg)
     }
     val leaked = s.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty, s"failed fold stranded persisted RDDs: ${leaked.toSeq.sorted}")

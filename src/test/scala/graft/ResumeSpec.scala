@@ -109,7 +109,7 @@ class ResumeSpec extends AnyFunSuite with SparkTestBase {
     val sigManifest = java.nio.file.Paths.get(dir, "signatures", "_graft_manifest.json")
     val mtime = Files.getLastModifiedTime(sigManifest)
     Thread.sleep(20)
-    Pipeline.run(s, docs, Corpus.RecommendedConfig.copy(shingleK = 9),
+    Pipeline.run(s, docs, Corpus.RecommendedConfig.copy(mediaThreshold = 12),
       checkpoint = Some(new ParquetTableIO(dir))).clusters.count()
     assert(Files.getLastModifiedTime(sigManifest) != mtime,
       "changed config must recompute the stage")

@@ -137,7 +137,7 @@ class RetractSpec extends AnyFunSuite with SparkTestBase {
     val gen1 = java.nio.file.Files.createTempDirectory("graft-retract-gen1").toString
     Generation.write(s, gen1, nextSigs, res.assignments,
       graft.text.Hashing.hash64(0xdeadL, 1L),
-      Some(Blocking.bandRowsDF(nextSigs, cfg)))
+      Blocking.bandRowsDF(nextSigs, cfg))
     res.release()
 
     val inc = Incremental.fromCheckpoint(s, gen1, ds(batch), cfg)

@@ -20,6 +20,14 @@ class StreamIngestSpec extends AnyFunSuite with SparkTestBase {
   private def ds(docs: Seq[graft.model.Doc]) =
     spark.createDataset(docs)(org.apache.spark.sql.Encoders.product)
 
+  /** A seeded state dir over a small corpus, and a batch to fold into it. */
+  private def seededSmall(name: String) = {
+    val small = Corpus.generate(Corpus.Params(entities = 30, seed = 23)).map(_.doc)
+    val stateDir = java.nio.file.Files.createTempDirectory(name).toString
+    StreamIngest.seed(spark, ds(small.filterNot(_.doc_id.endsWith("-0"))), stateDir, cfg)
+    (stateDir, ds(small.filter(_.doc_id.endsWith("-0"))))
+  }
+
   test("streamed folds converge to the full-run clusters byte-for-byte across micro-batches") {
     implicit val s = spark
     import s.implicits._
@@ -370,6 +378,114 @@ class StreamIngestSpec extends AnyFunSuite with SparkTestBase {
       val diffs = want.collect { case (k, v) if got.get(k) != Some(v) => (k, got.get(k), v) }
       s"scrubbed delta diverged from the full run: ${diffs.take(5)}"
     })
+  }
+
+  test("a full generation without a consistent bands stage is refused by read and by foldBatch") {
+    import java.nio.file.{Files, Paths}
+    val s = spark
+    val (stateDir, batch) = seededSmall("graft-ingest-bandless")
+    val gen0 = s"$stateDir/gen-00000000"
+    def refused(): Unit = {
+      val r = intercept[IllegalStateException] { Generation.read(s, gen0) }
+      assert(r.getMessage.contains(gen0), r.getMessage)
+      val f = intercept[IllegalStateException] {
+        StreamIngest.foldBatch(s, batch, 0L, stateDir, cfg)
+      }
+      assert(f.getMessage.contains(gen0), f.getMessage)
+      assert(StreamIngest.currentDir(stateDir) == gen0)
+    }
+
+    // a bands manifest key from another write attempt
+    val manifest = Paths.get(gen0, "bands", "_graft_manifest.json")
+    val json = Files.readString(manifest)
+    Files.writeString(manifest,
+      json.replaceAll("\"resume_key\":\"-?\\d+\"", "\"resume_key\":\"12345\""))
+    refused()
+    Files.writeString(manifest, json)
+
+    // no bands stage at all: never read as a bandless generation whose
+    // bands a fold quietly re-derives
+    val aside = Paths.get(stateDir, "bands-aside")
+    Files.move(Paths.get(gen0, "bands"), aside)
+    refused()
+    Files.move(aside, Paths.get(gen0, "bands"))
+
+    // the restored generation folds
+    StreamIngest.foldBatch(s, batch, 0L, stateDir, cfg)
+    assert(StreamIngest.currentDir(stateDir).endsWith("gen-00000001"))
+  }
+
+  test("a committed generation without its MAXBATCH mark makes foldBatch throw") {
+    // corrupt, not `generation number - 1`: a retraction takes a number
+    // without a batchId, so that guess can skip a fresh batch as a replay
+    val (stateDir, batch) = seededSmall("graft-ingest-nomark")
+    java.nio.file.Files.delete(java.nio.file.Paths.get(stateDir, "gen-00000000", "MAXBATCH"))
+    val e = intercept[IllegalStateException] {
+      StreamIngest.foldBatch(spark, batch, 0L, stateDir, cfg)
+    }
+    assert(e.getMessage.contains("MAXBATCH"), e.getMessage)
+    assert(StreamIngest.currentDir(stateDir).endsWith("gen-00000000"))
+  }
+
+  test("cdcWriter commits the same state as cdcFoldBatch on the same batches") {
+    implicit val s = spark
+    import s.implicits._
+    import StreamIngest.CdcRecord
+    val small = Corpus.generate(Corpus.Params(entities = 40, seed = 19)).map(_.doc)
+    val seedDocs = small.filterNot(_.doc_id.endsWith("-0"))
+    val inserts = small.filter(_.doc_id.endsWith("-0"))
+    def upsert(d: graft.model.Doc) = CdcRecord(d, delete = false)
+    def delete(id: String) = CdcRecord(graft.model.Doc(id, Seq.empty), delete = true)
+    val edited = seedDocs(5).copy(spans =
+      Seq(graft.model.Span.text("an edited body replacing this seed document text", 0)))
+    // batch 0: inserts, deletes of seed docs and an in-place edit; batch 1:
+    // more inserts and the delete of a doc batch 0 inserted
+    val batches = Seq(
+      inserts.take(10).map(upsert) ++ seedDocs.take(3).map(d => delete(d.doc_id)) :+
+        upsert(edited),
+      inserts.drop(10).map(upsert) :+ delete(inserts.head.doc_id))
+    def applied(corpus: Seq[graft.model.Doc], recs: Seq[CdcRecord]) = {
+      val ids = recs.map(_.doc.doc_id).toSet
+      corpus.filterNot(d => ids(d.doc_id)) ++ recs.filterNot(_.delete).map(_.doc)
+    }
+    // the corpus as applied so far, read by each batch's retraction
+    var corpus = seedDocs
+    val provider = (_: org.apache.spark.sql.SparkSession) => ds(corpus)
+    def seeded(name: String) = {
+      val dir = java.nio.file.Files.createTempDirectory(name).toString
+      StreamIngest.seed(s, ds(seedDocs), dir, cfg)
+      dir
+    }
+
+    val direct = seeded("graft-cdc-direct")
+    batches.zipWithIndex.foreach { case (b, i) =>
+      StreamIngest.cdcFoldBatch(s, s.createDataset(b), i.toLong, provider, direct, cfg)
+      corpus = applied(corpus, b)
+    }
+
+    corpus = seedDocs
+    val streamed = seeded("graft-cdc-stream")
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-cdc-ckpt").toString
+    val input = MemoryStream[CdcRecord](s)
+    val q = StreamIngest.cdcWriter(input.toDS(), provider, streamed, cfg)
+      .option("checkpointLocation", ckpt).start()
+    try batches.foreach { b =>
+      input.addData(b: _*)
+      q.processAllAvailable()
+      corpus = applied(corpus, b)
+    } finally q.stop()
+
+    assert(StreamIngest.currentDir(streamed).stripPrefix(streamed) ==
+      StreamIngest.currentDir(direct).stripPrefix(direct))
+    def dump(dir: String) = {
+      val (sigs, assign) = StreamIngest.readCurrentState(s, dir)
+      (sigs.toDF().toJSON.collect().sorted.toSeq, assign.toJSON.collect().sorted.toSeq)
+    }
+    val (wantSigs, wantAssign) = dump(direct)
+    val (gotSigs, gotAssign) = dump(streamed)
+    assert(gotAssign == wantAssign, "cdcWriter assignments differ from cdcFoldBatch's")
+    assert(gotSigs == wantSigs, "cdcWriter signatures differ from cdcFoldBatch's")
+    assert(gotAssign.size == corpus.size)
   }
 
   test("exact copies streamed in do not accumulate in generation state") {
