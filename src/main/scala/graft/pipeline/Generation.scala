@@ -30,12 +30,14 @@ import scala.jdk.CollectionConverters._
   */
 object Generation {
 
-  /** Corpus state: signatures, per-doc assignments, the band relation, and
-    * the generation key (the signature stage's manifest key — the root
-    * later generation keys chain off).
+  /** Corpus state: signatures, per-doc assignments, the band relation, the
+    * generation key (the signature stage's manifest key — the root later
+    * generation keys chain off) and the doc count. Assignments are full in
+    * every generation, so `docs` is the row count their manifest records:
+    * exact, and read without a Spark job.
     */
   final case class State(sigs: Dataset[DocSig], assign: DataFrame,
-                         bands: DataFrame, key: Long)
+                         bands: DataFrame, key: Long, docs: Long)
 
   private val SigStage = "signatures"
   private val BandStage = "bands"
@@ -70,8 +72,12 @@ object Generation {
           "an intact generation dir"))
     State(io.read(spark, SigStage).select("sig.*").as[DocSig],
       io.read(spark, AssignStage).select("doc_id", "cluster_id"),
-      io.read(spark, BandStage), key)
+      io.read(spark, BandStage), key, docCount(io, dir))
   }
+
+  private def docCount(io: ParquetTableIO, dir: String): Long =
+    io.completedRows(AssignStage).getOrElse(throw new IllegalStateException(
+      s"generation $dir: the $AssignStage manifest records no row count"))
 
   /** Write a full generation to `dir` — signatures, then the band relation
     * ([[Blocking.bandRowsDF]] rows of `sigs`), then assignments (the commit
@@ -172,7 +178,7 @@ object Generation {
         (s.join(t, Seq("doc_id"), "left_anti").unionByName(d.sigs),
           b.join(t, Seq("doc_id"), "left_anti").unionByName(d.bands))
     }
-    deltas.headOption.fold(root)(h => State(sigs.as[DocSig], h.assign, bands, h.key))
+    deltas.headOption.fold(root)(h => State(sigs.as[DocSig], h.assign, bands, h.key, h.docs))
   }
 
   /** One delta generation's stages, validated on construction. Only the
@@ -197,6 +203,7 @@ object Generation {
     def bands: DataFrame = io.read(spark, BandDelta)
     def tombstones: DataFrame = io.read(spark, TombDelta)
     def assign: DataFrame = io.read(spark, AssignStage).select("doc_id", "cluster_id")
+    def docs: Long = docCount(io, dir)
   }
 
   private[graft] def deleteRecursively(p: Path): Unit =

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import graft.media.{DefaultMedia, MediaResolver}
 import graft.model.{Doc, DocSig}
+import graft.pipeline.Signatures.SigResult
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -58,8 +59,8 @@ object Incremental {
                      resolver: MediaResolver = DefaultMedia): IncrementalResult =
     Pins.scoped { pins =>
       val state = Generation.read(spark, checkpointDir)
-      val (sigs, bands) = foldInputs(pins, state.sigs, state.bands)
-      val inner = run(spark, sigs, state.assign, newDocs, cfg, resolver, Some(bands))
+      val (sigs, bands) = foldInputs(pins, state)
+      val inner = run(spark, sigs, bands, state.assign, newDocs, cfg, resolver)
       pins.own(inner.release)
       inner.copy(release = pins.release)
     }
@@ -71,18 +72,21 @@ object Incremental {
     *
     * Both are persisted (each is consumed 2-3×: linkage census, cross-join
     * side, score side table) and their parallelism is restored first — a
-    * modest checkpoint parquet yields far fewer splits than the session's
-    * shuffle width (one ~150 MB sig table = 1-2 splits at the default
+    * modest checkpoint parquet yields far fewer splits than the width its
+    * rows need (one ~150 MB sig table = 1-2 splits at the default
     * maxPartitionBytes), which strangles the cross-scoring join until its
     * first shuffle: measured 21 s vs 6 s for the same join at 102k docs.
-    * At production scale the file count gives the width and
-    * [[Parallelism.widen]] skips the repartition; otherwise the round-robin
-    * shuffle rides the one corpus scan the fold pays anyway to materialize
-    * the cache. `pins` owns both.
+    * The width is sized from the generation's doc count
+    * ([[Generation.State.docs]], read from a manifest, so it costs no job):
+    * at production scale that is the session width and the file count
+    * already gives it, so [[Parallelism.atLeast]] skips the repartition;
+    * otherwise the round-robin shuffle rides the one corpus scan the fold
+    * pays anyway to materialize the cache. `pins` owns both.
     */
-  private[graft] def foldInputs(pins: Pins, sigs0: Dataset[DocSig],
-      bands0: DataFrame): (Dataset[DocSig], DataFrame) =
-    (pins(Parallelism.widen(sigs0)), pins(Parallelism.widen(bands0)))
+  private[graft] def foldInputs(pins: Pins, state: Generation.State): (Dataset[DocSig], DataFrame) = {
+    val n = Parallelism.sized(state.sigs.sparkSession, state.docs)
+    (pins(Parallelism.atLeast(state.sigs, n)), pins(Parallelism.atLeast(state.bands, n)))
+  }
 
   /** Call `release` once after consuming the result; a throwing fold
     * leaves nothing persisted. */
@@ -108,19 +112,15 @@ object Incremental {
       .select(existingAssign("doc_id"),
         coalesce(remapped("cluster_id"), existingAssign("cluster_id")).as("cluster_id"))
 
-  /** `existingBands`: optionally the old corpus's prebuilt band relation
-    * ([[Blocking.bandRowsDF]] schema, checkpointed by the previous run).
-    * Without it the fold re-derives old band keys — an O(corpus) UDF pass
-    * the production shape avoids (measured at bench scale; BASELINE.md,
-    * "Incremental-fold evidence").
+  /** `existingBands`: the old corpus's band relation
+    * ([[Blocking.bandRowsDF]] rows of `existingSigs`; a generation's
+    * `bands` stage).
     */
-  def run(spark: SparkSession, existingSigs: Dataset[DocSig],
+  def run(spark: SparkSession, existingSigs: Dataset[DocSig], existingBands: DataFrame,
           existingAssign: DataFrame, newDocs: Dataset[Doc],
           cfg: GraftConfig = GraftConfig(),
-          resolver: MediaResolver = DefaultMedia,
-          existingBands: Option[DataFrame] = None): IncrementalResult = {
+          resolver: MediaResolver = DefaultMedia): IncrementalResult = {
     implicit val s: SparkSession = spark
-    import spark.implicits._
 
     // 0. within-batch exact pre-collapse — same digest rule as Pipeline
     // stage 0 (the two-lane xxhash64 span digest), same reason: a k-copy
@@ -132,17 +132,16 @@ object Incremental {
     // join against the old corpus; the one uncovered case is a new doc
     // whose content is band-less (no text, no media) AND identical to an
     // old doc, which a full run would merge by digest.)
+    //
+    // new×new: that collapse and the rest of Pipeline.run's self-join
+    // stages on the batch alone, sized from the batch's doc count
     Pins.scoped { pins =>
-    val (batchDocs, expansion) = Pipeline.precollapse(newDocs)
-    expansion.foreach(e => pins.own(e))
+    val batch = Pipeline.selfJoin(newDocs, cfg, pins, None, Signatures.derive(_, cfg, resolver))
 
-    val newSigs = pins(Signatures.derive(batchDocs, cfg, resolver).map(_.sig))
-
-    // new×new: the standard self-join pipeline on the batch alone
-    val newEdges = selfEdges(newSigs, cfg, pins)
-
-    // new×old: bipartite band linkage — old-old pairs never exist in any plan
-    val cross = Linkage.linkSigs(spark, newSigs, existingSigs, cfg, existingBands)
+    // new×old: bipartite band linkage — old-old pairs never exist in any
+    // plan; its scoring spreads to the batch's width
+    val cross = Linkage.linkSigs(spark, batch.sigs, existingSigs, cfg, Some(existingBands),
+      Some(batch.materialize.width))
     pins.own(cross.release)
 
     // contract matched old docs to their cluster supernode. The assignment
@@ -152,21 +151,22 @@ object Incremental {
     // (size gate + iterations), and an unmaterialized crossEdges re-runs
     // the whole cross-scoring join each time (measured: the components
     // stage of a parquet-backed fold fell from 17.8 s to the in-memory
-    // legs' ~5 s once the edges were persisted; newEdges already was).
-    val crossEdges = pins(cross.matches
+    // legs' ~5 s once the edges were persisted; the batch's edges already
+    // were). Persisted at the batch's width: AQE does not coalesce a cached
+    // plan's output.
+    val crossEdges = batch.materialize.persist(cross.matches
       .join(existingAssign.withColumnRenamed("doc_id", "right_id"), Seq("right_id"))
       .select(col("left_id").as("src"), col("cluster_id").as("dst"))
       .distinct())
-    crossEdges.count()
 
     val comp = Components.connectedComponents(
-      newEdges.unionByName(crossEdges), cfg.maxCcIterations)
+      batch.edges.unionByName(crossEdges), cfg.maxCcIterations)
 
     // new docs: component id, or themselves when untouched by any edge;
     // with pre-collapse every copy routes through its representative
     // (the same expansion rule as Pipeline stage 6 — shared helper)
     val assignments = Pipeline.expandClusters(
-      newDocs.toDF().select(col("doc_id")), expansion, comp)
+      batch.input.toDF().select(col("doc_id")), batch.expansion, comp)
       .select("doc_id", "cluster_id")
 
     // old clusters absorbed under a smaller id (a new doc bridged them to an
@@ -177,24 +177,8 @@ object Incremental {
       .filter(col("cluster_id") =!= col("doc_id"))
       .select(col("doc_id").as("old_cluster_id"), col("cluster_id"))
 
-    IncrementalResult(assignments, remapped, newSigs, pins.release)
+    IncrementalResult(assignments, remapped, batch.sigs, pins.release)
     }
-  }
-
-  /** Duplicate edges among `sigs` — the self-join pipeline (band census,
-    * candidates, exact scoring) of a fold's batch and a retraction's
-    * members. The edge set is persisted in `pins` and materialized BEFORE
-    * the band relation is released — candidatePairs' persist contract —
-    * or the band udf would re-run for both self-join legs when CC later
-    * forces the edges.
-    */
-  private def selfEdges(sigs: Dataset[DocSig], cfg: GraftConfig, pins: Pins)(
-      implicit spark: SparkSession): DataFrame = Pins.using { blocks =>
-    val (cands, _, releaseBlocks) = Blocking.candidatePairs(sigs, cfg)
-    blocks.own(releaseBlocks)
-    val edges = pins(Pairs.edges(Pairs.score(cands, sigs, cfg)))
-    edges.count()
-    edges
   }
 
   /** Call `release` once after consuming the result; a throwing
@@ -312,29 +296,26 @@ object Incremental {
           "would silently drop the uncovered survivors from the corpus state")
     }
 
-    // the same stage composition as Pipeline.run, restricted to members
-    val (repDocs, expansion) = Pipeline.precollapse(memberDocs)
-    expansion.foreach(e => pins.own(e))
-    val repSigs = pins(existingSigs match {
+    // the self-join stages of Pipeline.run, restricted to members and sized
+    // from their count; a representative with a persisted signature row
+    // reuses it
+    val members = Pipeline.selfJoin(memberDocs, cfg, pins, None, reps => existingSigs match {
       case Some(old) =>
-        val oldDf = old.toDF()
-        val reused = oldDf.join(repDocs.select("doc_id"), Seq("doc_id"), "left_semi")
-        val fresh = repDocs.join(oldDf.select("doc_id"), Seq("doc_id"), "left_anti").as[Doc]
-        reused.unionByName(Signatures.derive(fresh, cfg, resolver).map(_.sig).toDF())
-          .as[DocSig]
-      case None => Signatures.derive(repDocs, cfg, resolver).map(_.sig)
+        val reused = old.join(reps.select("doc_id"), Seq("doc_id"), "left_semi").as[DocSig]
+        val fresh = reps.join(old.select("doc_id"), Seq("doc_id"), "left_anti").as[Doc]
+        reused.map(SigResult(_, Nil)).union(Signatures.derive(fresh, cfg, resolver))
+      case None => Signatures.derive(reps, cfg, resolver)
     })
-    val comp = Components.connectedComponents(
-      selfEdges(repSigs, cfg, pins), cfg.maxCcIterations)
+    val comp = Components.connectedComponents(members.edges, cfg.maxCcIterations)
 
     val reassigned = Pipeline.expandClusters(
-        memberDocs.toDF().select(col("doc_id")), expansion, comp)
+        members.input.toDF().select(col("doc_id")), members.expansion, comp)
       .select("doc_id", "cluster_id")
     val untouchedRows = existingAssign
       .join(broadcast(touched), Seq("cluster_id"), "left_anti")
       .select("doc_id", "cluster_id")
     RetractResult(untouchedRows.unionByName(reassigned), reassigned, touched,
-      rm, memberDocs.toDF().select("doc_id"), repSigs, pins.release)
+      rm, members.input.toDF().select("doc_id"), members.sigs, pins.release)
     }
     }
   }

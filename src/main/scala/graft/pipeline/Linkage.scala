@@ -69,11 +69,16 @@ object Linkage {
     * re-deriving it here would cost O(corpus) per batch, swamping the
     * O(batch × bucket) the bipartite join itself costs. When given, it is
     * used as-is and NOT unpersisted by `release`.
+    *
+    * `width`: scoring's phase B partition count, when the caller sized it
+    * from a known row count ([[Parallelism.sized]]); the session width
+    * otherwise.
     */
   def linkSigs(spark: SparkSession, lSigs: Dataset[graft.model.DocSig],
                rSigs: Dataset[graft.model.DocSig],
                cfg: GraftConfig,
-               rBands: Option[DataFrame] = None): LinkResult = Pins.scoped { pins =>
+               rBands: Option[DataFrame] = None,
+               width: Option[Int] = None): LinkResult = Pins.scoped { pins =>
     implicit val s: SparkSession = spark
 
     val lB = pins(Blocking.bandRowsDF(lSigs, cfg))
@@ -105,7 +110,7 @@ object Linkage {
     // per-side score tables: `a` ids resolve only in lSigs and `b` ids only
     // in rSigs, so the corpus side is never unioned or dedup-shuffled (and a
     // self-link with shared ids cannot fan candidates into duplicate rows)
-    val scored = Pairs.scoreSides(cand, lSigs, rSigs, cfg)
+    val scored = Pairs.scoreSides(cand, lSigs, rSigs, cfg, width)
     val matches = scored.filter(col("is_dup"))
       .select(col("a").as("left_id"), col("b").as("right_id"), col("score"))
 

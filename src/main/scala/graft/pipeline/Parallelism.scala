@@ -28,16 +28,21 @@ import org.apache.spark.sql.{Column, Dataset, SparkSession}
   * width should follow the data (Hyper Dimension Shuffle, VLDB 2019). At
   * 1,024 docs per task a task holds about 0.4 s of signature work (the
   * traced shingle + minhash + simhash + phash kernels add up to about
-  * 0.42 ms per doc). `Pipeline.run` is the one caller with a known row
-  * count: the one aggregate it runs over its input before any stage work
-  * (which also keys a checkpointed pass and decides the pre-collapse)
-  * counts the docs. It narrows its input and every stage it persists or
+  * 0.42 ms per doc). The three lifecycle calls know their row counts:
+  * `Pipeline.run`, `Incremental.run`'s batch leg and `Incremental.retract`'s
+  * member re-run each run their self-join stages through
+  * `Pipeline.selfJoin`, whose one aggregate over the input before any stage
+  * work (which also keys a checkpointed pass and decides the pre-collapse)
+  * counts the docs. It narrows the input and every stage it persists or
   * writes to the [[sized]] width with [[coalesceTo]], and passes that
   * width to the band persist and to scoring's phase B (a persisted
   * relation keeps the partitioning of the plan it caches: AQE does not
-  * coalesce a cached plan's output). Every other caller keeps [[width]].
+  * coalesce a cached plan's output). A fold's corpus inputs
+  * (`Incremental.foldInputs`) are sized with [[atLeast]] from the doc
+  * count the generation's `assignments` manifest records, which costs no
+  * job. Every other caller keeps [[width]].
   *
-  *  - [[widen]] is for EXCHANGE-FREE inputs: scans, pinned relations
+  *  - [[widen]] and [[atLeast]] are for EXCHANGE-FREE inputs: scans, pinned relations
   *    (`localCheckpoint`, `SessionCache.pinned`) and stage reads. Counting
   *    their partitions plans them and runs nothing, so the guard is free;
   *    at scale the file count already gives the width and the round-robin
@@ -78,8 +83,11 @@ private[graft] object Parallelism {
     sized(rows, spark.sparkContext.defaultParallelism, width(spark))
 
   /** Round-robin to [[width]], only when `ds` has fewer partitions. */
-  def widen[T](ds: Dataset[T]): Dataset[T] =
-    if (ds.rdd.getNumPartitions < width(ds.sparkSession)) spread(ds) else ds
+  def widen[T](ds: Dataset[T]): Dataset[T] = atLeast(ds, width(ds.sparkSession))
+
+  /** Round-robin to `n`, only when `ds` has fewer partitions. */
+  def atLeast[T](ds: Dataset[T], n: Int): Dataset[T] =
+    if (ds.rdd.getNumPartitions < n) spreadTo(ds, Some(n)) else ds
 
   /** Re-partition to [[width]] unconditionally: round-robin without
     * `keys`, hash-partitioned on them otherwise. */

@@ -75,81 +75,22 @@ object Pipeline {
           resolver: MediaResolver = DefaultMedia,
           checkpoint: Option[TableIO] = None): Result = {
     implicit val s: SparkSession = spark
-    import spark.implicits._
-
-    // One scan of the caller's docs sizes the pass (Parallelism.sized),
-    // keys it when checkpointing and decides the pre-collapse. From then on
-    // every stage reads the input narrowed to the sized width, every stage
-    // is persisted or written at that width, and the band persist and
-    // scoring's phase B spread to it.
-    val in = scanInput(docs, resumeDigest = checkpoint.isDefined)
-    val width = Parallelism.sized(spark, in.n)
-    val baseKey = if (checkpoint.isDefined) resumeKey(in, cfg) else cfg.configHash
-    val input = Parallelism.coalesceTo(docs, width)
-
     Pins.scoped { pins =>
-    // Without a TableIO every stage is persisted + materialized instead:
-    // each stage below is consumed by more than one downstream action, and
-    // an unmaterialized lineage would re-run the signature map (decode +
-    // DCT + minhash — the expensive part) once per action.
-    def materialize(name: String, key: Long)(compute: => DataFrame): DataFrame =
-      checkpoint match {
-        case Some(t) =>
-          Checkpoints.stage(spark, t, name, key)(Parallelism.coalesceTo(compute, width))
-        case None =>
-          val df = pins(Parallelism.coalesceTo(compute, width))
-          df.count()
-          df
-      }
-
-    // 0. exact-duplicate pre-collapse (shared with Incremental's batch
-    // path — the byte-equality contract between the two depends on ONE
-    // digest rule, so there is one implementation)
-    val (pipelineDocs, expansion) = collapse(input, in.hasCopies, width)
-    expansion.foreach(e => pins.own(e))
-
-    // 1. signatures (+ bad-media side output)
-    val sigResults = materialize("signatures", baseKey) {
-      Signatures.derive(pipelineDocs, cfg, resolver).toDF()
-    }
-    val sigs: Dataset[DocSig] = sigResults.select("sig.*").as[DocSig]
-    val badMedia = sigResults.select(explode(col("errors")).as("e")).select("e.*")
-
-    // 2-3. blocking + candidate pairs (census + salted self-join).
-    // Constructed INSIDE the materialize thunk: candidatePairs runs its
-    // hot-key census collect() eagerly (a full band-relation groupBy — the
-    // largest scan in the pipeline), so building it before the checkpoint
-    // manifest is consulted would pay that O(corpus) pass on every RESUMED
-    // run just to throw it away. On a resume the census never runs, so
-    // stats honestly reads all-zeros (nothing was dropped/salted THIS run).
-    // The band relation is released as soon as the candidates are
-    // materialized.
-    var stats = Blocking.BlockStats(0L, 0L, 0L)
-    val candidates = Pins.using { blocks =>
-      materialize("candidates", Hashing.hash64(baseKey, 2L)) {
-        val (cands, s0, releaseBlocks) = Blocking.candidatePairs(sigs, cfg, Some(width))
-        stats = s0
-        blocks.own(releaseBlocks)
-        cands
-      }
-    }
-
-    // 4. exact scoring → duplicate edges
-    val scored = materialize("scored", Hashing.hash64(baseKey, 3L)) {
-      Pairs.score(candidates, sigs, cfg, Some(width))
-    }
-    val edges = Pairs.edges(scored)
+    // 0-4. pre-collapse, signatures (+ bad-media side output), candidates,
+    // scored pairs
+    val st = selfJoin(docs, cfg, pins, checkpoint, Signatures.derive(_, cfg, resolver))
+    val badMedia = st.sigResults.select(explode(col("errors")).as("e")).select("e.*")
 
     // 5. connected components
-    val assignments = materialize("clusters", Hashing.hash64(baseKey, 4L)) {
-      Components.connectedComponents(edges, cfg.maxCcIterations)
+    val assignments = st.materialize("clusters", Hashing.hash64(st.key, 4L)) {
+      Components.connectedComponents(st.edges, cfg.maxCcIterations)
     }
 
     // 6. join back to input docs; singletons cluster as themselves. With
     // pre-collapse, every doc routes through its representative's
     // assignment (exact copies of an otherwise-singleton rep still cluster
     // together under the rep's id).
-    val expanded = expandClusters(input.toDF(), expansion, assignments)
+    val expanded = expandClusters(st.input.toDF(), st.expansion, assignments)
       .select("doc_id", "cluster_id", "spans")
 
     // 7. when checkpointing, the band relation and the EXPANDED per-doc
@@ -157,14 +98,96 @@ object Pipeline {
     // generation: tomorrow's incremental fold links its batch against the
     // checkpointed band keys instead of re-deriving them with an O(corpus)
     // UDF pass (the 40.3 s vs 26.9 s fold delta measured in BASELINE.md)
-    val out = checkpoint match {
-      case Some(t) =>
-        Generation.checkpointTail(spark, t, baseKey)(Blocking.bandRowsDF(sigs, cfg), expanded)
-      case None => expanded
+    val out = checkpoint.fold(expanded)(t =>
+      Generation.checkpointTail(spark, t, st.key)(Blocking.bandRowsDF(st.sigs, cfg), expanded))
+
+    Result(out, st.edges, badMedia, st.stats, pins.release)
+    }
+  }
+
+  /** The stages [[selfJoin]] ran: the caller's input narrowed to the pass's
+    * width, the pre-collapse mapping (owned by the pass's `pins`), the
+    * signature stage (`sig` + `errors`) and its [[DocSig]]s, the duplicate
+    * edges of the scored pairs, the census stats, the resume key root and
+    * the pass's materialize rule.
+    */
+  private[pipeline] final case class Stages(input: Dataset[Doc], expansion: Option[DataFrame],
+      sigResults: DataFrame, sigs: Dataset[DocSig], edges: DataFrame,
+      stats: Blocking.BlockStats, key: Long, materialize: Materialize)
+
+  /** The one materialize rule of a pass, at the width its input scan sized:
+    * a stage goes through `io` when one is set (resumable), and is
+    * persisted in `pins` and counted otherwise — each stage feeds more than
+    * one action, and an unmaterialized lineage would re-run the signature
+    * map (decode + DCT + minhash, the expensive part) once per action.
+    */
+  private[pipeline] final class Materialize(spark: SparkSession, pins: Pins,
+      io: Option[TableIO], val width: Int) {
+    def apply(name: String, key: Long)(compute: => DataFrame): DataFrame = io match {
+      case Some(t) => Checkpoints.stage(spark, t, name, key)(Parallelism.coalesceTo(compute, width))
+      case None => persist(compute)
     }
 
-    Result(out, edges, badMedia, stats, pins.release)
+    /** A relation of the pass that is no resumable stage, persisted and
+      * counted at the pass's width. */
+    def persist(df: DataFrame): DataFrame = {
+      val p = pins(Parallelism.coalesceTo(df, width))
+      p.count()
+      p
     }
+  }
+
+  /** The self-join stages of every lifecycle pass — [[run]], the batch leg
+    * of [[Incremental.run]] and the member re-run of [[Incremental.retract]]
+    * — in order: the one input scan, the exact-duplicate pre-collapse, the
+    * signatures `sign` derives for the representatives, the candidate
+    * pairs and the scored pairs.
+    *
+    * The scan's doc count sizes the pass ([[Parallelism.sized]]): every
+    * stage reads the input narrowed to the sized width, every stage is
+    * persisted or written at that width, and the band persist and
+    * scoring's phase B spread to it. With `io` set the scan also reads the
+    * input's content digest, which keys the pass ([[resumeKey]]).
+    */
+  private[pipeline] def selfJoin(docs: Dataset[Doc], cfg: GraftConfig, pins: Pins,
+      io: Option[TableIO], sign: Dataset[Doc] => Dataset[Signatures.SigResult])(
+      implicit spark: SparkSession): Stages = {
+    import spark.implicits._
+    val in = scanInput(docs, resumeDigest = io.isDefined)
+    val width = Parallelism.sized(spark, in.n)
+    val key = if (io.isDefined) resumeKey(in, cfg) else cfg.configHash
+    val materialize = new Materialize(spark, pins, io, width)
+    val input = Parallelism.coalesceTo(docs, width)
+
+    // exact-duplicate pre-collapse: one digest rule for the full run and
+    // the incremental paths, whose byte-equality depends on it
+    val (reps, expansion) = collapse(input, in.hasCopies, width)
+    expansion.foreach(e => pins.own(e))
+
+    val sigResults = materialize("signatures", key)(sign(reps).toDF())
+    val sigs = sigResults.select("sig.*").as[DocSig]
+
+    // Candidates (census + salted self-join) are constructed INSIDE the
+    // materialize thunk: candidatePairs runs its hot-key census collect()
+    // eagerly (a full band-relation groupBy — the largest scan of the pass),
+    // so building it before the checkpoint manifest is consulted would pay
+    // that O(corpus) pass on every RESUMED run just to throw it away. On a
+    // resume the census never runs, so stats honestly reads all-zeros
+    // (nothing was dropped/salted THIS run). The band relation is released
+    // as soon as the candidates are materialized.
+    var stats = Blocking.BlockStats(0L, 0L, 0L)
+    val candidates = Pins.using { blocks =>
+      materialize("candidates", Hashing.hash64(key, 2L)) {
+        val (cands, s0, releaseBlocks) = Blocking.candidatePairs(sigs, cfg, Some(width))
+        stats = s0
+        blocks.own(releaseBlocks)
+        cands
+      }
+    }
+    val scored = materialize("scored", Hashing.hash64(key, 3L)) {
+      Pairs.score(candidates, sigs, cfg, Some(width))
+    }
+    Stages(input, expansion, sigResults, sigs, Pairs.edges(scored), stats, key, materialize)
   }
 
   /** Exact-duplicate pre-collapse: one REPRESENTATIVE (min doc_id) per
@@ -175,9 +198,9 @@ object Pipeline {
     * pays ONLY the input scan. Returns (repDocs, mapping) — the mapping is
     * persisted; the CALLER unpersists it.
     *
-    * Shared by [[run]] stage 0 and [[Incremental.run]]'s batch path: the
-    * incremental-vs-full byte-equality contract requires both to collapse
-    * under the identical digest rule.
+    * perfbench's staged-run accessor: the traced run times the collapse on
+    * its own through this, at the session width. Every lifecycle pass
+    * collapses inside [[selfJoin]] instead.
     */
   private[pipeline] def precollapse(docs: Dataset[Doc])(
       implicit spark: SparkSession): (Dataset[Doc], Option[DataFrame]) =

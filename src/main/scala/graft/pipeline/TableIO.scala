@@ -66,9 +66,14 @@ class ParquetTableIO(root: String) extends TableIO {
   def read(spark: SparkSession, name: String): DataFrame =
     Bucketing.readMaybeBucketed(spark, dir(name))
 
-  def completedKey(name: String): Option[Long] =
-    ParquetTableIO.manifest(dir(name)).flatMap(m =>
-      """"resume_key":"(-?\d+)"""".r.findFirstMatchIn(m).map(_.group(1).toLong))
+  def completedKey(name: String): Option[Long] = manifestField(name, """"resume_key":"(-?\d+)"""")
+
+  /** Row count a completed stage's manifest records; reading it runs no job. */
+  def completedRows(name: String): Option[Long] =
+    manifestField(name, """"resume_key":"-?\d+","rows":(\d+)""")
+
+  private def manifestField(name: String, re: String): Option[Long] =
+    ParquetTableIO.manifest(dir(name)).flatMap(re.r.findFirstMatchIn(_).map(_.group(1).toLong))
 
   private def fileTail(f: String): String = f.split('/').takeRight(1).mkString
   private def jsonStr(s: String): String =

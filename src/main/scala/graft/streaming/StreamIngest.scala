@@ -173,13 +173,12 @@ object StreamIngest {
     if (batch.isEmpty) return // no state change
 
     // corpus state = the chain's stages unioned, through the shared
-    // widen + persist fold-input treatment
+    // sized widen + persist fold-input treatment
     val chain = Generation.chain(stateDir, cur)
     val state = Generation.readChain(spark, stateDir, chain)
     Pins.using { pins =>
-      val (sigs, bands) = Incremental.foldInputs(pins, state.sigs, state.bands)
-      val inc = Incremental.run(spark, sigs, state.assign, batch, cfg, resolver,
-        existingBands = Some(bands))
+      val (sigs, bands) = Incremental.foldInputs(pins, state)
+      val inc = Incremental.run(spark, sigs, bands, state.assign, batch, cfg, resolver)
       pins.own(inc.release)
 
       // The batch side of the next generation is `inc.batchSigs` — the
@@ -238,7 +237,7 @@ object StreamIngest {
     val chain = Generation.chain(stateDir, cur)
     val state = Generation.readChain(spark, stateDir, chain)
     Pins.using { pins =>
-      val (sigs, bands) = Incremental.foldInputs(pins, state.sigs, state.bands)
+      val (sigs, bands) = Incremental.foldInputs(pins, state)
       val res = Incremental.retract(spark, docs, state.assign, removeIds, cfg, resolver,
         existingSigs = Some(sigs))
       pins.own(res.release)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.pipeline.{Incremental, Pipeline, Signatures}
+import graft.pipeline.{Blocking, Incremental, Pipeline, Signatures}
 import graft.synth.Corpus
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -38,7 +38,8 @@ class IncrementalPropertySpec extends AnyFunSuite with SparkTestBase {
     val oldSigs = Signatures.derive(ds(oldSeq), cfg, graft.media.DefaultMedia)(s)
       .map(_.sig)(org.apache.spark.sql.Encoders.product)
 
-    val inc = Incremental.run(s, oldSigs, oldAssign, ds(newSeq), cfg)
+    val inc = Incremental.run(s, oldSigs, Blocking.bandRowsDF(oldSigs, cfg), oldAssign,
+      ds(newSeq), cfg)
     val incMap = Incremental.applyRemap(oldAssign, inc.remapped)
       .unionByName(inc.assignments)
       .collect().map(r => (r.getString(0), r.getString(1))).toMap

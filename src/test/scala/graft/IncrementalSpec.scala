@@ -1,6 +1,7 @@
 package graft
 
-import graft.pipeline.{Generation, Incremental, ParquetTableIO, Pipeline, Signatures}
+import graft.media.DefaultMedia
+import graft.pipeline.{Blocking, Components, Generation, Incremental, Linkage, Pairs, Parallelism, ParquetTableIO, Pipeline, Signatures}
 import graft.synth.Corpus
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -44,7 +45,8 @@ class IncrementalSpec extends AnyFunSuite with SparkTestBase {
     val oldSigs = Signatures.derive(ds(oldDocs), cfg, graft.media.DefaultMedia)(s)
       .map(_.sig)(org.apache.spark.sql.Encoders.product)
 
-    val inc = Incremental.run(s, oldSigs, oldAssign, ds(newDocs), cfg)
+    val inc = Incremental.run(s, oldSigs, Blocking.bandRowsDF(oldSigs, cfg), oldAssign,
+      ds(newDocs), cfg)
     val newAssign = inc.assignments.collect()
       .map(r => (r.getString(0), r.getString(1))).toMap
     val remap = inc.remapped.collect()
@@ -120,7 +122,7 @@ class IncrementalSpec extends AnyFunSuite with SparkTestBase {
 
     // day 1: fold batch1 from gen0's stage tables, persist generation 1
     val inc1 = Incremental.fromCheckpoint(s, gen0, ds(batch1), cfg)
-    val Generation.State(sigs0, assign0, _, _) = Generation.read(s, gen0)
+    val Generation.State(sigs0, assign0, _, _, _) = Generation.read(s, gen0)
     assert(sigs0.count() == oldSeq.size && assign0.count() == oldSeq.size)
     // the fold's own representative signatures (inc1.batchSigs) are the
     // batch side of the next generation — no re-derivation
@@ -136,7 +138,7 @@ class IncrementalSpec extends AnyFunSuite with SparkTestBase {
     // day 2: fold batch2 from the WRITTEN generation (reading gen1's
     // checkpointed bands) — no full run anywhere
     val inc2 = Incremental.fromCheckpoint(s, gen1, ds(batch2), cfg)
-    val Generation.State(sigs1, assign1, _, _) = Generation.read(s, gen1)
+    val Generation.State(sigs1, assign1, _, _, _) = Generation.read(s, gen1)
     assert(sigs1.count() == oldSeq.size + batch1.size)
     val finalMap = Incremental.applyRemap(assign1, inc2.remapped)
       .unionByName(inc2.assignments)
@@ -175,11 +177,12 @@ class IncrementalSpec extends AnyFunSuite with SparkTestBase {
       .map(_.sig)(org.apache.spark.sql.Encoders.product)
     val before = s.sparkContext.getPersistentRDDs.keySet
     // an assignment table missing cluster_id resolves fine through the
-    // new×new leg (newSigs + newEdges persisted and forced) and throws at
+    // new×new leg (the batch's stages persisted and forced) and throws at
     // the supernode-contraction select — the failure-path registry must
     // unwind everything persisted up to that point
     intercept[org.apache.spark.sql.AnalysisException] {
-      Incremental.run(s, oldSigs, oldAssign.select("doc_id"), ds(newSeq.take(20)), cfg)
+      Incremental.run(s, oldSigs, Blocking.bandRowsDF(oldSigs, cfg), oldAssign.select("doc_id"),
+        ds(newSeq.take(20)), cfg)
     }
     val leaked = s.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty, s"failed fold stranded persisted RDDs: ${leaked.toSeq.sorted}")
@@ -204,5 +207,56 @@ class IncrementalSpec extends AnyFunSuite with SparkTestBase {
     }
     val leaked = s.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty, s"failed fold stranded persisted RDDs: ${leaked.toSeq.sorted}")
+  }
+
+  test("a fold on 64 partitions runs every stage past the batch scan at the corpus's sized width") {
+    implicit val s = spark
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-inc-width").toString
+    val old = Pipeline.run(s, ds(oldSeq), cfg, checkpoint = Some(new ParquetTableIO(dir)))
+    old.clusters.count()
+    old.release()
+    val batch = newSeq.take(30)
+    def batchDs = s.createDataset(s.sparkContext.parallelize(batch, 64))
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getString(1))).toMap
+    SparkTestBase.withShufflePartitions(s, 64) {
+      val st = Generation.read(s, dir)
+      assert(st.docs === oldSeq.size, "the manifest doc count")
+      val sized = Parallelism.sized(s, st.docs)
+      assert(sized === 4)
+      var got = Map.empty[String, String]
+      val stages = SparkTestBase.stagesDuring(s) {
+        val inc = Incremental.fromCheckpoint(s, dir, batchDs, cfg)
+        got = pairs(inc.assignments)
+        inc.release()
+      }
+      // the batch's input scan reads its 64 partitions before the count is
+      // known; every later stage runs at the sized width or narrower
+      assert(stages.head.numTasks === 64)
+      val wide = SparkTestBase.wideStages(stages.tail, sized)
+      assert(wide.isEmpty, wide.mkString("\n"))
+
+      // the same fold at width 64 throughout: the batch's self-join and the
+      // linkage through the stage functions at the session width (the batch
+      // holds no exact copies, so there is nothing to collapse)
+      val bSigs = Signatures.derive(batchDs, cfg, DefaultMedia).map(_.sig).persist()
+      val (cands, _, releaseBands) = Blocking.candidatePairs(bSigs, cfg)
+      val candidates = cands.persist()
+      candidates.count()
+      releaseBands()
+      val cross = Linkage.linkSigs(s, bSigs, Parallelism.widen(st.sigs), cfg,
+        Some(Parallelism.widen(st.bands)))
+      val crossEdges = cross.matches
+        .join(st.assign.withColumnRenamed("doc_id", "right_id"), Seq("right_id"))
+        .select(col("left_id").as("src"), col("cluster_id").as("dst")).distinct()
+      val comp = pairs(Components.connectedComponents(
+        Pairs.edges(Pairs.score(candidates, bSigs, cfg)).unionByName(crossEdges),
+        cfg.maxCcIterations))
+      cross.release()
+      Seq(bSigs, candidates).foreach(_.unpersist())
+      assert(comp.nonEmpty, "the batch links nothing: the comparison is vacuous")
+      assert(got == batch.map(d => d.doc_id -> comp.getOrElse(d.doc_id, d.doc_id)).toMap)
+    }
   }
 }

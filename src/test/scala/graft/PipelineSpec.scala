@@ -242,9 +242,10 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     val full = intercept[IllegalArgumentException](Pipeline.run(s, docs, Corpus.RecommendedConfig))
     assert(full.getMessage.contains("z-null"), full.getMessage)
     val before = s.sparkContext.getPersistentRDDs.keySet
-    val fold = intercept[IllegalArgumentException](Incremental.run(s,
-      s.emptyDataset[graft.model.DocSig], Seq.empty[(String, String)].toDF("doc_id", "cluster_id"),
-      docs, Corpus.RecommendedConfig))
+    val noSigs = s.emptyDataset[graft.model.DocSig]
+    val fold = intercept[IllegalArgumentException](Incremental.run(s, noSigs,
+      Blocking.bandRowsDF(noSigs, Corpus.RecommendedConfig),
+      Seq.empty[(String, String)].toDF("doc_id", "cluster_id"), docs, Corpus.RecommendedConfig))
     assert(fold.getMessage.contains("z-null"), fold.getMessage)
     assert(s.sparkContext.getPersistentRDDs.keySet == before)
   }
@@ -252,30 +253,20 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
   test("a small corpus on 64 partitions runs every stage past its count at the sized width") {
     implicit val s = spark
     import s.implicits._
-    val key = "spark.sql.shuffle.partitions"
-    val old = s.conf.get(key)
-    s.conf.set(key, "64")
-    try {
+    SparkTestBase.withShufflePartitions(s, 64) {
       val cfg = Corpus.RecommendedConfig
       // exact copies drive the pre-collapse mapping path
       val corpus = Corpus.generate(Corpus.Params(entities = 300, seed = 42, hotEntityCopies = 20))
         .map(_.doc)
-      val docs = s.createDataset(s.sparkContext.parallelize(corpus, 64))
-      val sized = Parallelism.sized(s, corpus.size.toLong)
-      assert(sized === 4)
-      var edges = Set.empty[(String, String)]
-      var clusters = Set.empty[(String, String)]
-      val stages = SparkTestBase.stagesDuring(s) {
-        val r = Pipeline.run(s, docs, cfg)
-        edges = pairs(r.edges)
-        clusters = pairs(r.clusters.select("doc_id", "cluster_id"))
-        r.release()
-      }
+      val (stages, r) = sizedRun(corpus, cfg)
+      val edges = pairs(r.edges)
+      val clusters = pairs(r.clusters.select("doc_id", "cluster_id"))
+      r.release()
       // the pre-collapse detection scan reads the input before the count
       // is known; every later stage runs at the sized width or narrower
       assert(stages.head.numTasks === 64)
-      val wide = stages.tail.filter(_.numTasks > sized)
-      assert(wide.isEmpty, wide.map(st => s"${st.name}: ${st.numTasks} tasks").mkString("\n"))
+      val wide = SparkTestBase.wideStages(stages.tail, Parallelism.sized(s, corpus.size.toLong))
+      assert(wide.isEmpty, wide.mkString("\n"))
 
       // the same stages at width 64 throughout, over the representatives
       // (min doc_id per exact content) the pre-collapse keeps
@@ -299,7 +290,50 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
         d.doc_id -> assign.getOrElse(rep, rep)
       }.toSet)
       Seq(sigs, candidates, wideEdges).foreach(_.unpersist())
-    } finally s.conf.set(key, old)
+    }
+  }
+
+  test("a pass that salts a hot block on 64 partitions runs no stage past its count at the session width") {
+    implicit val s = spark
+    SparkTestBase.withShufflePartitions(s, 64) {
+      // 40 near-identical docs (one long shared text, one distinct word
+      // each) share most of their text bands: blocks of 40 rows, above a
+      // lowered hot-block threshold
+      val cfg = Corpus.RecommendedConfig.copy(hotBlockSize = 16)
+      val base = Corpus.generate(Corpus.Params(entities = 300, seed = 42)).map(_.doc)
+      val shared = base.map(_.concatText).maxBy(_.length)
+      val corpus = base ++ (0 until 40).map(i =>
+        Doc(f"hot-$i%02d", Seq(Span(Span.Text, s"$shared w$i", null, 0))))
+      val (stages, r) = sizedRun(corpus, cfg)
+      val salted = r.stats.saltedBlocks
+      r.release()
+      assert(salted > 0, "no block was salted: the case is vacuous")
+      // AQE coalesces the salted join's hashpartitioning(block_key, salt, 64)
+      // exchange, so no stage past the input scan runs at the session width.
+      // The candidate vote's map stage reads the union of the normal leg
+      // (sized partitions) and the salted leg (one coalesced partition), so
+      // it alone runs one task more than the sized width.
+      assert(stages.head.numTasks === 64)
+      val sized = Parallelism.sized(s, corpus.size.toLong)
+      val wide = SparkTestBase.wideStages(stages.tail, sized)
+      assert(wide.size <= 1 && stages.tail.forall(_.numTasks <= sized + 1), wide.mkString("\n"))
+    }
+  }
+
+  /** The stages of one `Pipeline.run` over `corpus` read from 64 input
+    * partitions, with its result (cluster and edge rows collected). */
+  private def sizedRun(corpus: Seq[Doc], cfg: GraftConfig) = {
+    implicit val s = spark
+    import s.implicits._
+    val docs = s.createDataset(s.sparkContext.parallelize(corpus, 64))
+    assert(Parallelism.sized(s, corpus.size.toLong) === 4)
+    var r: Pipeline.Result = null
+    val stages = SparkTestBase.stagesDuring(s) {
+      r = Pipeline.run(s, docs, cfg)
+      r.edges.count()
+      r.clusters.count()
+    }
+    (stages, r)
   }
 
   private def pairs(df: org.apache.spark.sql.DataFrame): Set[(String, String)] =

@@ -129,7 +129,7 @@ class RetractSpec extends AnyFunSuite with SparkTestBase {
       Some(new ParquetTableIO(gen0)))
     full0.clusters.count()
     full0.release()
-    val Generation.State(sigs0, assign0, _, _) = Generation.read(s, gen0)
+    val Generation.State(sigs0, assign0, _, _, _) = Generation.read(s, gen0)
 
     val res = Incremental.retract(s, ds(oldDocs), assign0,
       removed.toSeq.toDF("doc_id"), cfg, graft.media.DefaultMedia, Some(sigs0))

@@ -41,6 +41,18 @@ object SparkTestBase {
   def stagesDuring(spark: SparkSession)(body: => Unit): Seq[StageInfo] =
     eventsDuring(spark)(body).collect { case e: SparkListenerStageSubmitted => e.stageInfo }
 
+  /** `stages` that run more than `width` tasks, as "name: n tasks" lines. */
+  def wideStages(stages: Seq[StageInfo], width: Int): Seq[String] =
+    stages.filter(_.numTasks > width).map(st => s"${st.name}: ${st.numTasks} tasks")
+
+  /** `body` on a session of `n` shuffle partitions. */
+  def withShufflePartitions[A](spark: SparkSession, n: Int)(body: => A): A = {
+    val key = "spark.sql.shuffle.partitions"
+    val old = spark.conf.get(key)
+    spark.conf.set(key, n.toString)
+    try body finally spark.conf.set(key, old)
+  }
+
   /** The job-start and stage-submitted events of `body`, in order. The
     * listener bus delivers in order, so one tagged sentinel job after
     * `body` marks the point by which every event of `body` has been seen.
